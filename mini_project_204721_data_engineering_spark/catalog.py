@@ -8,6 +8,29 @@ province/district dimensions, ``orders``/``lineitem`` play the fact tables,
 ``events`` plays the incident log, ``documents``/``embeddings`` back the
 LLM-pipeline extensions.
 
+Resolve once, read pinned
+-------------------------
+A bare ``spark.read.parquet`` infers the schema on every call, and parquet
+inference is a Spark job (a footer read on an executor).  The catalog
+resolves each table once instead — its Spark schema plus the ``events``
+nanos fix-up flag — and every later :func:`load_table` is
+``spark.read.schema(pinned).parquet(path)``: no job, no session conf.
+
+- **Version token.**  A resolution is keyed by the table's absolute path
+  and a token of what is on disk: ``(st_size, st_mtime_ns, st_ino)`` for a
+  file, the sorted ``(name, size, mtime_ns)`` of its part files for a
+  directory.  The token is re-taken (a ``stat``) on every call, so a
+  rewritten table re-resolves before it is read; a stale schema cannot
+  be served.
+- **Per session.**  Inference depends on session confs
+  (``inferTimestampNTZ``, ``binaryAsString``, ``int96AsTimestamp``), so
+  resolutions live in a ``WeakKeyDictionary`` keyed by the SparkSession:
+  a new or restarted session resolves again, and a session's entries go
+  with it.  A conf changed on a live session applies to tables resolved
+  after the change.
+- Only the schema is kept.  Each call builds a new DataFrame, so attribute
+  ids are fresh and self-joins behave as with a plain read.
+
 Scale notes
 -----------
 - ``region`` (5 rows) and ``nation`` (25) are always broadcast — like the
@@ -15,17 +38,25 @@ Scale notes
 - ``customer``/``supplier``/``part`` are "medium dims": broadcastable at
   test SF, shuffle-joined at 100 TB.  We do NOT hard-broadcast them;
   AQE picks the strategy from observed sizes.
-- Fact tables (``lineitem``, ``orders``, ``events``) are read with
-  pushdown-friendly plain ``spark.read.parquet`` — filters and column
-  pruning reach the scan (verify via ``plans.explain_checks``).
+- Fact tables (``lineitem``, ``orders``, ``events``) are plain parquet
+  scans — filters and column pruning reach the scan (verify via
+  ``plans.explain_checks``).
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+import weakref
+from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 __all__ = ["TABLES", "SMALL_DIMS", "load_table", "load_tables", "register_views"]
 
@@ -46,44 +77,92 @@ TABLES = (
 SMALL_DIMS = frozenset({"region", "nation"})
 
 
+class _Resolved(NamedTuple):
+    token: tuple
+    schema: StructType
+    nanos: bool  # ts is raw TIMESTAMP(NANOS) read as bigint
+
+
+#: session -> {absolute table path -> resolution}
+_RESOLVED: weakref.WeakKeyDictionary[SparkSession, dict[str, _Resolved]] = (
+    weakref.WeakKeyDictionary()
+)
+_LOCK = threading.Lock()
+
+
+def _version_token(path: str) -> tuple:
+    """What is on disk at ``path`` now; hidden ``_``/``.`` names are
+    skipped as Spark's file index skips them."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns, st.st_ino)
+    parts = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                full = os.path.join(root, f)
+                fs = os.stat(full)
+                parts.append((os.path.relpath(full, path), fs.st_size, fs.st_mtime_ns))
+    return tuple(sorted(parts))
+
+
+def _resolve(spark: SparkSession, path: str, name: str) -> tuple[StructType, bool]:
+    """(schema, nanos) for one table — the only place inference runs."""
+    if name == "events":
+        # Spark 4 refuses to infer TIMESTAMP(NANOS) (PARQUET_TYPE_ILLEGAL),
+        # but reads it as bigint under a pinned schema: take that schema
+        # from the footer instead of toggling a session conf
+        footer = ds.dataset(path, format="parquet").schema
+        i = footer.get_field_index("ts")
+        ts = footer.field(i).type if i >= 0 else pa.null()
+        if pa.types.is_timestamp(ts) and ts.unit == "ns":
+            return from_arrow_schema(footer.set(i, pa.field("ts", pa.int64()))), True
+    return spark.read.parquet(path).schema, False
+
+
+def _pinned(spark: SparkSession, path: str, name: str) -> tuple[StructType, bool]:
+    key = os.path.abspath(path)
+    token = _version_token(key)
+    with _LOCK:
+        hit = _RESOLVED.setdefault(spark, {}).get(key)
+    if hit is None or hit.token != token:
+        # two threads may both resolve a new version; both get the same answer
+        hit = _Resolved(token, *_resolve(spark, path, name))
+        with _LOCK:
+            _RESOLVED[spark][key] = hit
+    return hit.schema, hit.nanos
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table as a DataFrame (lazy parquet scan).
+
+    The first call per (session, table, version token) resolves the
+    schema — one Spark inference job, or a footer read for nanos
+    ``events``; every later call reads with that schema pinned and starts
+    no Spark job (see the module docstring).
 
     ``events.parquet`` ``ts`` has shipped in two physical forms across
     driver rounds; both are handled:
 
-    - TIMESTAMP(NANOS) (r1-r2 data): Spark has no native type for it —
-      read as raw nanos (``spark.sql.legacy.parquet.nanosAsLong``,
-      runtime-settable) and rebuild a microsecond timestamp with integer
-      division (``div``; float division would lose precision above
-      2^53 ns ≈ 1970+104 days).
+    - TIMESTAMP(NANOS) (r1-r2 data): Spark has no native type for it.  The
+      schema comes from the parquet footer (pyarrow) with ``ts`` pinned to
+      ``bigint``, which Spark reads as raw nanos with no conf set; a
+      microsecond timestamp is rebuilt with integer division (``div``;
+      float division would lose precision above 2^53 ns ≈ 1970+104 days).
     - timestamp[us] with isAdjustedToUTC=false (r4+ data): resolves to
-      ``TIMESTAMP_NTZ`` under Spark's ``inferTimestampNTZ`` default.  The
-      nanos conf is a no-op for it and the column passes through as NTZ,
-      so downstream code must use NTZ-safe expressions
-      (``timestamp_diff``, never ``unix_micros``).
+      ``TIMESTAMP_NTZ`` under Spark's ``inferTimestampNTZ`` default and
+      passes through as NTZ, so downstream code must use NTZ-safe
+      expressions (``timestamp_diff``, never ``unix_micros``).
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        # scope the legacy conf to this read: analysis of the scan (schema
-        # resolution) happens eagerly here, so restoring the previous value
-        # afterwards doesn't affect this DataFrame — but a lingering "true"
-        # would silently turn every later nano-timestamp read into bigint
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
-            df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-            if dict(df.dtypes).get("ts") == "bigint":
-                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema, nanos = _pinned(spark, path, name)
+    df = spark.read.schema(schema).parquet(path)
+    if nanos:
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -133,10 +133,12 @@ def _shingle_pair_counts(
     across rows — so that mode carries the same loud hot-bucket refusal
     as :func:`_band_bucket_pairs` (ADVICE r15): a bucket over
     ``_SHINGLE_PAIR_MAX_BUCKET`` docs raises, naming the cure
-    (``max_shingle_df``), instead of OOMing an executor.  When
-    ``max_shingle_df`` already bounds every bucket at or under the
-    refusal threshold the guard is statically unreachable and is left
-    out of the plan entirely.
+    (``max_shingle_df``), instead of OOMing an executor.  An explicit
+    ``max_shingle_df`` is the caller's own bucket bound and is honoured
+    even above that default: the refusal threshold becomes
+    ``max(max_shingle_df, _SHINGLE_PAIR_MAX_BUCKET)``, which the size
+    filter already enforces, so with a cap the guard is statically
+    unreachable and is left out of the plan entirely.
     """
     sh = shingle_table(df, text_col, id_col, n)
     buckets = sh.groupBy("shingle").agg(
@@ -150,7 +152,7 @@ def _shingle_pair_counts(
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_sh"))
     )
-    if max_shingle_df is None or max_shingle_df > _SHINGLE_PAIR_MAX_BUCKET:
+    if max_shingle_df is None:
         ids = (
             f"CASE WHEN size(__ids) > {_SHINGLE_PAIR_MAX_BUCKET} THEN "
             f"raise_error(concat('shingle bucket of ', size(__ids), "

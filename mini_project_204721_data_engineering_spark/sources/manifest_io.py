@@ -20,9 +20,9 @@ An implementation is correct iff:
    and the object then contains exactly that caller's payload; every
    other caller returns False and writes nothing.  Check-then-create
    is NOT acceptable — the check and the create must be one storage
-   operation (POSIX ``O_CREAT|O_EXCL``, HDFS lease-protected
-   ``create(overwrite=false)``, S3 ``If-None-Match: *`` conditional
-   write, GCS ``x-goog-if-generation-match: 0``, Azure Blob
+   operation (POSIX ``link(2)`` of a complete temp file, HDFS
+   lease-protected ``create(overwrite=false)``, S3 ``If-None-Match: *``
+   conditional write, GCS ``x-goog-if-generation-match: 0``, Azure Blob
    ``If-None-Match: *``).
 2. ``read_bytes`` after a successful ``put_if_absent`` returns the full
    payload (read-after-write visibility for new objects — true of
@@ -35,8 +35,8 @@ An implementation is correct iff:
 Why the seam exists: Hadoop's ``FileSystem.create(overwrite=false)``
 is only atomic where the underlying store makes it so.  On HDFS it is
 (namenode lease).  On raw local disk it is NOT (check-then-create —
-see :class:`HadoopManifestIO`, which drops to ``O_EXCL`` there).  On
-``s3a://`` it is NOT by default (HEAD-then-PUT); an S3 deployment
+see :class:`HadoopManifestIO`, which drops to a local ``link(2)`` claim
+there).  On ``s3a://`` it is NOT by default (HEAD-then-PUT); an S3 deployment
 registers an adapter that issues the native conditional PUT instead of
 trusting the Hadoop connector.  Data files, sidecars and scans never
 need the seam — plain byte I/O through Hadoop/pyarrow is fine for
@@ -75,6 +75,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import tempfile
 
 __all__ = [
     "ManifestIO",
@@ -164,7 +165,9 @@ class LocalManifestIO(ManifestIO):
     """Pure-Python local-disk implementation — what the streaming
     source's sessionless planner uses for ``file:`` tables, and the
     semantics :class:`HadoopManifestIO` defers to on local paths.
-    ``O_CREAT|O_EXCL`` is the kernel-atomic conditional put."""
+    The conditional put writes and fsyncs a temp file beside the target,
+    then publishes it with ``link(2)``, which is kernel-atomic and fails
+    if the target exists: a reader sees no manifest or a whole one."""
 
     def list_versions(self, table_dir: str) -> list[int]:
         d = os.path.join(_strip_file(table_dir), MANIFEST_DIR)
@@ -184,16 +187,25 @@ class LocalManifestIO(ManifestIO):
 
     def put_if_absent(self, path: str, payload: bytes) -> bool:
         p = _strip_file(path)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
+        d = os.path.dirname(p)
+        os.makedirs(d, exist_ok=True)
+        # the temp name matches no version pattern, so listings skip it
+        fd, tmp = tempfile.mkstemp(dir=d, prefix=".put-", suffix=".tmp")
         try:
-            fd = os.open(p, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        except FileExistsError:
-            return False
-        try:
-            os.write(fd, payload)
-            os.fsync(fd)
+            try:
+                os.fchmod(fd, 0o644)
+                view = memoryview(payload)
+                while view:
+                    view = view[os.write(fd, view) :]
+                os.fsync(fd)
+            finally:
+                os.close(fd)
+            try:
+                os.link(tmp, p)
+            except FileExistsError:
+                return False
         finally:
-            os.close(fd)
+            os.unlink(tmp)
         return True
 
 
@@ -284,7 +296,7 @@ class MockObjectStoreIO(LocalManifestIO):
     keyspace at ``mock:<root>/<key>`` backed by the local directory
     ``<root>``, reachable only through this interface.  Every
     operation strips the scheme and delegates to the local impl (the
-    store-side conditional put is the same kernel-atomic O_EXCL claim
+    store-side conditional put is the same kernel-atomic ``link(2)`` claim
     — the harness's stand-in for S3 ``If-None-Match: *``);
     ``fail_puts_at`` lets a test inject a lost race at an exact key to
     pin the retry loop's behavior.  Stateless by construction (the root

@@ -138,8 +138,8 @@ def _try_write_manifest(
     """Exclusive-create the manifest for ``version``; False when another
     writer already owns it (the optimistic-concurrency loss signal).
     Atomicity is the manifest-IO layer's contract #1 (`manifest_io.py`
-    — O_EXCL locally, lease-create on HDFS, native conditional-put on
-    registered object stores)."""
+    — link(2) of a complete temp file locally, lease-create on HDFS,
+    native conditional-put on registered object stores)."""
     io = manifest_io_for(table_dir, spark)
     payload = json.dumps(manifest, indent=1).encode("utf-8")
     return io.put_if_absent(io.manifest_path(table_dir, version), payload)
@@ -256,7 +256,7 @@ def _commit(
             # (thundering herd); full jitter spreads them out, measured
             # at 8 concurrent mixed writers in `scale_probe
             # snap-contention`.  Capped small — a claim is only a
-            # manifest read + O_EXCL create, so long sleeps just idle
+            # manifest read + exclusive create, so long sleeps just idle
             # the writer.
             time.sleep(random.uniform(0, min(0.02 * (2 ** min(attempt, 5)), 0.4)))
         versions = _list_versions(spark, table_dir)

@@ -15,7 +15,7 @@ next catalog version.
 Design (and why it is crash-correct):
 
 1. **The catalog is itself a snapshot-style log.**  ``catalog_dir`` holds
-   ``_manifests/v{N}.json`` files written with the same O_EXCL
+   ``_manifests/v{N}.json`` files written with the same
    exclusive-create claim as table commits — same
    :func:`~.snapshots._try_write_manifest`, same linearizability proof
    (the cross-process race pytest).  Each catalog version pins, for

@@ -773,8 +773,8 @@ def test_shingle_pair_hot_bucket_guard(spark, monkeypatch):
     """ADVICE r15 (medium): with max_shingle_df=None a corpus-wide
     shingle would materialize C(m,2) pairs as ONE array; the inverted-
     index path must refuse loudly past _SHINGLE_PAIR_MAX_BUCKET instead
-    of OOMing, while a max_shingle_df at or under the threshold keeps
-    the guard out of the plan entirely."""
+    of OOMing, while an explicit max_shingle_df — under the threshold or
+    over it — keeps the guard out of the plan entirely."""
     import pytest as _pytest
 
     from mini_project_204721_data_engineering_spark.llm import dedup as _d
@@ -791,6 +791,11 @@ def test_shingle_pair_hot_bucket_guard(spark, monkeypatch):
     plan = capped._jdf.queryExecution().executedPlan().toString()
     assert "raise_error" not in plan
     assert capped.count() == 0  # the hot shingle was dropped by the cap
+    # a cap ABOVE the threshold is the caller's chosen bound: its buckets
+    # are paired, not refused
+    wide = _d.ngram_jaccard_pairs(docs, threshold=0.1, max_shingle_df=5)
+    assert "raise_error" not in wide._jdf.queryExecution().executedPlan().toString()
+    assert wide.count() == 10  # every C(5, 2) pair of identical docs
 
 
 def test_duplicate_spans_hashed_equals_string_grams(spark):

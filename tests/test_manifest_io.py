@@ -8,6 +8,7 @@ all addressed by a non-``file:`` scheme."""
 
 from __future__ import annotations
 
+import os
 import threading
 from collections import Counter
 
@@ -74,6 +75,41 @@ def test_put_if_absent_thread_race(make, tmp_path):
         th.join()
     assert len(wins) == 1
     assert io.read_bytes(p) == b"payload-%d" % wins[0]
+
+
+@pytest.mark.parametrize("make", [LocalManifestIO, MockObjectStoreIO])
+def test_put_if_absent_never_exposes_a_partial_manifest(make, tmp_path, monkeypatch):
+    """Contract #2 against a racing reader: at every point the writer can
+    pause (its write and its fsync), the target is absent or already
+    whole — never the empty file a create-then-write claim exposes."""
+    io = make()
+    prefix = "mock:" if make is MockObjectStoreIO else ""
+    p = prefix + str(tmp_path / "t/_manifests/v0000000001.json")
+    payload = b'{"version": 1}'
+    seen = []
+
+    def reader_view():
+        try:
+            return io.read_bytes(p)
+        except FileNotFoundError:
+            return None
+
+    def paused(real):
+        def call(*args):
+            seen.append(reader_view())  # what a reader sees right now
+            return real(*args)
+
+        return call
+
+    monkeypatch.setattr(os, "write", paused(os.write))
+    monkeypatch.setattr(os, "fsync", paused(os.fsync))
+    assert io.put_if_absent(p, payload)
+    monkeypatch.undo()
+    assert len(seen) >= 2
+    assert all(v in (None, payload) for v in seen), seen
+    assert io.read_bytes(p) == payload
+    assert io.list_versions(prefix + str(tmp_path / "t")) == [1]
+    assert os.listdir(tmp_path / "t/_manifests") == ["v0000000001.json"]
 
 
 def test_mock_store_race_injection(tmp_path):
