@@ -12,10 +12,6 @@ operators a 100 TB text/embedding corpus pipeline needs, built Spark-first:
   inverted index, Bayardo et al. WWW'07)
 - :mod:`.pq` — product-quantization ANN (Jégou et al. TPAMI 2011):
   32×-compressed codes, pure-codegen ADC search, shortlist+rerank
-- :mod:`.multimodal` — opaque binary columns with typed metadata and
-  Arrow-batched decode plumbing (decode itself stubbed: no image/audio
-  libs in this environment)
 - :mod:`.quality` — repetition metrics, decontamination, vocabulary,
   sequence packing, unigram-LM in-domain scoring
-- :mod:`.bpe` — distributed BPE tokenizer induction + broadcast apply
 """

@@ -58,7 +58,6 @@ __all__ = [
     "canonical_keep",
     "cap_cells",
     "semantic_dedup",
-    "incremental_semantic_dedup",
     "srp_banded_pairs",
 ]
 
@@ -552,10 +551,10 @@ def build_band_index(
     """The persistent LSH index of a corpus: (id, band, band_key, params)
     rows.
 
-    At 100 TB this table is written ONCE (partitioned by ``band``,
-    bucketed on ``band_key`` — `sources/sink.py::write_bucketed`) and
-    then only appended to; each ingest batch probes it instead of
-    re-running corpus-wide LSH.
+    At 100 TB this table is written ONCE (partitioned by ``band`` and
+    bucketed on ``band_key`` with Spark's ``bucketBy``) and then only
+    appended to; each ingest batch probes it instead of re-running
+    corpus-wide LSH.
 
     ``params`` stamps the signature recipe (k/bands/n/hash_fn) into every
     row: band keys built under DIFFERENT parameters never collide, so a
@@ -565,7 +564,14 @@ def build_band_index(
     r15: built from :func:`minhash_signatures` + :func:`band_rows` — one
     aggregation instead of two (the legacy :func:`band_table` re-grouped
     the per-seed rows with a collect_list); band keys are byte-identical,
-    so new probes keep matching indexes written by older rounds."""
+    so new probes keep matching indexes written by older rounds.
+
+    Migration: ``k`` must be divisible by ``bands`` (the r16 guard).  An
+    index persisted with ``k % bands != 0`` (the legacy path emitted a
+    remainder band) can no longer be rebuilt or probed with its own
+    parameters, and :func:`incremental_neardup` refuses a probe under any
+    other parameters (``params`` stamp mismatch): rebuild it with a
+    divisible ``k``."""
     idx = band_rows(
         minhash_signatures(df, k, n, text_col, id_col, hash_fn), k, bands, id_col
     )
@@ -1154,65 +1160,6 @@ def semantic_dedup(
         .distinct()
     )
     return cells.join(dropped, id_col, "left_anti")
-
-
-def incremental_semantic_dedup(
-    new_vecs: DataFrame,
-    assign_index: DataFrame,
-    centroids: DataFrame,
-    threshold: float = 0.40,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Incremental form of :func:`semantic_dedup` — the production
-    ingest shape (the embedding twin of :func:`incremental_neardup`):
-    assign the NEW batch against the FIXED quantizer ``centroids``,
-    then compare each new vector only against (a) the stored
-    ``assign_index`` rows in its cell and (b) lower-id vectors of the
-    same batch — the historical corpus is never re-assigned and never
-    self-joined.  Returns the batch's survivors with ``cell`` attached;
-    append the batch's (id, cell, embedding) rows to the index
-    afterwards to keep it current.
-
-    ``assign_index`` must hold ALL prior vectors (kept and dropped)
-    with their cells: the min-id rule drops a vector similar to ANY
-    lower-id cell-mate, keeper or not, so a survivors-only index would
-    silently under-drop.  Hot-cell note: the per-batch join cost is
-    |batch∩cell|·|index∩cell| — bounded as long as the INDEX's cells
-    are bounded.  To cap a skewed quantizer here, freeze a per-cell
-    split table once (from the seed corpus) and apply
-    :func:`cap_cells(..., splits_df=table)` to assignments BEFORE they
-    enter the index AND to each batch — with a frozen table the
-    sub-cell is a pure function of (cell, vector), so batch and index
-    agree with no re-assignment of history.  INVARIANT for equivalence with the
-    from-scratch run on the union: ids are ingest-monotone (every
-    prior id < every new id) and the quantizer is the same — both the
-    normal append-only corpus shape; proven ≡ from-scratch in
-    tests/test_llm.py."""
-    from mini_project_204721_data_engineering_spark.llm.similarity import (
-        as_double,
-        assign_cells,
-        cosine,
-    )
-
-    cells_new = assign_cells(new_vecs, centroids, id_col=id_col, vec_col=vec_col)
-    a = cells_new.select(
-        F.col(id_col).alias("__id_a"), "cell", as_double(vec_col).alias("va")
-    )
-    prior = assign_index.select(
-        F.col(id_col).alias("__id_b"), "cell", as_double(vec_col).alias("vb")
-    )
-    batch = cells_new.select(
-        F.col(id_col).alias("__id_b"), "cell", as_double(vec_col).alias("vb")
-    )
-    dropped = (
-        a.join(prior.unionByName(batch), "cell")
-        .filter(F.col("__id_b") < F.col("__id_a"))
-        .filter(F.round(cosine("va", "vb"), 6) >= threshold)
-        .select(F.col("__id_a").alias(id_col))
-        .distinct()
-    )
-    return cells_new.join(dropped, id_col, "left_anti")
 
 
 def srp_banded_pairs(

@@ -522,8 +522,7 @@ def _pair_expr(text_col: str, bos: str) -> str:
     making ``sequence(1, size-1)`` = ``sequence(1, 0)`` — which Spark
     evaluates as the DESCENDING ``[1, 0]`` (out-of-bounds indexing:
     ANSI crash / phantom null pairs).  Guarded to an empty pair array,
-    matching the SQL oracle which emits zero pairs for such docs (same
-    pitfall as llm/multimodal.py's chunk sequence)."""
+    matching the SQL oracle which emits zero pairs for such docs."""
     toks = (
         f"concat(array('{bos}'), "
         f"filter(split(trim({text_col}), '\\\\s+'), x -> x != ''))"

@@ -299,6 +299,10 @@ def seeded_two_level(
     members are its SUB centroids.  Returns (supers(cell, cv),
     subs(super_cell, cell, cv)) for :func:`assign_cells_two_level`.
 
+    Precondition: ``id_col`` is unique in ``corpus``.  The winning seed
+    vectors are fetched back by an id join, so an id carried by several
+    rows emits one sub-centroid per row, all with the same cell id.
+
     Cost note (r16, guide §8 — decide with small rows): sub-seed
     selection windows over ``(id, super)`` PROXY rows only — the
     min-id-per-super decision never needs the vectors, so the keyed

@@ -12,7 +12,7 @@ test box:
   ceiling, so a large value + AQE is the scale-safe default.
 - Arrow enabled: every pandas UDF / ``applyInPandas`` path is
   Arrow-batched (the only non-JVM operators in this engine are the
-  spatial lookup, NFC normalization, and multimodal decode stubs).
+  spatial lookup and NFC normalization).
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB correctness oracle and are cluster-node independent.
 """

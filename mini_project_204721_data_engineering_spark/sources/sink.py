@@ -1,541 +1,21 @@
-"""Partitioned fact sink (S8 at scale).
+"""Z-order (Morton) layout for snapshot compaction.
 
-The reference appends with chunked multi-row INSERTs in one transaction
-(``backend/app/utils.py:170-179``).  The Spark-native equivalent for a
-partitioned fact table is **dynamic partition overwrite**: re-ingesting a
-date slice atomically replaces exactly the partitions present in the
-incoming batch and leaves every other partition untouched — idempotent
-re-runs for free, no read-then-anti-join needed when the unit of ingest
-is a whole partition.  (Row-level idempotence within a partition stays
-``operators.joins.idempotent_append``.)
+``snapshot_compact(zorder_by=...)`` lays its packed rewrite out along the
+Z-curve of the given columns, so every output file owns a curve segment
+with a small bounding box in each Z-column and manifest min/max stats
+prune point and range filters on any of them, not just a leading sort
+key.  Tables themselves are written through the snapshot log
+(``sources/snapshots.py``).
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "write_fact_partitioned",
-    "overwrite_fact_partitions",
-    "merge_into_fact",
-    "merge_into",
-    "write_bucketed",
-    "write_jdbc",
-    "zorder_column",
-    "write_zordered",
-    "write_jsonl",
-    "delete_rows",
-    "compact_partitions",
-]
-
-
-def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    """``spark.read.parquet(path)`` or None if the table is FRESH —
-    the path does not exist, or exists but holds no visible data file
-    (an empty staging directory, or only ``_SUCCESS``/hidden markers).
-
-    Freshness is decided by an explicit Hadoop FS probe, never by
-    catching read failures: a corrupt footer, transient FS error, or
-    permission problem on a POPULATED table must raise, not silently
-    degrade the caller to treat-as-fresh (which would append the full
-    source, duplicating every existing key and returning wrong counts).
-    """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return None
-    it = fs.listFiles(hpath, True)  # recursive — partition dirs
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not name.startswith("_") and not name.startswith("."):
-            return spark.read.parquet(path)
-    return None  # exists but no visible data file → fresh
-
-
-def _check_merge_schema(source: DataFrame, existing: DataFrame, op: str) -> None:
-    """Column-set contract for merging into an EXISTING table: the
-    source must carry exactly the target's columns.  Without this, an
-    extra source column was SILENTLY DROPPED (the merge projects the
-    target's columns) and a missing one surfaced as an opaque
-    UNRESOLVED_COLUMN from deep inside the plan — both real data-loss /
-    debuggability hazards on a CDC feed.  Schema evolution is an
-    explicit upstream decision (add the column to the target first, or
-    drop/derive it on the source), not something a merge infers."""
-    src, tgt = set(source.columns), set(existing.columns)
-    if src != tgt:
-        extra = sorted(src - tgt)
-        missing = sorted(tgt - src)
-        parts = []
-        if extra:
-            parts.append(f"source-only columns {extra} would be silently dropped")
-        if missing:
-            parts.append(f"target columns {missing} are missing from the source")
-        raise ValueError(
-            f"{op}: source schema does not match the existing table — "
-            + "; ".join(parts)
-            + ". Align the schemas explicitly (evolve the target or project "
-            "the source) before merging."
-        )
-
-
-def write_fact_partitioned(df: DataFrame, path: str, partition_cols: Sequence[str]) -> None:
-    """Initial/append write of a fact table partitioned for pruning
-    (reference's B-tree indexes on date/year, ``models.py:91-99`` →
-    directory partitions + parquet min/max stats)."""
-    df.write.partitionBy(*partition_cols).mode("append").parquet(path)
-
-
-def overwrite_fact_partitions(df: DataFrame, path: str, partition_cols: Sequence[str]) -> None:
-    """Idempotent partition-grain re-ingest: overwrite ONLY the partitions
-    in ``df`` (dynamic mode), never the whole table — the atomic
-    replacement the reference's read-then-write ingest lacks
-    (SURVEY §7 hard-part #6)."""
-    spark: SparkSession = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def merge_into_fact(
-    incoming: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    partition_col: str,
-) -> int:
-    """MERGE-grade idempotent ingest (SURVEY §7 hard-part #6, r2 verdict
-    #6): key-level dedup *and* partition-level atomicity in one
-    operation — the read-then-anti-join ``operators.joins.idempotent_append``
-    gives only the former (a crash mid-append can leave a partition
-    half-written, same as the reference's ingest,
-    ``backend/app/utils.py:565-591``).
-
-    Dataflow, all partition-pruned to the incoming batch's
-    ``partition_col`` range:
-
-    1. dedup ``incoming`` on ``keys`` (rows with the same key are
-       interchangeable at this grain — counts are pre-aggregated
-       upstream, ``pipelines.incidents``),
-    2. anti-join against the existing slice → genuinely-new rows,
-    3. partitions that gain no new row are NOT touched (their files stay
-       byte-identical — a re-run of an already-applied batch is a no-op),
-    4. each affected partition is rewritten in ONE dynamic partition
-       overwrite: existing slice ∪ new rows, so readers see the old or
-       the new partition content, never a half-appended state.
-
-    The merged slice is eagerly localCheckpoint-ed before the write —
-    Spark (correctly) refuses to overwrite a path its own plan is
-    reading.  The checkpoint is bounded by the affected partitions, not
-    the table.  Each partition is written by a single task (repartition
-    on ``partition_col``) for stable file counts; for single partitions
-    too big for one task, pre-split upstream with an extra bucket column.
-
-    Returns the number of new rows written (0 = no-op re-run).
-    """
-    spark: SparkSession = incoming.sparkSession
-    from mini_project_204721_data_engineering_spark.operators.joins import anti_join
-
-    incoming = incoming.dropDuplicates(list(keys))
-    existing = _read_if_exists(spark, path)
-    if existing is None:
-        out = incoming.repartition(F.col(partition_col))
-        write_fact_partitioned(out, path, [partition_col])
-        return out.count()
-    _check_merge_schema(incoming, existing, "merge_into_fact")
-
-    bounds = incoming.agg(
-        F.min(partition_col).alias("lo"), F.max(partition_col).alias("hi")
-    ).first()
-    if bounds["lo"] is None:
-        return 0
-    sliced = existing.filter(
-        (F.col(partition_col) >= F.lit(bounds["lo"]))
-        & (F.col(partition_col) <= F.lit(bounds["hi"]))
-    )
-    new_rows = anti_join(incoming, sliced, keys)
-    affected = [r[0] for r in new_rows.select(partition_col).distinct().collect()]
-    if not affected:
-        return 0
-    merged = (
-        sliced.filter(F.col(partition_col).isin(affected))
-        .unionByName(new_rows.select(*sliced.columns))
-        .repartition(F.col(partition_col))
-        .localCheckpoint(eager=True)  # break lineage off `path` pre-overwrite
-    )
-    n_new = new_rows.count()
-    overwrite_fact_partitions(merged, path, [partition_col])
-    return n_new
-
-
-def merge_into(
-    source: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    partition_col: str,
-    when_matched: str = "update",
-    when_not_matched: str = "insert",
-    broadcast_source: bool = True,
-) -> dict[str, int]:
-    """Full MERGE-style keyed upsert into a partitioned parquet table —
-    the single atomic-per-partition operation the reference's
-    read-then-write ingest (``backend/app/utils.py:565-611``)
-    approximates non-atomically, completing the CDC family:
-    :func:`~mini_project_204721_data_engineering_spark.operators.diff.apply_changes`
-    merges snapshots in memory; this lands the merge on disk.
-
-    ``when_matched``: ``"update"`` (SCD1 — source values replace the
-    target row, even across a partition move), ``"delete"``, or
-    ``"ignore"``.  ``when_not_matched``: ``"insert"`` or ``"ignore"``.
-    Source keys must be unique — the same per-key terminal-state
-    contract as ``apply_changes``, enforced in the plan (the source is
-    aggregated by key and a count guard wraps the first key column with
-    ``raise_error``, so a duplicate feed fails during the flagging pass
-    with no separate guard job).
-
-    Scale shape: matching is ONE keys+partition-pruned-columns pass
-    over the target (a general MERGE key can live in any partition — no
-    pruning shortcut exists), checkpointed source-sized so the counts
-    and affected-partition questions never rescan the target
-    (measured: the per-question semi/anti-join form cost 8.6× this on
-    a 10M-row table — tools/scale_probe.py merge); then only
-    partitions that gain, lose, or change a row are rewritten
-    (existing-survivors ∪ updates ∪ inserts, one dynamic partition
-    overwrite — the survivor scan partition-prunes to those
-    directories), every other partition's files stay byte-identical.
-    An update whose source row carries a NEW partition value moves the
-    row: the old partition is rewritten without it, the new one with
-    it.  Partitions emptied by deletes are removed explicitly (dynamic
-    overwrite cannot drop a partition it writes no rows to).  The
-    affected-partition list and the returned counts are driver-side by
-    necessity (partition-count- and scalar-sized).
-
-    Idempotent replay: re-running the same source against the merged
-    table is a no-op state-wise (updates rewrite identical values,
-    inserts become updates) — pytest-pinned.  Returns
-    ``{"updated", "deleted", "inserted", "partitions_rewritten"}``.
-
-    Emptied-table caveat (inherent to SCHEMALESS parquet directories,
-    hypothesis-found): a merge that deletes the last row leaves a
-    directory with no parquet files, and a subsequent
-    ``spark.read.parquet(path)`` without an explicit schema cannot
-    infer one — supply ``.schema(...)`` when reading a possibly-empty
-    table, or use the snapshot log (``snapshots.py``), whose manifest
-    carries the schema through emptiness.
-    """
-    if when_matched not in ("update", "delete", "ignore"):
-        raise ValueError(f"when_matched must be update/delete/ignore, got {when_matched!r}")
-    if when_not_matched not in ("insert", "ignore"):
-        raise ValueError(f"when_not_matched must be insert/ignore, got {when_not_matched!r}")
-    spark: SparkSession = source.sparkSession
-    keys = list(keys)
-    vals = [c for c in source.columns if c not in keys]
-    if partition_col not in source.columns:
-        raise ValueError(f"source must carry partition_col {partition_col!r}")
-    dup_msg = F.concat(
-        F.lit("merge_into: source carries duplicate key ("),
-        F.concat_ws(
-            ", ", *[F.coalesce(F.col(k).cast("string"), F.lit("NULL")) for k in keys]
-        ),
-        F.lit(") — a merge source must hold one terminal state per key"),
-    )
-    # aggregate-by-key + in-plan guard on the first key column (keys are
-    # always evaluated by the joins below, so the guard cannot be pruned)
-    agg = (
-        source.select(*keys, F.struct(*[F.col(c) for c in vals]).alias("__v"))
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__cn"), F.first("__v").alias("__v"))
-    )
-    guarded_key = (
-        F.when(F.col("__cn") > 1, F.raise_error(dup_msg))
-        .otherwise(F.col(keys[0]))
-        .alias(keys[0])
-    )
-    src = agg.select(
-        guarded_key, *keys[1:], *[F.col("__v")[c].alias(c) for c in vals]
-    )
-    existing = _read_if_exists(spark, path)
-    if existing is not None:
-        _check_merge_schema(src, existing, "merge_into")
-    if existing is None:
-        if when_not_matched != "insert":
-            return {"updated": 0, "deleted": 0, "inserted": 0,
-                    "partitions_rewritten": 0}
-        out = src.repartition(F.col(partition_col))
-        write_fact_partitioned(out, path, [partition_col])
-        n = out.count()
-        parts = out.select(partition_col).distinct().count()
-        return {"updated": 0, "deleted": 0, "inserted": n,
-                "partitions_rewritten": parts}
-
-    # ONE column-pruned pass over the target, with the SOURCE broadcast
-    # (a CDC feed is batch-sized; the target is the 100 TB side): an
-    # inner broadcast-hash join finds every (matched key, target
-    # partition) without shuffling a single target row, and its
-    # checkpointed result (≈ |matches|) answers every count /
-    # distinct-partition question below without rescanning the target.
-    # The probe that motivated this (tools/scale_probe.py merge)
-    # measured the naive per-question semi/anti-join form at 8.6× and
-    # the shuffle-the-target left-join form at 4.4× this plan's cost
-    # on a 10M-row table.  For a source too big to broadcast (giant
-    # backfill), pass ``broadcast_source=False`` — the same single
-    # flagging pass runs as a shuffle join (one target key shuffle, the
-    # 4.4× shape) instead of OOMing the driver on the broadcast.
-    def _maybe_bcast(df):
-        return F.broadcast(df) if broadcast_source else df
-
-    src = src.localCheckpoint(eager=True)  # fires the dup guard once
-    tgt_kp = existing.select(*keys, F.col(partition_col).alias("__tpart"))
-    hits = tgt_kp.join(_maybe_bcast(src.select(*keys)), keys, "inner")
-    hits = hits.localCheckpoint(eager=True)
-    matched_keys = hits.select(*keys).distinct()
-    matched_src = src.join(_maybe_bcast(matched_keys), keys, "left_semi")
-    unmatched_src = src.join(_maybe_bcast(matched_keys), keys, "left_anti")
-
-    n_matched = matched_src.count()
-    n_updated = n_matched if when_matched == "update" else 0
-    n_deleted = n_matched if when_matched == "delete" else 0
-    n_inserted = unmatched_src.count() if when_not_matched == "insert" else 0
-
-    # partitions needing a rewrite: where matched target rows live (they
-    # get replaced or removed), plus where updates/inserts will land —
-    # all derivable from the flagged frame, no target scan
-    aff = []
-    if when_matched in ("update", "delete"):
-        aff.append(hits.select(F.col("__tpart").alias(partition_col)))
-    if when_matched == "update":
-        aff.append(matched_src.select(partition_col))
-    if when_not_matched == "insert":
-        aff.append(unmatched_src.select(partition_col))
-    if not aff:
-        return {"updated": 0, "deleted": 0, "inserted": 0,
-                "partitions_rewritten": 0}
-    aff_df = aff[0]
-    for a in aff[1:]:
-        aff_df = aff_df.unionByName(a)
-    affected = [r[0] for r in aff_df.distinct().collect()]
-    if not affected:
-        return {"updated": n_updated, "deleted": n_deleted,
-                "inserted": n_inserted, "partitions_rewritten": 0}
-
-    # NULL partition values: plain isin() is three-valued-NULL for them
-    # and would silently drop their rows (same hazard as delete_rows)
-    non_null = [v for v in affected if v is not None]
-    slice_pred = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    if None in affected:
-        slice_pred = slice_pred | F.col(partition_col).isNull()
-    sliced = existing.filter(slice_pred)
-    survivors = (
-        sliced.join(_maybe_bcast(src.select(*keys)), keys, "left_anti")
-        if when_matched in ("update", "delete")
-        else sliced
-    )
-    pieces = [survivors]
-    if when_matched == "update":
-        pieces.append(matched_src.select(*survivors.columns))
-    if when_not_matched == "insert":
-        # every unmatched insert's partition is in `affected` by
-        # construction — no filter needed
-        pieces.append(unmatched_src.select(*survivors.columns))
-    merged = pieces[0]
-    for p in pieces[1:]:
-        merged = merged.unionByName(p)
-    merged = merged.repartition(F.col(partition_col)).localCheckpoint(
-        eager=True  # break lineage off `path` pre-overwrite
-    )
-    kept = {r[0] for r in merged.select(partition_col).distinct().collect()}
-    emptied = [v for v in affected if v not in kept]
-    if kept:
-        overwrite_fact_partitions(merged, path, [partition_col])
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for v in emptied:
-        leaf = f"{partition_col}={_escape_partition_value(v)}"
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{leaf}")
-        p.getFileSystem(hconf).delete(p, True)
-    return {"updated": n_updated, "deleted": n_deleted,
-            "inserted": n_inserted, "partitions_rewritten": len(affected)}
-
-
-def delete_rows(
-    spark: SparkSession,
-    path: str,
-    predicate,
-    partition_col: str,
-) -> int:
-    """Targeted row deletion from a partitioned parquet fact — the
-    right-to-be-forgotten / takedown primitive a training-data store
-    must serve.  ``predicate`` is a Column selecting rows to DELETE.
-
-    Only partitions that actually contain matching rows are rewritten
-    (one dynamic partition overwrite each, same atomicity as
-    :func:`merge_into_fact`); every other partition's files stay
-    byte-identical, so the cost is proportional to the hit partitions,
-    not the table.  At 100 TB the affected-partition probe is a
-    scan-only job whose ``predicate`` pushes into the parquet footers.
-
-    Returns the number of rows deleted (0 = nothing matched, no write).
-    """
-    existing = spark.read.parquet(path)
-    affected = [
-        r[0]
-        for r in existing.filter(predicate).select(partition_col).distinct().collect()
-    ]
-    if not affected:
-        return 0
-    # NULL partition values live in __HIVE_DEFAULT_PARTITION__; a plain
-    # isin(affected) is three-valued-NULL for them and would silently
-    # leave their matching rows on disk while reporting a smaller count
-    non_null = [v for v in affected if v is not None]
-    slice_pred = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    if None in affected:
-        slice_pred = slice_pred | F.col(partition_col).isNull()
-    sliced = existing.filter(slice_pred)
-    # three-valued logic: a row where the predicate evaluates NULL (e.g.
-    # a null key column) must SURVIVE — plain ~predicate is NULL there
-    # and filter would silently drop it
-    survivors = sliced.filter(~F.coalesce(predicate, F.lit(False)))
-    n_deleted = sliced.count() - survivors.count()
-    if n_deleted == 0:
-        return 0
-    remaining = (
-        survivors.repartition(F.col(partition_col))
-        .localCheckpoint(eager=True)  # break lineage off `path` pre-overwrite
-    )
-    # dynamic overwrite only replaces partitions PRESENT in `remaining`;
-    # a partition whose every row matched has no survivors and must be
-    # dropped explicitly or its stale files would outlive the delete
-    kept = {r[0] for r in remaining.select(partition_col).distinct().collect()}
-    emptied = [v for v in affected if v not in kept]
-    if kept:
-        overwrite_fact_partitions(remaining, path, [partition_col])
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for v in emptied:
-        # build the directory name the way Spark wrote it: NULL rows go
-        # to __HIVE_DEFAULT_PARTITION__, everything else through Hive's
-        # path escaping (a raw f-string would miss ':' '/' '%' etc.)
-        leaf = f"{partition_col}={_escape_partition_value(v)}"
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{leaf}")
-        p.getFileSystem(hconf).delete(p, True)
-    return n_deleted
-
-
-# Hive/Spark partition-path escaping (ExternalCatalogUtils.escapePathName):
-# these chars are %-hex-encoded in partition directory names.
-_PATH_ESCAPE_CHARS = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(0x20)}
-
-
-def _escape_partition_value(v) -> str:
-    """Render a partition VALUE as Spark renders it on disk — NULL →
-    ``__HIVE_DEFAULT_PARTITION__``, empty string likewise, other values
-    stringified then %-escaped char-for-char like Hive's
-    ``escapePathName`` (so ``delete_rows`` can address e.g. a
-    ``ts=2024-01-01 00%3A00`` directory)."""
-    if v is None:
-        return "__HIVE_DEFAULT_PARTITION__"
-    s = str(v)
-    if s == "":
-        return "__HIVE_DEFAULT_PARTITION__"
-    return "".join(
-        f"%{ord(ch):02X}" if ch in _PATH_ESCAPE_CHARS else ch for ch in s
-    )
-
-
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    partitions: Sequence,
-) -> None:
-    """Small-file compaction: rewrite each listed partition as ONE file.
-    Streaming/incremental ingest accretes a file per trigger; at scale
-    readers pay per-file open and footer cost — periodic compaction of
-    cold partitions restores large files.  ``repartition(k, col)`` hashes
-    each partition value to exactly one task, so each partition directory
-    comes back as a single file; same partition-scoped dynamic overwrite
-    as :func:`delete_rows` — hot partitions not listed are untouched.
-    (Partitions larger than one task should stay with the ingest-time
-    layout instead — compact with a bucket column upstream.)"""
-    if not partitions:
-        return
-    existing = spark.read.parquet(path)
-    sliced = existing.filter(F.col(partition_col).isin(list(partitions)))
-    compacted = sliced.repartition(
-        len(list(partitions)), F.col(partition_col)
-    ).localCheckpoint(eager=True)
-    overwrite_fact_partitions(compacted, path, [partition_col])
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    buckets: int,
-    bucket_cols: Sequence[str],
-    sort_cols: Sequence[str] | None = None,
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed-table sink — the co-located-join layout at 100 TB.
-
-    Pays the shuffle ONCE at write: rows are hashed into ``buckets``
-    files per partition on ``bucket_cols``, and that layout is recorded
-    in the catalog.  Every later equi-join or aggregation on the bucket
-    key between same-bucketed tables runs with NO exchange at all
-    (asserted in tests/test_layout.py) — the recurring fact⋈fact shuffle,
-    the dominant cost of a repeated 100 TB join, disappears from the
-    plan.  ``sort_cols`` additionally pre-sorts within buckets so
-    sort-merge joins skip their sort.  ``path`` makes the table external
-    (data at ``path``, metadata in the session catalog)."""
-    w = df.write.mode(mode).bucketBy(buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    if path is not None:
-        w = w.option("path", path)
-    w.format("parquet").saveAsTable(table)
-
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    batchsize: int = 2000,
-    num_partitions: int | None = None,
-    properties: dict[str, str] | None = None,
-    _writer=None,
-) -> None:
-    """S8 relational parity: append a DataFrame to a JDBC table, matching
-    the reference's chunked multi-row INSERT sink
-    (``backend/app/utils.py:170-179``: ``to_sql(..., method="multi",
-    chunksize=2000)``) — ``batchsize`` defaults to the same 2000.
-
-    Scale notes: each Spark partition opens one connection and writes its
-    rows in ``batchsize`` batches — pass ``num_partitions`` to coalesce
-    first so a 1000-executor job doesn't open 1000 connections against a
-    single Postgres (the classic JDBC-sink failure at scale).  Writes are
-    per-partition-atomic, not global: pair with
-    ``operators.joins.idempotent_append`` or an upsert-view on the target
-    for exactly-once semantics.
-
-    ``_writer`` injects the terminal write for tests (this environment
-    ships no JDBC driver jars); the production path is
-    ``DataFrameWriter.jdbc``.
-    """
-    if num_partitions is not None:
-        df = df.coalesce(num_partitions)
-    props = {"batchsize": str(batchsize), **(properties or {})}
-    if _writer is not None:
-        _writer(df, url, table, mode, props)
-        return
-    df.write.option("batchsize", str(batchsize)).jdbc(
-        url=url, table=table, mode=mode, properties=props
-    )
+__all__ = ["zorder_column", "zorder_layout"]
 
 
 def _zorder_encode(df: DataFrame, c: str):
@@ -663,34 +143,16 @@ def zorder_column(df: DataFrame, cols: Sequence[str], bits: int = 16):
     return z.alias("__zval")
 
 
-def write_zordered(
-    df: DataFrame, path: str, cols: Sequence[str], n_files: int = 16, bits: int = 16
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files laid out along the
-    Z-curve of ``cols``: range-partition on the Z-value (so each file
-    owns a curve segment) and sort within partitions (so row groups
-    within a file are tight too).  The curve segments give every file a
-    small bounding box in (cols)-space — parquet min/max stats then
-    prune point/range filters on ANY of the Z-columns, not just the
-    leading sort key."""
-    z = zorder_column(df, cols, bits)
-    (
-        df.withColumn("__zval", z)
+def zorder_layout(df: DataFrame, cols: Sequence[str], n_files: int) -> DataFrame:
+    """``df`` laid out as ``n_files`` partitions along the Z-curve of
+    ``cols``: range-partition on the Z-value (so each file owns a curve
+    segment) and sort within partitions (so row groups within a file are
+    tight too).  The curve segments give every file a small bounding box
+    in (cols)-space — parquet min/max stats then prune point/range
+    filters on ANY of the Z-columns, not just the leading sort key."""
+    return (
+        df.withColumn("__zval", zorder_column(df, cols))
         .repartitionByRange(n_files, "__zval")
         .sortWithinPartitions("__zval")
         .drop("__zval")
-        .write.mode("overwrite")
-        .parquet(path)
     )
-
-
-def write_jsonl(
-    df: DataFrame, path: str, n_shards: int | None = None, compression: str = "gzip"
-) -> None:
-    """Training-corpus export: JSON-lines shards — the interchange format
-    downstream tokenizer/training jobs consume.  ``n_shards`` fixes the
-    output file count (repartition — at 100 TB pick shards of ~1 GB so
-    the training loader's parallelism matches the file count); gzip per
-    shard keeps text corpora ~3-5× smaller on the wire."""
-    w = df.repartition(n_shards) if n_shards else df
-    w.write.mode("overwrite").option("compression", compression).json(path)

@@ -3881,9 +3881,9 @@ def snapshot_delete_where(
 
     **Copy-on-write (default)**: ONLY files containing matching rows
     are rewritten (without those rows) into a new commit; untouched
-    files carry over by reference — cost ∝ hit files, not table size
-    (the same contract as ``sink.delete_rows``, now with atomic cutover
-    and time travel back to the pre-delete snapshot).
+    files carry over by reference — cost ∝ hit files, not table size,
+    with atomic cutover and time travel back to the pre-delete
+    snapshot.
 
     **Merge-on-read (``lazy=True``)**: NO data bytes move.  One pass
     finds the files holding matching rows (the same hit scan, write
@@ -4286,10 +4286,9 @@ def snapshot_merge_into(
 ) -> dict:
     """MERGE INTO the snapshot log, copy-on-write: only files holding a
     matched key are rewritten; everything else carries by reference.
-    Completes the CDC family — ``sink.merge_into`` gave keyed upserts on
-    partitioned parquet, this gives them atomic cutover + time travel.
+    Keyed upserts with atomic cutover + time travel.
 
-    Semantics match ``sink.merge_into``: ``when_matched`` in
+    Semantics: ``when_matched`` in
     {update, delete, ignore} (update = the source row replaces the
     target row wholesale), ``when_not_matched`` in {insert, ignore}.
     Duplicate keys in the source raise IN-PLAN (a merge source is
@@ -4661,15 +4660,9 @@ def _compact_pack(
     # natural drain point that materializes them into clean bytes
     packed = _filtered_read(spark, manifest, small)
     if zorder_by:
-        from mini_project_204721_data_engineering_spark.sources.sink import zorder_column
+        from mini_project_204721_data_engineering_spark.sources.sink import zorder_layout
 
-        z = zorder_column(packed, list(zorder_by))
-        packed = (
-            packed.withColumn("__zval", z)
-            .repartitionByRange(n_out, "__zval")
-            .sortWithinPartitions("__zval")
-            .drop("__zval")
-        )
+        packed = zorder_layout(packed, list(zorder_by), n_out)
     else:
         packed = packed.repartition(n_out)
     new_files, _ = _write_data_files(packed, table_dir)
@@ -4698,7 +4691,7 @@ def snapshot_compact(
     ``zorder_by`` (the OPTIMIZE ZORDER composition): the packed rewrite
     is laid out along the Z-curve of the given columns (integer, float,
     decimal, date, timestamp, or string — encoded order-preservingly by
-    ``sink._zorder_encode``) —
+    ``sink._zorder_encode`` and laid out by ``sink.zorder_layout``) —
     range-partitioned on the Morton value so each output file owns a
     curve segment with a SMALL bounding box in every Z-column — and the
     commit records manifest min/max stats for those columns (sticky-set

@@ -4,9 +4,9 @@ the commit log as a CDC feed.
 The batch-side cursor (:func:`~..sources.snapshots.snapshot_incremental_read`)
 and change feed (:func:`~..sources.snapshots.snapshot_changes`) already
 exist; this closes the loop with a real ``spark.readStream`` source
-(PySpark 4's Python DataSource streaming API), so the existing streaming
-operators — windowed aggregates, CDC apply, stateful processors — can
-consume a snapshot table directly::
+(PySpark 4's Python DataSource streaming API), so Structured Streaming
+operators — windowed aggregates, stateful processors — can consume a
+snapshot table directly::
 
     from mini_project_204721_data_engineering_spark.streaming.snapshot_source import (
         SnapshotFeedDataSource,
@@ -31,8 +31,7 @@ and each version contributes its FILE DIFF:
                         a rewritten-but-unchanged row appears as a
                         delete+insert pair, never as a lost update)
 - compaction        → emits NOTHING (byte-identical rewrite; the cursor
-                      metadata-advances — the same rule the matview
-                      refresher proved)
+                      metadata-advances)
 - restore           → file diff of the rewind (delete+insert pairs);
                       a rewind past a DV takedown re-INSERTS the
                       takedown's positions on still-carried files

@@ -1,6 +1,7 @@
 """Physical-layout tests: partitioned fact writes with partition pruning,
-and bucketed tables for exchange-free co-located joins (SURVEY §1.3 —
-the Spark equivalent of the reference's B-tree indexes)."""
+bucketed tables for exchange-free co-located joins (SURVEY §1.3 — the
+Spark equivalent of the reference's B-tree indexes), and the Z-order
+layout behind ``snapshot_compact(zorder_by=...)``."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mini_project_204721_data_engineering_spark.catalog import load_table
-from mini_project_204721_data_engineering_spark.sources.sink import write_zordered
+from mini_project_204721_data_engineering_spark.sources.sink import zorder_layout
 from mini_project_204721_data_engineering_spark.plans.checks import physical_plan, shuffle_count
 
 SF = "/root/testdata/sf0.001"
@@ -80,217 +81,6 @@ def test_bucketed_join_has_no_shuffle(spark):
     spark.sql("DROP TABLE IF EXISTS b_items")
 
 
-def test_dynamic_partition_overwrite_touches_only_incoming(spark):
-    """Re-ingesting one year replaces that year's partition and leaves the
-    others byte-identical — idempotent partition-grain ingest (S8)."""
-    from mini_project_204721_data_engineering_spark.sources.sink import (
-        overwrite_fact_partitions,
-        write_fact_partitioned,
-    )
-
-    d = tempfile.mkdtemp(prefix="fact_dpo_")
-    try:
-        orders = load_table(spark, SF, "orders").withColumn("year", F.year("o_orderdate"))
-        write_fact_partitioned(orders, d, ["year"])
-        before = {
-            y: spark.read.parquet(d).filter(F.col("year") == y).count()
-            for y in (1995, 1996)
-        }
-        # re-ingest ONLY 1996, halved — 1995 must be untouched
-        batch = orders.filter(F.col("year") == 1996).limit(before[1996] // 2)
-        overwrite_fact_partitions(batch, d, ["year"])
-        after_1995 = spark.read.parquet(d).filter(F.col("year") == 1995).count()
-        after_1996 = spark.read.parquet(d).filter(F.col("year") == 1996).count()
-        assert after_1995 == before[1995]
-        assert after_1996 == before[1996] // 2
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_merge_into_fact_idempotent_and_partition_atomic(spark):
-    """r2 verdict #6 MERGE-grade ingest: overlapping sequential batches
-    produce no duplicate keys; partitions that gain nothing are untouched
-    (file listing + sizes + mtimes identical); an already-applied batch
-    re-run is a full no-op (every partition byte-identical)."""
-    from mini_project_204721_data_engineering_spark.sources.sink import merge_into_fact
-
-    def snapshot(d):
-        out = {}
-        for root, _dirs, files in os.walk(d):
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                out[os.path.relpath(p, d)] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    d = tempfile.mkdtemp(prefix="merge_fact_")
-    try:
-        cols = ["disaster_date", "province_id", "district_id", "count_of_disasters"]
-        b1 = spark.createDataFrame(
-            [("2023-06-01", 1, 10, 2), ("2023-06-01", 1, 11, 1), ("2023-06-02", 1, 10, 3)],
-            cols,
-        )
-        assert merge_into_fact(b1, d, cols[:3], "disaster_date") == 3
-
-        day1_before = {
-            k: v for k, v in snapshot(d).items() if "disaster_date=2023-06-01" in k
-        }
-        # batch 2 overlaps: day-2 dup key (dropped), day-2 new key, day-3 new
-        b2 = spark.createDataFrame(
-            [("2023-06-02", 1, 10, 9), ("2023-06-02", 1, 12, 4), ("2023-06-03", 2, 20, 1)],
-            cols,
-        )
-        assert merge_into_fact(b2, d, cols[:3], "disaster_date") == 2
-
-        got = spark.read.parquet(d)
-        keys = [tuple(r) for r in got.select(*cols[:3]).collect()]
-        assert len(keys) == len(set(keys)) == 5  # no duplicate keys
-        # the overlapping key kept its ORIGINAL row (count 3, not 9)
-        assert (
-            got.filter("disaster_date = '2023-06-02' AND district_id = 10")
-            .first()["count_of_disasters"]
-            == 3
-        )
-        # day-1 gained nothing → its files completely untouched
-        day1_after = {
-            k: v for k, v in snapshot(d).items() if "disaster_date=2023-06-01" in k
-        }
-        assert day1_after == day1_before
-
-        # re-running b2 is a no-op: zero new rows, every file byte-identical
-        before_all = snapshot(d)
-        assert merge_into_fact(b2, d, cols[:3], "disaster_date") == 0
-        assert snapshot(d) == before_all
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_merge_unreadable_populated_target_raises_not_treated_fresh(spark):
-    """A target path that EXISTS but fails to read (corrupt footer,
-    permission problem, transient FS error) must RAISE — treating any
-    read failure as 'fresh table' would append the full source over a
-    populated table, duplicating every key and returning wrong counts.
-    Fresh means the path does not exist, decided by an FS probe."""
-    from mini_project_204721_data_engineering_spark.sources.sink import (
-        merge_into,
-        merge_into_fact,
-    )
-
-    d = tempfile.mkdtemp(prefix="merge_corrupt_")
-    tab = os.path.join(d, "t")
-    os.makedirs(tab)
-    with open(os.path.join(tab, "part-00000.parquet"), "wb") as fh:
-        fh.write(b"this is not a parquet file")
-    src = spark.createDataFrame([(1, "d1", 1.0)], "k long, day string, v double")
-    try:
-        with pytest.raises(Exception):
-            merge_into(src, tab, ["k"], "day")
-        with pytest.raises(Exception):
-            merge_into_fact(src, tab, ["k"], "day")
-        # nothing was appended to the corrupt table by either path
-        assert os.listdir(tab) == ["part-00000.parquet"]
-        # a genuinely ABSENT path is still fresh and bootstraps cleanly
-        fresh = os.path.join(d, "fresh")
-        out = merge_into(src, fresh, ["k"], "day")
-        assert out == {"updated": 0, "deleted": 0, "inserted": 1,
-                       "partitions_rewritten": 1}
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_merge_into_full_upsert_delete_move_and_replay(spark):
-    """merge_into: the full MERGE matrix over a partitioned table —
-    update-in-place, update that MOVES a row across partitions, insert
-    into existing and brand-new partitions, delete that empties a
-    partition (directory removed), untouched partitions byte-identical,
-    idempotent replay, and the in-plan duplicate-source guard."""
-    import pytest as _pytest
-
-    from mini_project_204721_data_engineering_spark.sources.sink import merge_into
-
-    def snapshot(d):
-        out = {}
-        for root, _dirs, files in os.walk(d):
-            for f in files:
-                if f.startswith(("_", ".")):
-                    continue
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                out[os.path.relpath(p, d)] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    def state(d):
-        return {
-            r["k"]: (r["day"], r["v"])
-            for r in spark.read.parquet(d).collect()
-        }
-
-    d = tempfile.mkdtemp(prefix="merge_into_")
-    cols = "k long, day string, v double"
-    try:
-        # seed via merge on an absent table → pure insert
-        seed = spark.createDataFrame(
-            [(1, "d1", 1.0), (2, "d1", 2.0), (3, "d2", 3.0), (4, "d3", 4.0)],
-            cols,
-        )
-        r = merge_into(seed, d, ["k"], "day")
-        assert r == {"updated": 0, "deleted": 0, "inserted": 4,
-                     "partitions_rewritten": 3}
-
-        d3_before = {k: v for k, v in snapshot(d).items() if "day=d3" in k}
-        # update in place (k=1), update moving partition (k=3: d2→d1),
-        # insert existing partition (k=5→d1), insert new partition (k=6→d9)
-        src = spark.createDataFrame(
-            [(1, "d1", 10.0), (3, "d1", 30.0), (5, "d1", 5.0), (6, "d9", 6.0)],
-            cols,
-        )
-        r = merge_into(src, d, ["k"], "day")
-        assert r["updated"] == 2 and r["inserted"] == 2 and r["deleted"] == 0
-        assert state(d) == {1: ("d1", 10.0), 2: ("d1", 2.0), 3: ("d1", 30.0),
-                            4: ("d3", 4.0), 5: ("d1", 5.0), 6: ("d9", 6.0)}
-        # d3 gained/lost nothing → files byte-identical
-        assert {k: v for k, v in snapshot(d).items() if "day=d3" in k} == d3_before
-        # the moved row left d2 empty → its directory is gone
-        assert not any("day=d2" in k for k in snapshot(d))
-
-        # idempotent replay: same source again → same state (inserts
-        # become updates), d3 still untouched
-        r2 = merge_into(src, d, ["k"], "day")
-        assert r2["updated"] == 4 and r2["inserted"] == 0
-        assert state(d) == {1: ("d1", 10.0), 2: ("d1", 2.0), 3: ("d1", 30.0),
-                            4: ("d3", 4.0), 5: ("d1", 5.0), 6: ("d9", 6.0)}
-        assert {k: v for k, v in snapshot(d).items() if "day=d3" in k} == d3_before
-
-        # delete: remove k=4 (empties d3) and k=5; unmatched source key
-        # ignored under when_not_matched="ignore"
-        dels = spark.createDataFrame(
-            [(4, "d3", 0.0), (5, "d1", 0.0), (99, "d1", 0.0)], cols
-        )
-        r3 = merge_into(dels, d, ["k"], "day",
-                        when_matched="delete", when_not_matched="ignore")
-        assert r3["deleted"] == 2 and r3["inserted"] == 0
-        assert state(d) == {1: ("d1", 10.0), 2: ("d1", 2.0), 3: ("d1", 30.0),
-                            6: ("d9", 6.0)}
-        assert not any("day=d3" in k for k in snapshot(d))
-
-        # duplicate source keys → loud in-plan guard at execution
-        dup = spark.createDataFrame([(1, "d1", 7.0), (1, "d1", 8.0)], cols)
-        with _pytest.raises(Exception, match="duplicate key"):
-            merge_into(dup, d, ["k"], "day")
-
-        # broadcast_source=False (giant-backfill path): same semantics
-        # through the shuffle-join plan
-        src2 = spark.createDataFrame([(1, "d1", 11.0), (7, "d1", 7.0)], cols)
-        r4 = merge_into(src2, d, ["k"], "day", broadcast_source=False)
-        assert r4["updated"] == 1 and r4["inserted"] == 1
-        s4 = state(d)
-        assert s4[1] == ("d1", 11.0) and s4[7] == ("d1", 7.0)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_approx_cardinality_within_tolerance(spark):
     """The 100 TB path for type_user_cardinality: approx_count_distinct
     (HLL, fixed memory, no distinct expand) lands within 5% of exact."""
@@ -308,65 +98,6 @@ def test_approx_cardinality_within_tolerance(spark):
         assert abs(r["approx"] - r["exact"]) <= max(1, 0.05 * r["exact"])
 
 
-def test_write_jdbc_batches_and_coalesces(spark):
-    """S8 JDBC parity via the injected terminal writer (no driver jars in
-    this env): the reference's chunksize=2000 becomes the JDBC batchsize,
-    and num_partitions bounds the connection count."""
-    from mini_project_204721_data_engineering_spark.sources.sink import write_jdbc
-
-    df = spark.range(100).selectExpr("id", "id * 2 AS v")
-    calls = []
-
-    def fake_writer(d, url, table, mode, props):
-        calls.append((d.rdd.getNumPartitions(), url, table, mode, props))
-
-    write_jdbc(
-        df,
-        "jdbc:postgresql://db/analytics",
-        "rain_points",
-        num_partitions=4,
-        _writer=fake_writer,
-    )
-    nparts, url, table, mode, props = calls[0]
-    assert nparts <= 4
-    assert (url, table, mode) == ("jdbc:postgresql://db/analytics", "rain_points", "append")
-    assert props["batchsize"] == "2000"
-
-
-def test_bucketed_join_runs_without_any_shuffle(spark, tmp_path):
-    """The 100 TB co-location payoff: two tables bucketed (and sorted) on
-    the join key sort-merge-join with ZERO Exchange in the plan — the
-    write-once shuffle replaces every recurring join shuffle."""
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-    from mini_project_204721_data_engineering_spark.plans.checks import shuffle_count
-    from mini_project_204721_data_engineering_spark.sources.sink import write_bucketed
-
-    sf = "/root/testdata/sf0.001"
-    orders = load_table(spark, sf, "orders").select("o_orderkey", "o_totalprice")
-    li = load_table(spark, sf, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(
-        orders, "b_orders", 4, ["o_orderkey"], ["o_orderkey"], path=str(tmp_path / "bo")
-    )
-    write_bucketed(
-        li, "b_lineitem", 4, ["l_orderkey"], ["l_orderkey"], path=str(tmp_path / "bl")
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
-    try:
-        j = spark.table("b_orders").join(
-            spark.table("b_lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert shuffle_count(j) == 0  # no Exchange anywhere
-        assert j.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
     """Z-order vs linear sort, measured on REAL parquet footer stats:
     with a (l_orderkey, l_partkey) Z-layout, a point filter on EITHER
@@ -377,7 +108,7 @@ def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
 
     li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
     zdir, ldir = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    write_zordered(li, zdir, ["l_orderkey", "l_partkey"], n_files=16)
+    zorder_layout(li, ["l_orderkey", "l_partkey"], n_files=16).write.parquet(zdir)
     (
         li.repartitionByRange(16, "l_orderkey", "l_partkey")
         .sortWithinPartitions("l_orderkey", "l_partkey")
@@ -421,189 +152,6 @@ def test_zorder_layout_prunes_on_both_columns(spark, tmp_path):
     okey = [r["l_orderkey"] for r in li.limit(1).collect()][0]
     z_hit_k = sum(1 for lo, hi in file_ranges(zdir, "l_orderkey") if lo <= okey <= hi)
     assert z_hit_k <= len(z_ranges) // 2
-
-
-def test_write_jsonl_shards_round_trip(spark, tmp_path):
-    from mini_project_204721_data_engineering_spark.sources.sink import write_jsonl
-
-    docs = load_table(spark, SF, "documents").select("doc_id", "text", "lang")
-    out = str(tmp_path / "jsonl")
-    write_jsonl(docs, out, n_shards=4)
-    files = [f for f in os.listdir(out) if f.startswith("part-")]
-    assert len(files) == 4
-    assert all(f.endswith(".json.gz") for f in files)
-    back = spark.read.json(out)
-    assert back.count() == docs.count()
-    a = {r["doc_id"]: r["text"] for r in docs.collect()}
-    b = {r["doc_id"]: r["text"] for r in back.collect()}
-    assert a == b
-
-
-def test_delete_rows_rewrites_only_hit_partitions(spark, tmp_path):
-    """Right-to-be-forgotten: deleting one user's rows rewrites ONLY the
-    date partitions containing that user — untouched partitions keep
-    byte-identical files — and a re-run is a no-op."""
-    import glob
-    import hashlib
-
-    from mini_project_204721_data_engineering_spark.sources.sink import (
-        delete_rows,
-        write_fact_partitioned,
-    )
-
-    ev = load_table(spark, SF, "events").withColumn("day", F.col("ts").cast("date"))
-    root = str(tmp_path / "fact")
-    write_fact_partitioned(ev.repartition(1, "day"), root, ["day"])
-
-    target_user = ev.limit(1).collect()[0]["user_id"]
-    hit_days = {
-        str(r["day"]) for r in ev.filter(F.col("user_id") == target_user).select("day").distinct().collect()
-    }
-    all_days = {str(r["day"]) for r in ev.select("day").distinct().collect()}
-    untouched = sorted(all_days - hit_days)
-
-    def digest(day):
-        h = hashlib.md5()
-        for f in sorted(glob.glob(os.path.join(root, f"day={day}", "*.parquet"))):
-            h.update(open(f, "rb").read())
-        return h.hexdigest()
-
-    before = {d: digest(d) for d in untouched}
-    n_before = spark.read.parquet(root).count()
-    n_user = ev.filter(F.col("user_id") == target_user).count()
-
-    n_del = delete_rows(spark, root, F.col("user_id") == target_user, "day")
-    assert n_del == n_user
-    after = spark.read.parquet(root)
-    assert after.count() == n_before - n_user
-    assert after.filter(F.col("user_id") == target_user).count() == 0
-    # partitions without the user were not rewritten
-    assert {d: digest(d) for d in untouched} == before
-    # idempotent: nothing left to delete, no write happens
-    assert delete_rows(spark, root, F.col("user_id") == target_user, "day") == 0
-
-
-def test_compact_partitions_single_file_same_rows(spark, tmp_path):
-    from mini_project_204721_data_engineering_spark.sources.sink import (
-        compact_partitions,
-        write_fact_partitioned,
-    )
-    import glob
-
-    ev = load_table(spark, SF, "events").withColumn("day", F.col("ts").cast("date"))
-    root = str(tmp_path / "fact")
-    # fragment: 8 files per partition
-    write_fact_partitioned(ev.repartition(8), root, ["day"])
-    days = sorted({str(r["day"]) for r in ev.select("day").distinct().collect()})[:2]
-
-    def nfiles(day):
-        return len(glob.glob(os.path.join(root, f"day={day}", "*.parquet")))
-
-    assert all(nfiles(d) > 1 for d in days)
-    before = spark.read.parquet(root).count()
-    compact_partitions(spark, root, "day", days)
-    assert all(nfiles(d) == 1 for d in days)
-    assert spark.read.parquet(root).count() == before
-
-
-def test_delete_rows_drops_fully_emptied_partition(spark, tmp_path):
-    """Deleting EVERY row of a partition must remove its directory —
-    dynamic overwrite alone would leave the stale files in place."""
-    from mini_project_204721_data_engineering_spark.sources.sink import (
-        delete_rows,
-        write_fact_partitioned,
-    )
-
-    ev = load_table(spark, SF, "events").withColumn("day", F.col("ts").cast("date"))
-    root = str(tmp_path / "fact")
-    write_fact_partitioned(ev.repartition(1, "day"), root, ["day"])
-    victim = sorted(str(r["day"]) for r in ev.select("day").distinct().collect())[0]
-    n_victim = ev.filter(F.col("day") == victim).count()
-    assert n_victim > 0
-
-    n_del = delete_rows(spark, root, F.col("day").cast("string") == victim, "day")
-    assert n_del == n_victim
-    assert not os.path.exists(os.path.join(root, f"day={victim}"))
-    back = spark.read.parquet(root)
-    assert back.filter(F.col("day").cast("string") == victim).count() == 0
-    assert back.count() == ev.count() - n_victim
-
-
-def test_delete_rows_null_predicate_rows_survive(spark, tmp_path):
-    """Three-valued logic: rows where the delete predicate evaluates NULL
-    (null key column) must survive, not be silently dropped."""
-    from mini_project_204721_data_engineering_spark.sources.sink import (
-        delete_rows,
-        write_fact_partitioned,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 7, "2024-01-01"), (2, None, "2024-01-01"), (3, 8, "2024-01-02")],
-        "id long, user_id long, day string",
-    )
-    root = str(tmp_path / "fact")
-    write_fact_partitioned(df.repartition(1), root, ["day"])
-    n = delete_rows(spark, root, F.col("user_id") == 7, "day")
-    assert n == 1
-    back = {r["id"] for r in spark.read.parquet(root).collect()}
-    assert back == {2, 3}  # the null-user row survived
-
-
-def test_delete_rows_null_partition_value(spark, tmp_path):
-    """Rows whose PARTITION value is NULL live in __HIVE_DEFAULT_PARTITION__;
-    isin(affected) is three-valued-NULL for them, so without the explicit
-    isNull branch a delete would skip them while under-reporting the
-    count (ADVICE r4)."""
-    from mini_project_204721_data_engineering_spark.sources.sink import (
-        delete_rows,
-        write_fact_partitioned,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 7, "2024-01-01"), (2, 7, None), (3, 8, None), (4, 9, "2024-01-02")],
-        "id long, user_id long, day string",
-    )
-    root = str(tmp_path / "fact")
-    write_fact_partitioned(df.repartition(1), root, ["day"])
-    assert os.path.exists(os.path.join(root, "day=__HIVE_DEFAULT_PARTITION__"))
-
-    # user 7 has rows in BOTH a real partition and the null partition
-    n = delete_rows(spark, root, F.col("user_id") == 7, "day")
-    assert n == 2
-    back = {r["id"] for r in spark.read.parquet(root).collect()}
-    assert back == {3, 4}  # null-partition row of user 8 survived
-
-    # deleting the null partition's last row must remove its directory
-    n = delete_rows(spark, root, F.col("user_id") == 8, "day")
-    assert n == 1
-    assert not os.path.exists(os.path.join(root, "day=__HIVE_DEFAULT_PARTITION__"))
-    assert {r["id"] for r in spark.read.parquet(root).collect()} == {4}
-
-
-def test_delete_rows_escaped_partition_value(spark, tmp_path):
-    """Partition values with path-special chars (':' in a timestamp-like
-    string) are %-escaped by Spark on write; emptied-partition cleanup
-    must address the ESCAPED directory, not a raw f-string path."""
-    from mini_project_204721_data_engineering_spark.sources.sink import (
-        _escape_partition_value,
-        delete_rows,
-        write_fact_partitioned,
-    )
-
-    assert _escape_partition_value("2024-01-01 00:00") == "2024-01-01 00%3A00"
-    assert _escape_partition_value(None) == "__HIVE_DEFAULT_PARTITION__"
-
-    df = spark.createDataFrame(
-        [(1, "a:1"), (2, "a:1"), (3, "b:2")], "id long, grp string"
-    )
-    root = str(tmp_path / "fact")
-    write_fact_partitioned(df.repartition(1), root, ["grp"])
-    assert os.path.exists(os.path.join(root, "grp=a%3A1"))
-
-    n = delete_rows(spark, root, F.col("id") <= 2, "grp")
-    assert n == 2
-    assert not os.path.exists(os.path.join(root, "grp=a%3A1"))
-    assert {r["id"] for r in spark.read.parquet(root).collect()} == {3}
 
 
 def test_zorder_bits_auto_shrink_many_columns(spark, tmp_path):
@@ -657,13 +205,11 @@ def test_zorder_handles_negative_and_constant_columns(spark, tmp_path):
     """Z-order edge cases: negative value ranges normalize correctly, and
     a constant column degrades gracefully (ordering falls entirely to the
     varying column)."""
-    from mini_project_204721_data_engineering_spark.sources.sink import write_zordered
-
     df = spark.range(0, 4000).selectExpr(
         "id", "CAST(id - 2000 AS LONG) AS a", "CAST(7 AS LONG) AS c"
     )
     out = str(tmp_path / "z")
-    write_zordered(df, out, ["a", "c"], n_files=8)
+    zorder_layout(df, ["a", "c"], n_files=8).write.parquet(out)
     back = spark.read.parquet(out)
     assert back.count() == 4000
     assert back.agg(F.min("a"), F.max("a")).collect()[0][0:2] == (-2000, 1999)
@@ -692,46 +238,6 @@ def test_zorder_handles_negative_and_constant_columns(spark, tmp_path):
         assert hi1 <= lo2  # disjoint ascending ranges: a-ordering preserved
 
 
-def test_merge_schema_contract_refuses_extra_and_missing_columns(spark):
-    """Merging into an EXISTING table with a source schema that doesn't
-    match must refuse LOUDLY naming the columns — an extra source
-    column was previously dropped silently (data loss on a CDC feed)
-    and a missing one raised an opaque plan-internal error."""
-    from mini_project_204721_data_engineering_spark.sources.sink import (
-        merge_into,
-        merge_into_fact,
-    )
-
-    d = tempfile.mkdtemp(prefix="merge_schema_")
-    tab = os.path.join(d, "t")
-    seed = spark.createDataFrame([(1, "d1", 1.0)], "k long, day string, v double")
-    try:
-        merge_into(seed, tab, ["k"], "day")
-        extra = spark.createDataFrame(
-            [(2, "d1", 2.0, "x")], "k long, day string, v double, extra string"
-        )
-        with pytest.raises(ValueError, match=r"silently dropped.*extra|\['extra'\]"):
-            merge_into(extra, tab, ["k"], "day")
-        with pytest.raises(ValueError, match=r"\['extra'\]"):
-            merge_into_fact(extra, tab, ["k"], "day")
-        missing = spark.createDataFrame([(3, "d1")], "k long, day string")
-        with pytest.raises(ValueError, match=r"\['v'\] are missing from the source"):
-            merge_into(missing, tab, ["k"], "day")
-        with pytest.raises(ValueError, match=r"\['v'\]"):
-            merge_into_fact(missing, tab, ["k"], "day")
-        # the table was not touched by any refused merge (column order
-        # on disk puts the partition column last — compare as dicts)
-        assert [r.asDict() for r in
-                spark.read.parquet(tab).select("k", "day", "v").collect()] == [
-            r.asDict() for r in seed.collect()
-        ]
-        # matching schema still merges fine
-        ok = spark.createDataFrame([(2, "d1", 2.0)], "k long, day string, v double")
-        assert merge_into(ok, tab, ["k"], "day")["inserted"] == 1
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_zorder_wide_span_column_stays_monotone(spark):
     """Overflow regression: normalization used to compute
     (v - lo) * (2^bits - 1) in LONG arithmetic, which wraps for column
@@ -753,7 +259,6 @@ def test_zorder_date_and_string_columns_prune(spark, tmp_path):
     — a point filter on EITHER column must overlap only a minority of
     files, and the bytes must round-trip identically."""
     import pyarrow.parquet as pq
-    from mini_project_204721_data_engineering_spark.sources.sink import write_zordered
 
     df = spark.range(0, 20000).select(
         F.col("id"),
@@ -761,7 +266,7 @@ def test_zorder_date_and_string_columns_prune(spark, tmp_path):
         F.concat(F.lit("user-"), F.lpad((F.col("id") % 500).cast("string"), 4, "0")).alias("user"),
     )
     out = str(tmp_path / "zds")
-    write_zordered(df, out, ["day", "user"], n_files=16)
+    zorder_layout(df, ["day", "user"], n_files=16).write.parquet(out)
     back = spark.read.parquet(out)
     assert back.count() == 20000
     assert {r["id"] for r in back.collect()} == set(range(20000))

@@ -1,6 +1,5 @@
 """Tests for the LLM-pipeline operators that the oracle can't fully cover:
-multimodal plumbing (binary columns, chunking, Arrow decode), ANN recall,
-and dedup cross-checks between variants."""
+ANN recall, dedup cross-checks between variants, and text helpers."""
 
 from __future__ import annotations
 
@@ -10,13 +9,6 @@ from pyspark.sql import functions as F
 
 from mini_project_204721_data_engineering_spark.catalog import load_table
 from mini_project_204721_data_engineering_spark.llm.dedup import minhash_lsh_pairs, ngram_jaccard_pairs, simhash
-from mini_project_204721_data_engineering_spark.llm.multimodal import (
-    chunk_payload,
-    decode_batches,
-    decode_stub,
-    fake_feature_extract,
-    with_payload_meta,
-)
 from mini_project_204721_data_engineering_spark.llm.similarity import cosine_topk, ivf_topk
 
 SF = "/root/testdata/sf0.001"
@@ -114,35 +106,6 @@ def test_ivf_partial_probe_is_subset_and_sized(spark):
         assert sims == sorted(sims, reverse=True)
 
 
-def test_multimodal_meta_and_chunking(spark):
-    df = spark.createDataFrame([Row(doc_id=1, text="x" * 1000)]).select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-    meta = with_payload_meta(df).select("payload_meta.*").collect()[0]
-    assert meta["modality"] == "image" and meta["byte_len"] == 1000
-    chunks = chunk_payload(df, chunk_bytes=256).collect()
-    assert len(chunks) == 4
-    assert sum(len(c["chunk"]) for c in chunks) == 1000
-    assert all(c["chunk_idx"] == i for i, c in enumerate(sorted(chunks, key=lambda c: c["chunk_idx"])))
-
-
-def test_decode_batches_arrow_pipeline(spark):
-    df = spark.createDataFrame(
-        [Row(doc_id=i, text=f"payload number {i}") for i in range(10)]
-    ).select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    feats = decode_batches(df, dim=8).collect()
-    assert len(feats) == 10
-    by_id = {r["doc_id"]: r["features"] for r in feats}
-    # deterministic: same payload → same features
-    assert by_id[3] == fake_feature_extract(b"payload number 3", 8)
-    assert all(len(v) == 8 for v in by_id.values())
-
-
-def test_decode_stub_is_explicitly_unavailable():
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"\x89PNG...")
-
-
 def test_srp_signatures_bucket_similar_vectors(spark):
     """SRP property: identical vectors share a signature; a sign-flipped
     vector gets the complementary one."""
@@ -236,34 +199,6 @@ def test_ivf_over_kmeans_full_probe_equals_brute_force(spark):
         for r in ivf_topk(cells, qs, k=5, nprobe=4, cell_col="cell").collect()
     }
     assert full == exact
-
-
-def test_sample_frames_keeps_every_nth_chunk(spark):
-    from mini_project_204721_data_engineering_spark.llm.multimodal import sample_frames
-
-    docs = load_table(spark, SF, "documents").limit(20)
-    payloads = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
-    out = sample_frames(payloads, every_n=3, chunk_bytes=64).collect()
-    assert out
-    for r in out:
-        assert r["chunk_idx"] % 3 == 0
-        assert 0 < len(r["chunk"]) <= 64
-    # chunk 0 survives for every doc
-    assert {r["doc_id"] for r in out if r["chunk_idx"] == 0} == {
-        r["doc_id"] for r in payloads.collect()
-    }
-
-
-def test_chunk_payload_empty_payload_yields_no_chunks(spark):
-    from mini_project_204721_data_engineering_spark.llm.multimodal import chunk_payload
-
-    df = spark.createDataFrame(
-        [Row(doc_id=1, payload=b""), Row(doc_id=2, payload=b"abc")]
-    )
-    out = chunk_payload(df, chunk_bytes=2).collect()
-    # empty payload contributes nothing (not a phantom [0, -1] pair)
-    assert {r["doc_id"] for r in out} == {2}
-    assert sorted(r["chunk_idx"] for r in out) == [0, 1]
 
 
 def test_srp_banded_pairs_subset_of_exact(spark):
@@ -1060,171 +995,6 @@ def test_semantic_dedup_hot_cell_cap_bounds_pairs(spark):
     assert len(sizes1) >= math.ceil(max(sizes0) / cap)
 
 
-def test_bpe_train_matches_reference_implementation(spark):
-    """Distributed BPE induction produces the identical merge sequence
-    and word segmentations as the pure-Python reference (same
-    frequency-then-lexicographic tie-breaks) on a corpus with known
-    structure."""
-    from mini_project_204721_data_engineering_spark.llm.bpe import bpe_reference, bpe_train
-
-    texts = [
-        "low lower lowest low low",
-        "new newer newest new new new",
-        "wide wider widest",
-        "low newer low lower",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    ref_merges, ref_words = bpe_reference(texts, n_merges=12)
-    merges, segmented = bpe_train(docs, n_merges=12)
-    assert merges == ref_merges
-    assert len(merges) > 3
-    got = {r["word"]: list(r["syms"]) for r in segmented.collect()}
-    assert got == ref_words
-
-
-def test_bpe_batched_training_identical_to_sequential(spark):
-    """max_batch > 1 must produce the IDENTICAL merge list and word
-    segmentations as one-merge-per-round training (and the pure-Python
-    reference) — including on corpora engineered for interacting pairs
-    (shared symbols, chained merges, colliding merge outputs, ties)."""
-    from mini_project_204721_data_engineering_spark.llm.bpe import bpe_reference, bpe_train
-
-    corpora = [
-        # natural-ish: suffix families force chained interactions
-        ["low lower lowest low low", "new newer newest new new new",
-         "wide wider widest", "low newer low lower"],
-        # tiny alphabet: nearly every pair shares a symbol
-        ["abab abab ababab ba", "aabb aabb bbaa", "abba baab abab"],
-        # runs: self-pairs (a,a) and colliding outputs ('aa' exists as
-        # a symbol once merged, then (aa,aa) etc.)
-        ["aaaa aaaaaaaa aa aaaa", "bbbb bb bbbbbb", "abab aabb"],
-        # ties everywhere: equal-frequency pairs exercise the
-        # lexicographic tie-break inside a batch
-        ["cd cd ef ef gh gh ij ij", "cdef ghij cdef ghij"],
-    ]
-    for texts in corpora:
-        docs = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        ref_merges, ref_words = bpe_reference(texts, n_merges=14)
-        for mb in (4, 16):
-            merges, segmented = bpe_train(docs, n_merges=14, max_batch=mb)
-            assert merges == ref_merges, (texts, mb)
-            got = {r["word"]: list(r["syms"]) for r in segmented.collect()}
-            assert got == ref_words, (texts, mb)
-
-
-def test_bpe_batched_multi_merge_round_when_provably_safe(spark):
-    """A corpus engineered so the top two pairs are symbol-disjoint AND
-    the runner-up's count strictly dominates every pair the leader's
-    merge can create — the provable multi-merge case — lands both in
-    ONE round (round_log shows it), still matching the reference."""
-    from mini_project_204721_data_engineering_spark.llm.bpe import bpe_reference, bpe_train
-
-    # (a,b)=10 with successors split between q/r (fst_max[b]=5);
-    # (c,d)=6 > 5 → both merge in round 1; the 5-count pairs interact
-    texts = (["abq"] * 5 + ["abr"] * 5 + ["cdu"] * 3 + ["cdv"] * 3)
-    docs = spark.createDataFrame([(0, " ".join(texts))], "doc_id long, text string")
-    log: list = []
-    merges, segmented = bpe_train(docs, n_merges=2, max_batch=8, round_log=log)
-    ref_merges, ref_words = bpe_reference([" ".join(texts)], n_merges=2)
-    assert merges == ref_merges == [("a", "b"), ("c", "d")]
-    assert log == [2]  # both merges in a single Spark round
-    got = {r["word"]: list(r["syms"]) for r in segmented.collect()}
-    assert got == ref_words
-
-
-def test_bpe_train_local_identical_and_round_free(spark):
-    """The production trainer (one distributed word-count pass, then
-    driver-side incremental sequential BPE): merge-for-merge identical
-    to the reference AND the distributed trainer at 100+ merges —
-    where one-job-per-merge needs 100+ Spark rounds, this needs zero,
-    the >=10x round reduction the scale path requires."""
-    from mini_project_204721_data_engineering_spark.llm.bpe import (
-        bpe_apply,
-        bpe_reference,
-        bpe_train,
-        bpe_train_local,
-    )
-
-    corpora = [
-        ["low lower lowest low low", "new newer newest new new new",
-         "wide wider widest", "low newer low lower"],
-        ["abab abab ababab ba", "aabb aabb bbaa", "abba baab abab"],
-        ["aaaa aaaaaaaa aa aaaa", "bbbb bb bbbbbb", "abab aabb"],
-        ["cd cd ef ef gh gh ij ij", "cdef ghij cdef ghij"],
-    ]
-    for texts in corpora:
-        docs = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        ref_merges, ref_words = bpe_reference(texts, n_merges=120)
-        merges, segmented = bpe_train_local(docs, n_merges=120)
-        assert merges == ref_merges, texts
-        got = {r["word"]: list(r["syms"]) for r in segmented.collect()}
-        assert got == ref_words, texts
-    # segmented table feeds bpe_apply unchanged (same contract)
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpora[0])], "doc_id long, text string"
-    )
-    merges, segmented = bpe_train_local(docs, n_merges=12)
-    m2, s2 = bpe_train(docs, n_merges=12)
-    assert merges == m2
-    a = {r["doc_id"]: list(r["bpe_tokens"]) for r in bpe_apply(docs, segmented).collect()}
-    b = {r["doc_id"]: list(r["bpe_tokens"]) for r in bpe_apply(docs, s2).collect()}
-    assert a == b
-
-
-def test_bpe_train_local_word_cap_guard(spark):
-    """max_words is a loud driver-memory guard, not a silent truncation."""
-    import pytest as _pytest
-
-    from mini_project_204721_data_engineering_spark.llm.bpe import bpe_train_local
-
-    docs = spark.createDataFrame(
-        [(0, "one two three four five six")], "doc_id long, text string"
-    )
-    with _pytest.raises(ValueError, match="max_words"):
-        bpe_train_local(docs, n_merges=2, max_words=3)
-
-
-def test_bpe_merge_is_nonoverlapping_leftmost(spark):
-    """'aaaa' under merge (a,a) becomes [aa, aa, </w>] in one round —
-    the merged token never re-merges within the same round."""
-    from mini_project_204721_data_engineering_spark.llm.bpe import bpe_train
-
-    docs = spark.createDataFrame([(1, "aaaa aaaa aaaa")], "doc_id long, text string")
-    merges, segmented = bpe_train(docs, n_merges=1)
-    assert merges == [("a", "a")]
-    syms = list(segmented.collect()[0]["syms"])
-    assert syms == ["aa", "aa", "</w>"]
-
-
-def test_bpe_apply_broadcast_join_with_oov_fallback(spark):
-    """bpe_apply segments in-vocab words with the trained table and
-    falls back to character symbols for OOV words; the join is a
-    broadcast hash join (no shuffle of the corpus side beyond the
-    per-doc reassembly)."""
-    from mini_project_204721_data_engineering_spark.llm.bpe import bpe_apply, bpe_train
-
-    train = spark.createDataFrame(
-        [(1, "low low low lower lower")], "doc_id long, text string"
-    )
-    merges, segmented = bpe_train(train, n_merges=6)
-    new = spark.createDataFrame([(7, "low zap")], "doc_id long, text string")
-    out = bpe_apply(new, segmented)
-    rows = {r["doc_id"]: list(r["bpe_tokens"]) for r in out.collect()}
-    toks = rows[7]
-    # 'low' uses the trained segmentation (merged), 'zap' falls back to chars
-    seg_low = {r["word"]: list(r["syms"]) for r in segmented.collect()}["low"]
-    assert toks[: len(seg_low)] == seg_low
-    assert toks[len(seg_low):] == ["z", "a", "p", "</w>"]
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
 def test_unigram_lm_scores_indomain_above_gibberish(spark):
     """A document made of reference-corpus words scores a higher mean
     logprob than OOV gibberish; the LM join is a broadcast hash join."""
@@ -1247,38 +1017,6 @@ def test_unigram_lm_scores_indomain_above_gibberish(spark):
     assert rows[1]["n_tokens"] == 5 and rows[2]["n_tokens"] == 4
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-
-
-def test_incremental_semantic_dedup_equals_from_scratch(spark):
-    """Batch-vs-index semantic dedup ≡ the from-scratch run on the
-    union, under the append-only invariants (monotone ids, shared
-    quantizer): prior survivors ∪ batch survivors match exactly, and the
-    batch step never re-assigns the historical corpus."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import (
-        incremental_semantic_dedup,
-        semantic_dedup,
-    )
-    from mini_project_204721_data_engineering_spark.llm.similarity import (
-        assign_cells,
-        seeded_centroids,
-    )
-
-    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
-    prior = emb.filter(F.col("vec_id") < 350)
-    batch = emb.filter(F.col("vec_id") >= 350)
-    cents = seeded_centroids(prior, ncells=8)
-
-    scratch = semantic_dedup(emb, threshold=0.40, centroids=cents)
-    scratch_ids = {r["vec_id"] for r in scratch.select("vec_id").collect()}
-
-    prior_kept = semantic_dedup(prior, threshold=0.40, centroids=cents)
-    index = assign_cells(prior, cents)  # ALL prior vectors, kept and dropped
-    batch_kept = incremental_semantic_dedup(batch, index, cents, threshold=0.40)
-    inc_ids = {r["vec_id"] for r in prior_kept.select("vec_id").collect()} | {
-        r["vec_id"] for r in batch_kept.select("vec_id").collect()
-    }
-    assert inc_ids == scratch_ids
-    assert any(v >= 350 for v in scratch_ids - inc_ids | inc_ids)  # batch participated
 
 
 def test_assign_cells_bcast_equals_literal_path(spark):
@@ -1361,23 +1099,6 @@ def test_two_level_unseeded_super_falls_back_not_dropped(spark):
     assert out[101] == 1  # unseeded super: falls back to the super id
 
 
-def test_bpe_handles_quote_and_backslash_symbols(spark):
-    """Merge-pair literals are SQL-escaped: corpora whose characters
-    include quotes and backslashes train without expression errors and
-    match the reference."""
-    from mini_project_204721_data_engineering_spark.llm.bpe import bpe_reference, bpe_train
-
-    texts = ["d'x d'x d'x", "a\\b a\\b a\\b a\\b"]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    ref_merges, ref_words = bpe_reference(texts, n_merges=6)
-    merges, segmented = bpe_train(docs, n_merges=6)
-    assert merges == ref_merges
-    got = {r["word"]: list(r["syms"]) for r in segmented.collect()}
-    assert got == ref_words
-
-
 def test_containment_catches_embedded_doc_jaccard_misses(spark):
     """A short doc fully embedded in a long one: containment flags it
     (contained = the short side) while symmetric Jaccard at the same
@@ -1417,114 +1138,6 @@ def test_length_outliers_flags_planted_extreme(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def _png_bytes(w, h):
-    import struct, zlib
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    chunk = struct.pack(">I", len(ihdr)) + b"IHDR" + ihdr + struct.pack(
-        ">I", zlib.crc32(b"IHDR" + ihdr)
-    )
-    return b"\x89PNG\r\n\x1a\n" + chunk
-
-
-def _jpeg_bytes(w, h):
-    import struct
-
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h, w, 3) + b"\x00\x00\x00"
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def _wav_bytes(rate, channels, seconds):
-    import struct
-
-    bits = 16
-    n = int(rate * channels * (bits // 8) * seconds)
-    fmt = struct.pack("<HHIIHH", 1, channels, rate, rate * channels * 2, channels * 2, bits)
-    body = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", n) + b"\x00" * n
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-
-
-def _box(typ: bytes, body: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">I", 8 + len(body)) + typ + body
-
-
-def _mp4_bytes(w, h, timescale, duration, version=0):
-    """Minimal ISO-BMFF: ftyp + moov(mvhd, audio trak, visual trak) —
-    the audio trak (zero tkhd dims) first, so the sniffer must SKIP it
-    to find the visual one."""
-    import struct
-
-    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isomiso2")
-    if version:
-        mvhd = _box(b"mvhd", bytes([1, 0, 0, 0]) + b"\x00" * 16
-                    + struct.pack(">IQ", timescale, duration) + b"\x00" * 80)
-
-        def tkhd(wf, hf):
-            return _box(b"tkhd", bytes([1, 0, 0, 0]) + b"\x00" * 84
-                        + struct.pack(">II", wf, hf))
-    else:
-        mvhd = _box(b"mvhd", bytes([0, 0, 0, 0]) + b"\x00" * 8
-                    + struct.pack(">II", timescale, duration) + b"\x00" * 80)
-
-        def tkhd(wf, hf):
-            return _box(b"tkhd", bytes([0, 0, 0, 0]) + b"\x00" * 72
-                        + struct.pack(">II", wf, hf))
-
-    audio_trak = _box(b"trak", tkhd(0, 0))
-    video_trak = _box(b"trak", tkhd(w << 16, h << 16))
-    moov = _box(b"moov", mvhd + audio_trak + video_trak)
-    return ftyp + moov + _box(b"mdat", b"\x00" * 32)
-
-
-def test_media_header_sniff_real_formats(spark):
-    """Header sniffing is REAL (no media libs): synthesized PNG/JPEG/
-    GIF/WAV/MP4 containers yield their true geometry and audio/video
-    params; garbage yields format=unknown with null fields; runs
-    distributed over mapInPandas."""
-    import struct
-
-    from mini_project_204721_data_engineering_spark.llm.multimodal import (
-        sniff_media_batches,
-        sniff_media_header,
-    )
-
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00" * 5
-    rows = [
-        (1, _png_bytes(640, 480)),
-        (2, _jpeg_bytes(1024, 768)),
-        (3, gif),
-        (4, _wav_bytes(16000, 2, 1.5)),
-        (5, b"not a media file at all"),
-        (6, _mp4_bytes(1920, 1080, timescale=600, duration=1500)),
-    ]
-    # driver-side truth
-    assert sniff_media_header(rows[0][1]) == {
-        "format": "png", "width": 640, "height": 480,
-        "channels": None, "sample_rate": None, "duration_s": None,
-    }
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r.asDict() for r in sniff_media_batches(df).collect()}
-    assert (got[1]["format"], got[1]["width"], got[1]["height"]) == ("png", 640, 480)
-    assert (got[2]["format"], got[2]["width"], got[2]["height"]) == ("jpeg", 1024, 768)
-    assert (got[3]["format"], got[3]["width"], got[3]["height"]) == ("gif", 320, 200)
-    assert got[4]["format"] == "wav"
-    assert got[4]["channels"] == 2 and got[4]["sample_rate"] == 16000
-    assert abs(got[4]["duration_s"] - 1.5) < 1e-6
-    assert got[5]["format"] == "unknown" and got[5]["width"] is None
-    # MP4: visual trak found PAST the zero-dim audio trak; 16.16 fixed
-    # dims decoded; duration = mvhd duration/timescale
-    assert (got[6]["format"], got[6]["width"], got[6]["height"]) == ("mp4", 1920, 1080)
-    assert abs(got[6]["duration_s"] - 2.5) < 1e-6
-    # the 64-bit (version 1) box variant driver-side
-    v1 = sniff_media_header(_mp4_bytes(640, 360, 1000, 7250, version=1))
-    assert (v1["format"], v1["width"], v1["height"]) == ("mp4", 640, 360)
-    assert abs(v1["duration_s"] - 7.25) < 1e-6
-
-
 def test_strip_html_recovers_inner_text(spark):
     """strip_html drops script/style bodies, comments and tags, decodes
     entities and collapses whitespace — malformed fragments degrade to
@@ -1543,6 +1156,47 @@ def test_strip_html_recovers_inner_text(spark):
     assert got[2] == "no markup at all"
     assert "broken" in got[3]  # degraded, not raised
     assert got[4] == "UPPER case tags"
+
+
+def test_url_parts_and_canonical_dedup_composition(spark):
+    """URL decomposition + canonicalization over crawl URLs: parts
+    extract correctly (scheme/host/domain/path/query, userinfo and
+    ports stripped from host), canonical forms collapse trivial
+    variants, and the canonical-URL frontier dedup keeps one record per
+    canonical URL."""
+    from mini_project_204721_data_engineering_spark.llm.text import (
+        canonical_url,
+        url_parts,
+    )
+
+    urls = [
+        "https://News.Example.co.uk:443/a/b?q=1#frag",
+        "http://user:pw@sub.site.org/path/",
+        "https://news.example.co.uk/a/b?q=1",
+        "ftp://files.example.com",
+        "not a url at all",
+    ]
+    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)], "i long, url string")
+    out = {r["i"]: r["p"] for r in df.select("i", url_parts(F.col("url")).alias("p")).collect()}
+    assert out[0]["scheme"] == "https"
+    assert out[0]["host"] == "news.example.co.uk"  # lowercased, port stripped
+    # last-two-labels heuristic: multi-label public suffixes under-split
+    # (documented trade) — co.uk, not example.co.uk
+    assert out[0]["registered_domain"] == "co.uk"
+    assert out[0]["path"] == "/a/b" and out[0]["query"] == "q=1"
+    assert out[1]["host"] == "sub.site.org"  # userinfo stripped
+    assert out[1]["registered_domain"] == "site.org"
+    assert out[3]["scheme"] == "ftp" and out[3]["path"] == ""
+    assert out[4]["scheme"] == "" and out[4]["host"] == ""
+    canon = {r["i"]: r["c"] for r in df.select("i", canonical_url(F.col("url")).alias("c")).collect()}
+    assert canon[0] == canon[2] == "https://news.example.co.uk/a/b?q=1"
+    assert canon[1] == "http://sub.site.org/path"
+    # frontier dedup: one row per canonical URL
+    kept = (
+        df.withColumn("c", canonical_url(F.col("url")))
+        .groupBy("c").agg(F.min("i").alias("first_i"))
+    )
+    assert kept.count() == 4
 
 
 def test_alpha_mix_rates_temperature_math(spark):

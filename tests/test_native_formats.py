@@ -3,10 +3,9 @@ built-in), and CSV's malformed-row modes.  These need no clean-room
 reader — the point of this file is to make the engine's FORMAT STORY
 explicit and tested: native parquet/orc/csv/json/xml/text via
 ``spark.read``/``spark.write``, plus the clean-room binary family
-(netcdf/hdf5/xlsx/xls/dbf/shp/warc/compressed-jsonl/arrow-ipc/avro)
-where Spark has no reader.  A format silently missing from the
-classpath (the avro module's fate here) would flip one of these tests,
-not surface as a mystery downstream."""
+(netcdf/hdf5/xlsx/xls/dbf/shp) where Spark has no reader.  A format
+silently missing from the classpath (as avro is here) would flip one
+of these tests, not surface as a mystery downstream."""
 
 from __future__ import annotations
 

@@ -366,39 +366,6 @@ def test_contaminated_docs_matches_bruteforce(spark, docs_tokens, n):
     assert got == want
 
 
-@settings(max_examples=20, deadline=None)
-@given(
-    syms=st.lists(st.sampled_from(["a", "b", "ab", "c"]), min_size=0, max_size=12),
-    pair=st.sampled_from([("a", "a"), ("a", "b"), ("b", "a"), ("ab", "c")]),
-)
-def test_bpe_merge_fold_property(spark, syms, pair):
-    """The codegen fold in llm/bpe.py merges adjacent pairs exactly like
-    the reference's left-to-right non-overlapping pass, on arbitrary
-    symbol sequences (incl. overlap chains like a,a,a and merged symbols
-    re-appearing as literals)."""
-    from mini_project_204721_data_engineering_spark.llm.bpe import _merge_expr
-
-    a, b = pair
-    out, pending = [], None
-    for x in syms:
-        if pending == a and x == b:
-            out.append(a + b)
-            pending = None
-        elif pending is None:
-            pending = x
-        else:
-            out.append(pending)
-            pending = x
-    if pending is not None:
-        out.append(pending)
-
-    import pyspark.sql.functions as F
-
-    df = spark.createDataFrame([(syms,)], "syms array<string>")
-    got = df.select(F.expr(_merge_expr([(a, b)])).alias("m")).collect()[0]["m"]
-    assert list(got) == out
-
-
 @settings(max_examples=15, deadline=None)
 @given(
     vecs=st.lists(
@@ -430,29 +397,6 @@ def test_assign_cells_bcast_equals_literal_property(spark, vecs, ncells):
     lit = {r["vec_id"]: r["cell"] for r in assign_cells(df, cents).collect()}
     bc = {r["vec_id"]: r["cell"] for r in assign_cells_bcast(df, cents).collect()}
     assert bc == lit
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.binary(max_size=256))
-def test_sniff_media_header_never_raises(payload):
-    """The header sniffer's contract: arbitrary bytes (including valid
-    magic prefixes with garbage bodies) never raise — a corrupt blob in
-    a corpus-wide scan must not kill the task."""
-    from mini_project_204721_data_engineering_spark.llm.multimodal import sniff_media_header
-
-    out = sniff_media_header(payload)
-    assert out["format"] in ("unknown", "png", "jpeg", "gif", "bmp", "wav")
-
-
-@settings(max_examples=150, deadline=None)
-@given(prefix=st.sampled_from([
-    b"\x89PNG\r\n\x1a\n", b"\xff\xd8\xff", b"GIF89a", b"BM", b"RIFF"]),
-    body=st.binary(max_size=64))
-def test_sniff_media_header_magic_plus_garbage_never_raises(prefix, body):
-    from mini_project_204721_data_engineering_spark.llm.multimodal import sniff_media_header
-
-    out = sniff_media_header(prefix + body)
-    assert isinstance(out, dict) and "format" in out
 
 
 def test_pit_lookup_boundary_facts_match_duckdb_asof_left(spark):
@@ -574,75 +518,6 @@ def test_fuzzy_join_tokensort_property(spark, lwords, rwords):
             if sim >= 0.8:
                 want.add((i, j))
     assert got == want
-
-
-@settings(deadline=None, max_examples=5)
-@given(
-    seed_rows=st.dictionaries(st.integers(0, 12),
-                              st.tuples(st.integers(0, 3), st.integers(0, 50)),
-                              min_size=1, max_size=8),
-    feed1=st.dictionaries(st.integers(0, 12),
-                          st.tuples(st.sampled_from(["upsert", "delete"]),
-                                    st.integers(0, 3), st.integers(51, 99)),
-                          max_size=8),
-    feed2=st.dictionaries(st.integers(0, 12),
-                          st.tuples(st.sampled_from(["upsert", "delete"]),
-                                    st.integers(0, 3), st.integers(100, 150)),
-                          max_size=8),
-)
-def test_merge_into_model_property(spark, seed_rows, feed1, feed2):
-    """Model-based MERGE check: arbitrary seed snapshots and two
-    arbitrary change feeds (upserts/deletes over overlapping keys and
-    shifting partitions) applied through merge_into on disk must equal
-    a plain Python dict model — including partition directories
-    (no stale files for moved/deleted keys)."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from mini_project_204721_data_engineering_spark.sources.sink import merge_into
-
-    base = tempfile.mkdtemp(prefix="merge_prop_")
-    tab = base + "/t"
-    cols = "k long, day string, v long"
-    try:
-        model = {k: (f"d{p}", v) for k, (p, v) in seed_rows.items()}
-        seed = spark.createDataFrame(
-            [(k, d, v) for k, (d, v) in model.items()], cols
-        )
-        merge_into(seed, tab, ["k"], "day")
-        for feed in (feed1, feed2):
-            if not feed:
-                continue
-            rows = [(k, f"d{p}", v, op) for k, (op, p, v) in feed.items()]
-            fdf = spark.createDataFrame(rows, cols + ", op string")
-            ups = fdf.filter(F.col("op") == "upsert").drop("op")
-            dels = fdf.filter(F.col("op") == "delete").drop("op")
-            merge_into(ups, tab, ["k"], "day")
-            merge_into(dels, tab, ["k"], "day",
-                       when_matched="delete", when_not_matched="ignore")
-            for k, (op, p, v) in feed.items():
-                if op == "upsert":
-                    model[k] = (f"d{p}", v)
-                else:
-                    model.pop(k, None)
-        # explicit schema: a feed that deleted EVERY row leaves a
-        # directory with no parquet files, and schema inference has
-        # nothing to read (the documented schemaless-format caveat —
-        # this hypothesis-found case is exactly why the snapshot log
-        # carries schema in the manifest instead)
-        got = {r["k"]: (r["day"], r["v"])
-               for r in spark.read.schema(cols).parquet(tab).collect()}
-        assert got == model
-        # no stale partition directories beyond the model's live set
-        live = {d for d, _ in model.values()}
-        on_disk = {e.split("=", 1)[1] for e in os.listdir(tab)
-                   if e.startswith("day=")}
-        assert on_disk == live
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @settings(deadline=None, max_examples=6)

@@ -734,18 +734,13 @@ def test_zorder_plus_stats_prune_synergy(spark, tmp_path):
     """Layout and manifest stats compose: z-ordered files give tight
     per-file ranges on BOTH dims, so a 2-D range read prunes most files
     from the manifest alone."""
-    from mini_project_204721_data_engineering_spark.sources.sink import zorder_column
+    from mini_project_204721_data_engineering_spark.sources.sink import zorder_layout
 
     t = str(tmp_path / "t")
     df = spark.range(4096).select(
         (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("long").alias("y")
     )
-    z = (
-        df.withColumn("__zval", zorder_column(df, ["x", "y"]))
-        .repartitionByRange(16, "__zval")
-        .sortWithinPartitions("__zval")
-        .drop("__zval")
-    )
+    z = zorder_layout(df, ["x", "y"], n_files=16)
     snapshot_append(z, t, stats_cols=["x", "y"])
     full = read_snapshot(spark, t)
     pruned = read_snapshot(spark, t, prune={"x": (0, 7), "y": (0, 7)})

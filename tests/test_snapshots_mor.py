@@ -1,7 +1,7 @@
 """Merge-on-read lazy deletes (sources/snapshots.py row_filters):
 zero-byte takedown commits, read-path filter application on exactly
 the covered files, drain through CoW rewrites/compaction/apply, and
-the incremental-read / change-feed / matview interplay."""
+the incremental-read / change-feed interplay."""
 
 from __future__ import annotations
 
@@ -237,54 +237,6 @@ def test_file_changes_and_change_feed_see_lazy_deletes(spark, tmp_path, lazy_mod
     assert ch[25] == "removed"
     assert all(s == "unchanged" for k, s in ch.items() if k != 25)
     assert set(ch) == set(range(20, 30))
-
-
-def test_matview_refresh_stays_exact_across_lazy_windows(spark, tmp_path):
-    from mini_project_204721_data_engineering_spark.operators.incremental import (
-        base_aggregate,
-    )
-    from mini_project_204721_data_engineering_spark.operators.matview import (
-        refresh_aggregate_view,
-    )
-
-    def rows(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id"),
-            (F.col("id") % 3).cast("string").alias("grp"),
-            (F.col("id") % 7).cast("double").alias("val"),
-        )
-
-    meas = {"total": (lambda r: r["val"])}
-    src, view = str(tmp_path / "src"), str(tmp_path / "view")
-    snapshot_append(rows(0, 60).repartition(3), src)
-    refresh_aggregate_view(spark, src, view, ["grp"], meas)
-
-    def expected():
-        return {
-            r["grp"]: (r["n"], r["total"])
-            for r in base_aggregate(
-                read_snapshot(spark, src), ["grp"], meas, "n"
-            ).collect()
-        }
-
-    def state():
-        return {
-            r["grp"]: (r["n"], r["total"])
-            for r in read_snapshot(spark, view).collect()
-        }
-
-    snapshot_delete_where(spark, src, "id % 5 = 0", lazy=True)
-    m = refresh_aggregate_view(spark, src, view, ["grp"], meas)
-    assert m["meta"]["refresh_mode"] == "delta-confined"
-    assert state() == expected()
-    # and keeps composing: append, lazy delete, CoW delete, refresh each
-    snapshot_append(rows(60, 90).repartition(1), src)
-    refresh_aggregate_view(spark, src, view, ["grp"], meas)
-    snapshot_delete_where(spark, src, "id >= 80", lazy=True)
-    snapshot_delete_where(spark, src, "id < 10")
-    m2 = refresh_aggregate_view(spark, src, view, ["grp"], meas)
-    assert m2 is not None
-    assert state() == expected()
 
 
 def test_lazy_delete_bad_predicate_refuses_loudly(spark, tmp_path):
@@ -613,84 +565,6 @@ def test_dv_rejects_bad_lazy_value(spark, tmp_path):
     snapshot_append(_df(spark, 0, 5), t)
     with pytest.raises(ValueError, match="lazy must be"):
         snapshot_delete_where(spark, t, "id = 1", lazy="vectors")
-
-
-@pytest.mark.parametrize("lazy_mode", [True, "dv"])
-def test_stream_lazy_takedown_mid_stream_flows_to_view(spark, tmp_path, lazy_mode):
-    """End-to-end streaming MoR visibility: a stream lands micro-batches
-    through snapshot_stream_sink; a lazy takedown (predicate or DV)
-    commits BETWEEN micro-batches; the stream keeps landing; the
-    aggregate view refresh consumes the refiltered-files change feed —
-    final view ≡ a from-scratch batch recompute with the takedown
-    applied."""
-    from mini_project_204721_data_engineering_spark.operators.incremental import (
-        base_aggregate,
-    )
-    from mini_project_204721_data_engineering_spark.operators.matview import (
-        refresh_aggregate_view,
-    )
-    from mini_project_204721_data_engineering_spark.sources.snapshots import (
-        snapshot_stream_sink,
-    )
-
-    def rows(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id"),
-            (F.col("id") % 3).cast("string").alias("grp"),
-            (F.col("id") % 7).cast("double").alias("val"),
-        )
-
-    src = str(tmp_path / "src")
-    t = str(tmp_path / "t")
-    view = str(tmp_path / "view")
-    chk = str(tmp_path / "chk")
-    rows(0, 30).repartition(3).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def run_stream():
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(snapshot_stream_sink(t, "curated"))
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    meas = {"total": (lambda r: r["val"])}
-
-    run_stream()
-    refresh_aggregate_view(spark, t, view, ["grp"], meas)
-
-    # mid-stream: the takedown lands between micro-batch windows
-    snapshot_delete_where(spark, t, "id % 5 = 0", lazy=lazy_mode)
-
-    # the stream continues from its checkpoint with fresh batches
-    rows(30, 60).repartition(2).write.parquet(src, mode="append")
-    run_stream()
-
-    m = refresh_aggregate_view(spark, t, view, ["grp"], meas)
-    assert m is not None
-    want = {
-        r["grp"]: (r["n"], r["total"])
-        for r in base_aggregate(read_snapshot(spark, t), ["grp"], meas, "n").collect()
-    }
-    got = {
-        r["grp"]: (r["n"], r["total"])
-        for r in read_snapshot(spark, view).collect()
-    }
-    assert got == want
-    # the takedown really bit — but only as-of its commit: rows the
-    # stream landed AFTER it are new files, never covered
-    assert _ids(read_snapshot(spark, t)) == {
-        i for i in range(60) if i % 5 or i >= 30
-    }
-    # and the incremental feed priced the takedown as refiltered files,
-    # not a table-sized diff (v-after-delete vs v-before)
-    _, _, info = snapshot_file_changes(spark, t, 3, 4)
-    assert info["refiltered_files"] != []
 
 
 def test_lazy_truthy_int_is_gated_like_true(spark, tmp_path):

@@ -4,7 +4,6 @@ equivalents on the same data."""
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 
@@ -78,29 +77,6 @@ def test_stream_dedup_append(spark, events_dir):
     assert n_stream == n_batch
 
 
-def test_stateful_burst_monitor(spark, events_dir):
-    from mini_project_204721_data_engineering_spark.streaming.stateful import user_burst_monitor
-
-    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
-    got = run_available_now(user_burst_monitor(stream), "t_state", output_mode="update")
-    rows = got.collect()
-    assert len(rows) > 0
-    # final state per user: totals must equal the batch ground truth
-    import pyspark.sql.functions as FF
-
-    truth = {
-        r["user_id"]: r["n"]
-        for r in spark.read.parquet(events_dir).groupBy("user_id").agg(FF.count(FF.lit(1)).alias("n")).collect()
-    }
-    finals = {}
-    for r in rows:  # last update per user wins (updates accumulate in sink)
-        cur = finals.get(r["user_id"], 0)
-        finals[r["user_id"]] = max(cur, r["total_events"])
-    assert finals == truth
-    # with maxFilesPerTrigger=1 over 4 files, bursts are < totals for active users
-    assert all(r["max_batch_events"] <= r["total_events"] for r in rows)
-
-
 def test_watermark_drops_late_data_across_restarts(spark):
     """Append-mode watermark semantics, checkpoint-persisted: an event
     arriving after the watermark passed its window must NOT change the
@@ -156,783 +132,6 @@ def test_watermark_drops_late_data_across_restarts(spark):
         shutil.rmtree(d, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
-
-
-def test_corpus_intake_dedups_across_restart(spark):
-    """Streaming corpus intake: quality gate + PII scrub + exact dedup
-    whose hash-set state survives a checkpointed restart — a duplicate
-    arriving in a LATER run (new query, same checkpoint) is dropped, and
-    the raw-content hash dedups even though the stored text is scrubbed."""
-    d = tempfile.mkdtemp(prefix="docs_in_")
-    ckpt = tempfile.mkdtemp(prefix="docs_ckpt_")
-    out = tempfile.mkdtemp(prefix="docs_out_")
-
-    good = " ".join(f"w{i}" for i in range(120))  # clears the quality gate
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        )
-
-    def run():
-        from mini_project_204721_data_engineering_spark.streaming.corpus import (
-            curate_stream,
-            read_docs_stream,
-        )
-
-        q = (
-            curate_stream(read_docs_stream(spark, d))
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        return spark.read.parquet(out).collect()
-
-    try:
-        pii = good + " reach a.b@c.org now"
-        mk(
-            [
-                (1, good, "en", "s0", len(good)),
-                (2, pii, "en", "s0", len(pii)),
-                (3, "the of to and in is on", "en", "s0", 22),  # all glue words: fails the gate
-            ]
-        ).write.mode("append").parquet(d)
-        rows1 = run()
-        assert {r["doc_id"] for r in rows1} == {1, 2}
-        scrubbed = next(r for r in rows1 if r["doc_id"] == 2)
-        assert "<EMAIL>" in scrubbed["text"] and "a.b@c.org" not in scrubbed["text"]
-
-        # run 2: raw duplicate of doc 2 (pre-scrub content) + one fresh doc
-        fresh = " ".join(f"v{i}" for i in range(150))
-        mk(
-            [
-                (4, pii, "en", "s1", len(pii)),      # dup of doc 2's RAW text
-                (5, fresh, "de", "s1", len(fresh)),
-            ]
-        ).write.mode("append").parquet(d)
-        rows2 = run()
-        assert {r["doc_id"] for r in rows2} == {1, 2, 5}  # 4 deduped by state
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_stream_interval_join_matches_batch(spark):
-    """Stream-stream interval join (clicks enriched with the user's
-    errors from the preceding 15 minutes): the streaming result over a
-    file source equals the batch twin computed by the SAME function on
-    the same data — and only in-interval pairs appear."""
-    import datetime as dt
-
-    from mini_project_204721_data_engineering_spark.streaming.joins import (
-        stream_interval_join,
-    )
-
-    d = tempfile.mkdtemp(prefix="sj_in_")
-    ckpt = tempfile.mkdtemp(prefix="sj_ckpt_")
-    out = tempfile.mkdtemp(prefix="sj_out_")
-    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
-
-    rows = []
-    # user 1: error 10 min before click → pairs; error 20 min before → not
-    rows.append((1, t0, "click", 1))
-    rows.append((2, t0 - dt.timedelta(minutes=10), "error", 1))
-    rows.append((3, t0 - dt.timedelta(minutes=20), "error", 1))
-    # user 2: error AFTER the click → not a pair
-    rows.append((4, t0, "click", 2))
-    rows.append((5, t0 + dt.timedelta(minutes=1), "error", 2))
-    ev = spark.createDataFrame(
-        [(i, ts, et, u) for i, ts, et, u in rows],
-        "event_id long, ts timestamp, event_type string, user_id long",
-    )
-    ev.write.mode("overwrite").parquet(d)
-
-    def split(df):
-        clicks = df.filter("event_type = 'click'").select(
-            "user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
-        )
-        errors = df.filter("event_type = 'error'").select(
-            F.col("user_id"), F.col("ts").alias("error_ts"), F.col("event_id").alias("error_id")
-        )
-        return clicks, errors
-
-    batch = stream_interval_join(*split(ev), key="user_id",
-                                 left_ts="click_ts", right_ts="error_ts")
-    expect = {(r["click_id"], r["error_id"]) for r in batch.collect()}
-    assert expect == {(1, 2)}
-
-    stream = spark.readStream.schema(ev.schema).parquet(d)
-    joined = stream_interval_join(*split(stream), key="user_id",
-                                  left_ts="click_ts", right_ts="error_ts")
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        got = {
-            (r["click_id"], r["error_id"]) for r in spark.read.parquet(out).collect()
-        }
-        assert got == expect
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_bounded_dedup_evicts_old_state_but_survives_restart(spark):
-    """VERDICT r5 #6: curate_stream_bounded keeps dedup state to the
-    ingest horizon — an OLD hash is evicted (its far-later duplicate is
-    re-admitted → state is provably bounded), while a RECENT duplicate
-    is still dropped across a checkpointed restart.  The re-admitted
-    copy is then caught by the batch-side full-history identity
-    (incremental_neardup against the persistent band index) — the
-    documented production composition."""
-    d = tempfile.mkdtemp(prefix="bdocs_in_")
-    ckpt = tempfile.mkdtemp(prefix="bdocs_ckpt_")
-    out = tempfile.mkdtemp(prefix="bdocs_out_")
-
-    text_a = " ".join(f"w{i}" for i in range(120))
-    text_b = " ".join(f"v{i}" for i in range(150))
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows,
-            "doc_id long, text string, lang string, source string, n_chars long, ingest_ts timestamp",
-        )
-
-    def run():
-        from mini_project_204721_data_engineering_spark.streaming.corpus import (
-            DOCS_SCHEMA,
-            curate_stream_bounded,
-        )
-        from pyspark.sql.types import StructField, StructType, TimestampType
-
-        schema = StructType(list(DOCS_SCHEMA) + [StructField("ingest_ts", TimestampType())])
-        stream = spark.readStream.schema(schema).parquet(d)
-        q = (
-            curate_stream_bounded(stream, horizon="7 days")
-            .writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        return spark.read.parquet(out).collect()
-
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-    feb = dt.datetime(2024, 2, 1)
-    try:
-        # batch 1: A lands at t0
-        mk([(1, text_a, "en", "s0", len(text_a), t0)]).write.mode("append").parquet(d)
-        rows = run()
-        assert {r["doc_id"] for r in rows} == {1}
-
-        # batch 2: B lands a month later — advances the watermark past
-        # A's expiration (t0 + 7 days); a same-batch dup of B is dropped
-        # (WHICH of the two copies survives is partition-order dependent —
-        # assert exactly one did, not which)
-        mk(
-            [
-                (2, text_b, "de", "s1", len(text_b), feb),
-                (3, text_b, "de", "s1", len(text_b), feb),
-            ]
-        ).write.mode("append").parquet(d)
-        ids = {r["doc_id"] for r in run()}
-        assert 1 in ids and len(ids & {2, 3}) == 1
-        b_survivor = (ids & {2, 3}).pop()
-
-        # RESTART (new query, same checkpoint). batch 3: a dup of A —
-        # its state entry aged out → re-admitted (bounded state, the
-        # point of the variant); a dup of B — recent → still dropped,
-        # proving the surviving state crossed the restart.
-        later = feb + dt.timedelta(days=1)
-        mk(
-            [
-                (4, text_a, "en", "s2", len(text_a), later),
-                (5, text_b, "de", "s2", len(text_b), later),
-            ]
-        ).write.mode("append").parquet(d)
-        rows = run()
-        assert {r["doc_id"] for r in rows} == {1, b_survivor, 4}  # 4 re-admitted, 5 dropped
-
-        # batch-side full-history identity catches the re-admitted copy:
-        # the curated store itself holds A's hash twice → exact-dup check
-        curated = spark.read.parquet(out)
-        a_hash = [r["content_hash"] for r in curated.filter("doc_id = 1").collect()][0]
-        dup_ids = {
-            r["doc_id"] for r in curated.filter(curated.content_hash == a_hash).collect()
-        }
-        assert dup_ids == {1, 4}
-        from mini_project_204721_data_engineering_spark.llm.dedup import (
-            build_band_index,
-            incremental_neardup,
-        )
-
-        history = curated.filter("doc_id = 1").select("doc_id", "text")
-        batch = curated.filter("doc_id = 4").select("doc_id", "text")
-        caught = {
-            (r["new_id"], r["match_id"])
-            for r in incremental_neardup(batch, build_band_index(history)).collect()
-        }
-        assert (4, 1) in caught
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_stream_foreachbatch_merge_is_replay_safe(spark):
-    """End-to-end exactly-once: the curated doc stream lands in the fact
-    table through foreachBatch + merge_into_fact, so even a FULL REPLAY
-    (checkpoint lost, stream rerun from scratch) leaves the table
-    without duplicate keys — state-based dedup alone can't promise that."""
-    d = tempfile.mkdtemp(prefix="docs2_in_")
-    out = tempfile.mkdtemp(prefix="docs2_fact_") + "/t"
-
-    good1 = " ".join(f"w{i}" for i in range(120))
-    good2 = " ".join(f"x{i}" for i in range(130))
-    spark.createDataFrame(
-        [(1, good1, "en", "s0", len(good1)), (2, good2, "de", "s0", len(good2))],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).write.mode("append").parquet(d)
-
-    from mini_project_204721_data_engineering_spark.sources.sink import merge_into_fact
-    from mini_project_204721_data_engineering_spark.streaming.corpus import (
-        curate_stream,
-        read_docs_stream,
-    )
-
-    def run(ckpt):
-        q = (
-            curate_stream(read_docs_stream(spark, d))
-            .writeStream.foreachBatch(
-                lambda batch, _id: merge_into_fact(
-                    batch, out, keys=["content_hash"], partition_col="lang"
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-
-    ck1 = tempfile.mkdtemp(prefix="docs2_ck1_")
-    ck2 = tempfile.mkdtemp(prefix="docs2_ck2_")
-    try:
-        run(ck1)
-        first = spark.read.parquet(out).collect()
-        assert {r["doc_id"] for r in first} == {1, 2}
-        # full replay with a FRESH checkpoint: every batch re-delivered
-        run(ck2)
-        again = spark.read.parquet(out)
-        assert again.count() == 2
-        assert again.groupBy("content_hash").count().filter("count > 1").count() == 0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
-        shutil.rmtree(ck1, ignore_errors=True)
-        shutil.rmtree(ck2, ignore_errors=True)
-
-
-def test_cdc_upsert_stream_applies_feed_and_replays_idempotently(spark):
-    """Streaming CDC upsert (streaming/cdc.py): a change-feed stream
-    applied per-batch via merge_into reaches the same table state as a
-    single batch merge, updates move rows across partitions, deletes
-    land, and a full replay (fresh checkpoint, every batch
-    re-delivered) leaves the state unchanged — plus a direct
-    double-invoke of the batch function (mid-stream crash replay)."""
-    from mini_project_204721_data_engineering_spark.sources.sink import merge_into
-    from mini_project_204721_data_engineering_spark.streaming.cdc import (
-        cdc_upsert_stream,
-        process_cdc_batch,
-    )
-
-    feed_dir = tempfile.mkdtemp(prefix="cdc_feed_")
-    tab = tempfile.mkdtemp(prefix="cdc_tab_") + "/t"
-    cols = "k long, day string, v double, op string"
-
-    def state():
-        return {r["k"]: (r["day"], r["v"]) for r in spark.read.parquet(tab).collect()}
-
-    # seed snapshot
-    seed = spark.createDataFrame(
-        [(1, "d1", 1.0), (2, "d1", 2.0), (3, "d2", 3.0)], "k long, day string, v double"
-    )
-    merge_into(seed, tab, ["k"], "day")
-
-    # two feed part-files → two micro-batches (maxFilesPerTrigger=1);
-    # keys are disjoint across files so any file→batch split is valid
-    spark.createDataFrame(
-        [(1, "d1", 10.0, "upsert"),      # update in place
-         (3, "d1", 30.0, "upsert"),      # update moving d2 → d1
-         (4, "d3", 4.0, "upsert")],      # insert, new partition
-        cols,
-    ).coalesce(1).write.mode("append").parquet(feed_dir)
-    spark.createDataFrame(
-        [(2, "d1", 0.0, "delete"),       # delete
-         (5, "d1", 5.0, "upsert")],      # insert, existing partition
-        cols,
-    ).coalesce(1).write.mode("append").parquet(feed_dir)
-
-    def run(ckpt):
-        changes = (
-            spark.readStream.schema(cols)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir)
-        )
-        q = (
-            cdc_upsert_stream(changes, tab, ["k"], "day")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-
-    ck1 = tempfile.mkdtemp(prefix="cdc_ck1_")
-    ck2 = tempfile.mkdtemp(prefix="cdc_ck2_")
-    try:
-        run(ck1)
-        want = {1: ("d1", 10.0), 3: ("d1", 30.0), 4: ("d3", 4.0), 5: ("d1", 5.0)}
-        assert state() == want
-        assert not any(  # the moved row's old partition is gone
-            "day=d2" in r for r, _, _ in os.walk(tab)
-        )
-        # full replay, fresh checkpoint: every batch re-delivered → same state
-        run(ck2)
-        assert state() == want
-        # mid-stream crash shape: re-invoke one batch function directly
-        replay = spark.createDataFrame(
-            [(2, "d1", 0.0, "delete"), (5, "d1", 5.0, "upsert")], cols
-        )
-        process_cdc_batch(replay, 99, tab, ["k"], "day")
-        assert state() == want
-    finally:
-        shutil.rmtree(feed_dir, ignore_errors=True)
-        shutil.rmtree(os.path.dirname(tab), ignore_errors=True)
-        shutil.rmtree(ck1, ignore_errors=True)
-        shutil.rmtree(ck2, ignore_errors=True)
-
-
-def test_cdc_batch_cross_op_duplicate_key_raises(spark):
-    """A key appearing as both upsert AND delete in ONE micro-batch
-    violates the per-key terminal-state contract — each op subset is
-    key-unique so merge_into's per-merge guard cannot see it; the
-    batch-level cross-op check must refuse before any merge runs (the
-    final state would otherwise silently depend on apply order)."""
-    from mini_project_204721_data_engineering_spark.streaming.cdc import process_cdc_batch
-
-    tab = tempfile.mkdtemp(prefix="cdc_dup_") + "/t"
-    cols = "k long, day string, v double, op string"
-    try:
-        bad = spark.createDataFrame(
-            [(1, "d1", 1.0, "upsert"), (1, "d1", 0.0, "delete"),
-             (2, "d1", 2.0, "upsert")],
-            cols,
-        )
-        with pytest.raises(ValueError, match="more than once"):
-            process_cdc_batch(bad, 0, tab, ["k"], "day")
-        assert not os.path.exists(tab)  # refused BEFORE any merge landed
-        ok = spark.createDataFrame(
-            [(1, "d1", 1.0, "upsert"), (2, "d1", 0.0, "delete")], cols
-        )
-        process_cdc_batch(ok, 1, tab, ["k"], "day")
-        assert {r["k"] for r in spark.read.parquet(tab).collect()} == {1}
-    finally:
-        shutil.rmtree(os.path.dirname(tab), ignore_errors=True)
-
-
-def test_stream_interval_left_outer_join_emits_null_padded_rows(spark):
-    """Left-outer stream-stream interval join (VERDICT r6 #8): a click
-    with no error in its interval IS emitted, null-padded — but only
-    after the watermark proves no match can still arrive, which takes a
-    later micro-batch (maxFilesPerTrigger=1 gives one batch per file so
-    the flush batch advances the watermark).  Stream ≡ batch twin on
-    matched AND unmatched rows."""
-    import datetime as dt
-
-    from mini_project_204721_data_engineering_spark.streaming.joins import (
-        stream_interval_join,
-    )
-
-    d = tempfile.mkdtemp(prefix="sjo_in_")
-    ckpt = tempfile.mkdtemp(prefix="sjo_ckpt_")
-    out = tempfile.mkdtemp(prefix="sjo_out_")
-    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
-    schema = "event_id long, ts timestamp, event_type string, user_id long"
-
-    batch1 = [
-        (1, t0, "click", 1),                              # matched
-        (2, t0 - dt.timedelta(minutes=10), "error", 1),
-        (3, t0, "click", 3),                              # NO error → null pad
-    ]
-    # two flush batches far past t0 + watermark + interval: the
-    # watermark applied in batch N comes from data seen through batch
-    # N-1, so batch2 raises it and batch3 triggers the eviction that
-    # finalizes batch1's unmatched click
-    # each flush carries BOTH event types: the global watermark is the
-    # MIN across the two sides' watermarks, so a click-only flush would
-    # leave the error-side watermark (and the join) frozen
-    batch2 = [(9, t0 + dt.timedelta(hours=3), "click", 9),
-              (90, t0 + dt.timedelta(hours=3), "error", 9)]
-    batch3 = [(10, t0 + dt.timedelta(hours=6), "click", 10),
-              (100, t0 + dt.timedelta(hours=6), "error", 10)]
-    for b in (batch1, batch2, batch3):
-        spark.createDataFrame(b, schema).coalesce(1).write.mode("append").parquet(d)
-
-    def split(df):
-        clicks = df.filter("event_type = 'click'").select(
-            "user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
-        )
-        errors = df.filter("event_type = 'error'").select(
-            F.col("user_id"), F.col("ts").alias("error_ts"), F.col("event_id").alias("error_id")
-        )
-        return clicks, errors
-
-    ev = spark.createDataFrame(batch1 + batch2 + batch3, schema)
-    batch = stream_interval_join(
-        *split(ev), key="user_id", left_ts="click_ts", right_ts="error_ts",
-        how="left_outer",
-    )
-    expect = {(r["click_id"], r["error_id"]) for r in batch.collect()}
-    assert expect == {(1, 2), (3, None), (9, 90), (10, 100)}
-
-    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(d)
-    joined = stream_interval_join(
-        *split(stream), key="user_id", left_ts="click_ts", right_ts="error_ts",
-        how="left_outer",
-    )
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        got = {
-            (r["click_id"], r["error_id"]) for r in spark.read.parquet(out).collect()
-        }
-        # the stream must emit every matched pair AND batch1's unmatched
-        # click; the flush clicks themselves may stay unfinalized — each
-        # outer result needs a subsequent watermark advance
-        assert {(1, 2), (3, None)} <= got
-        assert got <= expect  # flush pairs may await a later watermark
-        # state was evicted, not hoarded: re-running from the checkpoint
-        # with no new data emits nothing more
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_stream_interval_full_outer_join_accounts_for_both_sides(spark):
-    """Full-outer stream-stream interval join: an unmatched click AND an
-    unmatched error both surface null-padded (the audit shape — every
-    row of both streams accounted for exactly once).  Stream emits a
-    subset of the batch twin, converging as the watermark advances."""
-    import datetime as dt
-
-    from mini_project_204721_data_engineering_spark.streaming.joins import (
-        stream_interval_join,
-    )
-
-    d = tempfile.mkdtemp(prefix="sjf_in_")
-    ckpt = tempfile.mkdtemp(prefix="sjf_ckpt_")
-    out = tempfile.mkdtemp(prefix="sjf_out_")
-    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
-    schema = "event_id long, ts timestamp, event_type string, user_id long"
-
-    batch1 = [
-        (1, t0, "click", 1),                               # matched pair
-        (2, t0 - dt.timedelta(minutes=10), "error", 1),
-        (3, t0, "click", 3),                               # click, no error
-        (4, t0, "error", 4),                               # error, no click
-    ]
-    batch2 = [(9, t0 + dt.timedelta(hours=3), "click", 9),
-              (90, t0 + dt.timedelta(hours=3), "error", 9)]
-    batch3 = [(10, t0 + dt.timedelta(hours=6), "click", 10),
-              (100, t0 + dt.timedelta(hours=6), "error", 10)]
-    for b in (batch1, batch2, batch3):
-        spark.createDataFrame(b, schema).coalesce(1).write.mode("append").parquet(d)
-
-    def split(df):
-        clicks = df.filter("event_type = 'click'").select(
-            "user_id", F.col("ts").alias("click_ts"), F.col("event_id").alias("click_id")
-        )
-        errors = df.filter("event_type = 'error'").select(
-            F.col("user_id"), F.col("ts").alias("error_ts"), F.col("event_id").alias("error_id")
-        )
-        return clicks, errors
-
-    ev = spark.createDataFrame(batch1 + batch2 + batch3, schema)
-    batch = stream_interval_join(
-        *split(ev), key="user_id", left_ts="click_ts", right_ts="error_ts",
-        how="full_outer",
-    )
-    rows = batch.collect()
-    expect = {(r["click_id"], r["error_id"]) for r in rows}
-    assert expect == {(1, 2), (3, None), (None, 4), (9, 90), (10, 100)}
-    # the key survives from whichever side is present
-    assert {r["user_id"] for r in rows} == {1, 3, 4, 9, 10}
-
-    stream = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(d)
-    joined = stream_interval_join(
-        *split(stream), key="user_id", left_ts="click_ts", right_ts="error_ts",
-        how="full_outer",
-    )
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        got = {
-            (r["click_id"], r["error_id"]) for r in spark.read.parquet(out).collect()
-        }
-        # both batch1 unmatched rows must be finalized by the flushes
-        assert {(1, 2), (3, None), (None, 4)} <= got
-        assert got <= expect
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_transform_with_state_running_totals_accumulate(spark):
-    """Spark 4 transformWithStateInPandas: per-user ValueState totals
-    accumulate across micro-batches (state restored each batch), final
-    emission per user equals the batch groupBy; RocksDB state store.
-
-    The transformWithState state-server protocol needs google.protobuf,
-    which this container does not ship (and installs are off-limits) —
-    skip with the environment reason; applyInPandasWithState
-    (user_burst_monitor) is the fully-tested stateful path here."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state server requires protobuf (absent here)",
-    )
-    import datetime as dt
-
-    from mini_project_204721_data_engineering_spark.streaming.stateful import (
-        user_running_totals,
-    )
-
-    d = tempfile.mkdtemp(prefix="tws_in_")
-    ckpt = tempfile.mkdtemp(prefix="tws_ckpt_")
-    t0 = dt.datetime(2024, 3, 1, 12, 0, 0)
-    schema = "event_id long, ts timestamp, user_id long, value double"
-    batch1 = [(1, t0, 1, 10.0), (2, t0, 1, 5.0), (3, t0, 2, 1.0)]
-    batch2 = [(4, t0, 1, 2.5), (5, t0, 3, 7.0)]
-    for b in (batch1, batch2):
-        spark.createDataFrame(b, schema).coalesce(1).write.mode("append").parquet(d)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d)
-        q = (
-            user_running_totals(stream)
-            .writeStream.format("memory")
-            .queryName("tws_totals")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-        rows = spark.sql("SELECT * FROM tws_totals").collect()
-        # last emission per user = cumulative totals over both batches
-        final = {}
-        for r in rows:
-            cur = final.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                final[r["user_id"]] = (r["n_events"], r["total_value"])
-        assert final[1] == (3, 17.5)
-        assert final[2] == (1, 1.0)
-        assert final[3] == (1, 7.0)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_streaming_semantic_dedup_matches_batch(spark):
-    """foreachBatch semantic-dedup intake ≡ the from-scratch batch run on
-    all data: two micro-batches of embeddings stream through
-    dedup_embeddings_stream; the kept store equals semantic_dedup over
-    the union with the same quantizer, and the index holds every vector."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import semantic_dedup
-    from mini_project_204721_data_engineering_spark.llm.similarity import seeded_centroids
-    from mini_project_204721_data_engineering_spark.streaming.embeddings import (
-        dedup_embeddings_stream,
-    )
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    d = tempfile.mkdtemp(prefix="sem_in_")
-    ckpt = tempfile.mkdtemp(prefix="sem_ckpt_")
-    base = tempfile.mkdtemp(prefix="sem_store_")
-    cents_path = os.path.join(base, "centroids")
-    index_path = os.path.join(base, "index")
-    kept_path = os.path.join(base, "kept")
-    # fixed quantizer from the first slice (ids are ingest-monotone)
-    prior = emb.filter(F.col("vec_id") < 250)
-    later = emb.filter(F.col("vec_id") >= 250)
-    cents = seeded_centroids(prior, ncells=8)
-    cents.write.parquet(cents_path)
-    prior.coalesce(1).write.mode("append").parquet(d)
-    later.coalesce(1).write.mode("append").parquet(d)
-
-    stream = (
-        spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    try:
-        q = (
-            dedup_embeddings_stream(stream, cents_path, index_path, kept_path)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-        kept_ids = {
-            r["vec_id"] for r in spark.read.parquet(kept_path).collect()
-        }
-        scratch = semantic_dedup(emb, threshold=0.40, centroids=cents)
-        assert kept_ids == {r["vec_id"] for r in scratch.select("vec_id").collect()}
-        assert spark.read.parquet(index_path).count() == emb.count()
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_embedding_batch_replay_is_idempotent(spark):
-    """foreachBatch replays are at-least-once: re-running a batch with
-    the same batch id (simulating a crash-and-replay at any point after
-    the index write) must leave the index and kept stores byte-for-byte
-    equivalent — counts unchanged, no duplicate rows."""
-    from mini_project_204721_data_engineering_spark.llm.similarity import seeded_centroids
-    from mini_project_204721_data_engineering_spark.streaming.embeddings import (
-        process_embedding_batch,
-    )
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    base = tempfile.mkdtemp(prefix="sem_replay_")
-    cents_path = os.path.join(base, "centroids")
-    index_path = os.path.join(base, "index")
-    kept_path = os.path.join(base, "kept")
-    b0 = emb.filter(F.col("vec_id") < 250)
-    b1 = emb.filter(F.col("vec_id") >= 250)
-    seeded_centroids(b0, ncells=8).write.parquet(cents_path)
-    try:
-        process_embedding_batch(b0, 0, cents_path, index_path, kept_path)
-        process_embedding_batch(b1, 1, cents_path, index_path, kept_path)
-        kept_before = sorted(
-            r["vec_id"] for r in spark.read.parquet(kept_path).collect()
-        )
-        index_n = spark.read.parquet(index_path).count()
-        assert index_n == emb.count()
-        # replay batch 1 (crash between index write and kept write, or
-        # after both) — identical stores either way
-        process_embedding_batch(b1, 1, cents_path, index_path, kept_path)
-        assert sorted(
-            r["vec_id"] for r in spark.read.parquet(kept_path).collect()
-        ) == kept_before
-        assert spark.read.parquet(index_path).count() == index_n
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_streaming_expectations_reports_per_batch(spark):
-    """Per-micro-batch quality gate: two batches stream through
-    expectations_stream; each batch's report carries its own violation
-    counts (batch 2 plants a null user_id and a duplicate event_id),
-    reports equal the batch-form run, and replaying a batch id is
-    idempotent."""
-    from mini_project_204721_data_engineering_spark.operators.expectations import (
-        expect_not_null,
-        expect_unique,
-        run_expectations,
-    )
-    from mini_project_204721_data_engineering_spark.streaming.quality import (
-        expectations_stream,
-        process_expectations_batch,
-    )
-
-    d = tempfile.mkdtemp(prefix="exq_in_")
-    ckpt = tempfile.mkdtemp(prefix="exq_ckpt_")
-    rep = tempfile.mkdtemp(prefix="exq_rep_") + "/report"
-    schema = "event_id long, user_id long"
-    clean = spark.createDataFrame([(1, 10), (2, 11), (3, 12)], schema)
-    dirty = spark.createDataFrame([(7, None), (8, 13), (8, 14)], schema)
-    clean.coalesce(1).write.mode("append").parquet(d)
-    dirty.coalesce(1).write.mode("append").parquet(d)
-    expects = [expect_unique("event_id"), expect_not_null("user_id")]
-    stream = (
-        spark.readStream.schema(clean.schema).option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    try:
-        q = (
-            expectations_stream(stream, expects, rep, table_name="events_stream")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        rows = spark.read.parquet(rep).collect()
-        assert len(rows) == 4  # 2 checks × 2 batches
-        by_batch = {}
-        for r in rows:
-            by_batch.setdefault(r["batch_id"], {})[r["check"]] = r["n_violations"]
-        totals = sorted(by_batch.values(), key=lambda m: sum(m.values()))
-        assert totals[0] == {"unique(event_id)": 0, "not_null(user_id)": 0}
-        assert totals[1] == {"unique(event_id)": 1, "not_null(user_id)": 1}
-        # per-batch report ≡ the batch-form suite on the same rows
-        batch_run = {
-            r["check"]: r["n_violations"]
-            for r in run_expectations(
-                {"events_stream": dirty}, {"events_stream": expects}
-            ).collect()
-        }
-        assert batch_run == totals[1]
-        # replay idempotence: rerunning a batch id leaves counts equal
-        n_before = spark.read.parquet(rep).count()
-        process_expectations_batch(dirty, max(by_batch), expects, rep, "events_stream")
-        assert spark.read.parquet(rep).count() == n_before
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(rep.rsplit("/", 1)[0], ignore_errors=True)
 
 
 def test_streaming_geofence_alerts_match_batch(spark):
@@ -992,71 +191,3 @@ def test_streaming_geofence_alerts_match_batch(spark):
         shutil.rmtree(d, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(alerts.rsplit("/", 1)[0], ignore_errors=True)
-
-
-def test_drift_stream_per_batch_psi_matches_batch_and_replays(spark):
-    """Streaming PSI drift gate (streaming/quality.py::drift_stream):
-    each micro-batch's report equals the batch psi_drift against the
-    same static reference (stream ≡ batch), a planted shifted batch
-    crosses the 0.25 investigate threshold while an in-distribution
-    batch stays under it, and re-invoking a batch function overwrites
-    idempotently."""
-    from mini_project_204721_data_engineering_spark.operators.expectations import psi_drift
-    from mini_project_204721_data_engineering_spark.streaming.quality import (
-        drift_stream,
-        process_drift_batch,
-    )
-
-    feed = tempfile.mkdtemp(prefix="drift_feed_")
-    rep = tempfile.mkdtemp(prefix="drift_rep_") + "/r"
-    ck = tempfile.mkdtemp(prefix="drift_ck_")
-    breaks = [10.0, 20.0]
-    ref = spark.createDataFrame(
-        [(float(v),) for v in (5, 5, 15, 15, 25, 25)], "x double"
-    )
-    # batch 1: same shape as ref (uniform thirds); batch 2: all-top shift
-    b1 = [(float(v),) for v in (6, 16, 26)]
-    b2 = [(float(v),) for v in (27, 28, 29)]
-    spark.createDataFrame(b1, "x double").coalesce(1).write.mode("append").parquet(feed)
-    spark.createDataFrame(b2, "x double").coalesce(1).write.mode("append").parquet(feed)
-    try:
-        q = (
-            drift_stream(
-                spark.readStream.schema("x double")
-                .option("maxFilesPerTrigger", 1).parquet(feed),
-                ref, "x", breaks, rep,
-            )
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        got = spark.read.parquet(rep)
-        assert got.select("batch_id").distinct().count() == 2
-        # per-batch totals: which batch got which file is
-        # order-dependent, so compare the SET of totals
-        totals = {
-            round(r["t"], 6)
-            for r in got.groupBy("batch_id").agg(F.sum("psi_term").alias("t")).collect()
-        }
-        exp = set()
-        for rows in (b1, b2):
-            bdf = spark.createDataFrame(rows, "x double")
-            exp.add(round(
-                psi_drift(ref, bdf, "x", breaks)
-                .agg(F.sum("psi_term")).collect()[0][0], 6))
-        assert totals == exp
-        assert min(totals) < 0.25 < max(totals)  # planted shift detected
-        # replay idempotence: re-run one batch id with the same data
-        bid = got.select("batch_id").distinct().orderBy("batch_id").collect()[0][0]
-        one = spark.read.parquet(f"{rep}/batch={bid}").drop("batch_id")
-        process_drift_batch(
-            spark.createDataFrame(b1, "x double"), bid, ref, "x", breaks, rep
-        )
-        two = spark.read.parquet(f"{rep}/batch={bid}").drop("batch_id")
-        assert two.count() == len(breaks) + 1
-        assert one.columns == two.columns
-    finally:
-        shutil.rmtree(feed, ignore_errors=True)
-        shutil.rmtree(os.path.dirname(rep), ignore_errors=True)
-        shutil.rmtree(ck, ignore_errors=True)

@@ -71,17 +71,17 @@ def timed(name, fn, out):
 def main() -> None:
     mode = "events"
     args = [a for a in sys.argv[1:]]
-    if args and args[0] in ("events", "docs", "ann", "srp", "cc", "spans", "vocab", "decon", "semdedup", "spatial", "bpe", "hotcell", "radius", "interval", "knn", "merge", "linkage", "sparsesim", "wsample", "pq", "snap", "snap-manifest", "heavy", "pagerank", "matview", "snap-big", "snap-contention", "snap-maint", "spill"):
+    if args and args[0] in ("events", "docs", "ann", "srp", "cc", "spans", "vocab", "decon", "semdedup", "spatial", "hotcell", "radius", "interval", "knn", "linkage", "sparsesim", "wsample", "pq", "snap", "snap-manifest", "heavy", "pagerank", "snap-big", "snap-contention", "snap-maint", "spill"):
         mode = args.pop(0)
     n = int(args[0]) if args else {
         "events": 10_000_000, "docs": 1_000_000, "ann": 1_000_000,
         "srp": 1_000_000, "cc": 1_000_000, "spans": 200_000,
         "vocab": 5_000_000, "decon": 500_000, "semdedup": 100_000,
-        "spatial": 1_000_000, "bpe": 200_000, "hotcell": 50_000, "radius": 1_000_000, "interval": 1_000_000,
-        "knn": 1_000_000, "merge": 10_000_000, "linkage": 100_000,
+        "spatial": 1_000_000, "hotcell": 50_000, "radius": 1_000_000, "interval": 1_000_000,
+        "knn": 1_000_000, "linkage": 100_000,
         "sparsesim": 10_000, "wsample": 10_000_000, "pq": 1_000_000,
         "snap": 2_000_000, "snap-manifest": 100_000, "heavy": 10_000_000,
-        "pagerank": 2_000_000, "matview": 10_000_000,
+        "pagerank": 2_000_000,
         "snap-big": 20_000_000, "snap-contention": 200_000,
         "snap-maint": 200_000, "spill": 30_000_000,
     }[mode]
@@ -93,10 +93,10 @@ def main() -> None:
         {"docs": probe_docs, "ann": probe_ann, "srp": probe_srp, "cc": probe_cc,
          "spans": probe_spans, "vocab": probe_vocab,
          "decon": probe_decon, "semdedup": probe_semdedup,
-         "spatial": probe_spatial, "bpe": probe_bpe,
+         "spatial": probe_spatial,
          "hotcell": probe_hotcell, "radius": probe_radius,
          "interval": probe_interval, "knn": probe_knn,
-         "merge": probe_merge, "linkage": probe_linkage,
+         "linkage": probe_linkage,
          "sparsesim": probe_sparsesim,
          "wsample": probe_wsample,
          "pq": probe_pq,
@@ -104,7 +104,6 @@ def main() -> None:
          "snap-manifest": probe_snap_manifest,
          "heavy": probe_heavy,
          "pagerank": probe_pagerank,
-         "matview": probe_matview,
          "snap-big": probe_snap_big,
          "snap-contention": probe_snap_contention,
          "snap-maint": probe_snap_maintenance,
@@ -738,67 +737,6 @@ def probe_linkage(spark, n: int, out: list) -> None:
     timed("linkage_bruteforce_crossjoin", brute, out)
 
 
-def probe_merge(spark, n: int, out: list) -> None:
-    """merge_into cost ∝ AFFECTED partitions, not table size: an n-row
-    table of realistically WIDE rows (~250 B payload — the claim is
-    about bytes WRITTEN, which a narrow 3-column row never stresses)
-    over 50 day partitions takes a 2-partition upsert (n/50 keys
-    touched) vs a full-table dynamic overwrite of the same merged
-    content.  Claim under test: the partition-scoped MERGE rewrites
-    ~2/50 of the bytes — the gap is the point of partition-grain CDC
-    and widens with row width and table size."""
-    import shutil
-    import tempfile
-
-    from mini_project_204721_data_engineering_spark.sources.sink import (
-        merge_into,
-        overwrite_fact_partitions,
-    )
-
-    base = tempfile.mkdtemp(prefix="probe_merge_")
-    tab = base + "/t"
-    try:
-        rows = spark.range(n).select(
-            F.col("id").alias("k"),
-            F.concat(F.lit("d"), F.pmod(F.col("id"), 50).cast("string")).alias("day"),
-            (F.col("id") % 997 / 7.0).alias("v"),
-            # incompressible-ish per-row payload so write volume is real
-            F.repeat(F.md5(F.col("id").cast("string")), 8).alias("payload"),
-        )
-        rows.repartition(F.col("day")).write.partitionBy("day").parquet(tab)
-        src = (
-            spark.range(n // 50)
-            .select(
-                (F.col("id") * 50 + (F.col("id") % 2)).alias("k"),  # days d0/d1
-                F.concat(F.lit("d"), (F.col("id") % 2).cast("string")).alias("day"),
-                F.lit(-1.0).alias("v"),
-                F.repeat(F.md5((-F.col("id")).cast("string")), 8).alias("payload"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-        def scoped():
-            r = merge_into(src, tab, ["k"], "day")
-            return r["updated"] + r["inserted"]
-
-        timed("merge_2_of_50_partitions", scoped, out)
-
-        def full_rewrite():
-            existing = spark.read.parquet(tab)
-            merged = (
-                existing.join(src.select("k"), ["k"], "left_anti")
-                .unionByName(src)
-                .repartition(F.col("day"))
-                .localCheckpoint(eager=True)
-            )
-            overwrite_fact_partitions(merged, tab, ["day"])
-            return n
-
-        timed("merge_full_table_rewrite", full_rewrite, out)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def probe_interval(spark, n: int, out: list) -> None:
     """Bucketed interval join at fact scale: n facts against n/2
     overlapping intervals over 1000 keys (mean length ~= bucket).
@@ -843,47 +781,6 @@ def probe_interval(spark, n: int, out: list) -> None:
 
     timed("interval_bucketed", bucketed, out)
     timed("interval_brute_theta", brute, out)
-
-
-def probe_bpe(spark, n: int, out: list) -> None:
-    """BPE induction over an n-distinct-word frequency table (the r6
-    operator's working set — every merge round is a pair-count groupBy
-    + argmax + fold over THIS table, never the corpus).  Claim under
-    test: per-round cost ∝ vocab size; 8 merges at n and 4n should
-    scale ~linearly.  Words are synthetic 8-char strings so the symbol
-    arrays (and pair tables) have realistic size."""
-    from mini_project_204721_data_engineering_spark.llm.bpe import bpe_train
-
-    words = (
-        spark.range(n)
-        .select(
-            F.concat(
-                F.lit("w"),
-                F.lpad(F.conv(F.pmod(F.xxhash64("id"), F.lit(1 << 40)).cast("string"), 10, 36), 8, "a"),
-            ).alias("word"),
-            (F.pmod(F.xxhash64(F.col("id") + 7), F.lit(1000)) + 1).alias("n"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def run():
-        merges, seg = bpe_train(words.withColumn("syms", F.expr(
-            "array_append(split(word, ''), '</w>')")), n_merges=8)
-        # consume the final segmentation so no round is dead-coded
-        return seg.agg(F.sum(F.size("syms"))).collect()[0][0]
-
-    timed("bpe_8_merges", run, out)
-
-    def run_local():
-        # the production trainer: collect the word table once, run 512
-        # EXACT sequential merges driver-side (incremental pair counts,
-        # zero Spark rounds) — 64× the merges of the distributed probe
-        from mini_project_204721_data_engineering_spark.llm.bpe import bpe_train_local
-
-        merges, seg = bpe_train_local(words, n_merges=512, max_words=n + 1)
-        return len(merges) + seg.count()
-
-    timed("bpe_local_512_merges", run_local, out)
 
 
 def probe_spatial(spark, n: int, out: list) -> None:
@@ -1590,90 +1487,6 @@ def probe_pagerank(spark, n: int, out: list) -> None:
     b = timed("pagerank_10_iters", run(10), out)
     print(json.dumps({"probe": "per_iter_flatness",
                       "ratio_10v5": round(b / a, 2) if a else None}), flush=True)
-
-
-
-def probe_matview(spark, n: int, out: list) -> None:
-    """Incremental view refresh vs full recompute: an n-row source gets
-    a 1% append; the maintained view should cost ~delta+view, the full
-    rebuild ~source."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from mini_project_204721_data_engineering_spark.operators.incremental import base_aggregate
-    from mini_project_204721_data_engineering_spark.operators.matview import refresh_aggregate_view
-    from mini_project_204721_data_engineering_spark.sources.snapshots import (
-        read_snapshot,
-        snapshot_append,
-    )
-
-    meas = {"cents": (lambda r: F.round(r["val"] * 100).cast("long"))}
-
-    def rows(lo, hi):
-        return spark.range(lo, hi).select(
-            F.col("id"),
-            (F.col("id") % 5000).cast("string").alias("grp"),
-            (F.col("id") % 97).cast("double").alias("val"),
-        )
-
-    d = tempfile.mkdtemp(prefix="matview_probe_")
-    src, view = d + "/src", d + "/view"
-    try:
-        snapshot_append(rows(0, n), src)
-        refresh_aggregate_view(spark, src, view, ["grp"], meas)  # full build
-        snapshot_append(rows(n, n + n // 100), src)  # 1% delta
-
-        def incremental():
-            m = refresh_aggregate_view(spark, src, view, ["grp"], meas)
-            return m["meta"]["src_version"]
-
-        a = timed("incremental_refresh_1pct_delta", incremental, out)
-
-        def full():
-            # apples-to-apples: a full REBUILD writes the view too
-            v2 = d + "/view_rebuild"
-            m = refresh_aggregate_view(spark, src, v2, ["grp"], meas)
-            shutil.rmtree(v2, ignore_errors=True)
-            return m["meta"]["src_version"]
-
-        b = timed("full_rebuild_same_state", full, out)
-        print(json.dumps({"probe": "refresh_speedup",
-                          "full_over_incremental": round(b / a, 2) if a else None}),
-              flush=True)
-
-        # non-append window: a one-key CoW delete rewrites 1 of ~32
-        # source files; the confined refresh must read the delta files,
-        # never the source (cost ∝ rewritten files + view size)
-        from mini_project_204721_data_engineering_spark.sources.snapshots import (
-            snapshot_delete_where,
-        )
-
-        n_src_files = len(read_snapshot(spark, src).inputFiles())
-        snapshot_delete_where(spark, src, f"id = {n // 2}")
-
-        def confined():
-            m = refresh_aggregate_view(spark, src, view, ["grp"], meas)
-            assert m["meta"]["refresh_mode"] == "delta-confined", m["meta"]
-            return m["meta"]["src_files_read"]
-
-        c = timed("confined_refresh_one_file_delete", confined, out)
-
-        def full2():
-            v3 = d + "/view_rebuild2"
-            m = refresh_aggregate_view(spark, src, v3, ["grp"], meas)
-            shutil.rmtree(v3, ignore_errors=True)
-            return m["meta"]["src_files_read"]
-
-        b2 = timed("full_rebuild_after_delete", full2, out)
-        print(json.dumps({
-            "probe": "confined_refresh_speedup",
-            "src_files_total": n_src_files,
-            "full_over_confined": round(b2 / c, 2) if c else None,
-        }), flush=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 
