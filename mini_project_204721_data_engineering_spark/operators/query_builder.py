@@ -25,8 +25,9 @@ Scale notes
   deterministic under distributed (unstable) ordering — the reference gets
   this for free from single-node Postgres only when the sort key is unique;
   we make it explicit.
-- The count and the page share the filtered DataFrame; Catalyst reuses the
-  pushed-down scan for both jobs.
+- The count and the page are built from one filtered DataFrame, but they
+  are two Spark actions: ``count()`` runs (and scans) first, then the
+  page's own action scans again. Nothing is cached between them.
 """
 
 from __future__ import annotations
@@ -163,7 +164,9 @@ class ListQuery:
         order_type: str = "asc",
     ) -> Page:
         """Count + clamp + page, mirroring the reference's two-query flow
-        (``main.py:266-271,300-305``) — but sharing one filtered plan."""
+        (``main.py:266-271,300-305``).  Both queries come from one filtered
+        plan, but the count runs here as its own Spark action (one scan),
+        and the returned page scans again when its DataFrame is run."""
         page_size = max(1, min(self.max_page_size, page_size))
         total = self.count()
         total_pages = max(1, math.ceil(total / page_size)) if total else 1

@@ -80,6 +80,8 @@ __all__ = [
     "netcdf4_grid_to_long_batches",
     "netcdf_grid_to_long",
     "netcdf_grid_to_long_batches",
+    "netcdf4_grid_axes",
+    "netcdf_grid_axes",
     "write_hdf5",
 ]
 
@@ -1617,24 +1619,10 @@ def netcdf4_grid_to_long(
     )
 
 
-def netcdf4_grid_to_long_batches(
-    content: bytes,
-    var: str = "precip",
-    time_dim: str = "time",
-    lat_dim: str = "latitude",
-    lon_dim: str = "longitude",
-    records_per_batch: int = 32,
-):
-    """Slab-streamed NetCDF-4 decode: yields long-format frames of ~
-    ``records_per_batch`` time steps, inflating only the chunks that
-    intersect each slab — a year-long chunked CHIRPS file never
-    materializes its decoded expansion at once.  Slabs align to the
-    chunk time-extent so no chunk is inflated twice."""
-    from mini_project_204721_data_engineering_spark.sources.netcdf3 import (
-        _decode_cf_time,
-        _decode_cf_values,
-    )
-
+def _nc4_grid(content, var: str, time_dim: str, lat_dim: str, lon_dim: str):
+    """Metadata walk + grid-shape check shared by the decoder and the
+    axes reader: ``(_H5, dataset metas by path, the grid variable's
+    meta)`` — no array bytes touched."""
     try:
         h, entries, _ = _walk_datasets(content)
         metas = {p: _dataset_meta(h, msgs) for p, (addr, msgs) in entries.items()}
@@ -1659,13 +1647,57 @@ def netcdf4_grid_to_long_batches(
         dnames = _match_dims_by_size(vmeta["shape"], scales)
     if dnames != [time_dim, lat_dim, lon_dim]:
         raise ValueError(f"{var} dims {dnames} != [{time_dim}, {lat_dim}, {lon_dim}]")
+    return h, metas, vmeta
+
+
+def _coord_data(h: _H5, meta: dict) -> np.ndarray:
+    """One coordinate dataset's values in native byte order."""
+    try:
+        arr = _read_slab(h, meta)
+    except _PARSE_ERRORS as e:
+        raise ValueError(f"corrupt or truncated HDF5 file: {e!r}") from e
+    return arr.astype(arr.dtype.newbyteorder("=")) if arr.dtype.byteorder == ">" else arr
+
+
+def netcdf4_grid_axes(
+    content,
+    var: str = "precip",
+    time_dim: str = "time",
+    lat_dim: str = "latitude",
+    lon_dim: str = "longitude",
+) -> tuple[np.ndarray, np.ndarray]:
+    """NetCDF-4 twin of ``netcdf3.netcdf3_grid_axes``: the ``(lat, lon)``
+    coordinate arrays as float64 copies, read through the metadata walk
+    and the two 1-D coordinate datasets — ``var``'s chunks are never
+    inflated, so ``content`` may be an ``mmap``."""
+    h, metas, _ = _nc4_grid(content, var, time_dim, lat_dim, lon_dim)
+    return tuple(
+        np.array(_coord_data(h, metas[n]), dtype=np.float64) for n in (lat_dim, lon_dim)
+    )
+
+
+def netcdf4_grid_to_long_batches(
+    content: bytes,
+    var: str = "precip",
+    time_dim: str = "time",
+    lat_dim: str = "latitude",
+    lon_dim: str = "longitude",
+    records_per_batch: int = 32,
+):
+    """Slab-streamed NetCDF-4 decode: yields long-format frames of ~
+    ``records_per_batch`` time steps, inflating only the chunks that
+    intersect each slab — a year-long chunked CHIRPS file never
+    materializes its decoded expansion at once.  Slabs align to the
+    chunk time-extent so no chunk is inflated twice."""
+    from mini_project_204721_data_engineering_spark.sources.netcdf3 import (
+        _decode_cf_time,
+        _decode_cf_values,
+    )
+
+    h, metas, vmeta = _nc4_grid(content, var, time_dim, lat_dim, lon_dim)
 
     def coord(name):
-        m = metas[name]
-        arr = _read_slab(h, m)
-        if arr.dtype.byteorder == ">":
-            arr = arr.astype(arr.dtype.newbyteorder("="))
-        return {"attrs": {k: v for k, v in m["attrs"].items()}, "data": arr}
+        return {"attrs": dict(metas[name]["attrs"]), "data": _coord_data(h, metas[name])}
 
     try:
         times = _decode_cf_time(coord(time_dim))
@@ -1747,6 +1779,21 @@ def netcdf_grid_to_long_batches(content: bytes, **kw):
     if _has_hdf5_sig(content):
         yield from netcdf4_grid_to_long_batches(content, **kw)
         return
+    raise ValueError("not a NetCDF file (neither CDF nor HDF5 magic)")
+
+
+def netcdf_grid_axes(content, **kw) -> tuple[np.ndarray, np.ndarray]:
+    """Container-agnostic ``(lat, lon)`` axes of one grid file — the
+    coordinate values :func:`netcdf_grid_to_long_batches` emits, read
+    without decoding the grid variable (``content`` may be an ``mmap``)."""
+    if content[:3] == b"CDF":
+        from mini_project_204721_data_engineering_spark.sources.netcdf3 import (
+            netcdf3_grid_axes,
+        )
+
+        return netcdf3_grid_axes(content, **kw)
+    if _has_hdf5_sig(content):
+        return netcdf4_grid_axes(content, **kw)
     raise ValueError("not a NetCDF file (neither CDF nor HDF5 magic)")
 
 

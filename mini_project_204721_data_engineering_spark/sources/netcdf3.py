@@ -33,8 +33,12 @@ __all__ = [
     "read_netcdf3",
     "netcdf3_grid_to_long",
     "netcdf3_grid_to_long_batches",
+    "netcdf3_grid_axes",
     "write_netcdf3",
 ]
+
+#: low-level exceptions a malformed file surfaces from the byte walkers
+_CORRUPT = (struct.error, IndexError, KeyError, OverflowError, MemoryError)
 
 _NC_DIMENSION = 0x0A
 _NC_VARIABLE = 0x0B
@@ -250,7 +254,7 @@ def read_netcdf3(source: str | bytes) -> dict:
             }
             for v in hdr["variables"]
         }
-    except (struct.error, IndexError, KeyError, OverflowError, MemoryError) as e:
+    except _CORRUPT as e:
         raise ValueError(f"corrupt or truncated NetCDF classic file: {e!r}") from e
     dim_sizes = {
         name: (hdr["numrecs"] if size == 0 else size) for name, size in hdr["dims"]
@@ -296,6 +300,44 @@ def _decode_cf_time(var: dict) -> np.ndarray:
     return var["data"]
 
 
+def _grid_header(content, var: str, time_dim: str, lat_dim: str, lon_dim: str):
+    """Header parse + grid-shape check shared by the decoder and the
+    axes reader: ``(header, variables by name, the grid variable)``."""
+    try:
+        hdr = _parse_header(content)
+    except _CORRUPT as e:
+        raise ValueError(f"corrupt or truncated NetCDF classic file: {e!r}") from e
+    by_name = {v["name"]: v for v in hdr["variables"]}
+    if var not in by_name:
+        raise ValueError(f"variable {var!r} not in file (has {sorted(by_name)})")
+    v = by_name[var]
+    if v["dims"] != [time_dim, lat_dim, lon_dim]:
+        raise ValueError(f"{var} dims {v['dims']} != [{time_dim}, {lat_dim}, {lon_dim}]")
+    return hdr, by_name, v
+
+
+def netcdf3_grid_axes(
+    content,
+    var: str = "precip",
+    time_dim: str = "time",
+    lat_dim: str = "latitude",
+    lon_dim: str = "longitude",
+) -> tuple[np.ndarray, np.ndarray]:
+    """The ``(lat, lon)`` coordinate arrays of one classic grid file as
+    float64 — exactly the values :func:`netcdf3_grid_to_long_batches`
+    puts in its ``lat``/``lon`` columns.  Reads the header and the two
+    1-D coordinate variables only, never ``var``'s data, so ``content``
+    may be an ``mmap`` of a file of any size."""
+    hdr, by_name, _ = _grid_header(content, var, time_dim, lat_dim, lon_dim)
+    try:
+        return tuple(
+            np.array(_materialize_var(content, hdr, by_name[n]), dtype=np.float64)
+            for n in (lat_dim, lon_dim)
+        )
+    except _CORRUPT as e:
+        raise ValueError(f"corrupt or truncated NetCDF classic file: {e!r}") from e
+
+
 def netcdf3_grid_to_long(
     content: bytes,
     var: str = "precip",
@@ -328,23 +370,14 @@ def netcdf3_grid_to_long_batches(
     slab.  Record variables slice by record stride; a fixed time-first
     variable slices by leading-axis offset math.  This is the default
     executor decode path under ``netcdf_files_to_long``."""
-    try:
-        hdr = _parse_header(content)
-    except (struct.error, IndexError, KeyError, OverflowError, MemoryError) as e:
-        raise ValueError(f"corrupt or truncated NetCDF classic file: {e!r}") from e
-    by_name = {v["name"]: v for v in hdr["variables"]}
-    if var not in by_name:
-        raise ValueError(f"variable {var!r} not in file (has {sorted(by_name)})")
-    v = by_name[var]
-    if v["dims"] != [time_dim, lat_dim, lon_dim]:
-        raise ValueError(f"{var} dims {v['dims']} != [{time_dim}, {lat_dim}, {lon_dim}]")
+    hdr, by_name, v = _grid_header(content, var, time_dim, lat_dim, lon_dim)
     try:
         coords = {
             n: {"dims": by_name[n]["dims"], "attrs": by_name[n]["attrs"],
                 "data": _materialize_var(content, hdr, by_name[n])}
             for n in (time_dim, lat_dim, lon_dim)
         }
-    except (struct.error, IndexError, KeyError, OverflowError, MemoryError) as e:
+    except _CORRUPT as e:
         raise ValueError(f"corrupt or truncated NetCDF classic file: {e!r}") from e
     times = _decode_cf_time(coords[time_dim])
     lats = np.asarray(coords[lat_dim]["data"], dtype=np.float64)
@@ -355,7 +388,7 @@ def netcdf3_grid_to_long_batches(
         r1 = min(nt, r0 + records_per_batch)
         try:
             slab = _materialize_var(content, hdr, v, r0, r1)
-        except (struct.error, IndexError, KeyError, OverflowError, MemoryError) as e:
+        except _CORRUPT as e:
             raise ValueError(f"corrupt or truncated NetCDF classic file: {e!r}") from e
         vals = _decode_cf_values({"data": slab, "attrs": v["attrs"]})
         k = r1 - r0

@@ -40,6 +40,7 @@ import uuid
 from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .manifest_io import manifest_io_for
 
@@ -532,7 +533,8 @@ def _norm_stats(spec) -> dict[str, str]:
 
 
 def _file_stats(
-    spark: SparkSession, files: list[str], stats: dict[str, str]
+    spark: SparkSession, files: list[str], stats: dict[str, str],
+    schema: StructType | None = None,
 ) -> tuple[dict, dict]:
     """Per-file (min/max stats, row/byte meta) over exactly the given
     files — ONE column-pruned scan of THIS COMMIT's files only (never
@@ -542,13 +544,16 @@ def _file_stats(
     that can't — complex cols — records absent, which pruning treats as
     'always keep'); ``file_meta`` is ``{file: {"rows": n, "bytes": b}}``
     — rows from the same aggregate, bytes from the scan-bound
-    ``_metadata.file_size`` (no per-file driver RPCs)."""
+    ``_metadata.file_size`` (no per-file driver RPCs).  ``schema`` is
+    the schema the files were just written with, when the caller holds
+    it: the scan then skips Spark's schema-inference job."""
     from pyspark.sql import functions as F
 
     if not files:
         return {}, {}
     fs, _, jvm = _fs_for(spark, files[0])
-    scan = spark.read.parquet(*files)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    scan = reader.parquet(*files)
     # a merge_schema append may legitimately omit a stats column — those
     # files simply record no stats for it (never pruned on it) instead
     # of failing the whole commit on an unresolvable expression
@@ -687,7 +692,9 @@ def _validate_stats(df: DataFrame, stats_cols) -> None:
             ) from e
 
 
-def _compose_stats(spark, new_files: list[str], stats_cols):
+def _compose_stats(
+    spark, new_files: list[str], stats_cols, schema: StructType | None = None
+):
     """stats_fn for append-shaped commits: parent stats AND parent
     file_meta (rows/bytes) for carried files + freshly computed values
     for this commit's files — ONE scan of the new files covers both.
@@ -696,7 +703,9 @@ def _compose_stats(spark, new_files: list[str], stats_cols):
     pruned.  file_meta is UNCONDITIONAL (no opt-in): every commit
     records per-file row and byte counts, which is what lets
     :func:`snapshot_count` / :func:`snapshot_min_max` answer from the
-    manifest and :func:`snapshot_compact` plan without per-file RPCs."""
+    manifest and :func:`snapshot_compact` plan without per-file RPCs.
+    Commits that have just written a frame pass its ``schema`` (see
+    :func:`_file_stats`)."""
 
     fresh_cache: dict[str, tuple[dict, dict]] = {}  # keyed by column set
 
@@ -713,7 +722,7 @@ def _compose_stats(spark, new_files: list[str], stats_cols):
         # job per column set, not one per lost race
         key = "\x00".join(f"{a}={e}" for a, e in sorted(cols.items()))
         if key not in fresh_cache:
-            fresh_cache[key] = _file_stats(spark, new_files, cols)
+            fresh_cache[key] = _file_stats(spark, new_files, cols, schema)
         fresh, fresh_meta = fresh_cache[key]
         meta = {
             f: m for f in files
@@ -790,7 +799,7 @@ def snapshot_append(
         lambda bloom_fn, ndv_fn: _commit(
             spark, table_dir, "append", files_fn, schema_fn,
             meta={"added_files": len(new_files)},
-            stats_fn=_compose_stats(spark, new_files, stats_cols),
+            stats_fn=_compose_stats(spark, new_files, stats_cols, df.schema),
             bloom_fn=bloom_fn,
             ndv_fn=ndv_fn,
         ),
@@ -829,7 +838,7 @@ def snapshot_overwrite(
         lambda bloom_fn, ndv_fn: _commit(
             spark, table_dir, "overwrite", lambda parent: list(new_files),
             df.schema.simpleString(), meta={"added_files": len(new_files)},
-            stats_fn=_compose_stats(spark, new_files, stats_cols),
+            stats_fn=_compose_stats(spark, new_files, stats_cols, df.schema),
             bloom_fn=bloom_fn,
             ndv_fn=ndv_fn,
             # a full replace leaves no old-name files: rename chains and
@@ -882,7 +891,7 @@ def snapshot_txn_append(
             meta={"added_files": len(new_files), "app_id": app_id,
                   "batch_id": batch_id},
             txn_update={app_id: batch_id},
-            stats_fn=_compose_stats(spark, new_files, stats_cols),  # sticky
+            stats_fn=_compose_stats(spark, new_files, stats_cols, df.schema),  # sticky
         )
     except _AlreadyApplied:
         return None

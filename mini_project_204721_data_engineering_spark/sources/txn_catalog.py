@@ -436,7 +436,7 @@ def multi_table_txn(
             "op": op,
             "schema": df.schema,
             "new_files": new_files,
-            "stats_fn": _compose_stats(spark, new_files, stats_cols),
+            "stats_fn": _compose_stats(spark, new_files, stats_cols, df.schema),
             "merge_schema": bool(spec.get("merge_schema", False)),
         }
 

@@ -1052,3 +1052,56 @@ def test_clone_race_aborts_instead_of_clobbering(spark, tmp_path):
     finally:
         S._commit = real_commit
     assert _ids(read_snapshot(spark, dst)) == set(range(50, 55))
+
+
+def _jobs_in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("case", ["rain", "merge_schema", "derived"])
+def test_append_stats_read_with_the_written_schema(spark, tmp_path, case, monkeypatch):
+    """An append computes its new files' stats with the schema it has
+    just written: one job fewer than an inferred read (no parquet
+    schema-inference job), and the same stats, stats_cols and file_meta."""
+    from mini_project_204721_data_engineering_spark.sources import snapshots as S
+
+    t = str(tmp_path / "t")
+    base = spark.range(6).select(
+        F.col("id").cast("int").alias("district_id"),
+        F.expr("DATE '2023-06-01' + CAST(id % 3 AS INT)").alias("date"),
+        (F.col("id") * 1.5).alias("rainfall_mm"),
+        F.when(F.col("id") != 2, F.col("id") / 4).alias("rain_mm_wmean"),
+    ).repartition(2)
+    if case == "rain":
+        df, kw = base, {"stats_cols": ["date", "district_id", "rainfall_mm", "rain_mm_wmean"]}
+    elif case == "merge_schema":
+        snapshot_append(base, t, stats_cols=["district_id", "rainfall_mm"])
+        df, kw = base.withColumn("note", F.lit("x")), {"merge_schema": True}
+    else:
+        df = base.withColumn("ts", F.expr("CAST(date AS TIMESTAMP) + make_interval(0, 0, 0, 0, district_id, 0, 0)"))
+        kw = {"stats_cols": {"day": "CAST(ts AS DATE)", "ts": "ts"}}
+
+    real, seen = S._file_stats, []
+
+    def spy(spark_, files, stats, schema=None):
+        out, pinned = _jobs_in_group(spark_, f"pinned-{case}", lambda: real(spark_, files, stats, schema))
+        inferred, n_inferred = _jobs_in_group(spark_, f"inferred-{case}", lambda: real(spark_, files, stats))
+        seen.append((schema, pinned, n_inferred, out == inferred, files, stats))
+        return out
+
+    monkeypatch.setattr(S, "_file_stats", spy)
+    man = snapshot_append(df, t, **kw)
+    ((schema, pinned, n_inferred, same, files, stats),) = seen
+    assert schema == df.schema
+    assert pinned == n_inferred - 1 and same
+    want_stats, want_meta = real(spark, files, stats)
+    assert {f: man["file_meta"][f] for f in files} == want_meta
+    assert {f: man["stats"][f] for f in files} == want_stats
+    assert man["stats_cols"] == stats
