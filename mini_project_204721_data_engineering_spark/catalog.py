@@ -31,6 +31,27 @@ nanos fix-up flag — and every later :func:`load_table` is
 - Only the schema is kept.  Each call builds a new DataFrame, so attribute
   ids are fresh and self-joins behave as with a plain read.
 
+Version-keyed views
+-------------------
+The served queries are single ``spark.sql`` statements; they name their
+tables through :func:`table_view`, which returns a session temp view over
+the same pinned read (``events`` nanos fix-up included).
+
+- **Name = version.**  The view name is derived from the table's absolute
+  path and its version token, so a rewritten table gets a NEW view and
+  the old name is never handed out again.  The first call per (session,
+  path, token) registers the view (a pinned read plus
+  ``createOrReplaceTempView``); every later call re-takes the token (a
+  ``stat``) and returns the name with no py4j call.
+- **Listing.**  A view keeps the file listing its read took.  The token
+  is taken before and after that read, and the view is named only by a
+  token that held across it, so a name always means one set of files.
+- **Lifetime.**  Views are session temp views: they live as long as the
+  session, and a new session registers its own.  A superseded view is
+  left registered, not dropped, because a statement another thread is
+  analysing at that moment may still name it; a table rewritten n times
+  in one session leaves n views (each a plan and its file listing).
+
 Scale notes
 -----------
 - ``region`` (5 rows) and ``nation`` (25) are always broadcast — like the
@@ -45,6 +66,7 @@ Scale notes
 
 from __future__ import annotations
 
+import hashlib
 import os
 import stat
 import threading
@@ -58,7 +80,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
-__all__ = ["TABLES", "SMALL_DIMS", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "SMALL_DIMS", "load_table", "load_tables", "table_view"]
 
 TABLES = (
     "region",
@@ -87,7 +109,13 @@ class _Resolved(NamedTuple):
 _RESOLVED: weakref.WeakKeyDictionary[SparkSession, dict[str, _Resolved]] = (
     weakref.WeakKeyDictionary()
 )
+#: session -> {absolute table path -> (token, view name)}
+_VIEWS: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, str]]] = (
+    weakref.WeakKeyDictionary()
+)
 _LOCK = threading.Lock()
+#: serializes view registration only; hits never take it
+_REGISTER = threading.Lock()
 
 
 def _version_token(path: str) -> tuple:
@@ -121,14 +149,13 @@ def _resolve(spark: SparkSession, path: str, name: str) -> tuple[StructType, boo
     return spark.read.parquet(path).schema, False
 
 
-def _pinned(spark: SparkSession, path: str, name: str) -> tuple[StructType, bool]:
-    key = os.path.abspath(path)
-    token = _version_token(key)
+def _pinned(spark: SparkSession, key: str, token: tuple, name: str) -> tuple[StructType, bool]:
+    """(schema, nanos) of the table at absolute path ``key`` as of ``token``."""
     with _LOCK:
         hit = _RESOLVED.setdefault(spark, {}).get(key)
     if hit is None or hit.token != token:
         # two threads may both resolve a new version; both get the same answer
-        hit = _Resolved(token, *_resolve(spark, path, name))
+        hit = _Resolved(token, *_resolve(spark, key, name))
         with _LOCK:
             _RESOLVED[spark][key] = hit
     return hit.schema, hit.nanos
@@ -155,11 +182,50 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       passes through as NTZ, so downstream code must use NTZ-safe
       expressions (``timestamp_diff``, never ``unix_micros``).
     """
+    key = _table_path(sf_dir, name)
+    return _read(spark, key, _version_token(key), name)
+
+
+def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Name of a session temp view over table ``name`` as it is on disk
+    now, for ``spark.sql`` statements (see "Version-keyed views" in the
+    module docstring): registered on the first call per (session, path,
+    version token), a ``stat`` and a dict lookup after that."""
+    key = _table_path(sf_dir, name)
+    token = _version_token(key)
+    with _LOCK:
+        hit = _VIEWS.setdefault(spark, {}).get(key)
+    if hit is not None and hit[0] == token:
+        return hit[1]
+    with _REGISTER:
+        while True:
+            with _LOCK:
+                hit = _VIEWS[spark].get(key)
+            if hit is not None and hit[0] == token:
+                return hit[1]  # another thread registered it meanwhile
+            df = _read(spark, key, token, name)
+            # the view keeps the file listing the read just took: name it
+            # by the token only if the table did not change around it
+            listed, token = token, _version_token(key)
+            if token == listed:
+                break
+        digest = hashlib.blake2b(repr((key, token)).encode(), digest_size=8).hexdigest()
+        view = f"graft_{name}_{digest}"
+        df.createOrReplaceTempView(view)
+        with _LOCK:
+            _VIEWS[spark][key] = (token, view)
+    return view
+
+
+def _table_path(sf_dir: str, name: str) -> str:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    schema, nanos = _pinned(spark, path, name)
-    df = spark.read.schema(schema).parquet(path)
+    return os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _read(spark: SparkSession, key: str, token: tuple, name: str) -> DataFrame:
+    schema, nanos = _pinned(spark, key, token, name)
+    df = spark.read.schema(schema).parquet(key)
     if nanos:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
@@ -173,11 +239,3 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         if os.path.exists(path):
             out[name] = load_table(spark, sf_dir, name)
     return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load tables and register each as a temp view for ``spark.sql``."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

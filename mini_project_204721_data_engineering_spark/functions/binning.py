@@ -1,7 +1,19 @@
 """Binning / conditional scalar functions (reference C4, C5, C16, C17).
 
-All pure Column expressions — ``when/otherwise`` chains compile into
-whole-stage codegen; no UDFs.
+All pure expressions — ``CASE WHEN`` chains compile into whole-stage
+codegen; no UDFs.
+
+C5 (``avg_to_level``), C16 (``estimate_probability``) and C17
+(``probability_color``, ``risk_label``) are each defined ONCE, as Spark
+SQL text: the ``*_sql`` functions take SQL operand text and return the
+formula's text.  The served ``spark.sql`` statements
+(``queries/dashboard.py``, ``queries/analytics.avg_level_by_brand``)
+splice that text in, and each Column helper is ``F.expr`` over the same
+text, so the DataFrame pipelines (``pipelines/risk.py``) and the tests
+run exactly the formula the dashboard runs.  Double literals carry a
+``D`` suffix: a bare ``1.5`` is a DECIMAL in Spark SQL.  The DuckDB
+oracle strings spell their own copies on purpose, so the oracle stays an
+independent check.
 """
 
 from __future__ import annotations
@@ -9,12 +21,18 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from mini_project_204721_data_engineering_spark.functions.parity import sql_operand
+
 __all__ = [
     "class_to_num",
     "avg_to_level",
+    "avg_to_level_sql",
     "estimate_probability",
+    "estimate_probability_sql",
     "probability_color",
+    "probability_color_sql",
     "risk_label",
+    "risk_label_sql",
 ]
 
 # Thai / English risk-word → level map (reference backend/app/utils.py:256-260)
@@ -63,20 +81,21 @@ def class_to_num(col: Column) -> Column:
     ).cast("int")
 
 
-def avg_to_level(col: Column) -> Column:
+def avg_to_level_sql(avg: str) -> str:
     """Reference ``avg_to_level`` (``backend/app/utils.py:360-366``):
-    mean class ≤1.5 → 1, ≤2.1 → 2, else 3; null-safe."""
+    mean class ≤1.5 → 1, ≤2.1 → 2, else 3; null-safe (INT)."""
     return (
-        F.when(col.isNull(), F.lit(None).cast("int"))
-        .when(col <= 1.5, 1)
-        .when(col <= 2.1, 2)
-        .otherwise(3)
+        f"CASE WHEN ({avg}) IS NULL THEN CAST(NULL AS INT) "
+        f"WHEN ({avg}) <= 1.5D THEN 1 WHEN ({avg}) <= 2.1D THEN 2 ELSE 3 END"
     )
 
 
-def estimate_probability(
-    rain_mm_wmean: Column, risk_level: Column, count_of_disasters: Column
-) -> Column:
+def avg_to_level(col: Column | str) -> Column:
+    """:func:`avg_to_level_sql` as a Column (operand: :func:`sql_operand`)."""
+    return F.expr(avg_to_level_sql(sql_operand(col)))
+
+
+def estimate_probability_sql(rain_mm_wmean: str, risk_level: str, count_of_disasters: str) -> str:
     """Reference ``estimateProbability`` (``frontend/app/page.tsx:66-83``),
     promoted into the engine as the flagship derived metric.
 
@@ -85,26 +104,48 @@ def estimate_probability(
     Null inputs are treated as 0 (the frontend receives ``coalesce``-d 0s,
     reference ``backend/app/main.py:704``).
     """
-    rain = F.coalesce(rain_mm_wmean, F.lit(0.0))
-    risk = F.coalesce(risk_level, F.lit(0))
-    cnt = F.coalesce(count_of_disasters, F.lit(0))
-    base = rain / F.lit(2.0) + risk.cast("double") * F.lit(10.0)
-    with_inc = F.least(F.lit(100.0), F.greatest(F.lit(80.0), base + cnt.cast("double") * F.lit(5.0)))
-    without = F.least(F.lit(100.0), base)
-    return F.when(cnt > 0, with_inc).otherwise(without)
+    rain = f"coalesce({rain_mm_wmean}, 0.0D)"
+    risk = f"coalesce({risk_level}, 0)"
+    cnt = f"coalesce({count_of_disasters}, 0)"
+    base = f"{rain} / 2.0D + CAST({risk} AS DOUBLE) * 10.0D"
+    return (
+        f"CASE WHEN {cnt} > 0 "
+        f"THEN least(100.0D, greatest(80.0D, {base} + CAST({cnt} AS DOUBLE) * 5.0D)) "
+        f"ELSE least(100.0D, {base}) END"
+    )
 
 
-def probability_color(prob: Column) -> Column:
+def estimate_probability(
+    rain_mm_wmean: Column | str, risk_level: Column | str, count_of_disasters: Column | str
+) -> Column:
+    """:func:`estimate_probability_sql` as a Column (operands:
+    :func:`sql_operand`)."""
+    return F.expr(
+        estimate_probability_sql(
+            sql_operand(rain_mm_wmean), sql_operand(risk_level), sql_operand(count_of_disasters)
+        )
+    )
+
+
+def probability_color_sql(prob: str) -> str:
     """Reference C17 choropleth binning (``frontend/app/page.tsx:168-173``):
     ≥75 → red, ≥50 → amber, else green."""
-    return F.when(prob >= 75, F.lit("red")).when(prob >= 50, F.lit("amber")).otherwise(F.lit("green"))
+    return f"CASE WHEN ({prob}) >= 75 THEN 'red' WHEN ({prob}) >= 50 THEN 'amber' ELSE 'green' END"
 
 
-def risk_label(risk_level: Column) -> Column:
+def probability_color(prob: Column | str) -> Column:
+    """:func:`probability_color_sql` as a Column (operand: :func:`sql_operand`)."""
+    return F.expr(probability_color_sql(sql_operand(prob)))
+
+
+def risk_label_sql(risk_level: str) -> str:
     """Reference C17 legend labels (``frontend/app/page.tsx:222,241-245``)."""
     return (
-        F.when(risk_level == 1, F.lit("Low"))
-        .when(risk_level == 2, F.lit("Medium"))
-        .when(risk_level == 3, F.lit("High"))
-        .otherwise(F.lit("Unknown"))
+        f"CASE WHEN ({risk_level}) = 1 THEN 'Low' WHEN ({risk_level}) = 2 THEN 'Medium' "
+        f"WHEN ({risk_level}) = 3 THEN 'High' ELSE 'Unknown' END"
     )
+
+
+def risk_label(risk_level: Column | str) -> Column:
+    """:func:`risk_label_sql` as a Column (operand: :func:`sql_operand`)."""
+    return F.expr(risk_label_sql(sql_operand(risk_level)))

@@ -17,18 +17,52 @@ HALF_UP and DuckDB's away-from-zero agree.  Mirror it in oracle SQL as
 Pair with exact upstream aggregation (sum 2-dp money in DECIMAL, divide
 once at the end) so the doubles being rounded are bit-identical to begin
 with.
+
+One definition, as Spark SQL text
+---------------------------------
+:func:`portable_round_sql` is the only definition of the formula.
+``spark.sql`` statements splice its text in, and the Column helper
+:func:`portable_round` is ``F.expr`` over the same text, so DataFrame
+code and SQL statements round identically by construction.  The text is
+written for Spark (double literals carry a ``D`` suffix; a bare ``1.0``
+is a DECIMAL in Spark SQL); it is not the DuckDB oracle's spelling.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["portable_round"]
+__all__ = ["portable_round", "portable_round_sql", "sql_operand"]
+
+_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*")
 
 
-def portable_round(col: Column, dp: int) -> Column:
-    """Engine-portable HALF-cases rounding: ``round(col * 10^dp) / 10^dp``
-    (see module docstring; mirror the same expression in oracle SQL)."""
-    scale = float(10**dp)
-    return F.round(col * F.lit(scale)) / F.lit(scale)
+def sql_operand(arg: Column | str) -> str:
+    """SQL text of a formula operand: SQL text is taken as given; a
+    Column must be a plain column reference (``F.col("x")``), which is
+    used by name.  A Column expression raises ``TypeError`` — pass its
+    SQL text instead — because a Column cannot be turned back into SQL."""
+    if isinstance(arg, str):
+        return arg
+    name = arg._jc.toString()
+    if not _NAME.fullmatch(name):
+        raise TypeError(
+            f"formula operand {name!r} is not a plain column reference; pass SQL text"
+        )
+    return name
+
+
+def portable_round_sql(x: str, dp: int) -> str:
+    """Engine-portable HALF-cases rounding of SQL operand ``x``:
+    ``round(x * 10^dp) / 10^dp`` (see module docstring)."""
+    scale = f"{10**dp}.0D"
+    return f"round(({x}) * {scale}) / {scale}"
+
+
+def portable_round(col: Column | str, dp: int) -> Column:
+    """:func:`portable_round_sql` as a Column; ``col`` is a column
+    reference or SQL text (:func:`sql_operand`)."""
+    return F.expr(portable_round_sql(sql_operand(col), dp))

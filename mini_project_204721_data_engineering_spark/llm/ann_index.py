@@ -472,7 +472,7 @@ def _refresh_rewritten(
                 tombstone, [id_col], "left_anti"
             )
             new_data = survivors.unionByName(new_data)
-        new_files, _ = _write_data_files(
+        new_files, written = _write_data_files(
             new_data.repartitionByRange(2, "cell"), pdir
         )
         guard = _rewrite_guard(p_tip, "ann_index_refresh")
@@ -493,7 +493,7 @@ def _refresh_rewritten(
                       "rewritten_files": len(hit_files),
                       "tombstoned_ids": n_tomb},
                 txn_update={_APP_ID: src_tip},
-                stats_fn=_compose_stats(spark, new_files, None),
+                stats_fn=_compose_stats(spark, new_files, None, written),
             )
         except _AlreadyApplied:
             pass

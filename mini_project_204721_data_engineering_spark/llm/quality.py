@@ -498,11 +498,7 @@ def tfidf_topk(
         .crossJoin(F.broadcast(n))
         .withColumn(
             "score",
-            portable_round(
-                F.col("tf")
-                * (F.log((F.col("__n") + 1.0) / (F.col("df") + 1.0)) + 1.0),
-                round_dp,
-            ),
+            portable_round("tf * (ln((__n + 1.0D) / (df + 1.0D)) + 1.0D)", round_dp),
         )
     )
     w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("term").asc())

@@ -32,7 +32,9 @@ Scale notes
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
 from dataclasses import dataclass, field
 from typing import Any, Mapping, Sequence
 
@@ -89,10 +91,11 @@ class ListQuery:
 
     # ------------------------------------------------------------------
     def _filtered(self) -> DataFrame:
-        df = self.base
-        for cond in self.filters:
-            df = df.filter(cond)
-        return df
+        # one filter() over the conjunction: each filter() call is a py4j
+        # round trip after which the JVM re-analyses the whole plan
+        if not self.filters:
+            return self.base
+        return self.base.filter(functools.reduce(operator.and_, self.filters))
 
     def _order(self, order_by: str | None, order_type: str) -> Sequence[Column]:
         col = self.sortable.get(order_by or "", None)

@@ -12,8 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mini_project_204721_data_engineering_spark.catalog import load_table
-from mini_project_204721_data_engineering_spark.functions.binning import avg_to_level
+from mini_project_204721_data_engineering_spark.catalog import load_table, table_view
+from mini_project_204721_data_engineering_spark.functions.binning import avg_to_level_sql
 from mini_project_204721_data_engineering_spark.operators.aggregates import min_coord_step, weighted_mean
 from mini_project_204721_data_engineering_spark.operators.dedup import (
     dedup_keep_first_packed,
@@ -132,19 +132,30 @@ WHERE prev IS NOT NULL
 """
 
 
+_AVG_LEVEL_BY_BRAND = f"""
+SELECT brand, avg_class, {avg_to_level_sql("avg_class")} AS risk_level
+FROM (
+  SELECT p.p_brand AS brand, round(avg(l.l_discount * 30), 4) AS avg_class
+  FROM {{lineitem}} l
+  JOIN {{part}} p ON l.l_partkey = p.p_partkey
+  GROUP BY p.p_brand
+)
+ORDER BY brand
+"""
+
+
 def avg_level_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4+C5: grouped mean then ``avg_to_level`` binning (reference
-    ``utils.py:353-366``) — mean discount scaled to the 1-3 class range."""
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    agg = (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .groupBy(part.p_brand.alias("brand"))
-        .agg(F.round(F.avg(F.col("l_discount") * 30), 4).alias("avg_class"))
+    ``utils.py:353-366``) — mean discount scaled to the 1-3 class range.
+    One ``spark.sql`` statement over the catalog's version-keyed views
+    (one analysis per request); C5 is spliced in from its single SQL-text
+    definition."""
+    return spark.sql(
+        _AVG_LEVEL_BY_BRAND.format(
+            lineitem=table_view(spark, sf_dir, "lineitem"),
+            part=table_view(spark, sf_dir, "part"),
+        )
     )
-    return agg.select(
-        "brand", "avg_class", avg_to_level(F.col("avg_class")).alias("risk_level")
-    ).orderBy("brand")
 
 
 AVG_LEVEL_BY_BRAND_SQL = """
@@ -1672,15 +1683,12 @@ def corr_qty_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(y * y).alias("syy"),
         F.sum(x * y).alias("sxy"),
     )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    den = F.sqrt(
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-        * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    )
+    num = "CAST(n * sxy - sx * sy AS DOUBLE)"
+    den = "sqrt(CAST(n * sxx - sx * sx AS DOUBLE) * CAST(n * syy - sy * sy AS DOUBLE))"
     return agg.select(
         "l_returnflag",
         "n",
-        portable_round(num / den, 6).alias("corr_qty_disc"),
+        portable_round(f"{num} / {den}", 6).alias("corr_qty_disc"),
     ).orderBy("l_returnflag")
 
 
@@ -2459,8 +2467,8 @@ def value_anomalies_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flagged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_total"),
         F.sum(is_anom.cast("long")).alias("n_anomalous"),
-        portable_round(F.first("med"), 4).alias("med"),
-        portable_round(F.first("mad"), 4).alias("mad"),
+        portable_round("first(med)", 4).alias("med"),
+        portable_round("first(mad)", 4).alias("mad"),
     )
 
 
@@ -2620,9 +2628,7 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return row.select(
         "promo_cents",
         "total_cents",
-        portable_round(
-            F.lit(100.0) * F.col("promo_cents") / F.col("total_cents"), 4
-        ).alias("promo_share_pct"),
+        portable_round("100.0D * promo_cents / total_cents", 4).alias("promo_share_pct"),
     )
 
 
@@ -2793,7 +2799,7 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_partkey").alias("p_partkey"),
             F.col("l_suppkey").alias("s_suppkey"),
             F.col("q").alias("supplier_qty"),
-            portable_round(F.col("q") / F.col("tq"), 4).alias("qty_share"),
+            portable_round("q / tq", 4).alias("qty_share"),
         )
         .orderBy("p_partkey", "s_suppkey")
     )
@@ -2907,9 +2913,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_year",
             "nation_cents",
             "total_cents",
-            portable_round(
-                F.col("nation_cents") / F.col("total_cents"), 6
-            ).alias("mkt_share"),
+            portable_round("nation_cents / total_cents", 6).alias("mkt_share"),
         )
         .orderBy("o_year")
     )

@@ -11,118 +11,114 @@ Synthetic mapping: customer = district, nation = province,
 orders-aggregate = rain fact, acctbal bins = risk level, error events =
 incidents.  The probability formula C16 is promoted into the engine.
 
+The query is ONE ``spark.sql`` statement with the incident day as the
+named parameter ``:day``, over the catalog's version-keyed views
+(``catalog.table_view``), so each request costs one parse and one
+Catalyst analysis instead of one re-analysis per DataFrame step.  The
+C16/C17 formulas and ``portable_round`` are spliced in from their single
+SQL-text definitions (``functions/binning.py``, ``functions/parity.py``).
+
 Scale notes: the per-key aggregates reduce the facts BEFORE the joins
 (same dataflow-design choice the reference makes, SURVEY §4.1); nation is
-broadcast; customer⋈aggregates co-partition on the key via one shuffle.
+broadcast through a ``BROADCAST(n)`` hint in the SELECT that owns its
+join; customer⋈aggregates co-partition on the key via one shuffle (or
+AQE broadcasts the small aggregates).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import datetime
 
-from mini_project_204721_data_engineering_spark.catalog import load_table
+from pyspark.sql import DataFrame, SparkSession
+
+from mini_project_204721_data_engineering_spark.catalog import table_view
 from mini_project_204721_data_engineering_spark.functions.binning import (
-    estimate_probability,
-    probability_color,
-    risk_label,
+    estimate_probability_sql,
+    probability_color_sql,
+    risk_label_sql,
 )
+from mini_project_204721_data_engineering_spark.functions.parity import portable_round_sql
 
 __all__ = ["QUERIES", "ORACLES", "dashboard_probability"]
 
 #: the dashboard's date slice (reference `date_filter`, main.py:710)
 INCIDENT_DAY = "2024-01-15"
 
+# "rain" fact: mean order value per customer, scaled into a mm-like range.
+# Two float-parity rules at once: (1) keep the raw average for the
+# probability input — rounding first then halving manufactures .xxxx5
+# halfway values; (2) sum exact integer CENTS, not doubles — the 2-dp
+# prices are exact after round(x*100), so the long sum is order-independent
+# and both engines derive the identical double, like the r2 decimal(18,2)
+# sum but codegen-cheap (no per-row BigDecimal aggregation buffer).
+# round() before the BIGINT cast is load-bearing: Spark's double→long cast
+# truncates while DuckDB's rounds, and the double product of an exact-2dp
+# price ×100 sits ~1e-9 off the integer on either side.  Halfway cases
+# can't occur (true cents are integers), so Spark HALF_UP and DuckDB round
+# agree bit-for-bit.
+#
+# "risk" level: per-row deterministic bin of the account balance, computed
+# in the customer projection.  The oracle writes it as a LEFT JOIN of
+# customer to a customer-derived projection, but c_custkey is the table's
+# unique non-null key, so that self-join matches every row exactly once —
+# computing it inline removes a second customer scan and a whole-table
+# broadcast.
+#
+# portable_round, not round(x, 4): the cents averages land exactly on 4-dp
+# halfway points for ~1e-4 of customers, where Spark HALF_UP and DuckDB
+# scaled rounding disagree (functions/parity.py).
+_STATEMENT = f"""
+WITH rain AS (
+  SELECT o_custkey AS c_custkey,
+         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
+           / 100.0D / count(1) / 5000.0D AS rain_raw
+  FROM {{orders}}
+  GROUP BY o_custkey
+), incidents AS (
+  SELECT CAST(user_id AS BIGINT) AS i_custkey, CAST(ts AS DATE) AS day,
+         count(1) AS count_of_disasters
+  FROM {{events}}
+  WHERE event_type = 'error'
+  GROUP BY CAST(user_id AS BIGINT), CAST(ts AS DATE)
+), scored AS (
+  SELECT /*+ BROADCAST(n) */
+         c.c_custkey, c.c_name AS district_name, n.n_name AS province_name,
+         r.rain_raw,
+         CAST(CASE WHEN c.c_acctbal < 2000.0D THEN 1
+                   WHEN c.c_acctbal < 6000.0D THEN 2
+                   ELSE 3 END AS INT) AS risk_level,
+         i.count_of_disasters
+  FROM {{customer}} c
+  LEFT JOIN {{nation}} n ON c.c_nationkey = n.n_nationkey
+  LEFT JOIN rain r ON c.c_custkey = r.c_custkey
+  -- J11's signature: the date predicate lives IN the join condition
+  LEFT JOIN incidents i ON c.c_custkey = i.i_custkey AND i.day = :day
+), probable AS (
+  SELECT *,
+         {portable_round_sql(estimate_probability_sql("rain_raw", "risk_level", "count_of_disasters"), 4)}
+           AS probability
+  FROM scored
+)
+SELECT c_custkey AS district_id,
+       district_name,
+       province_name,
+       {portable_round_sql("coalesce(rain_raw, 0.0D)", 4)} AS rain_mm_wmean,
+       coalesce(risk_level, 0) AS risk_level,
+       coalesce(count_of_disasters, 0) AS count_of_disasters,
+       probability,
+       {probability_color_sql("probability")} AS prob_color,
+       {risk_label_sql("risk_level")} AS risk_label_en
+FROM probable
+"""
+
 
 def dashboard_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J11 4-way left join + C16 probability + C17 binning."""
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    orders = load_table(spark, sf_dir, "orders")
-    events = load_table(spark, sf_dir, "events")
-
-    # "rain" fact: mean order value per customer, scaled into a mm-like range.
-    # Two float-parity rules at once: (1) keep the raw average for the
-    # probability input — rounding first then halving manufactures .xxxx5
-    # halfway values; (2) sum exact integer CENTS, not doubles — the 2-dp
-    # prices are exact after round(x*100), so the long sum is
-    # order-independent and both engines derive the identical double, like
-    # the r2 decimal(18,2) sum but codegen-cheap (no per-row BigDecimal
-    # aggregation buffer).  round() before the long cast is load-bearing:
-    # Spark's double→long cast truncates while DuckDB's rounds, and the
-    # double product of an exact-2dp price ×100 sits ~1e-9 off the integer
-    # on either side.  Halfway cases can't occur (true cents are integers),
-    # so Spark HALF_UP and DuckDB round agree bit-for-bit.
-    rain = orders.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
-        (
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).cast("double")
-            / F.lit(100.0)
-            / F.count(F.lit(1))
-            / F.lit(5000.0)
-        ).alias("rain_raw")
-    )
-    # "risk" level: per-row deterministic bin of the account balance.
-    # r15 optimization (guide §2.4): the oracle writes this as a LEFT JOIN
-    # of customer to a customer-derived projection, but c_custkey is the
-    # table's unique non-null key, so the self-join matches every spine
-    # row exactly once and is row-for-row the inline expression — computing
-    # it in the spine projection removes a second full customer scan and a
-    # whole-table broadcast build (which past ~autoBroadcastJoinThreshold
-    # would have become a sort-merge self-join at 100 TB).
-    risk_level = (
-        F.when(F.col("c_acctbal") < 2000.0, 1)
-        .when(F.col("c_acctbal") < 6000.0, 2)
-        .otherwise(3)
-        .cast("int")
-    )
-    # "incidents": error events on the sliced day, counted per user
-    incidents = (
-        events.filter(F.col("event_type") == "error")
-        .groupBy(
-            F.col("user_id").cast("bigint").alias("i_custkey"),
-            F.col("ts").cast("date").alias("day"),
-        )
-        .agg(F.count(F.lit(1)).alias("count_of_disasters"))
-    )
-
-    joined = (
-        customer.select(
-            "c_custkey",
-            F.col("c_name").alias("district_name"),
-            "c_nationkey",
-            risk_level.alias("risk_level"),
-        )
-        .join(F.broadcast(nation), F.col("c_nationkey") == nation.n_nationkey, "left")
-        .join(rain, "c_custkey", "left")
-        # J11's signature: the date predicate lives IN the join condition
-        .join(
-            incidents,
-            (F.col("c_custkey") == incidents.i_custkey)
-            & (incidents.day == F.lit(INCIDENT_DAY).cast("date")),
-            "left",
-        )
-    )
-    # portable_round, not F.round: the decimal-sum averages land exactly on
-    # 4-dp halfway points for ~1e-4 of customers, where Spark HALF_UP and
-    # DuckDB scaled rounding disagree (functions/parity.py)
-    from mini_project_204721_data_engineering_spark.functions.parity import portable_round
-
-    prob = portable_round(
-        estimate_probability(
-            F.col("rain_raw"), F.col("risk_level"), F.col("count_of_disasters")
-        ),
-        4,
-    )
-    return joined.select(
-        F.col("c_custkey").alias("district_id"),
-        F.col("district_name"),
-        F.col("n_name").alias("province_name"),
-        portable_round(F.coalesce(F.col("rain_raw"), F.lit(0.0)), 4).alias("rain_mm_wmean"),
-        F.coalesce(F.col("risk_level"), F.lit(0)).alias("risk_level"),
-        F.coalesce(F.col("count_of_disasters"), F.lit(0)).alias("count_of_disasters"),
-        prob.alias("probability"),
-        probability_color(prob).alias("prob_color"),
-        risk_label(F.col("risk_level")).alias("risk_label_en"),
+    """J11 4-way left join + C16 probability + C17 binning, as one
+    statement (see the module docstring)."""
+    views = {t: table_view(spark, sf_dir, t) for t in ("customer", "nation", "orders", "events")}
+    return spark.sql(
+        _STATEMENT.format(**views),
+        args={"day": datetime.date.fromisoformat(INCIDENT_DAY)},
     )
 
 

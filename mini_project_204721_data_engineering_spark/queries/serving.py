@@ -13,10 +13,12 @@ Plan shape we require (checked in tests/test_plans.py):
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mini_project_204721_data_engineering_spark.catalog import load_table
+from mini_project_204721_data_engineering_spark.catalog import load_table, table_view
 from mini_project_204721_data_engineering_spark.operators.query_builder import ListQuery
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -169,21 +171,26 @@ LIMIT 200 OFFSET 0
 """
 
 
+_ORDER_SCALAR_STATS = """
+SELECT count(CASE WHEN o_orderstatus = 'F'
+                   AND CAST(o_orderdate AS DATE) >= :start_date
+                   AND CAST(o_orderdate AS DATE) <= :end_date THEN 1 END) AS total,
+       min(CAST(o_orderdate AS DATE)) AS min_date,
+       max(CAST(o_orderdate AS DATE)) AS max_date
+FROM {orders}
+"""
+
+
 def order_scalar_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6+A7 in one scan: the pagination-total count under dynamic
     predicates (reference ``main.py:266-269``) AND the global min/max
     date endpoint (``main.py:668-676``) — a conditional count plus
-    unconditional min/max needs no second pass over the table."""
-    orders = load_table(spark, sf_dir, "orders")
-    filt = (
-        (F.col("o_orderstatus") == "F")
-        & (F.col("o_orderdate").cast("date") >= F.lit("1995-06-01"))
-        & (F.col("o_orderdate").cast("date") <= F.lit("1997-05-31"))
-    )
-    return orders.agg(
-        F.count(F.when(filt, 1)).alias("total"),
-        F.min(F.col("o_orderdate").cast("date")).alias("min_date"),
-        F.max(F.col("o_orderdate").cast("date")).alias("max_date"),
+    unconditional min/max needs no second pass over the table.  One
+    ``spark.sql`` statement over the catalog's version-keyed view of
+    ``orders``, the date bounds as named parameters."""
+    return spark.sql(
+        _ORDER_SCALAR_STATS.format(orders=table_view(spark, sf_dir, "orders")),
+        args={"start_date": datetime.date(1995, 6, 1), "end_date": datetime.date(1997, 5, 31)},
     )
 
 

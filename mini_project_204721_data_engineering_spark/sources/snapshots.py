@@ -146,9 +146,11 @@ def _try_write_manifest(
     return io.put_if_absent(io.manifest_path(table_dir, version), payload)
 
 
-def _write_data_files(df: DataFrame, table_dir: str) -> tuple[list[str], str]:
+def _write_data_files(df: DataFrame, table_dir: str) -> tuple[list[str], StructType]:
     """Write one commit's data files into their own directory; return
-    (file paths, commit dir).  Bytes land BEFORE any manifest points at
+    (file paths, the schema written) — the schema lets the commit read
+    the new files' stats without a schema-inference job
+    (:func:`_file_stats`).  Bytes land BEFORE any manifest points at
     them — a crash here strands orphans, never corrupts the table.
     Data bytes move through Spark on the IO layer's ``spark_path``
     translation (identity except for the mock object store), so
@@ -161,7 +163,7 @@ def _write_data_files(df: DataFrame, table_dir: str) -> tuple[list[str], str]:
     df.write.mode("error").parquet(str(cdir.toString()))
     statuses = fs.globStatus(_child(jvm, str(cdir.toString()), "part-*"))
     files = sorted(str(s.getPath().toString()) for s in (statuses or []) if s.isFile())
-    return files, str(cdir.toString())
+    return files, df.schema
 
 
 def _carry_filters(parent: dict | None, files: list[str]) -> list[dict]:
@@ -4098,7 +4100,7 @@ def snapshot_delete_where(
     survivors = _filtered_read(spark, manifest, hit_files, schema).filter(
         f"({predicate}) IS NOT TRUE"
     )
-    new_files, _ = _write_data_files(survivors, table_dir)
+    new_files, written = _write_data_files(survivors, table_dir)
     hit = set(hit_files)
     moved_guard = _rewrite_guard(manifest, "snapshot_delete_where")
 
@@ -4109,7 +4111,7 @@ def snapshot_delete_where(
     return _commit(
         spark, table_dir, "delete", files_fn, manifest["schema"],
         meta={"predicate": predicate, "rewritten_files": len(hit_files)},
-        stats_fn=_compose_stats(spark, new_files, None),  # sticky cols
+        stats_fn=_compose_stats(spark, new_files, None, written),  # sticky cols
     )
 
 
@@ -4128,7 +4130,7 @@ def snapshot_apply_filters(spark: SparkSession, table_dir: str) -> dict:
         return manifest
     covered = sorted({f for e in entries for f in e["files"]})
     clean = _filtered_read(spark, manifest, covered)
-    new_files, _ = _write_data_files(clean, table_dir)
+    new_files, written = _write_data_files(clean, table_dir)
     cov = set(covered)
     guard = _rewrite_guard(manifest, "snapshot_apply_filters")
 
@@ -4140,7 +4142,7 @@ def snapshot_apply_filters(spark: SparkSession, table_dir: str) -> dict:
         spark, table_dir, "delete", files_fn, manifest["schema"],
         meta={"mode": "apply_filters", "rewritten_files": len(covered),
               "applied_filters": len(entries)},
-        stats_fn=_compose_stats(spark, new_files, None),
+        stats_fn=_compose_stats(spark, new_files, None, written),
     )
 
 
@@ -4239,10 +4241,10 @@ def _merge_rewrite(
     keys: list,
     when_matched: str,
     when_not_matched: str,
-) -> tuple[list[str], list[str]]:
+) -> tuple[list[str], list[str], StructType]:
     """The CoW MERGE rewrite against a GIVEN manifest → ``(hit_files,
-    new_files)``: hit files hold a matched key; new files carry their
-    survivors + the merge result.  Shared by
+    new_files, schema written)``: hit files hold a matched key; new files
+    carry their survivors + the merge result.  Shared by
     :func:`snapshot_merge_into` (tip manifest) and the multi-table
     transaction's merge spec (catalog-pinned manifest)."""
     from pyspark.sql import functions as F
@@ -4282,8 +4284,8 @@ def _merge_rewrite(
         else spark.createDataFrame([], source.schema)
     )
     new_data = survivors.unionByName(replaced).unionByName(inserts)
-    new_files, _ = _write_data_files(new_data, table_dir)
-    return hit_files, new_files
+    new_files, written = _write_data_files(new_data, table_dir)
+    return hit_files, new_files, written
 
 
 def snapshot_merge_into(
@@ -4327,7 +4329,7 @@ def snapshot_merge_into(
         # interloper lands v1 between our emptiness check and the
         # commit, a blind append would skip the matched-key rewrite and
         # duplicate shared keys — abort and re-run instead
-        new_files, _ = _write_data_files(_dedup_guarded(source, keys), table_dir)
+        new_files, written = _write_data_files(_dedup_guarded(source, keys), table_dir)
 
         def fresh_files_fn(parent):
             if parent is not None:
@@ -4342,11 +4344,11 @@ def snapshot_merge_into(
             spark, table_dir, "merge", fresh_files_fn, ddl,
             meta={"rewritten_files": 0, "when_matched": when_matched,
                   "when_not_matched": when_not_matched},
-            stats_fn=_compose_stats(spark, new_files, None),
+            stats_fn=_compose_stats(spark, new_files, None, written),
         )
     tip_manifest = _read_manifest(spark, table_dir, versions[-1])
     _check_schema(tip_manifest, ddl, "snapshot_merge_into")
-    hit_files, new_files = _merge_rewrite(
+    hit_files, new_files, written = _merge_rewrite(
         spark, tip_manifest, table_dir, source, keys,
         when_matched, when_not_matched,
     )
@@ -4365,7 +4367,7 @@ def snapshot_merge_into(
             "when_matched": when_matched,
             "when_not_matched": when_not_matched,
         },
-        stats_fn=_compose_stats(spark, new_files, None),
+        stats_fn=_compose_stats(spark, new_files, None, written),
     )
 
 
@@ -4458,7 +4460,7 @@ def snapshot_replace_where(
     survivors = _filtered_read(spark, manifest, hit_files, df.schema).filter(
         f"({predicate}) IS NOT TRUE"
     )
-    new_files, _ = _write_data_files(survivors.unionByName(guarded), table_dir)
+    new_files, written = _write_data_files(survivors.unionByName(guarded), table_dir)
     hit = set(hit_files)
     guard = _rewrite_guard(manifest, "snapshot_replace_where")
 
@@ -4469,7 +4471,7 @@ def snapshot_replace_where(
     return _commit(
         spark, table_dir, "replace_where", files_fn, ddl,
         meta={"predicate": predicate, "rewritten_files": len(hit_files)},
-        stats_fn=_compose_stats(spark, new_files, None),
+        stats_fn=_compose_stats(spark, new_files, None, written),
     )
 
 
@@ -4630,10 +4632,10 @@ def _compact_pack(
     target_file_bytes: int,
     small_file_bytes: int,
     zorder_by: Sequence[str] | None = None,
-) -> tuple[list[str] | None, list[str] | None]:
+) -> tuple[list[str] | None, list[str] | None, StructType | None]:
     """The bin-packing PLAN + rewrite against a GIVEN manifest →
-    ``(small_files, new_files)``, or ``(None, None)`` when fewer than
-    two files qualify (nothing worth packing).  ONE implementation for
+    ``(small_files, new_files, schema written)``, or ``(None, None, None)``
+    when fewer than two files qualify (nothing worth packing).  ONE implementation for
     :func:`snapshot_compact` (tip manifest) and the multi-table
     transaction's compact spec (catalog-pinned manifest) — divergent
     planners would drift (size fallback, thresholds, partitioning)."""
@@ -4662,7 +4664,7 @@ def _compact_pack(
             )
     small = [f for f in manifest["files"] if sizes[f] < small_file_bytes]
     if len(small) < 2:
-        return None, None  # nothing worth packing
+        return None, None, None  # nothing worth packing
     total = sum(sizes[f] for f in small)
     n_out = max(1, (total + target_file_bytes - 1) // target_file_bytes)
     # read through pending lazy-delete filters: compaction is also the
@@ -4674,8 +4676,8 @@ def _compact_pack(
         packed = zorder_layout(packed, list(zorder_by), n_out)
     else:
         packed = packed.repartition(n_out)
-    new_files, _ = _write_data_files(packed, table_dir)
-    return small, new_files
+    new_files, written = _write_data_files(packed, table_dir)
+    return small, new_files, written
 
 
 def snapshot_compact(
@@ -4728,7 +4730,7 @@ def snapshot_compact(
         _bloom_build_cols(_pds(manifest["schema"]), bloom_cols, explicit=True)
     if ndv_cols is not None:
         _ndv_build_cols(_pds(manifest["schema"]), ndv_cols, explicit=True)
-    small, new_files = _compact_pack(
+    small, new_files, written = _compact_pack(
         spark, manifest, table_dir, target_file_bytes, small_file_bytes,
         zorder_by,
     )
@@ -4767,7 +4769,7 @@ def snapshot_compact(
             ),
             meta={"compacted_files": len(small), "produced_files": len(new_files),
                   **({"zorder_by": list(zorder_by)} if zorder_by else {})},
-            stats_fn=_compose_stats(spark, new_files, zorder_by),
+            stats_fn=_compose_stats(spark, new_files, zorder_by, written),
             bloom_fn=bloom_fn,
             ndv_fn=ndv_fn,
         ),

@@ -482,14 +482,14 @@ def multi_table_txn(
                         survivors = _filtered_read(
                             spark, parent_manifest, planned
                         ).filter(f"({pred}) IS NOT TRUE")
-                        nf, _ = _write_data_files(survivors, pin["dir"])
+                        nf, written = _write_data_files(survivors, pin["dir"])
                     else:
-                        nf = []
+                        nf, written = [], None
                     # the stats_fn memo rides the rewrite memo: a lost
                     # race on ANOTHER table must not re-run this
                     # table's file-stats job either
                     si["rewrites"][pv] = (
-                        set(planned), nf, _compose_stats(spark, nf, None)
+                        set(planned), nf, _compose_stats(spark, nf, None, written)
                     )
                 planned_set, new_files, stats_fn = si["rewrites"][pv]
 
@@ -532,14 +532,14 @@ def multi_table_txn(
                         _ndv_build_cols(
                             pschema, si["ndv_cols"], explicit=True
                         )
-                    sm, nf = _compact_pack(
+                    sm, nf, written = _compact_pack(
                         spark, parent_manifest, pin["dir"],
                         si["target"], si["small"], si["zorder_by"],
                     )
                     si["rewrites"][pv] = (
                         set(sm) if sm else None,
                         nf or [],
-                        _compose_stats(spark, nf or [], None),
+                        _compose_stats(spark, nf or [], None, written),
                     )
                 small_set, new_files, stats_fn = si["rewrites"][pv]
                 if small_set is None:
@@ -578,9 +578,9 @@ def multi_table_txn(
                     clean = _filtered_read(
                         spark, parent_manifest, covered
                     )
-                    nf, _ = _write_data_files(clean, pin["dir"])
+                    nf, written = _write_data_files(clean, pin["dir"])
                     si["rewrites"][pv] = (
-                        set(covered), nf, _compose_stats(spark, nf, None)
+                        set(covered), nf, _compose_stats(spark, nf, None, written)
                     )
                 cov_set, new_files, stats_fn = si["rewrites"][pv]
 
@@ -611,11 +611,11 @@ def multi_table_txn(
                     if pv not in si["rewrites"]:
                         from .snapshots import _dedup_guarded
 
-                        nf, _ = _write_data_files(
+                        nf, written = _write_data_files(
                             _dedup_guarded(src_df, si["keys"]), pin["dir"]
                         )
                         si["rewrites"][pv] = (
-                            set(), nf, _compose_stats(spark, nf, None)
+                            set(), nf, _compose_stats(spark, nf, None, written)
                         )
                 else:
                     _check_schema(
@@ -626,13 +626,13 @@ def multi_table_txn(
                     if pv not in si["rewrites"]:
                         from .snapshots import _merge_rewrite
 
-                        hit, nf = _merge_rewrite(
+                        hit, nf, written = _merge_rewrite(
                             spark, parent_manifest, pin["dir"], src_df,
                             si["keys"], si["when_matched"],
                             si["when_not_matched"],
                         )
                         si["rewrites"][pv] = (
-                            set(hit), nf, _compose_stats(spark, nf, None)
+                            set(hit), nf, _compose_stats(spark, nf, None, written)
                         )
                 hit_set, new_files, stats_fn = si["rewrites"][pv]
 

@@ -15,9 +15,13 @@ from mini_project_204721_data_engineering_spark.sources.snapshots import (
     expire_snapshots,
     read_snapshot,
     snapshot_append,
+    snapshot_apply_filters,
+    snapshot_compact,
     snapshot_delete_where,
     snapshot_history,
+    snapshot_merge_into,
     snapshot_overwrite,
+    snapshot_replace_where,
     snapshot_txn_append,
 )
 
@@ -1065,11 +1069,28 @@ def _jobs_in_group(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("case", ["rain", "merge_schema", "derived"])
+#: rewrite commits: each writes a new frame and computes its files' stats
+_REWRITES = {
+    "delete_where": lambda spark, t, base: snapshot_delete_where(spark, t, "district_id = 1"),
+    "apply_filters": lambda spark, t, base: snapshot_apply_filters(spark, t),
+    "merge_into": lambda spark, t, base: snapshot_merge_into(
+        base.filter("district_id < 2").withColumn("rainfall_mm", F.lit(9.0)), t, ["district_id"]
+    ),
+    "merge_into_fresh": lambda spark, t, base: snapshot_merge_into(base, t + "_fresh", ["district_id"]),
+    "replace_where": lambda spark, t, base: snapshot_replace_where(
+        base.filter("district_id = 1").withColumn("rainfall_mm", F.lit(9.0)), t, "district_id = 1"
+    ),
+    "compact": lambda spark, t, base: snapshot_compact(spark, t, target_file_bytes=1 << 30),
+}
+
+
+@pytest.mark.parametrize("case", ["rain", "merge_schema", "derived", *_REWRITES])
 def test_append_stats_read_with_the_written_schema(spark, tmp_path, case, monkeypatch):
-    """An append computes its new files' stats with the schema it has
-    just written: one job fewer than an inferred read (no parquet
-    schema-inference job), and the same stats, stats_cols and file_meta."""
+    """A commit computes its new files' stats with the schema it has
+    just written — appends and the rewrite commits (delete, apply
+    filters, merge, replace-where, compact) alike: one job fewer than an
+    inferred read (no parquet schema-inference job), and the same stats,
+    stats_cols and file_meta."""
     from mini_project_204721_data_engineering_spark.sources import snapshots as S
 
     t = str(tmp_path / "t")
@@ -1079,14 +1100,21 @@ def test_append_stats_read_with_the_written_schema(spark, tmp_path, case, monkey
         (F.col("id") * 1.5).alias("rainfall_mm"),
         F.when(F.col("id") != 2, F.col("id") / 4).alias("rain_mm_wmean"),
     ).repartition(2)
+    df = None
     if case == "rain":
         df, kw = base, {"stats_cols": ["date", "district_id", "rainfall_mm", "rain_mm_wmean"]}
     elif case == "merge_schema":
         snapshot_append(base, t, stats_cols=["district_id", "rainfall_mm"])
         df, kw = base.withColumn("note", F.lit("x")), {"merge_schema": True}
-    else:
+    elif case == "derived":
         df = base.withColumn("ts", F.expr("CAST(date AS TIMESTAMP) + make_interval(0, 0, 0, 0, district_id, 0, 0)"))
         kw = {"stats_cols": {"day": "CAST(ts AS DATE)", "ts": "ts"}}
+    else:
+        # two appends (four small files), stats columns sticky from the first
+        snapshot_append(base, t, stats_cols=["district_id", "rainfall_mm"])
+        snapshot_append(base.withColumn("district_id", F.col("district_id") + 6), t)
+        if case == "apply_filters":
+            snapshot_delete_where(spark, t, "district_id = 1", lazy=True)
 
     real, seen = S._file_stats, []
 
@@ -1097,11 +1125,18 @@ def test_append_stats_read_with_the_written_schema(spark, tmp_path, case, monkey
         return out
 
     monkeypatch.setattr(S, "_file_stats", spy)
-    man = snapshot_append(df, t, **kw)
+    if df is not None:
+        man = snapshot_append(df, t, **kw)
+    else:
+        man = _REWRITES[case](spark, t, base)
     ((schema, pinned, n_inferred, same, files, stats),) = seen
-    assert schema == df.schema
+    if df is not None:
+        assert schema == df.schema
+    else:
+        assert schema is not None and schema.fieldNames() == base.columns
     assert pinned == n_inferred - 1 and same
     want_stats, want_meta = real(spark, files, stats)
     assert {f: man["file_meta"][f] for f in files} == want_meta
-    assert {f: man["stats"][f] for f in files} == want_stats
-    assert man["stats_cols"] == stats
+    if stats:  # a fresh merge target has no stats columns, only file_meta
+        assert {f: man["stats"][f] for f in files} == want_stats
+        assert man["stats_cols"] == stats
