@@ -96,12 +96,11 @@ def main() -> None:
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.01")
     if os.path.isdir(warm_dir):
         for name in HEADLINE:
-            fn = qs.get(name)
-            if fn is not None:
-                try:
-                    fn(spark, warm_dir).toPandas()
-                except Exception:
-                    pass
+            fn = qs[name]
+            try:
+                fn(spark, warm_dir).toPandas()
+            except Exception:
+                pass
 
     # Timed passes run UNTIL CONVERGENCE, per-query MIN: back-to-back
     # identical runs of this suite differ by ±7% total from scheduler/GC
@@ -165,9 +164,7 @@ def main() -> None:
     for i in range(max_passes):
         pass_t: dict[str, float] = {}
         for name in HEADLINE:
-            fn = qs.get(name)
-            if fn is None:
-                continue
+            fn = qs[name]
             t0 = time.time()
             df = fn(spark, sf_dir)
             # Arrow-batched materialization: measures the engine, not py4j

@@ -8,10 +8,7 @@ operators a 100 TB text/embedding corpus pipeline needs, built Spark-first:
 - :mod:`.dedup` — exact (hash), n-gram Jaccard, MinHash-LSH, SimHash
 - :mod:`.similarity` — embedding cosine top-k (brute-force baseline +
   label-cell IVF scale path)
-- :mod:`.sparse_sim` — exact all-pairs tf-cosine join (prefix-filtered
-  inverted index, Bayardo et al. WWW'07)
-- :mod:`.pq` — product-quantization ANN (Jégou et al. TPAMI 2011):
-  32×-compressed codes, pure-codegen ADC search, shortlist+rerank
-- :mod:`.quality` — repetition metrics, decontamination, vocabulary,
-  sequence packing, unigram-LM in-domain scoring
+
+They serve the 11 LLM queries of the driver contract
+(``queries/llm_queries.py``).
 """

@@ -310,9 +310,8 @@ def seeded_two_level(
     the ≤ k1·k2 winning seed vectors are fetched back with a broadcast
     semi-join against the corpus (no shuffle of the corpus).  A
     one-time seeding cost, not per-query.  At extreme corpus sizes,
-    seed from a hash-sampled slice instead
-    (``operators.sampling.hash_sample``) — seeds only need to span the
-    distribution, and a deterministic sample keeps reproducibility."""
+    seed from a deterministic hash-sampled slice instead — seeds only
+    need to span the distribution."""
     supers = seeded_centroids(corpus, ncells=k1, id_col=id_col, vec_col=vec_col)
     s1 = assign_cells_bcast(corpus, supers, id_col, vec_col, cell_col="__super")
     w = Window.partitionBy("__super").orderBy(F.col(id_col).asc())

@@ -1,4 +1,9 @@
-"""Distributed operator library (SURVEY §2.2-§2.7)."""
+"""Distributed operator library (SURVEY §2.2-§2.7): the joins, dedup,
+aggregates, rollups, skew handling, bloom pruning, diff and pagination
+that the declared queries, pipelines and snapshot tables call.
+
+``heavy`` and ``incremental`` are reached by no entry point;
+``tests/test_reachable.py`` lists them until they are cut."""
 
 from mini_project_204721_data_engineering_spark.operators.query_builder import ListQuery, Page
 from mini_project_204721_data_engineering_spark.operators.joins import (

@@ -1,5 +1,4 @@
-"""Split-block Bloom-filter join pruning — the generalized form of the
-decontamination scale path (``llm/quality.py::contaminated_docs``).
+"""Split-block Bloom-filter join pruning.
 
 Spark's optimizer injects runtime bloom filters for some shuffle joins
 on its own (``spark.sql.optimizer.runtime.bloomFilter.enabled``); this

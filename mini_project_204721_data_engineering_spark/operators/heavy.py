@@ -27,8 +27,8 @@ cardinality, with the classic two-phase sketch-then-verify shape:
 2. **Exact recount** — the fact table semi-joins the broadcast
    candidates and only surviving rows reach the count shuffle; the
    final filter ``count ≥ θ·N`` makes the OUTPUT exact — identical to
-   the plain GROUP BY / HAVING (oracle-checked by the
-   ``heavy_hitter_users`` EXTRA), with N taken exactly from the
+   the plain GROUP BY / HAVING (pinned by ``tests/test_heavy.py``),
+   with N taken exactly from the
    phase-1 per-partition totals (no third scan).
 
 Rows with a NULL in any key column are ignored entirely — excluded
@@ -120,7 +120,7 @@ def heavy_hitters(
       local[32] wall-clock gap the MG path's Python sketch pays.
 
     Both paths feed the same exact recount, so the OUTPUT is identical
-    (parametrized pytest + the ``heavy_hitter_users`` oracle)."""
+    (parametrized pytest)."""
     keys = list(keys)
     if not keys:
         raise ValueError("keys must be non-empty")

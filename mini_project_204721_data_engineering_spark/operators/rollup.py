@@ -26,9 +26,6 @@ __all__ = [
     "rollup_histogram",
     "reaggregate_histogram",
     "estimate_percentile",
-    "rollup_countmin",
-    "reaggregate_countmin",
-    "estimate_item_count",
 ]
 
 #: measure columns produced at every grain — algebraic, so any coarser
@@ -187,118 +184,4 @@ def estimate_percentile(
             F.col("bin") <= F.lit(n_bins),
             F.lit(lo) + F.col("bin") * F.lit(width),
         ).alias(f"p{int(p * 100)}_est"),
-    )
-
-
-def rollup_countmin(
-    df: DataFrame,
-    ts_col: str,
-    item_col: str,
-    keys: Sequence[str],
-    grain: str,
-    depth: int = 4,
-    width: int = 256,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """Count-min-sketch rollup: per bucket/key, a ``depth × width``
-    counter table over ``item_col`` — the mergeable form of "how often
-    did item X occur", the third sketch of the rollup family (HLL =
-    distinct, histogram = quantiles, count-min = per-item frequency).
-
-    Per input row, ``depth`` (row, bucket) cells increment — built as
-    one explode + one map-side-combinable groupBy; the sketch for a
-    group is ``depth·width`` longs regardless of item cardinality, so a
-    100 TB store can serve "play count of THIS item that month" from
-    daily sketches without a per-item rollup.  Stored long-form
-    ``(bucket, keys…, cm_row, cm_bucket, cnt)`` — only touched cells
-    materialize (≤ depth·distinct-items per group), and coarsening is a
-    plain additive groupBy.
-
-    ``hash_fn="xxhash64"`` (default): numeric buckets mod ``width`` —
-    the cheap scale path.  ``hash_fn="md5"``: the bucket is the first
-    ``width``-determining hex chars of ``md5(row|item)`` (``width`` must
-    be a power of 16) — identical sketch semantics and ENGINE-PORTABLE,
-    so the whole build→merge→estimate chain is DuckDB-oracle-checkable
-    (the same md5-vs-xxhash64 split as the MinHash family)."""
-    cells = F.explode(
-        F.array(*[
-            F.struct(F.lit(r).alias("cm_row"), _cm_bucket(item_col, r, width, hash_fn))
-            for r in range(depth)
-        ])
-    ).alias("c")
-    return (
-        df.select(
-            F.date_trunc(grain, F.col(ts_col)).alias("bucket"), *keys, cells
-        )
-        .select("bucket", *keys, "c.cm_row", "c.cm_bucket")
-        .groupBy("bucket", *keys, "cm_row", "cm_bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def _cm_bucket(item_col: str, r: int, width: int, hash_fn: str):
-    """One (row, item) → bucket cell; md5 buckets are hex prefixes so
-    the DuckDB mirror needs no hex→int conversion."""
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(F.col(item_col), F.lit(r)), F.lit(width)).cast(
-            "string"
-        ).alias("cm_bucket")
-    if hash_fn == "md5":
-        import math
-
-        nhex = round(math.log(width, 16))
-        if 16 ** nhex != width:
-            raise ValueError(f"md5 buckets need width = 16^k, got {width}")
-        return F.substring(
-            F.md5(F.concat(F.lit(f"{r}|"), F.col(item_col))), 1, nhex
-        ).alias("cm_bucket")
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-
-def reaggregate_countmin(fine: DataFrame, keys: Sequence[str], grain: str) -> DataFrame:
-    """Coarsen a count-min rollup by summing cells — exactly the sketch
-    of the union (counter addition is the merge operation)."""
-    return fine.groupBy(
-        F.date_trunc(grain, F.col("bucket")).alias("bucket"),
-        *keys,
-        "cm_row",
-        "cm_bucket",
-    ).agg(F.sum("cnt").alias("cnt"))
-
-
-def estimate_item_count(
-    sketch: DataFrame,
-    items: DataFrame,
-    item_col: str,
-    keys: Sequence[str],
-    depth: int = 4,
-    width: int = 256,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """Point-query a count-min rollup for the given items: per
-    (bucket, keys, item), the MIN over the item's ``depth`` cells —
-    the classic one-sided estimate (never under the true count; over by
-    at most ~N/width per row with probability decaying in depth).
-    Items absent from a group estimate 0 via the fill-in for missing
-    cells.  ``items`` is the (small) lookup set — broadcast."""
-    probes = items.select(
-        F.col(item_col).alias("__item"),
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(r).alias("cm_row"), _cm_bucket(item_col, r, width, hash_fn))
-                for r in range(depth)
-            ])
-        ).alias("c"),
-    ).select("__item", "c.cm_row", "c.cm_bucket")
-    # probe every (group × item × cell); a cell absent from the sketch is
-    # a zero counter (coalesce), so wholly-absent items estimate 0 too
-    groups = sketch.select("bucket", *keys).distinct()
-    probe_rows = groups.crossJoin(F.broadcast(probes))
-    joined = probe_rows.join(
-        sketch, ["bucket", *keys, "cm_row", "cm_bucket"], "left"
-    )
-    return (
-        joined.groupBy("bucket", *keys, "__item")
-        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est_count"))
-        .withColumnRenamed("__item", item_col)
     )

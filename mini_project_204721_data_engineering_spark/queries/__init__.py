@@ -26,8 +26,9 @@ _MODULES = [serving, analytics, dashboard, llm_queries, windows, cleaning]
 
 #: the external correctness driver evaluates at most this many queries();
 #: all_queries() is kept exactly at the budget so every entry gets a
-#: driver row, and redundant-variant demos live in all_extra_queries()
-#: (still checked every run by tools/verify_local.py and benchable)
+#: driver row.  all_extra_queries() holds the few served or cleaning
+#: queries outside that contract (serving and cleaning EXTRA_*), which
+#: tools/verify_local.py still checks against their oracles
 DRIVER_QUERY_BUDGET = 50
 
 

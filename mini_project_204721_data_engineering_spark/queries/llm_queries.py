@@ -96,42 +96,6 @@ WHERE n_common * 1.0 / (x.n_sh + y.n_sh - n_common) >= 0.8
 """
 
 
-def ngram_containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric 3-gram containment pairs at 0.8 — catches short docs
-    embedded in longer ones (quotes/boilerplate reposts) that symmetric
-    Jaccard misses; `contained` names the smaller side to drop.  Runs
-    with the hot-shingle cap ACTIVE (same discipline as
-    ngram_jaccard_dups — the guard that keeps the shingle self-join
-    linear-ish at corpus scale), mirrored in the oracle."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import ngram_containment_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_containment_pairs(
-        docs, threshold=0.8, max_shingle_df=JACCARD_MAX_SHINGLE_DF
-    )
-
-
-NGRAM_CONTAINMENT_SQL = f"""
-WITH {_DUCK_SHINGLES},
-hot AS (SELECT shingle FROM sh GROUP BY shingle
-        HAVING count(*) > {JACCARD_MAX_SHINGLE_DF}),
-shc AS (SELECT * FROM sh WHERE shingle NOT IN (SELECT shingle FROM hot)),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY doc_id),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-  FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       n_common * 1.0 / least(x.n_sh, y.n_sh) AS containment,
-       CASE WHEN x.n_sh < y.n_sh THEN doc_a ELSE doc_b END AS contained
-FROM common
-JOIN sizes x ON doc_a = x.doc_id
-JOIN sizes y ON doc_b = y.doc_id
-WHERE n_common * 1.0 / least(x.n_sh, y.n_sh) >= 0.8
-"""
-
-
 def minhash_lsh_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(k=8) + 4-band LSH candidates with estimated similarity.
 
@@ -173,90 +137,10 @@ HAVING sum(CASE WHEN ma.minhash = mb.minhash THEN 1 ELSE 0 END) / 8.0 >= 0.5
 """
 
 
-def lsh_jaccard_verified_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed two-stage near-dup pipeline (EXTRA demo): MinHash-LSH
-    band candidates → exact Jaccard verify at 0.8 — exact-threshold
-    output at candidate-join cost (llm/dedup.py::lsh_jaccard_verified)."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import lsh_jaccard_verified
-
-    docs = load_table(spark, sf_dir, "documents")
-    return lsh_jaccard_verified(
-        docs, k=8, bands=4, threshold=0.8, hash_fn="md5_bigint"
-    )
-
-
-LSH_JACCARD_VERIFIED_SQL = f"""
-WITH {_DUCK_SHINGLES},
-mh AS (
-  SELECT doc_id, seed,
-         min(CAST(concat('0x', substr(md5(seed::VARCHAR || '|' || shingle), 1, 15)) AS BIGINT)) AS minhash
-  FROM sh CROSS JOIN (SELECT * FROM range(8) t(seed))
-  GROUP BY doc_id, seed
-),
-band AS (
-  SELECT doc_id, CAST(seed // 2 AS INT) AS band,
-         string_agg(lpad(seed::VARCHAR, 2, '0') || ':' || minhash::VARCHAR, '|'
-                    ORDER BY lpad(seed::VARCHAR, 2, '0') || ':' || minhash::VARCHAR) AS band_key
-  FROM mh GROUP BY 1, 2
-),
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM band a JOIN band b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-common AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS n_common
-  FROM cands c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       n_common * 1.0 / (x.n_sh + y.n_sh - n_common) AS jaccard
-FROM common
-JOIN sizes x ON doc_a = x.doc_id
-JOIN sizes y ON doc_b = y.doc_id
-WHERE n_common * 1.0 / (x.n_sh + y.n_sh - n_common) >= 0.8
-"""
-
-
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash fingerprint per document ('0'/'1' string)."""
     docs = load_table(spark, sf_dir, "documents")
     return simhash(docs, bits=32)
-
-
-def simhash_hamming_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded Hamming-distance near-dup search over SimHash
-    (llm/dedup.py::simhash_hamming_pairs): pairs within 3 bits of each
-    other found via the pigeonhole band equi-join (4 bands of 8 bits —
-    3 differing bits leave ≥1 band identical).  The oracle brute-forces
-    ALL pairs over the same DuckDB-computed fingerprints, so the value
-    hash proves the banded candidate set is complete."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import (
-        simhash_hamming_pairs,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_hamming_pairs(docs, max_hamming=3, bands=4, bits=32)
-
-
-def _simhash_hamming_duck_sql(bits: int = 32, max_hamming: int = 3) -> str:
-    # reuse the whole fingerprint derivation as a nested CTE (a WITH
-    # inside a CTE body is valid DuckDB), brute-force the pairs on top
-    base = _simhash_duck_sql(bits).strip()
-    return f"""
-WITH fp AS ({base})
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(list_sum(list_transform(range(1, {bits} + 1),
-         i -> CASE WHEN substring(a.simhash, i, 1) <> substring(b.simhash, i, 1)
-                   THEN 1 ELSE 0 END)) AS INT) AS hamming
-FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-WHERE list_sum(list_transform(range(1, {bits} + 1),
-        i -> CASE WHEN substring(a.simhash, i, 1) <> substring(b.simhash, i, 1)
-                  THEN 1 ELSE 0 END)) <= {max_hamming}
-"""
 
 
 def _simhash_duck_sql(bits: int = 32) -> str:
@@ -607,473 +491,6 @@ ORDER BY lang_guess
 """
 
 
-def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition filter (llm/quality.py::repetition_stats):
-    type-token ratio + top-bigram fraction + the boolean verdict, per doc.
-    Per-doc array math shuffles nothing; the bigram mode is one
-    map-side-combinable explode→count→argmax."""
-    from mini_project_204721_data_engineering_spark.llm.quality import repetition_stats
-
-    docs = load_table(spark, sf_dir, "documents")
-    return repetition_stats(docs)
-
-
-TEXT_REPETITION_SQL = r"""
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-  FROM documents
-), base AS (
-  SELECT doc_id,
-         len(toks) AS n_tokens,
-         len(list_distinct(toks)) * 1.0 / len(toks) AS distinct_frac,
-         toks
-  FROM t
-), bg AS (
-  SELECT doc_id, n_tokens, distinct_frac,
-         unnest(list_transform(range(1, greatest(len(toks), 1)),
-                               i -> toks[i] || ' ' || toks[i+1])) AS bigram
-  FROM base
-), c AS (
-  SELECT doc_id, n_tokens, distinct_frac, bigram, count(*) AS cnt
-  FROM bg GROUP BY ALL
-), r AS (
-  SELECT *,
-         row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, bigram DESC) AS rn,
-         sum(cnt) OVER (PARTITION BY doc_id) AS n_bigrams
-  FROM c
-)
-SELECT doc_id,
-       CAST(n_tokens AS INT) AS n_tokens,
-       round(distinct_frac * 10000.0) / 10000.0 AS distinct_frac,
-       bigram AS top_bigram,
-       CAST(cnt AS BIGINT) AS top_bigram_n,
-       cnt * 1.0 / n_bigrams AS top_bigram_frac,
-       (cnt * 1.0 / n_bigrams > 0.18 OR distinct_frac < 0.2) AS repetitive
-FROM r WHERE rn = 1
-"""
-
-
-def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub (llm/text.py::pii_redact): the corpus has no organic PII,
-    so the query injects deterministic emails/phones keyed off doc_id,
-    then proves the redaction finds and removes exactly those — counts
-    plus the redacted tail for every affected doc.  Pure codegen regexp;
-    the clean-doc majority short-circuits to zero matches."""
-    from mini_project_204721_data_engineering_spark.llm.text import (
-        EMAIL_PATTERN,
-        PHONE_PATTERN,
-        pii_count,
-        pii_redact,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    injected = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(
-                    F.lit(" contact user"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@example.com"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0, F.lit(" call 555-867-5309")).otherwise(
-                F.lit("")
-            ),
-        ).alias("text"),
-    )
-    per = injected.select(
-        "doc_id",
-        pii_count(F.col("text"), EMAIL_PATTERN).alias("n_emails"),
-        pii_count(F.col("text"), PHONE_PATTERN).alias("n_phones"),
-        pii_redact(F.col("text")).alias("redacted"),
-    )
-    return per.filter((F.col("n_emails") > 0) | (F.col("n_phones") > 0)).select(
-        "doc_id",
-        "n_emails",
-        "n_phones",
-        F.expr("right(redacted, 30)").alias("redacted_tail"),
-    )
-
-
-PII_SCRUB_SQL = r"""
-WITH injected AS (
-  SELECT doc_id,
-         text
-           || CASE WHEN doc_id % 7 = 0
-                   THEN ' contact user' || doc_id || '@example.com' ELSE '' END
-           || CASE WHEN doc_id % 11 = 0 THEN ' call 555-867-5309' ELSE '' END AS text
-  FROM documents
-), per AS (
-  SELECT doc_id,
-         len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-         len(regexp_extract_all(text, '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b')) AS n_phones,
-         regexp_replace(
-           regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-           '\b\d{3}[-. ]\d{3}[-. ]\d{4}\b', '<PHONE>', 'g') AS redacted
-  FROM injected
-)
-SELECT doc_id,
-       CAST(n_emails AS INT) AS n_emails,
-       CAST(n_phones AS INT) AS n_phones,
-       right(redacted, 30) AS redacted_tail
-FROM per
-WHERE n_emails > 0 OR n_phones > 0
-"""
-
-
-#: benchmark membership for the decontamination demo: ~9% of docs —
-#: synthetic stand-in for a held-out eval suite
-DECONTAM_BENCH_MOD = 11
-DECONTAM_NGRAM = 8
-
-
-def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (llm/quality.py::contaminated_docs):
-    corpus docs sharing any 8-token gram with the benchmark subset
-    (doc_id % 11 == 0).  The benchmark gram set is broadcast — the
-    GPT-3-style eval-leakage sweep with no corpus-side shuffle before
-    the per-doc hit count."""
-    from mini_project_204721_data_engineering_spark.llm.quality import contaminated_docs
-
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % DECONTAM_BENCH_MOD == 0)
-    corpus = docs.filter(F.col("doc_id") % DECONTAM_BENCH_MOD != 0)
-    return contaminated_docs(corpus, bench, n=DECONTAM_NGRAM)
-
-
-_DECONTAM_PARTS = " || ' ' || ".join(f"toks[i+{k}]" for k in range(DECONTAM_NGRAM))
-DECONTAMINATE_SQL = rf"""
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-  FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(range(1, greatest(len(toks) - {DECONTAM_NGRAM - 2}, 1)),
-                               i -> {_DECONTAM_PARTS})) AS g
-  FROM t
-), bench AS (
-  SELECT DISTINCT g FROM sh WHERE doc_id % {DECONTAM_BENCH_MOD} = 0
-)
-SELECT s.doc_id, count(*) AS n_shared_grams
-FROM sh s JOIN bench USING (g)
-WHERE s.doc_id % {DECONTAM_BENCH_MOD} != 0
-GROUP BY s.doc_id
-"""
-
-
-#: training-mix keep rates by language for the sampling demo
-SAMPLE_MIX_RATES = {"en": 1.0, "zh": 0.5, "de": 0.25, "fr": 0.1, "es": 0.05}
-
-
-def corpus_sample_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified corpus sampling
-    (operators/sampling.py::stratified_hash_sample): per-language keep
-    rates via md5-hash thresholds — reproducible on any cluster layout
-    and mirrored verbatim in the oracle (``df.sample`` could never be).
-    Returns the per-language mix actually kept."""
-    from mini_project_204721_data_engineering_spark.llm.text import token_count
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        stratified_hash_sample,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    kept = stratified_hash_sample(docs, key="doc_id", strata="lang", rates=SAMPLE_MIX_RATES)
-    return (
-        kept.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.sum(token_count(F.col("text"))).cast("long").alias("tokens_kept"),
-        )
-        .orderBy("lang")
-    )
-
-
-def _mix_case_sql() -> str:
-    arms = []
-    for lang, rate in sorted(SAMPLE_MIX_RATES.items()):
-        if rate >= 1.0:
-            arms.append(f"WHEN lang = '{lang}' THEN TRUE")
-        else:
-            thr = format(int(rate * 65536), "04x")
-            arms.append(
-                f"WHEN lang = '{lang}' THEN "
-                f"substring(md5('sample|' || doc_id), 1, 4) < '{thr}'"
-            )
-    return "CASE " + " ".join(arms) + " ELSE TRUE END"
-
-
-CORPUS_SAMPLE_MIX_SQL = rf"""
-SELECT lang,
-       count(*) AS n_kept,
-       CAST(sum(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS tokens_kept
-FROM documents
-WHERE {_mix_case_sql()}
-GROUP BY lang
-ORDER BY lang
-"""
-
-
-def corpus_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full training-corpus assembly pipeline in ONE composed plan —
-    quality gate → exact dedup (keep lowest doc_id) → benchmark
-    decontamination (drop docs sharing an 8-gram with the held-out set)
-    → stratified mix sampling → per-language corpus stats.
-
-    Stage order is the scale order: cheap per-row gates first, the
-    map-side-combining dedup before gram explosion, the broadcast
-    decontamination join on deduped survivors only, and the shuffle-free
-    sampling filter last.  Composes corpus_prep + decontaminate +
-    corpus_sample_mix; every stage is mirrored in the oracle."""
-    from mini_project_204721_data_engineering_spark.llm.quality import contaminated_docs
-    from mini_project_204721_data_engineering_spark.llm.text import quality_score, token_count
-    from mini_project_204721_data_engineering_spark.operators.dedup import dedup_keep_first_agg
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        stratified_hash_sample,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % DECONTAM_BENCH_MOD == 0)
-    gated = (
-        docs.filter(F.col("doc_id") % DECONTAM_BENCH_MOD != 0)
-        .filter(quality_score(F.col("text")) >= 0.5)
-        .select(
-            "doc_id",
-            "lang",
-            "text",
-            F.md5("text").alias("content_hash"),
-            token_count(F.col("text")).alias("n_tokens"),
-        )
-    )
-    kept = dedup_keep_first_agg(gated, ["content_hash"], ["doc_id"])
-    contam = contaminated_docs(kept, bench, n=DECONTAM_NGRAM).select("doc_id")
-    clean = kept.join(contam, "doc_id", "left_anti")
-    sampled = stratified_hash_sample(
-        clean, key="doc_id", strata="lang", rates=SAMPLE_MIX_RATES
-    )
-    return (
-        sampled.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("total_tokens"),
-        )
-        .orderBy("lang")
-    )
-
-
-CORPUS_ASSEMBLY_SQL = rf"""
-WITH t AS (
-  SELECT doc_id, text, lang, md5(text) AS content_hash,
-         regexp_split_to_array(trim(text), '\s+') AS toks
-  FROM documents
-), m AS (
-  SELECT doc_id, text, lang, content_hash, toks,
-         len(toks) AS n_tokens,
-         least(1.0, len(toks) / 100.0) * 0.5
-           + (1.0 - len(list_filter(toks, x -> x IN ({_SW}))) * 1.0 / len(toks)) * 0.5 AS q
-  FROM t
-), gated AS (
-  SELECT *,
-         row_number() OVER (PARTITION BY content_hash ORDER BY doc_id) AS rn
-  FROM m WHERE doc_id % {DECONTAM_BENCH_MOD} != 0 AND q >= 0.5
-), kept AS (
-  SELECT * FROM gated WHERE rn = 1
-), corpus_grams AS (
-  SELECT DISTINCT doc_id,
-         unnest(list_transform(range(1, greatest(len(toks) - {DECONTAM_NGRAM - 2}, 1)),
-                               i -> {_DECONTAM_PARTS})) AS g
-  FROM kept
-), bench_grams AS (
-  SELECT DISTINCT
-         unnest(list_transform(range(1, greatest(len(toks) - {DECONTAM_NGRAM - 2}, 1)),
-                               i -> {_DECONTAM_PARTS})) AS g
-  FROM t WHERE doc_id % {DECONTAM_BENCH_MOD} = 0
-), contam AS (
-  SELECT DISTINCT c.doc_id FROM corpus_grams c JOIN bench_grams USING (g)
-), sampled AS (
-  SELECT * FROM kept
-  WHERE doc_id NOT IN (SELECT doc_id FROM contam)
-    AND {_mix_case_sql()}
-)
-SELECT lang, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-FROM sampled GROUP BY lang ORDER BY lang
-"""
-
-
-#: context-window size for the sequence-packing demo
-PACK_WINDOW_TOKENS = 2048
-
-
-def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing (llm/quality.py::pack_sequences): next-fit
-    assignment of docs to fixed-token training bins, packed per language
-    with a keyed window prefix-sum — never a global sort."""
-    from mini_project_204721_data_engineering_spark.llm.quality import pack_sequences
-
-    docs = load_table(spark, sf_dir, "documents")
-    return pack_sequences(docs, PACK_WINDOW_TOKENS, strata="lang")
-
-
-SEQUENCE_PACKING_SQL = rf"""
-WITH t AS (
-  SELECT lang, doc_id,
-         len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens
-  FROM documents
-), c AS (
-  SELECT lang, doc_id, n_tokens,
-         sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                             ROWS UNBOUNDED PRECEDING) AS cum
-  FROM t
-)
-SELECT lang, doc_id,
-       CAST(n_tokens AS INT) AS n_tokens,
-       CAST((cum - n_tokens) // {PACK_WINDOW_TOKENS} AS BIGINT) AS bin_id,
-       CAST((cum - n_tokens) % {PACK_WINDOW_TOKENS} AS BIGINT) AS bin_offset
-FROM c
-"""
-
-
-def corpus_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test assignment
-    (operators/sampling.py::assign_split): per-(split, lang) doc and
-    token counts.  Keyed hashing means new docs never move old docs
-    between splits — the no-leakage property a growing corpus needs."""
-    from mini_project_204721_data_engineering_spark.llm.text import token_count
-    from mini_project_204721_data_engineering_spark.operators.sampling import assign_split
-
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        assign_split(docs, key="doc_id")
-        .groupBy("split", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(token_count(F.col("text"))).cast("long").alias("n_tokens"),
-        )
-        .orderBy("split", "lang")
-    )
-
-
-#: thresholds: cum weights 0.9, 0.95 → hex(0.9·65536)=e666, hex(0.95·65536)=f333
-CORPUS_SPLITS_SQL = r"""
-WITH assigned AS (
-  SELECT lang,
-         len(regexp_split_to_array(trim(text), '\s+')) AS n_tokens,
-         CASE WHEN substring(md5('split|' || doc_id), 1, 4) < 'e666' THEN 'train'
-              WHEN substring(md5('split|' || doc_id), 1, 4) < 'f333' THEN 'val'
-              ELSE 'test' END AS split
-  FROM documents
-)
-SELECT split, lang, count(*) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-FROM assigned GROUP BY split, lang ORDER BY split, lang
-"""
-
-
-def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary induction (llm/quality.py::build_vocab): corpus word
-    counts → top-50 tokens with deterministic contiguous ids."""
-    from mini_project_204721_data_engineering_spark.llm.quality import build_vocab
-
-    docs = load_table(spark, sf_dir, "documents")
-    return build_vocab(docs, top_n=50)
-
-
-VOCAB_TOPK_SQL = r"""
-WITH t AS (
-  SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-  FROM documents
-), c AS (
-  SELECT token, count(*) AS n_occurrences FROM t GROUP BY token
-), r AS (
-  SELECT token, n_occurrences,
-         row_number() OVER (ORDER BY n_occurrences DESC, token ASC) - 1 AS token_id
-  FROM c
-)
-SELECT token, CAST(n_occurrences AS BIGINT) AS n_occurrences,
-       CAST(token_id AS INT) AS token_id
-FROM r WHERE token_id < 50
-"""
-
-
-def oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-vocabulary rate per language against the induced top-10
-    vocabulary (llm/quality.py::build_vocab): the coverage metric that
-    decides whether a tokenizer's vocab is big enough.  The vocab side
-    is vocabulary-sized → broadcast; the corpus explode joins map-side.
-    Single-division ratio needs no rounding (identical IEEE both
-    engines)."""
-    from mini_project_204721_data_engineering_spark.llm.quality import build_vocab
-    from mini_project_204721_data_engineering_spark.llm.text import tokens
-
-    docs = load_table(spark, sf_dir, "documents")
-    vocab = build_vocab(docs, top_n=10).select("token")
-    tok = docs.select("lang", F.explode(tokens(F.col("text"))).alias("token"))
-    joined = tok.join(
-        F.broadcast(vocab.withColumn("in_vocab", F.lit(1))), "token", "left"
-    )
-    return (
-        joined.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            (1.0 - F.sum(F.coalesce(F.col("in_vocab"), F.lit(0))) / F.count(F.lit(1))).alias(
-                "oov_frac"
-            ),
-        )
-        .orderBy("lang")
-    )
-
-
-OOV_RATE_SQL = r"""
-WITH t AS (
-  SELECT lang, unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-  FROM documents
-), c AS (
-  SELECT token, count(*) AS n FROM t GROUP BY token
-), vocab AS (
-  SELECT token FROM (
-    SELECT token, row_number() OVER (ORDER BY n DESC, token ASC) - 1 AS token_id
-    FROM c
-  ) WHERE token_id < 10
-)
-SELECT lang,
-       count(*) AS n_tokens,
-       1.0 - sum(CASE WHEN v.token IS NOT NULL THEN 1 ELSE 0 END) * 1.0 / count(*) AS oov_frac
-FROM t LEFT JOIN vocab v USING (token)
-GROUP BY lang ORDER BY lang
-"""
-
-
-def text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping token-window chunking (llm/quality.py::chunk_text):
-    64-token windows, 16-token overlap — per-doc array math, zero
-    shuffle.  Chunk text hashed so the oracle value-checks content
-    without hauling strings through the compare."""
-    from mini_project_204721_data_engineering_spark.llm.quality import chunk_text
-
-    docs = load_table(spark, sf_dir, "documents")
-    return chunk_text(docs, window=64, overlap=16).select(
-        "doc_id", "chunk_idx", "n_tokens", F.md5("chunk_text").alias("chunk_hash")
-    )
-
-
-TEXT_CHUNKS_SQL = r"""
-WITH t AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
-  FROM documents
-), s AS (
-  SELECT doc_id, toks, unnest(range(0, greatest(len(toks) - 16, 1), 48)) AS start
-  FROM t
-)
-SELECT doc_id,
-       CAST(start // 48 AS INT) AS chunk_idx,
-       CAST(len(toks[start + 1 : start + 64]) AS INT) AS n_tokens,
-       md5(array_to_string(toks[start + 1 : start + 64], ' ')) AS chunk_hash
-FROM s
-"""
-
-
 QUERIES = {
     "dedup_exact": dedup_exact,
     "corpus_prep": corpus_prep,
@@ -1088,1350 +505,6 @@ QUERIES = {
     "multimodal_meta": multimodal_meta,
 }
 
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-CLUSTER resolution (llm/dedup.py::dup_clusters):
-    MinHash-LSH near-dup pairs → connected components → (doc_id,
-    cluster_id), cluster_id = min doc id of the component.  Pair lists
-    alone over-delete transitive chains; this is the step that makes
-    corpus dedup keep exactly one representative per cluster.  The
-    oracle recomputes the components with a recursive CTE over the
-    identical pair set."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, k=8, bands=4, threshold=0.5)
-    from mini_project_204721_data_engineering_spark.llm.dedup import dup_clusters
-
-    return dup_clusters(pairs)
-
-
-DEDUP_CLUSTERS_SQL = f"""
-WITH RECURSIVE {_DUCK_SHINGLES},
-mh AS (
-  SELECT doc_id, seed, min(md5(seed::VARCHAR || '|' || shingle)) AS minhash
-  FROM sh CROSS JOIN (SELECT * FROM range(8) t(seed))
-  GROUP BY doc_id, seed
-),
-band AS (
-  SELECT doc_id, CAST(seed // 2 AS INT) AS band,
-         string_agg(lpad(seed::VARCHAR, 2, '0') || ':' || minhash, '|'
-                    ORDER BY lpad(seed::VARCHAR, 2, '0') || ':' || minhash) AS band_key
-  FROM mh GROUP BY 1, 2
-),
-cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM band a JOIN band b
-    ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM cands
-  JOIN mh ma ON ma.doc_id = doc_a
-  JOIN mh mb ON mb.doc_id = doc_b AND mb.seed = ma.seed
-  GROUP BY doc_a, doc_b
-  HAVING sum(CASE WHEN ma.minhash = mb.minhash THEN 1 ELSE 0 END) / 8.0 >= 0.5
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(id, root) AS (
-  SELECT DISTINCT a, a FROM edges
-  UNION
-  SELECT e.b, r.root FROM reach r JOIN edges e ON e.a = r.id
-)
-SELECT id AS doc_id, CAST(min(root) AS BIGINT) AS cluster_id
-FROM reach GROUP BY id
-"""
-
-
-def duplicate_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring duplication spans (llm/dedup.py::duplicate_spans,
-    the Lee-et-al. training-data primitive): per doc, merged token spans
-    whose 8-gram repeats anywhere in the corpus — the spans a trim pass
-    would cut.  Oracle mirrors tokenize → positional grams → hot grams →
-    island merge exactly."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import duplicate_spans
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = duplicate_spans(docs, k=8)
-    return out.select(
-        "doc_id",
-        F.col("span_start").cast("long").alias("span_start"),
-        F.col("span_end").cast("long").alias("span_end"),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-    )
-
-
-DUPLICATE_SPANS_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents
-),
-g AS (
-  SELECT doc_id,
-         unnest(range(1, greatest(len(t) - 6, 1))) - 1 AS pos,
-         unnest(list_transform(range(1, greatest(len(t) - 6, 1)),
-                i -> array_to_string(t[i:i+7], ' '))) AS gram
-  FROM toks WHERE len(t) >= 8
-),
-hot AS (SELECT gram FROM g GROUP BY gram HAVING count(*) > 1),
-m AS (SELECT g.doc_id, g.pos FROM g JOIN hot USING (gram)),
-isl AS (
-  SELECT doc_id, pos,
-         CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 8
-              THEN 1 ELSE 0 END AS brk
-  FROM m WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-grp AS (
-  SELECT doc_id, pos,
-         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS UNBOUNDED PRECEDING) AS island
-  FROM isl
-)
-SELECT doc_id,
-       CAST(min(pos) AS BIGINT) AS span_start,
-       CAST(max(pos) + 8 AS BIGINT) AS span_end,
-       CAST(max(pos) + 8 - min(pos) AS BIGINT) AS n_tokens
-FROM grp GROUP BY doc_id, island
-"""
-
-
-def source_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-source exemplar sampling
-    (operators/sampling.py::exemplars_per_group): 3
-    random-but-reproducible docs per source for inspection/QA — stable
-    under reruns, repartitioning, and engine (the oracle mirrors the
-    keyed-hash ranking verbatim)."""
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        exemplars_per_group,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return exemplars_per_group(docs, "source", "doc_id", k=3).select(
-        "source", "exemplar_rank", "doc_id", "lang", "n_chars"
-    )
-
-
-SOURCE_EXEMPLARS_SQL = """
-WITH ranked AS (
-  SELECT source, doc_id, lang, n_chars,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY md5('exemplar|' || CAST(doc_id AS VARCHAR)), doc_id
-         ) AS exemplar_rank
-  FROM documents
-)
-SELECT source, CAST(exemplar_rank AS INT) AS exemplar_rank, doc_id, lang, n_chars
-FROM ranked WHERE exemplar_rank <= 3
-"""
-
-
-def trim_duplicate_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The APPLY side of exact-substring dedup oracle-checked end-to-end
-    (llm/dedup.py::trim_duplicate_spans): every doc that has a duplicate
-    span comes back with the span tokens removed and the text
-    reassembled — the whole spans→trim chain mirrored in DuckDB (nested
-    list_filter lambdas), not just the span positions."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import (
-        duplicate_spans,
-        trim_duplicate_spans,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    spans = duplicate_spans(docs, k=8)
-    trimmed = trim_duplicate_spans(docs, spans)
-    return (
-        trimmed.join(spans.select("doc_id").distinct(), "doc_id")
-        .select(
-            "doc_id",
-            F.col("text").alias("trimmed_text"),
-            F.when(F.length("text") == 0, F.lit(0))
-            .otherwise(F.size(F.split("text", " ")))
-            .cast("long")
-            .alias("n_kept_tokens"),
-        )
-    )
-
-
-TRIM_DUPLICATE_SPANS_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents
-),
-g AS (
-  SELECT doc_id,
-         unnest(range(1, greatest(len(t) - 6, 1))) - 1 AS pos,
-         unnest(list_transform(range(1, greatest(len(t) - 6, 1)),
-                i -> array_to_string(t[i:i+7], ' '))) AS gram
-  FROM toks WHERE len(t) >= 8
-),
-hot AS (SELECT gram FROM g GROUP BY gram HAVING count(*) > 1),
-m AS (SELECT g.doc_id, g.pos FROM g JOIN hot USING (gram)),
-isl AS (
-  SELECT doc_id, pos,
-         CASE WHEN lag(pos) OVER w IS NULL OR pos - lag(pos) OVER w > 8
-              THEN 1 ELSE 0 END AS brk
-  FROM m WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-grp AS (
-  SELECT doc_id, pos,
-         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS UNBOUNDED PRECEDING) AS island
-  FROM isl
-),
-spans AS (
-  SELECT doc_id, min(pos) AS s, max(pos) + 8 AS e FROM grp GROUP BY doc_id, island
-),
-ds AS (SELECT doc_id, list([s, e]) AS sp FROM spans GROUP BY doc_id)
-SELECT t.doc_id,
-       coalesce(array_to_string(
-         list_filter(t.t, (tok, i) ->
-           len(list_filter(ds.sp, p -> (i - 1) >= p[1] AND (i - 1) < p[2])) = 0),
-         ' '), '') AS trimmed_text,
-       CAST(len(list_filter(t.t, (tok, i) ->
-           len(list_filter(ds.sp, p -> (i - 1) >= p[1] AND (i - 1) < p[2])) = 0)) AS BIGINT) AS n_kept_tokens
-FROM toks t JOIN ds USING (doc_id)
-"""
-
-
-def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup semantic dedup (cluster → within-cell cosine → min-id
-    keep): the survivors of the embeddings table at threshold 0.40 over
-    8 seeded cells.  Whole chain — quantizer, assignment, pairwise
-    prune — is deterministic, so DuckDB verifies it value-for-value."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import semantic_dedup
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return semantic_dedup(emb, threshold=0.40, ncells=8).select("vec_id", "cell")
-
-
-SEMANTIC_DEDUP_KEEP_SQL = """
-WITH corpus AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), centroids AS (
-  SELECT vec_id AS cell, v AS cv FROM corpus ORDER BY vec_id LIMIT 8
-), assigned AS (
-  SELECT vec_id, cell FROM (
-    SELECT c.vec_id, ct.cell,
-           row_number() OVER (
-             PARTITION BY c.vec_id
-             ORDER BY round(list_cosine_similarity(c.v, ct.cv), 6) DESC,
-                      ct.cell ASC) AS rn
-    FROM corpus c CROSS JOIN centroids ct
-  ) WHERE rn = 1
-), dropped AS (
-  SELECT DISTINCT a.vec_id
-  FROM assigned a
-  JOIN assigned b ON a.cell = b.cell AND b.vec_id < a.vec_id
-  JOIN corpus x ON x.vec_id = a.vec_id
-  JOIN corpus y ON y.vec_id = b.vec_id
-  WHERE round(list_cosine_similarity(x.v, y.v), 6) >= 0.40
-)
-SELECT vec_id, cell FROM assigned
-WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
-"""
-
-
-def unigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style in-domain quality scoring: add-alpha unigram LM
-    trained on the lang='en' slice, every document scored by mean token
-    log-probability (OOV tokens get the smoothed floor).  The LM table
-    is vocab-sized → broadcast; one corpus-side shuffle (per-doc agg)."""
-    from mini_project_204721_data_engineering_spark.llm.quality import doc_logprob, unigram_lm
-
-    docs = load_table(spark, sf_dir, "documents")
-    lm, floor = unigram_lm(docs.filter(F.col("lang") == "en"))
-    return doc_logprob(docs, lm, floor).select(
-        "doc_id", "n_tokens", F.round("mean_logp", 6).alias("mean_logp")
-    )
-
-
-UNIGRAM_QUALITY_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS token
-  FROM documents
-), ref AS (
-  SELECT t.token, CAST(count(*) AS DOUBLE) AS c
-  FROM toks t JOIN documents d USING (doc_id)
-  WHERE d.lang = 'en' AND t.token <> ''
-  GROUP BY t.token
-), tot AS (
-  SELECT sum(c) AS total, CAST(count(*) AS DOUBLE) AS vocab FROM ref
-), lm AS (
-  SELECT token, ln((c + 0.5) / (total + 0.5 * (vocab + 1.0))) AS logp
-  FROM ref CROSS JOIN tot
-), floor_v AS (
-  SELECT ln(0.5 / (total + 0.5 * (vocab + 1.0))) AS floor_lp FROM tot
-), scored AS (
-  SELECT t.doc_id, coalesce(lm.logp, f.floor_lp) AS logp
-  FROM toks t LEFT JOIN lm USING (token) CROSS JOIN floor_v f
-  WHERE t.token <> ''
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       round(sum(logp) / count(*), 6) AS mean_logp
-FROM scored GROUP BY doc_id
-"""
-
-
-def documents_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass table profiling (ANALYZE shape) of the documents table:
-    per-column nulls / exact distinct / min / max from a single scan
-    and a single aggregate row, unpivoted with stack.  Exact-distinct
-    form so DuckDB verifies every statistic (the 100 TB default swaps
-    in approx_count_distinct — operators/profile.py)."""
-    from mini_project_204721_data_engineering_spark.operators.profile import profile_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    return profile_table(docs, exact_distinct=True)
-
-
-DOCUMENTS_PROFILE_SQL = """
-SELECT 'doc_id' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(*) - count(doc_id) AS BIGINT) AS n_nulls,
-       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_distinct,
-       CAST(min(doc_id) AS VARCHAR) AS min_val, CAST(max(doc_id) AS VARCHAR) AS max_val
-FROM documents
-UNION ALL
-SELECT 'text', CAST(count(*) AS BIGINT), CAST(count(*) - count(text) AS BIGINT),
-       CAST(count(DISTINCT text) AS BIGINT), CAST(min(text) AS VARCHAR), CAST(max(text) AS VARCHAR)
-FROM documents
-UNION ALL
-SELECT 'lang', CAST(count(*) AS BIGINT), CAST(count(*) - count(lang) AS BIGINT),
-       CAST(count(DISTINCT lang) AS BIGINT), CAST(min(lang) AS VARCHAR), CAST(max(lang) AS VARCHAR)
-FROM documents
-UNION ALL
-SELECT 'source', CAST(count(*) AS BIGINT), CAST(count(*) - count(source) AS BIGINT),
-       CAST(count(DISTINCT source) AS BIGINT), CAST(min(source) AS VARCHAR), CAST(max(source) AS VARCHAR)
-FROM documents
-UNION ALL
-SELECT 'n_chars', CAST(count(*) AS BIGINT), CAST(count(*) - count(n_chars) AS BIGINT),
-       CAST(count(DISTINCT n_chars) AS BIGINT), CAST(min(n_chars) AS VARCHAR), CAST(max(n_chars) AS VARCHAR)
-FROM documents
-"""
-
-
-def semantic_dedup_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic dedup over the two-level (IMI-style) quantizer — the
-    linear assignment path: 4 super cells, 4 sub-centroids each, both
-    routing steps deterministic (seeded + min-id sub-seeds), so DuckDB
-    mirrors super argmax → sub argmax → within-cell prune exactly."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import semantic_dedup
-    from mini_project_204721_data_engineering_spark.llm.similarity import (
-        assign_cells_two_level,
-        seeded_two_level,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    supers, subs = seeded_two_level(emb, k1=4, k2=4)
-    # r16 (guide §2.4/§3.3): semantic_dedup references its cells THREE
-    # times (pair a-side, b-side, survivor anti-join spine) and Spark
-    # re-planned the whole two-level quantizer chain per reference (34
-    # Exchange sections / 12 scans).  localCheckpoint materializes the
-    # assignment once and truncates the lineage; every consumer reads
-    # the (id, embedding, cell) result.  Downstream work repartitions
-    # immediately on its own join keys (cell / vec_id), so no
-    # parallelism floor is needed on the checkpoint itself.
-    cells = assign_cells_two_level(emb, supers, subs).localCheckpoint(eager=False)
-    return semantic_dedup(emb, threshold=0.40, cells_df=cells).select("vec_id", "cell")
-
-
-SEMANTIC_DEDUP_TWO_LEVEL_SQL = """
-WITH corpus AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), supers AS (
-  SELECT vec_id AS cell, v AS cv FROM corpus ORDER BY vec_id LIMIT 4
-), routed AS (
-  SELECT vec_id, cell AS super FROM (
-    SELECT c.vec_id, s.cell,
-           row_number() OVER (
-             PARTITION BY c.vec_id
-             ORDER BY round(list_cosine_similarity(c.v, s.cv), 6) DESC,
-                      s.cell ASC) AS rn
-    FROM corpus c CROSS JOIN supers s
-  ) WHERE rn = 1
-), subs AS (
-  SELECT super AS super_cell, vec_id AS cell, v AS cv FROM (
-    SELECT r.super, r.vec_id, c.v,
-           row_number() OVER (PARTITION BY r.super ORDER BY r.vec_id ASC) AS rn
-    FROM routed r JOIN corpus c USING (vec_id)
-  ) WHERE rn <= 4
-), assigned AS (
-  SELECT vec_id, cell FROM (
-    SELECT r.vec_id, sb.cell,
-           row_number() OVER (
-             PARTITION BY r.vec_id
-             ORDER BY round(list_cosine_similarity(c.v, sb.cv), 6) DESC,
-                      sb.cell ASC) AS rn
-    FROM routed r
-    JOIN corpus c USING (vec_id)
-    JOIN subs sb ON sb.super_cell = r.super
-  ) WHERE rn = 1
-), dropped AS (
-  SELECT DISTINCT a.vec_id
-  FROM assigned a
-  JOIN assigned b ON a.cell = b.cell AND b.vec_id < a.vec_id
-  JOIN corpus x ON x.vec_id = a.vec_id
-  JOIN corpus y ON y.vec_id = b.vec_id
-  WHERE round(list_cosine_similarity(x.v, y.v), 6) >= 0.40
-)
-SELECT vec_id, cell FROM assigned
-WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
-"""
-
-
-def length_outlier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source token-length z-score gate at 3σ (llm/quality.py::
-    length_outliers) — one groups-sized stats aggregate broadcast back,
-    no corpus window.  z rounded to 6 dp for the cross-engine compare;
-    the verdict uses the raw value."""
-    from mini_project_204721_data_engineering_spark.llm.quality import length_outliers
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = length_outliers(docs, group_col="source", z=3.0)
-    return out.select(
-        "doc_id", "source", "n_tokens",
-        F.round("z_score", 6).alias("z_score"), "is_outlier",
-    )
-
-
-LENGTH_OUTLIERS_SQL = r"""
-WITH base AS (
-  SELECT doc_id, source,
-         CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS n_tokens
-  FROM documents
-), stats AS (
-  SELECT source, avg(n_tokens) AS mu, stddev_pop(n_tokens) AS sigma
-  FROM base GROUP BY source
-)
-SELECT doc_id, b.source, n_tokens,
-       round(CASE WHEN sigma = 0 THEN 0.0 ELSE (n_tokens - mu) / sigma END, 6) AS z_score,
-       (CASE WHEN sigma = 0 THEN 0.0 ELSE abs((n_tokens - mu) / sigma) END) > 3.0 AS is_outlier
-FROM base b JOIN stats USING (source)
-"""
-
-
-def eval_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-k deterministic sample (hash top-k): the 40 docs with the
-    smallest keyed md5 — fixed-budget selection (human-eval picks) that
-    is layout-independent and nested in k; plans as a distributed top-k
-    (operators/sampling.py::hash_topk_sample)."""
-    from mini_project_204721_data_engineering_spark.operators.sampling import hash_topk_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return hash_topk_sample(docs.select("doc_id", "lang", "source"), "doc_id", 40)
-
-
-EVAL_SAMPLE_EXACT_SQL = """
-SELECT doc_id, lang, source FROM documents
-ORDER BY md5('sample|' || CAST(doc_id AS VARCHAR)) ASC, doc_id ASC
-LIMIT 40
-"""
-
-
-def corpus_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source corpus health report — the daily operational rollup a
-    data platform serves: doc/token volume, exact-duplicate exposure
-    (docs whose text recurs within the source, via a keyed window over
-    (source, content_hash)), mean quality score, and language breadth.
-    One scan, one keyed window, one groups-sized aggregate."""
-    from pyspark.sql.window import Window
-
-    from mini_project_204721_data_engineering_spark.llm.text import quality_score, token_count
-
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source", F.md5("text"))
-    per_doc = docs.select(
-        "source",
-        "lang",
-        token_count(F.col("text")).alias("nt"),
-        quality_score(F.col("text")).alias("q"),
-        F.count(F.lit(1)).over(w).alias("dup_n"),
-    )
-    return per_doc.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("nt").cast("long").alias("total_tokens"),
-        F.sum((F.col("dup_n") > 1).cast("long")).alias("n_dup_docs"),
-        F.round(F.avg("q"), 6).alias("avg_quality"),
-        F.count_distinct("lang").alias("n_langs"),
-    )
-
-
-_SW_HEALTH = ", ".join(f"'{w}'" for w in (
-    "the", "a", "of", "to", "and", "in", "is", "on", "for", "with"
-))
-
-CORPUS_HEALTH_SQL = rf"""
-WITH per_doc AS (
-  SELECT source, lang,
-         len(regexp_split_to_array(trim(text), '\s+')) AS nt,
-         least(1.0, len(regexp_split_to_array(trim(text), '\s+')) / 100.0) * 0.5
-           + (1.0 - len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                                    x -> x IN ({_SW_HEALTH}))) * 1.0
-                  / len(regexp_split_to_array(trim(text), '\s+'))) * 0.5 AS q,
-         count(*) OVER (PARTITION BY source, md5(text)) AS dup_n
-  FROM documents
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(nt) AS BIGINT) AS total_tokens,
-       CAST(sum(CASE WHEN dup_n > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_docs,
-       round(avg(q), 6) AS avg_quality,
-       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-FROM per_doc GROUP BY source
-"""
-
-
-def countmin_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full count-min chain oracle-checked: daily sketches (md5
-    hex-prefix buckets — the engine-portable variant), merged to
-    monthly by cell addition, point-estimated for every event type.
-    DuckDB rebuilds the identical sketch, so build, merge AND the
-    min-over-rows estimate are verified value-for-value
-    (operators/rollup.py::rollup_countmin family)."""
-    from mini_project_204721_data_engineering_spark.operators.rollup import (
-        estimate_item_count,
-        reaggregate_countmin,
-        rollup_countmin,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = rollup_countmin(ev, "ts", "event_type", [], "day", hash_fn="md5")
-    monthly = reaggregate_countmin(daily, [], "month")
-    items = ev.select("event_type").distinct()
-    return estimate_item_count(monthly, items, "event_type", [], hash_fn="md5")
-
-
-COUNTMIN_EVENT_COUNTS_SQL = """
-WITH rows4 AS (SELECT unnest(range(4)) AS r),
-cells AS (
-  SELECT date_trunc('day', ts) AS bucket, r,
-         substring(md5(r || '|' || event_type), 1, 2) AS cm_bucket
-  FROM events CROSS JOIN rows4
-), daily AS (
-  SELECT bucket, r AS cm_row, cm_bucket, count(*) AS cnt
-  FROM cells GROUP BY 1, 2, 3
-), monthly AS (
-  SELECT date_trunc('month', bucket) AS bucket, cm_row, cm_bucket,
-         sum(cnt) AS cnt
-  FROM daily GROUP BY 1, 2, 3
-), items AS (SELECT DISTINCT event_type FROM events),
-groups AS (SELECT DISTINCT bucket FROM monthly),
-probes AS (
-  SELECT g.bucket, i.event_type, r AS cm_row,
-         substring(md5(r || '|' || i.event_type), 1, 2) AS cm_bucket
-  FROM groups g CROSS JOIN items i CROSS JOIN rows4
-)
-SELECT CAST(p.bucket AS TIMESTAMP) AS bucket, p.event_type,
-       CAST(min(coalesce(m.cnt, 0)) AS BIGINT) AS est_count
-FROM probes p
-LEFT JOIN monthly m USING (bucket, cm_row, cm_bucket)
-GROUP BY 1, 2
-"""
-
-
-def user_state_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD2-style validity intervals from the event stream: one row per
-    consecutive same-event-type run per user, half-open
-    [valid_from, valid_to) windows, open run's valid_to NULL — the
-    gaps-and-islands build primitive (operators/temporal.py)."""
-    from mini_project_204721_data_engineering_spark.operators.temporal import state_intervals
-
-    ev = load_table(spark, sf_dir, "events")
-    return state_intervals(ev, "user_id", "ts", "event_type", tiebreak="event_id")
-
-
-USER_STATE_INTERVALS_SQL = """
-WITH marked AS (
-  SELECT user_id, ts, event_type, event_id,
-         CASE WHEN lag(event_type) OVER w IS NULL
-                   OR lag(event_type) OVER w <> event_type
-              THEN 1 ELSE 0 END AS new_run
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-), runs AS (
-  SELECT *, sum(new_run) OVER (
-    PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS run
-  FROM marked
-), intervals AS (
-  SELECT user_id, run, min(event_type) AS event_type,
-         min(ts) AS valid_from, CAST(count(*) AS BIGINT) AS n_events
-  FROM runs GROUP BY user_id, run
-)
-SELECT user_id, event_type, valid_from,
-       lead(valid_from) OVER (PARTITION BY user_id ORDER BY valid_from ASC)
-         AS valid_to,
-       n_events
-FROM intervals
-"""
-
-
-def error_pit_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time (SCD2 consume) lookup: for every 'error' event, the
-    state the user was in — the latest non-error activity run containing
-    the error's timestamp (state_intervals on the non-error stream +
-    pit_lookup = as-of on valid_from; no range join).  NULL when the
-    error precedes the user's first non-error activity."""
-    from mini_project_204721_data_engineering_spark.operators.temporal import (
-        pit_lookup,
-        state_intervals,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    intervals = state_intervals(
-        ev.filter(F.col("event_type") != "error"),
-        "user_id",
-        "ts",
-        "event_type",
-        tiebreak="event_id",
-    ).withColumnRenamed("event_type", "state")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    return pit_lookup(errors, intervals, "user_id", "ts", "state")
-
-
-ERROR_PIT_STATE_SQL = """
-WITH nonerr AS (
-  SELECT * FROM events WHERE event_type <> 'error'
-), marked AS (
-  SELECT user_id, ts, event_type, event_id,
-         CASE WHEN lag(event_type) OVER w IS NULL
-                   OR lag(event_type) OVER w <> event_type
-              THEN 1 ELSE 0 END AS new_run
-  FROM nonerr
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-), runs AS (
-  SELECT *, sum(new_run) OVER (
-    PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-    ROWS UNBOUNDED PRECEDING) AS run
-  FROM marked
-), intervals AS (
-  SELECT user_id, run, min(event_type) AS state, min(ts) AS valid_from
-  FROM runs GROUP BY user_id, run
-), errors AS (
-  SELECT event_id, user_id, ts FROM events WHERE event_type = 'error'
-)
-SELECT e.event_id, e.user_id, e.ts, i.state
-FROM errors e ASOF LEFT JOIN intervals i
-  ON e.user_id = i.user_id AND e.ts >= i.valid_from
-"""
-
-
-def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel: per user, first 'click' then first 'purchase' AT
-    OR AFTER that click — the sequential-conversion shape ad-hoc
-    windowing gets wrong (a purchase before any click must not count).
-    Two keyed aggregates (map-side combinable) + one user-sized join —
-    no window over the raw stream; returns one row per funnel step with
-    the surviving-user count."""
-    ev = load_table(spark, sf_dir, "events")
-    t1 = ev.filter(F.col("event_type") == "click").groupBy("user_id").agg(
-        F.min("ts").alias("t1")
-    )
-    t2 = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(t1, "user_id")
-        .filter(F.col("ts") >= F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    steps = t1.join(t2, "user_id", "left")
-    return steps.agg(
-        F.count(F.lit(1)).alias("n_clicked"),
-        F.count("t2").alias("n_converted"),
-    ).select(
-        F.explode(
-            F.array(
-                F.struct(F.lit("1_click").alias("step"), F.col("n_clicked").alias("n_users")),
-                F.struct(F.lit("2_purchase_after_click").alias("step"), F.col("n_converted").alias("n_users")),
-            )
-        ).alias("s")
-    ).select("s.step", "s.n_users")
-
-
-EVENT_FUNNEL_SQL = """
-WITH t1 AS (
-  SELECT user_id, min(ts) AS t1 FROM events
-  WHERE event_type = 'click' GROUP BY user_id
-), t2 AS (
-  SELECT e.user_id, min(e.ts) AS t2
-  FROM events e JOIN t1 USING (user_id)
-  WHERE e.event_type = 'purchase' AND e.ts >= t1.t1
-  GROUP BY e.user_id
-), steps AS (
-  SELECT t1.user_id, t2.t2 FROM t1 LEFT JOIN t2 USING (user_id)
-)
-SELECT '1_click' AS step, CAST(count(*) AS BIGINT) AS n_users FROM steps
-UNION ALL
-SELECT '2_purchase_after_click', CAST(count(t2) AS BIGINT) FROM steps
-"""
-
-
-def user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention triangle: users grouped by first-activity day,
-    counted distinct-active at each day offset — the standard retention
-    report.  Shape: one (user, day) distinct (map-side combinable), a
-    user-sized cohort aggregate joined back, then a groups-sized count;
-    offsets limited to 14 days to keep the report bounded."""
-    ev = load_table(spark, sf_dir, "events")
-    days = ev.select(
-        "user_id", F.date_trunc("day", "ts").alias("day")
-    ).distinct()
-    cohorts = days.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
-    return (
-        days.join(cohorts, "user_id")
-        .withColumn("day_offset", F.datediff("day", "cohort_day"))
-        .filter(F.col("day_offset") <= 14)
-        .groupBy("cohort_day", "day_offset")
-        .agg(F.count(F.lit(1)).alias("n_active_users"))
-    )
-
-
-USER_RETENTION_SQL = """
-WITH days AS (
-  SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events
-), cohorts AS (
-  SELECT user_id, min(day) AS cohort_day FROM days GROUP BY user_id
-)
-SELECT CAST(c.cohort_day AS TIMESTAMP) AS cohort_day,
-       CAST(datediff('day', c.cohort_day, d.day) AS INT) AS day_offset,
-       CAST(count(*) AS BIGINT) AS n_active_users
-FROM days d JOIN cohorts c USING (user_id)
-WHERE datediff('day', c.cohort_day, d.day) <= 14
-GROUP BY 1, 2
-"""
-
-
-def user_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest consecutive-day activity streak per user — the date-
-    anchored gaps-and-islands form (day minus row_number is constant
-    exactly within a consecutive run): distinct (user, day) grain, one
-    keyed window, two groups-sized aggregates."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    days = ev.select(
-        "user_id", F.to_date(F.date_trunc("day", "ts")).alias("day")
-    ).distinct()
-    w = Window.partitionBy("user_id").orderBy("day")
-    anchored = days.withColumn(
-        "anchor", F.date_sub("day", F.row_number().over(w))
-    )
-    streaks = anchored.groupBy("user_id", "anchor").agg(
-        F.count(F.lit(1)).alias("len")
-    )
-    return streaks.groupBy("user_id").agg(
-        F.max("len").alias("longest_streak_days")
-    )
-
-
-USER_LONGEST_STREAK_SQL = """
-WITH days AS (
-  SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
-  FROM events
-), anchored AS (
-  SELECT user_id, day,
-         day - CAST(row_number() OVER (
-           PARTITION BY user_id ORDER BY day) AS INT) AS anchor
-  FROM days
-), streaks AS (
-  SELECT user_id, anchor, count(*) AS len
-  FROM anchored GROUP BY user_id, anchor
-)
-SELECT user_id, CAST(max(len) AS BIGINT) AS longest_streak_days
-FROM streaks GROUP BY user_id
-"""
-
-
-def epoch_order_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic epoch shuffle (md5 engine-portable variant, 16 hex
-    shards): every doc's (shard, position) for epoch seed 3 — stable
-    across reruns/layouts, per-shard ordering so no global sort
-    (operators/sampling.py::epoch_order)."""
-    from mini_project_204721_data_engineering_spark.operators.sampling import epoch_order
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return epoch_order(docs, "doc_id", seed=3, n_shards=16, hash_fn="md5")
-
-
-EPOCH_ORDER_SQL = """
-WITH h AS (
-  SELECT doc_id, md5('3|' || CAST(doc_id AS VARCHAR)) AS hh FROM documents
-)
-SELECT doc_id, substring(hh, 1, 1) AS shard,
-       CAST(row_number() OVER (
-         PARTITION BY substring(hh, 1, 1) ORDER BY hh ASC, doc_id ASC
-       ) AS INT) AS position
-FROM h
-"""
-
-
-def html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl→corpus HTML text extraction (llm/text.py::strip_html): the
-    corpus has no organic HTML, so (pii_scrub's injection pattern) every
-    3rd doc is wrapped in deterministic boilerplate — script, style,
-    comment, tags, entities — and the strip must recover exactly the
-    original text plus the decoded entity tail.  Five codegen
-    regexp/replace passes, RE2-compatible so the oracle mirrors them."""
-    from mini_project_204721_data_engineering_spark.llm.text import strip_html
-
-    docs = load_table(spark, sf_dir, "documents")
-    wrapped = docs.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.lit("<html><head><script>var t = 1 < 2;</script>"
-                      "<style>p { color: red; }</style></head><body>"
-                      "<!-- boilerplate --><p class='x'>"),
-                F.col("text"),
-                F.lit("</p><div>Tom &amp; Jerry&nbsp;&#39;99</div></body></html>"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    return wrapped.select(
-        "doc_id", strip_html(F.col("text")).alias("clean_text")
-    )
-
-
-HTML_EXTRACT_SQL = r"""
-WITH wrapped AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0 THEN
-           '<html><head><script>var t = 1 < 2;</script>'
-           || '<style>p { color: red; }</style></head><body>'
-           || '<!-- boilerplate --><p class=''x''>' || text
-           || '</p><div>Tom &amp; Jerry&nbsp;&#39;99</div></body></html>'
-         ELSE text END AS text
-  FROM documents
-), stripped AS (
-  SELECT doc_id,
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(text,
-          '(?is)(<script\b[^>]*>.*?</script\s*>|<style\b[^>]*>.*?</style\s*>)', ' ', 'g'),
-        '(?s)<!--.*?-->', ' ', 'g'),
-      '(?s)<[^>]+>', ' ', 'g') AS t
-  FROM wrapped
-), decoded AS (
-  SELECT doc_id,
-    replace(replace(replace(replace(replace(replace(t,
-      '&nbsp;', ' '), '&amp;', '&'), '&lt;', '<'), '&gt;', '>'),
-      '&quot;', '"'), '&#39;', '''') AS t
-  FROM stripped
-)
-SELECT doc_id, trim(regexp_replace(t, '\s+', ' ', 'g')) AS clean_text
-FROM decoded
-"""
-
-
-def bigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-sensitive quality scoring (llm/quality.py::bigram_lm +
-    doc_bigram_logprob): train an add-α bigram LM on the English slice,
-    score every document's mean bigram log-probability with the full
-    backoff ladder (seen pair → seen-history floor → global floor) —
-    the whole thing, including the BOS-conditioned pair construction
-    and per-history normalization, mirrored in the oracle."""
-    from mini_project_204721_data_engineering_spark.llm.quality import (
-        bigram_lm,
-        doc_bigram_logprob,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    bi, floors, gfloor = bigram_lm(docs.filter(F.col("lang") == "en"), alpha=0.5)
-    out = doc_bigram_logprob(docs, bi, floors, gfloor)
-    return out.select(
-        "doc_id", "n_bigrams", F.round(F.col("mean_logp"), 6).alias("mean_logp")
-    )
-
-
-BIGRAM_QUALITY_SQL = r"""
-WITH tok AS (
-  SELECT doc_id, lang,
-         list_prepend('<s>',
-           list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x <> '')) AS toks
-  FROM documents
-), pairs AS (
-  SELECT doc_id, lang, toks[i] AS prev, toks[i + 1] AS token
-  FROM tok, UNNEST(range(1, len(toks))) AS u(i)
-), ref AS (
-  SELECT prev, token, CAST(count(*) AS DOUBLE) AS c
-  FROM pairs WHERE lang = 'en' GROUP BY prev, token
-), vocab AS (
-  SELECT CAST(count(DISTINCT token) AS DOUBLE) AS v FROM ref
-), hist AS (
-  SELECT prev, sum(c) AS ch FROM ref GROUP BY prev
-), bi AS (
-  SELECT prev, token, ln((c + 0.5) / (ch + 0.5 * (v + 1.0))) AS logp
-  FROM ref JOIN hist USING (prev) CROSS JOIN vocab
-), floors AS (
-  SELECT prev, ln(0.5 / (ch + 0.5 * (v + 1.0))) AS floor_lp
-  FROM hist CROSS JOIN vocab
-), scored AS (
-  SELECT p.doc_id,
-         coalesce(bi.logp, f.floor_lp, (SELECT ln(1.0 / (v + 1.0)) FROM vocab)) AS lp
-  FROM pairs p
-  LEFT JOIN bi ON p.prev = bi.prev AND p.token = bi.token
-  LEFT JOIN floors f ON p.prev = f.prev
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       round(sum(lp) / count(*), 6) AS mean_logp
-FROM scored GROUP BY doc_id
-"""
-
-
-def alpha_mix_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-weighted (α-power) source mixing
-    (operators/sampling.py::alpha_mix_rates): per-language keep rates
-    derive as ``budget · (n^α / Σn^α) / n`` — α=0.5 up-samples tail
-    languages — then the standard md5-hash stratified sample applies.
-    The ENTIRE derivation (counts → weights → rates → thresholds) is
-    mirrored in the oracle SQL, so the rate arithmetic itself is
-    value-checked, not just the sampling.  Returns the realized
-    per-language mix."""
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        alpha_mix_rates,
-        stratified_hash_sample,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    counts = {
-        r["lang"]: r["n"]
-        for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    budget = sum(counts.values()) // 4
-    rates = alpha_mix_rates(counts, alpha=0.5, budget_rows=budget)
-    kept = stratified_hash_sample(
-        docs, key="doc_id", strata="lang", rates=rates, salt="alphamix"
-    )
-    return (
-        kept.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-        .orderBy("lang")
-    )
-
-
-# the oracle recomputes the full rate derivation in SQL: same power,
-# same sum, same min-cap, same floor(rate·2^16) truncation to the 4-hex
-# threshold (CAST in DuckDB rounds — floor() mirrors Python int())
-ALPHA_MIX_COUNTS_SQL = """
-WITH c AS (
-  SELECT lang, CAST(count(*) AS DOUBLE) AS n FROM documents GROUP BY lang
-),
-w AS (SELECT lang, n, pow(n, 0.5) AS wt FROM c),
-t AS (SELECT sum(wt) AS tw, floor(sum(n) / 4) AS budget FROM w),
-r AS (
-  SELECT lang, least(1.0, budget * (wt / tw) / n) AS rate
-  FROM w CROSS JOIN t
-)
-SELECT d.lang, count(*) AS n_kept
-FROM documents d JOIN r ON d.lang = r.lang
-WHERE r.rate >= 1.0
-   OR substring(md5('alphamix|' || d.doc_id), 1, 4)
-      < printf('%04x', CAST(floor(r.rate * 65536) AS INT))
-GROUP BY d.lang
-ORDER BY d.lang
-"""
-
-
-def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 TF-IDF terms per document (llm/quality.py::tfidf_topk):
-    smoothed idf, deterministic (score desc, term asc) tie-break,
-    portable rounding at the output edge.  Limited to the first 200
-    docs so the EXTRA suite stays light; the operator itself has no
-    such cap.  ``persist_tf=True`` exercises the production single-pass
-    path (tf stage cached, both branches share one tokenize+count)."""
-    from mini_project_204721_data_engineering_spark.llm.quality import tfidf_topk
-
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return tfidf_topk(docs, k=3, persist_tf=True)
-
-
-TFIDF_TOP_TERMS_SQL = r"""
-WITH d AS (SELECT * FROM documents WHERE doc_id < 200),
-toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-  FROM d
-),
-tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM toks WHERE term <> '' GROUP BY doc_id, term
-),
-dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM d),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf,
-         round(tf.tf * (ln((nn + 1.0) / (df + 1.0)) + 1.0) * 10000.0)
-           / 10000.0 AS score
-  FROM tf JOIN dfreq USING (term) CROSS JOIN n
-)
-SELECT doc_id, term, tf, score, CAST(rank AS INT) AS rank
-FROM (
-  SELECT *,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY score DESC, term ASC) AS rank
-  FROM scored
-) ranked
-WHERE rank <= 3
-"""
-
-
-def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT all-pairs tf-cosine similarity join at threshold 0.9
-    (llm/sparse_sim.py::sparse_cosine_join): prefix-filtered inverted
-    index (Bayardo et al. WWW'07) + full verify — identical output to
-    the brute inverted-index join, pinned here against a DuckDB
-    brute-force oracle.  ``persist_vectors=True`` exercises the
-    production single-tokenize path.  The threshold compares ROUNDED
-    cosines on both sides so partial-sum order can't flip a boundary
-    pair."""
-    from mini_project_204721_data_engineering_spark.llm.sparse_sim import sparse_cosine_join
-
-    docs = load_table(spark, sf_dir, "documents")
-    return sparse_cosine_join(
-        docs, 0.9, prefix_filter=True, persist_vectors=True
-    ).select(
-        F.col("id_1").alias("doc_id_1"),
-        F.col("id_2").alias("doc_id_2"),
-        "cos_sim",
-    )
-
-
-def sparse_cosine_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The idf-weighted variant of :func:`sparse_cosine_pairs` — the
-    production setting for topical similarity: term weights scale by
-    the same smoothed idf as tfidf_topk before L2 normalization, so
-    boilerplate/common terms carry ~no mass and pairs qualify on
-    INFORMATIVE overlap.  Same prefix-filtered plan (the completeness
-    theorem is weighting-agnostic); oracle re-derives tf·idf, the
-    norms, and the brute join in SQL."""
-    from mini_project_204721_data_engineering_spark.llm.sparse_sim import sparse_cosine_join
-
-    docs = load_table(spark, sf_dir, "documents")
-    return sparse_cosine_join(
-        docs, 0.85, prefix_filter=True, persist_vectors=True,
-        weighting="tfidf",
-    ).select(
-        F.col("id_1").alias("doc_id_1"),
-        F.col("id_2").alias("doc_id_2"),
-        "cos_sim",
-    )
-
-
-SPARSE_COSINE_TFIDF_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-  FROM documents
-), tf AS (
-  SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS w
-  FROM toks WHERE term <> '' GROUP BY doc_id, term
-), dfreq AS (
-  SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term
-), n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM documents),
-wts AS (
-  SELECT doc_id, term, w * (ln((nn + 1.0) / (df + 1.0)) + 1.0) AS w
-  FROM tf JOIN dfreq USING (term) CROSS JOIN n
-), nrm AS (SELECT doc_id, sqrt(sum(w * w)) AS nm FROM wts GROUP BY doc_id),
-v AS (SELECT wts.doc_id, term, w / nm AS w FROM wts JOIN nrm USING (doc_id)),
-p AS (
-  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2, sum(a.w * b.w) AS s
-  FROM v a JOIN v b ON a.term = b.term AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_id_1, doc_id_2, round(s * 10000) / 10000 AS cos_sim
-FROM p WHERE round(s * 10000) / 10000 >= 0.85
-"""
-
-
-SPARSE_COSINE_PAIRS_SQL = r"""
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
-  FROM documents
-), tf AS (
-  SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS w
-  FROM toks WHERE term <> '' GROUP BY doc_id, term
-), nrm AS (SELECT doc_id, sqrt(sum(w * w)) AS n FROM tf GROUP BY doc_id),
-v AS (SELECT tf.doc_id, term, w / n AS w FROM tf JOIN nrm USING (doc_id)),
-p AS (
-  SELECT a.doc_id AS doc_id_1, b.doc_id AS doc_id_2, sum(a.w * b.w) AS s
-  FROM v a JOIN v b ON a.term = b.term AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_id_1, doc_id_2, round(s * 10000) / 10000 AS cos_sim
-FROM p WHERE round(s * 10000) / 10000 >= 0.9
-"""
-
-
-def semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space eval-leak sweep (llm/quality.py::
-    semantic_contaminated): every 50th vector plays the benchmark, the
-    rest the corpus; corpus vectors within the threshold cosine of ANY
-    benchmark vector are flagged with their max similarity and hit
-    count.  The synthetic embeddings are near-orthogonal random (max
-    cross-split cosine ≈ 0.46), so the demo threshold sits at the
-    distribution's extreme tail to exercise the operator; production
-    text embeddings use ~0.95.  Benchmark broadcasts; corpus is one
-    scan."""
-    from mini_project_204721_data_engineering_spark.llm.quality import semantic_contaminated
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    bench = emb.filter(F.col("vec_id") % 50 == 1)
-    corpus = emb.filter(F.col("vec_id") % 50 != 1)
-    return semantic_contaminated(corpus, bench, 0.42)
-
-
-SEMANTIC_DECONTAMINATE_SQL = """
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), b AS (
-  SELECT v AS bv FROM e WHERE vec_id % 50 = 1
-), c AS (
-  SELECT vec_id, v FROM e WHERE vec_id % 50 <> 1
-), hits AS (
-  SELECT c.vec_id,
-         round(list_cosine_similarity(c.v, b.bv) * 1000000) / 1000000 AS s
-  FROM c CROSS JOIN b
-  WHERE round(list_cosine_similarity(c.v, b.bv) * 1000000) / 1000000 >= 0.42
-)
-SELECT vec_id, max(s) AS max_cos, count(*) AS n_hits
-FROM hits GROUP BY vec_id
-"""
-
-
-def similarity_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maintained ANN index demo (`llm/ann_index.py`): the embeddings
-    land in a snapshot table in three eras; the IVF-PQ index is CREATED
-    on era 1 (quantizer frozen) and incrementally REFRESHED through the
-    snapshot cursor for eras 2-3 (exactly-once: source version as the
-    txn watermark).  The result is the equivalence audit — every source
-    row indexed exactly once, and every posting code-for-code IDENTICAL
-    to a from-scratch encode of the full corpus under the same frozen
-    model (encoding is deterministic, so staleness is the only recall
-    variable).  n_source == n_indexed == n_matching == the table count
-    is exactly what the oracle asserts."""
-    import shutil
-    import tempfile
-
-    from mini_project_204721_data_engineering_spark.llm.ann_index import (
-        _load_model,
-        _postings_dir,
-        ann_encode,
-        ann_index_create,
-        ann_index_info,
-        ann_index_refresh,
-    )
-    from mini_project_204721_data_engineering_spark.sources.snapshots import (
-        read_snapshot,
-        snapshot_append,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="ann_demo_")
-    try:
-        src, idx = f"{root}/src", f"{root}/idx"
-        snapshot_append(emb.filter(F.col("vec_id") % 3 == 0).coalesce(1), src)
-        ann_index_create(
-            spark, src, idx, ncells=8, m=4, k=16, kmeans_iters=2,
-            sample=4096, pq_iters=3,
-        )
-        for era in (1, 2):
-            snapshot_append(
-                emb.filter(F.col("vec_id") % 3 == era).coalesce(1), src
-            )
-            ann_index_refresh(spark, idx)
-        info = ann_index_info(spark, idx)
-        postings = read_snapshot(spark, _postings_dir(idx))
-        scratch = ann_encode(read_snapshot(spark, src), _load_model(idx))
-        n_matching = postings.join(
-            scratch,
-            ["vec_id", "cell", "codes"],
-        ).count()
-        row = [
-            (
-                int(info["source_rows"]),
-                int(info["indexed_rows"]),
-                int(n_matching),
-                int(info["lag_rows"]),
-            )
-        ]
-        return spark.createDataFrame(
-            row,
-            "n_source bigint, n_indexed bigint, n_matching bigint, "
-            "lag_rows bigint",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-SIMILARITY_IVF_INCREMENTAL_SQL = """
-SELECT count(*) AS n_source,
-       count(*) AS n_indexed,
-       count(*) AS n_matching,
-       CAST(0 AS BIGINT) AS lag_rows
-FROM embeddings
-"""
-
-
-def similarity_ivf_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maintained ANN index under TAKEDOWNS (r15, `llm/ann_index.py`):
-    the embeddings land in two eras (create + incremental refresh),
-    then a deletion-vector takedown removes a slice of the source —
-    and the NEXT refresh consumes the rewritten window incrementally
-    (tombstone + survivors, one atomic commit) instead of requiring a
-    full index re-create.  The audit row proves the compliance story:
-    no taken-down id remains in the postings, every surviving posting
-    is code-for-code identical to a from-scratch encode of the
-    post-takedown corpus, and the index is current (lag 0)."""
-    import shutil
-    import tempfile
-
-    from mini_project_204721_data_engineering_spark.llm.ann_index import (
-        _load_model,
-        _postings_dir,
-        ann_encode,
-        ann_index_create,
-        ann_index_info,
-        ann_index_refresh,
-    )
-    from mini_project_204721_data_engineering_spark.sources.snapshots import (
-        read_snapshot,
-        snapshot_append,
-        snapshot_delete_where,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="ann_takedown_")
-    try:
-        src, idx = f"{root}/src", f"{root}/idx"
-        snapshot_append(emb.filter(F.col("vec_id") % 2 == 0).coalesce(1), src)
-        ann_index_create(
-            spark, src, idx, ncells=8, m=4, k=16, kmeans_iters=2,
-            sample=4096, pq_iters=3,
-        )
-        snapshot_append(emb.filter(F.col("vec_id") % 2 == 1).coalesce(1), src)
-        ann_index_refresh(spark, idx)
-        snapshot_delete_where(spark, src, "vec_id % 13 = 5", lazy="dv")
-        ann_index_refresh(spark, idx)  # the rewritten-window path
-        info = ann_index_info(spark, idx)
-        postings = read_snapshot(spark, _postings_dir(idx))
-        scratch = ann_encode(read_snapshot(spark, src), _load_model(idx))
-        n_matching = postings.join(
-            scratch, ["vec_id", "cell", "codes"]
-        ).count()
-        n_deleted_indexed = postings.filter(
-            F.col("vec_id") % 13 == 5
-        ).count()
-        row = [
-            (
-                int(info["source_rows"]),
-                int(info["indexed_rows"]),
-                int(n_matching),
-                int(n_deleted_indexed),
-                int(info["lag_rows"]),
-            )
-        ]
-        return spark.createDataFrame(
-            row,
-            "n_source bigint, n_indexed bigint, n_matching bigint, "
-            "n_deleted_indexed bigint, lag_rows bigint",
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-SIMILARITY_IVF_TAKEDOWN_SQL = """
-SELECT CAST(count(*) FILTER (WHERE vec_id % 13 <> 5) AS BIGINT) AS n_source,
-       CAST(count(*) FILTER (WHERE vec_id % 13 <> 5) AS BIGINT) AS n_indexed,
-       CAST(count(*) FILTER (WHERE vec_id % 13 <> 5) AS BIGINT) AS n_matching,
-       CAST(0 AS BIGINT) AS n_deleted_indexed,
-       CAST(0 AS BIGINT) AS lag_rows
-FROM embeddings
-"""
-
-
-EXTRA_QUERIES = {
-    "similarity_ivf_incremental": similarity_ivf_incremental,
-    "similarity_ivf_takedown": similarity_ivf_takedown,
-    "semantic_decontaminate": semantic_decontaminate,
-    "sparse_cosine_pairs": sparse_cosine_pairs,
-    "sparse_cosine_tfidf": sparse_cosine_tfidf,
-    "alpha_mix_counts": alpha_mix_counts,
-    "bigram_quality": bigram_quality,
-    "tfidf_top_terms": tfidf_top_terms,
-    "simhash_hamming_dups": simhash_hamming_dups,
-    "source_exemplars": source_exemplars,
-    "html_extract": html_extract,
-    "epoch_order_demo": epoch_order_demo,
-    "user_longest_streak": user_longest_streak,
-    "user_state_intervals": user_state_intervals,
-    "error_pit_state": error_pit_state,
-    "event_funnel": event_funnel,
-    "user_retention_cohorts": user_retention_cohorts,
-    "length_outlier_docs": length_outlier_docs,
-    "eval_sample_exact": eval_sample_exact,
-    "corpus_health": corpus_health,
-    "countmin_event_counts": countmin_event_counts,
-    "semantic_dedup_keep": semantic_dedup_keep,
-    "semantic_dedup_two_level": semantic_dedup_two_level,
-    "unigram_quality": unigram_quality,
-    "documents_profile": documents_profile,
-    "ngram_containment_dups": ngram_containment_dups,
-    "duplicate_spans": duplicate_spans_q,
-    "trim_duplicate_spans": trim_duplicate_spans_q,
-    "dedup_clusters": dedup_clusters,
-    "lsh_jaccard_verified_dups": lsh_jaccard_verified_dups,
-    "text_repetition": text_repetition,
-    "pii_scrub": pii_scrub,
-    "decontaminate": decontaminate,
-    "corpus_sample_mix": corpus_sample_mix,
-    "corpus_assembly": corpus_assembly,
-    "sequence_packing": sequence_packing,
-    "corpus_splits": corpus_splits,
-    "vocab_topk": vocab_topk,
-    "oov_rate": oov_rate,
-    "text_chunks": text_chunks,
-}
-EXTRA_ORACLES = {
-    "similarity_ivf_incremental": SIMILARITY_IVF_INCREMENTAL_SQL,
-    "similarity_ivf_takedown": SIMILARITY_IVF_TAKEDOWN_SQL,
-    "semantic_decontaminate": SEMANTIC_DECONTAMINATE_SQL,
-    "sparse_cosine_pairs": SPARSE_COSINE_PAIRS_SQL,
-    "sparse_cosine_tfidf": SPARSE_COSINE_TFIDF_SQL,
-    "alpha_mix_counts": ALPHA_MIX_COUNTS_SQL,
-    "bigram_quality": BIGRAM_QUALITY_SQL,
-    "tfidf_top_terms": TFIDF_TOP_TERMS_SQL,
-    "simhash_hamming_dups": _simhash_hamming_duck_sql(32, 3),
-    "source_exemplars": SOURCE_EXEMPLARS_SQL,
-    "html_extract": HTML_EXTRACT_SQL,
-    "epoch_order_demo": EPOCH_ORDER_SQL,
-    "user_longest_streak": USER_LONGEST_STREAK_SQL,
-    "user_state_intervals": USER_STATE_INTERVALS_SQL,
-    "error_pit_state": ERROR_PIT_STATE_SQL,
-    "event_funnel": EVENT_FUNNEL_SQL,
-    "user_retention_cohorts": USER_RETENTION_SQL,
-    "length_outlier_docs": LENGTH_OUTLIERS_SQL,
-    "eval_sample_exact": EVAL_SAMPLE_EXACT_SQL,
-    "corpus_health": CORPUS_HEALTH_SQL,
-    "countmin_event_counts": COUNTMIN_EVENT_COUNTS_SQL,
-    "semantic_dedup_keep": SEMANTIC_DEDUP_KEEP_SQL,
-    "semantic_dedup_two_level": SEMANTIC_DEDUP_TWO_LEVEL_SQL,
-    "unigram_quality": UNIGRAM_QUALITY_SQL,
-    "documents_profile": DOCUMENTS_PROFILE_SQL,
-    "ngram_containment_dups": NGRAM_CONTAINMENT_SQL,
-    "duplicate_spans": DUPLICATE_SPANS_SQL,
-    "trim_duplicate_spans": TRIM_DUPLICATE_SPANS_SQL,
-    "dedup_clusters": DEDUP_CLUSTERS_SQL,
-    "lsh_jaccard_verified_dups": LSH_JACCARD_VERIFIED_SQL,
-    "text_repetition": TEXT_REPETITION_SQL,
-    "pii_scrub": PII_SCRUB_SQL,
-    "decontaminate": DECONTAMINATE_SQL,
-    "corpus_sample_mix": CORPUS_SAMPLE_MIX_SQL,
-    "corpus_assembly": CORPUS_ASSEMBLY_SQL,
-    "sequence_packing": SEQUENCE_PACKING_SQL,
-    "corpus_splits": CORPUS_SPLITS_SQL,
-    "vocab_topk": VOCAB_TOPK_SQL,
-    "oov_rate": OOV_RATE_SQL,
-    "text_chunks": TEXT_CHUNKS_SQL,
-}
 
 ORACLES = {
     "dedup_exact": DEDUP_EXACT_SQL,

@@ -304,162 +304,6 @@ FROM events GROUP BY event_type ORDER BY event_type
 """
 
 
-#: histogram-percentile demo bounds (events.value is bounded well below)
-HIST_LO, HIST_HI, HIST_BINS = 0.0, 1000.0, 200
-
-
-def value_p95_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """p95 per (month, event_type) served from the mergeable histogram
-    rollup (operators/rollup.py::rollup_histogram → estimate_percentile):
-    daily bin counts → monthly reaggregation → cumulative walk.  The
-    oracle recomputes the identical bin arithmetic from raw rows — what
-    it checks is that the cascade+walk is exactly the bin math it
-    claims, on top of the pytest guarantee that the bin contains the
-    type-1 quantile."""
-    from mini_project_204721_data_engineering_spark.operators.rollup import (
-        estimate_percentile,
-        reaggregate_histogram,
-        rollup_histogram,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = rollup_histogram(
-        ev, "ts", "value", ["event_type"], "day", HIST_LO, HIST_HI, HIST_BINS
-    )
-    monthly = reaggregate_histogram(daily, ["event_type"], "month")
-    est = estimate_percentile(
-        monthly, ["event_type"], 0.95, HIST_LO, HIST_HI, HIST_BINS
-    )
-    return est.select(
-        F.date_format("bucket", "yyyy-MM").alias("month"),
-        "event_type",
-        "p95_est",
-    )
-
-
-_HIST_W = (HIST_HI - HIST_LO) / HIST_BINS
-VALUE_P95_HISTOGRAM_SQL = f"""
-WITH b AS (
-  SELECT strftime(date_trunc('month', ts), '%Y-%m') AS month, event_type,
-         CASE WHEN value < {HIST_LO} THEN 0
-              WHEN value >= {HIST_HI} THEN {HIST_BINS + 1}
-              ELSE CAST(floor((value - {HIST_LO}) / {_HIST_W}) AS BIGINT) + 1 END AS bin,
-         count(*) AS n
-  FROM events GROUP BY ALL
-), c AS (
-  SELECT month, event_type, bin, n,
-         sum(n) OVER (PARTITION BY month, event_type ORDER BY bin
-                      ROWS UNBOUNDED PRECEDING) AS cum,
-         sum(n) OVER (PARTITION BY month, event_type) AS total
-  FROM b
-)
-SELECT month, event_type,
-       CASE WHEN min(bin) <= {HIST_BINS}
-            THEN {HIST_LO} + min(bin) * {_HIST_W} END AS p95_est
-FROM c WHERE cum >= total * 0.95
-GROUP BY month, event_type
-"""
-
-
-def user_rolling_1h_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 1-hour RANGE window per user
-    (operators/aggregates.py::rolling_time_agg): for every event, the
-    user's spend and event count over the preceding hour INCLUDING the
-    event — row-anchored frames that tumbling/sliding buckets cannot
-    express.  One user-keyed shuffle; Spark's running-frame window
-    never rescans the hour per row.  The range key is
-    ``unix_micros(ts)`` — exact integer microseconds, so the frame
-    boundary agrees bit-for-bit with DuckDB's ``RANGE BETWEEN INTERVAL
-    1 HOUR PRECEDING`` at the timestamp's native resolution; sums
-    round portably."""
-    from mini_project_204721_data_engineering_spark.functions.parity import portable_round
-    from mini_project_204721_data_engineering_spark.operators.aggregates import rolling_time_agg
-
-    ev = load_table(spark, sf_dir, "events")
-    out = rolling_time_agg(
-        ev,
-        ["user_id"],
-        "ts",
-        3600.0,
-        {"spend_1h": F.sum("value"), "n_events_1h": F.count(F.lit(1))},
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        portable_round(F.col("spend_1h"), 2).alias("spend_1h"),
-        "n_events_1h",
-    )
-
-
-USER_ROLLING_1H_SPEND_SQL = """
-SELECT event_id, user_id,
-       round(sum(value) OVER w * 100) / 100 AS spend_1h,
-       CAST(count(*) OVER w AS BIGINT) AS n_events_1h
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts
-             RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
-"""
-
-
-def sensor_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap repair by linear interpolation
-    (operators/temporal.py::interpolate_linear): treat non-purchase
-    events as sensor dropouts (value → NULL) and repair each gap with
-    the time-weighted straight line between the user's surrounding
-    purchases; leading/trailing gaps stay NULL (no extrapolation).
-    Two running IGNORE-NULLS window passes over one keyed sort — no
-    self-join, cost ∝ rows not gap length.  The same expression tree
-    is evaluated on identical doubles in DuckDB, so values match to
-    the last ulp; rounding is belt-and-braces."""
-    from mini_project_204721_data_engineering_spark.functions.parity import portable_round
-    from mini_project_204721_data_engineering_spark.operators.temporal import interpolate_linear
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.when(F.col("event_type") == "purchase", F.col("value")).alias("v"),
-    )
-    out = interpolate_linear(
-        ev, ["user_id"], "ts", "v", out_col="v_filled",
-        tiebreak_cols=["event_id"],
-    )
-    return out.select(
-        "event_id", "user_id", portable_round(F.col("v_filled"), 4).alias("v_filled")
-    )
-
-
-SENSOR_INTERPOLATE_SQL = """
-WITH base AS (
-  SELECT event_id, user_id, ts,
-         CASE WHEN event_type = 'purchase' THEN value END AS v,
-         CAST(epoch_us(ts) AS DOUBLE) AS t
-  FROM events
-), w AS (
-  SELECT event_id, user_id, v, t,
-    last_value(v IGNORE NULLS) OVER wb AS prev_v,
-    first_value(v IGNORE NULLS) OVER wf AS next_v,
-    last_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
-      OVER wb AS prev_t,
-    first_value(CASE WHEN v IS NOT NULL THEN t END IGNORE NULLS)
-      OVER wf AS next_t
-  FROM base
-  WINDOW wb AS (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         wf AS (PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-)
-SELECT event_id, user_id,
-       round((CASE WHEN v IS NOT NULL THEN v
-                   WHEN prev_v IS NOT NULL AND next_v IS NOT NULL
-                        AND next_t > prev_t
-                   THEN prev_v + (next_v - prev_v) * (t - prev_t)
-                        / (next_t - prev_t) END) * 10000.0) / 10000.0
-         AS v_filled
-FROM w
-"""
-
-
 QUERIES = {
     "events_hourly": events_hourly,
     "daily_activity": daily_activity,
@@ -472,90 +316,6 @@ QUERIES = {
     "salted_counts": salted_counts,
 }
 
-def theta_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed distinct-user ESTIMATES from a theta sample
-    (operators/theta.py): per 6-hour tumbling window, the estimated
-    distinct users from the deterministic θ=0.5 md5 sample — the
-    streaming-friendly form of windowed COUNT(DISTINCT): the θ-filter
-    runs BEFORE any dedup state, so a streaming twin (filter →
-    dropDuplicates → window count) carries θ-scaled state instead of
-    every user id.  Deterministic, so the oracle value-checks the
-    estimates themselves."""
-    from mini_project_204721_data_engineering_spark.operators.theta import theta_distinct_by
-
-    ev = load_table(spark, sf_dir, "events")
-    win = ev.select(
-        F.date_format(F.window("ts", "6 hours").start, _FMT).alias("window_start"),
-        "user_id",
-    )
-    out = theta_distinct_by(win, ["window_start"], ["user_id"], 0.5)
-    return out.select(
-        "window_start", "kept", F.col("est_distinct").alias("est_users")
-    )
-
-
-THETA_WINDOW_USERS_SQL = """
-WITH kept AS (
-  SELECT DISTINCT
-         strftime(to_timestamp((epoch_us(ts) // (21600::BIGINT * 1000000)) * 21600),
-                  '%Y-%m-%d %H:%M:%S') AS window_start,
-         user_id
-  FROM events
-  WHERE substring(md5('theta|' || CAST(user_id AS VARCHAR)), 1, 4) < '8000'
-)
-SELECT window_start,
-       count(*) AS kept,
-       count(*) / 0.5 AS est_users
-FROM kept GROUP BY window_start
-"""
-
-
-def cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running DISTINCT-user count by day — the classic rewrite: a
-    naive per-day distinct-so-far is quadratic (re-scan history every
-    day); counting each user on their FIRST day turns it into one
-    groupBy + a running SUM over the tiny day series.  The final
-    window is day-cardinality-sized (≤ a few thousand rows at any
-    fact scale), documented single-partition by construction."""
-    ev = load_table(spark, sf_dir, "events")
-    first = ev.groupBy("user_id").agg(F.min(F.col("ts").cast("date")).alias("d"))
-    daily = first.groupBy("d").agg(F.count(F.lit(1)).alias("new_users"))
-    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    return daily.select(
-        F.date_format("d", "yyyy-MM-dd").alias("day"),
-        "new_users",
-        F.sum("new_users").over(w).alias("cum_users"),
-    )
-
-
-CUMULATIVE_UNIQUE_USERS_SQL = """
-WITH f AS (
-  SELECT user_id, min(CAST(ts AS DATE)) AS d FROM events GROUP BY user_id
-), n AS (
-  SELECT d, count(*) AS new_users FROM f GROUP BY d
-)
-SELECT strftime(d, '%Y-%m-%d') AS day,
-       new_users,
-       CAST(sum(new_users) OVER (ORDER BY d ROWS UNBOUNDED PRECEDING)
-            AS BIGINT) AS cum_users
-FROM n
-"""
-
-
-EXTRA_QUERIES = {
-    "cumulative_unique_users": cumulative_unique_users,
-    "theta_window_users": theta_window_users,
-    "value_p95_histogram": value_p95_histogram,
-    "user_rolling_1h_spend": user_rolling_1h_spend,
-    "sensor_interpolate": sensor_interpolate,
-}
-EXTRA_ORACLES = {
-    "cumulative_unique_users": CUMULATIVE_UNIQUE_USERS_SQL,
-    "theta_window_users": THETA_WINDOW_USERS_SQL,
-    "value_p95_histogram": VALUE_P95_HISTOGRAM_SQL,
-    "user_rolling_1h_spend": USER_ROLLING_1H_SPEND_SQL,
-    "sensor_interpolate": SENSOR_INTERPOLATE_SQL,
-}
 
 ORACLES = {
     "events_hourly": EVENTS_HOURLY_SQL,

@@ -342,32 +342,6 @@ def _mk_docs(spark, texts):
     )
 
 
-def test_repetition_stats_flags_repeated_bigrams(spark):
-    from mini_project_204721_data_engineering_spark.llm.quality import repetition_stats
-
-    df = _mk_docs(
-        spark,
-        [
-            "spam spam spam spam spam",  # one bigram, 4/4 occurrences
-            "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu",  # all distinct
-        ],
-    )
-    out = {r["doc_id"]: r for r in repetition_stats(df).collect()}
-    r0 = out[0]
-    assert r0["n_tokens"] == 5
-    assert r0["distinct_frac"] == 0.2
-    assert r0["top_bigram"] == "spam spam"
-    assert r0["top_bigram_n"] == 4
-    assert r0["top_bigram_frac"] == 1.0
-    assert r0["repetitive"] is True
-    r1 = out[1]
-    assert r1["distinct_frac"] == 1.0
-    assert r1["top_bigram_n"] == 1
-    # tie among all bigrams -> lexicographically greatest wins
-    assert r1["top_bigram"] == "zeta eta"
-    assert r1["repetitive"] is False
-
-
 def test_pii_redact_and_count(spark):
     from mini_project_204721_data_engineering_spark.llm.text import (
         EMAIL_PATTERN,
@@ -398,46 +372,6 @@ def test_pii_redact_and_count(spark):
     assert got[1]["red"] == "no pii here at all"
     assert (got[2]["ne"], got[2]["np"]) == (2, 0)
     assert got[2]["red"] == "two mails <EMAIL> <EMAIL> and 999 888.777 not a phone"
-
-
-def test_contaminated_docs_finds_planted_overlap(spark):
-    from mini_project_204721_data_engineering_spark.llm.quality import contaminated_docs
-
-    bench = _mk_docs(spark, ["q w e r t y u i o p"])  # 10 tokens -> 3 8-grams
-    corpus = _mk_docs(
-        spark,
-        [
-            "q w e r t y u i o p",  # identical: shares all 3
-            "z z q w e r t y u i",  # shifted: shares 1 ("q w e r t y u i")
-            "totally different words here with no benchmark overlap at",
-        ],
-    )
-    got = {r["doc_id"]: r["n_shared_grams"] for r in contaminated_docs(corpus, bench, n=8).collect()}
-    assert got == {0: 3, 1: 1}
-
-
-def test_contaminated_docs_broadcasts_benchmark_grams(spark):
-    """The benchmark gram set must broadcast (no corpus-wide shuffle join)
-    and the corpus side must carry NO distinct/aggregate before the join —
-    per-doc gram dedup happens in array_distinct pre-explode."""
-    from mini_project_204721_data_engineering_spark.llm.quality import contaminated_docs
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-
-    docs = load_table(spark, SF, "documents")
-    bench = docs.filter(F.col("doc_id") % 11 == 0)
-    corpus = docs.filter(F.col("doc_id") % 11 != 0)
-    df = contaminated_docs(corpus, bench, n=8)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # shuffles: benchmark-side distinct + final per-doc count — the corpus
-    # side reaches the broadcast join straight from its scan (its per-doc
-    # gram dedup is array_distinct pre-explode, not a distinct shuffle)
-    from mini_project_204721_data_engineering_spark.plans import shuffle_count
-
-    assert shuffle_count(df) <= 2
-    # aggregate pairs: bench distinct (partial+final) + hit count (partial+final)
-    assert plan.count("HashAggregate") <= 4
 
 
 def test_incremental_neardup_probes_index_not_corpus(spark):
@@ -602,29 +536,6 @@ def test_incremental_neardup_rejects_mismatched_index_params(spark):
     mixed = index.unionByName(build_band_index(corpus, k=4, bands=2))
     with pytest.raises(ValueError, match="params"):
         incremental_neardup(batch, mixed, k=8, bands=4)
-
-
-def test_chunk_text_overlap_and_coverage(spark):
-    """Chunk invariants: consecutive chunks share exactly `overlap`
-    tokens, concatenating de-overlapped chunks reconstructs the doc,
-    and short docs yield one short chunk."""
-    from mini_project_204721_data_engineering_spark.llm.quality import chunk_text
-
-    toks = [f"t{i}" for i in range(150)]
-    df = _mk_docs(spark, [" ".join(toks), "a b c"])
-    out = {}
-    for r in chunk_text(df, window=64, overlap=16).collect():
-        out.setdefault(r["doc_id"], []).append(r)
-    doc0 = sorted(out[0], key=lambda r: r["chunk_idx"])
-    # starts 0/48/96; 144 would be a pure suffix of chunk 2 and is not emitted
-    assert [r["chunk_idx"] for r in doc0] == [0, 1, 2]
-    chunks = [r["chunk_text"].split(" ") for r in doc0]
-    for a, b in zip(chunks, chunks[1:]):
-        assert a[-16:] == b[:16] or len(b) < 16  # shared overlap
-    rebuilt = chunks[0] + [t for c in chunks[1:] for t in c[16:]]
-    assert rebuilt == toks
-    assert len(out[1]) == 1 and out[1][0]["chunk_text"] == "a b c"
-    assert out[1][0]["n_tokens"] == 3
 
 
 def test_minhash_xxhash64_path_same_planted_dups(spark):
@@ -794,81 +705,6 @@ def test_srp_provisioning_guard_warns_when_underbanded(spark):
     assert not w
 
 
-def test_build_vocab_two_phase_matches_single_partition_rank(spark):
-    """Two-phase ranked ids (range buckets + offsets) must equal the
-    global rank for any rank_partitions, with ties on count broken by
-    token asc, and the plan must contain no partition-less window."""
-    from mini_project_204721_data_engineering_spark.llm.quality import build_vocab
-
-    docs = spark.createDataFrame(
-        [(1, "b b b a a c"), (2, "a d d e"), (3, "f f f f g")],
-        "doc_id long, text string",
-    )
-    # counts: f=4, a=3, b=3, d=2, c=1, e=1, g=1
-    expect = [("f", 4, 0), ("a", 3, 1), ("b", 3, 2), ("d", 2, 3), ("c", 1, 4)]
-    for nparts in (1, 4, 16):
-        got = sorted(
-            tuple(r)
-            for r in build_vocab(docs, top_n=5, rank_partitions=nparts).collect()
-        )
-        assert got == sorted(expect), nparts
-
-
-def test_build_vocab_window_is_keyed_not_global(spark):
-    """VERDICT r6 #6 done-criterion: vocab induction's ranking window is
-    PARTITIONED (by the range-bucket id), never the partition-less
-    single-partition window that stragglers at 10^7-10^8 distinct
-    tokens.  Asserted on the pre-checkpoint plan (the checkpoint
-    truncates lineage on the public API's return value)."""
-    import re
-
-    from mini_project_204721_data_engineering_spark.llm.quality import (
-        _ranked_token_counts,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b c a b"), (2, "b d e")], "doc_id long, text string"
-    )
-    counts = (
-        docs.select(F.explode(F.split("text", " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n_occurrences"))
-    )
-    plan = (
-        _ranked_token_counts(counts, 4)._jdf.queryExecution().optimizedPlan().toString()
-    )
-    windows = [l for l in plan.splitlines() if "Window [" in l]
-    assert len(windows) == 1
-    # partition spec present: windowspecdefinition(__pid, ...) — a global
-    # window would have the sort order as its first argument instead
-    assert re.search(r"windowspecdefinition\(__pid#\d+", windows[0])
-
-
-def test_contaminated_docs_bloom_path_equals_broadcast(spark):
-    """The bloom-prefilter scale path (benchmark too big to broadcast)
-    returns IDENTICAL contamination results to the broadcast path — the
-    bloom only prunes, the exact join decides — and its plan contains
-    might_contain as a map-side filter."""
-    from mini_project_204721_data_engineering_spark.llm.quality import (
-        contaminated_docs,
-    )
-
-    docs = load_table(spark, SF, "documents")
-    bench = docs.filter(F.col("doc_id") % 37 == 0).select(
-        F.col("doc_id").alias("doc_id"), "text"
-    )
-    broadcast = {
-        (r["doc_id"], r["n_shared_grams"])
-        for r in contaminated_docs(docs, bench, n=8).collect()
-    }
-    bloomed_df = contaminated_docs(docs, bench, n=8, bloom_fpp=0.01)
-    bloomed = {(r["doc_id"], r["n_shared_grams"]) for r in bloomed_df.collect()}
-    assert bloomed == broadcast and len(broadcast) > 0
-    plan = bloomed_df._jdf.queryExecution().optimizedPlan().toString()
-    assert "bitor" in plan.lower() or "bit_or" in plan.lower()  # bloom build
-    assert "__mask" in plan  # word-level membership probe
-
-
 def test_semantic_dedup_drops_planted_semantic_duplicate(spark):
     """An exact-copy vector with a higher id lands in the same cell and is
     dropped; survivors ∪ dropped partition the corpus; no survivor has a
@@ -995,30 +831,6 @@ def test_semantic_dedup_hot_cell_cap_bounds_pairs(spark):
     assert len(sizes1) >= math.ceil(max(sizes0) / cap)
 
 
-def test_unigram_lm_scores_indomain_above_gibberish(spark):
-    """A document made of reference-corpus words scores a higher mean
-    logprob than OOV gibberish; the LM join is a broadcast hash join."""
-    from mini_project_204721_data_engineering_spark.llm.quality import doc_logprob, unigram_lm
-
-    ref = spark.createDataFrame(
-        [(i, "the cat sat on the mat and the dog ran") for i in range(5)],
-        "doc_id long, text string",
-    )
-    lm, floor = unigram_lm(ref)
-    cand = spark.createDataFrame(
-        [(1, "the cat and the dog"), (2, "zxqv wjkp qqrr vvzz")],
-        "doc_id long, text string",
-    )
-    out = doc_logprob(cand, lm, floor)
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert rows[1]["mean_logp"] > rows[2]["mean_logp"]
-    # all-OOV doc sits exactly at the floor
-    assert abs(rows[2]["mean_logp"] - floor) < 1e-12
-    assert rows[1]["n_tokens"] == 5 and rows[2]["n_tokens"] == 4
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
 def test_assign_cells_bcast_equals_literal_path(spark):
     """The broadcast-argmax assignment (no literal inlining — the
     ncells-scalable form) produces IDENTICAL cells to assign_cells'
@@ -1120,24 +932,6 @@ def test_containment_catches_embedded_doc_jaccard_misses(spark):
     assert ngram_jaccard_pairs(docs, threshold=0.9).count() == 0
 
 
-def test_length_outliers_flags_planted_extreme(spark):
-    """A planted extreme-length doc is flagged; its groupmates are not;
-    single-doc groups flag nothing; the stats join is broadcast."""
-    from mini_project_204721_data_engineering_spark.llm.quality import length_outliers
-
-    rows = [(i, "w " * 20, "a") for i in range(30)]
-    rows.append((100, "w " * 4000, "a"))  # extreme in group a
-    rows.append((200, "solo doc here", "b"))  # singleton group
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = length_outliers(docs, group_col="source", z=3.0)
-    flagged = {r["doc_id"] for r in out.filter("is_outlier").collect()}
-    assert flagged == {100}
-    solo = out.filter("doc_id = 200").collect()[0]
-    assert solo["z_score"] == 0.0 and not solo["is_outlier"]
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
 def test_strip_html_recovers_inner_text(spark):
     """strip_html drops script/style bodies, comments and tags, decodes
     entities and collapses whitespace — malformed fragments degrade to
@@ -1199,86 +993,6 @@ def test_url_parts_and_canonical_dedup_composition(spark):
     assert kept.count() == 4
 
 
-def test_alpha_mix_rates_temperature_math(spark):
-    """alpha_mix_rates: α=1 reproduces natural proportions (uniform
-    rate), α=0 equalizes per-source kept counts, 0<α<1 up-samples the
-    tail; the cap binds without redistribution."""
-    from mini_project_204721_data_engineering_spark.operators.sampling import alpha_mix_rates
-
-    counts = {"en": 8000, "th": 1000, "de": 1000}
-    nat = alpha_mix_rates(counts, alpha=1.0, budget_rows=5000)
-    assert abs(nat["en"] - 0.5) < 1e-12  # every source at budget/total
-    assert abs(nat["th"] - 0.5) < 1e-12
-    eq = alpha_mix_rates(counts, alpha=0.0, budget_rows=2400)
-    # equal target shares: 800 rows per source → rates ∝ 1/n
-    assert abs(eq["en"] * 8000 - 800) < 1e-9
-    assert abs(eq["th"] * 1000 - 800) < 1e-9
-    mid = alpha_mix_rates(counts, alpha=0.5, budget_rows=4000)
-    assert mid["th"] > mid["en"]  # tail up-sampled
-    # below the cap, realized rows sum exactly to the budget
-    assert mid["th"] * 1000 + mid["de"] * 1000 + mid["en"] * 8000 == (
-        __import__("pytest").approx(4000, rel=1e-9)
-    )
-    capped = alpha_mix_rates(counts, alpha=0.0, budget_rows=30000)
-    assert capped["th"] == 1.0  # cap binds; no redistribution
-
-
-def test_tfidf_topk_orders_distinctive_terms_first(spark):
-    """tfidf_topk: a term unique to one doc outranks corpus-wide
-    boilerplate; ties break lexicographically; rank ≤ k."""
-    from mini_project_204721_data_engineering_spark.llm.quality import tfidf_topk
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the the the zebra the"),
-            (2, "the quick fox the"),
-            (3, "the lazy dog the the"),
-        ],
-        "doc_id long, text string",
-    )
-    out = tfidf_topk(docs, k=2)
-    rows = {(r["doc_id"], r["rank"]): r for r in out.collect()}
-    assert len(rows) == 6
-    # 'zebra' (df=1) beats 'the' (df=3, idf≈ln(4/4)+1=1) despite tf=4:
-    # score(the)=4·1=4.0 < score(zebra)=1·(ln(2)+1)≈1.69? No: 4 > 1.69 —
-    # high-tf boilerplate CAN win with smoothed idf; assert actual math
-    assert rows[(1, 1)]["term"] == "the" and rows[(1, 1)]["tf"] == 4
-    assert rows[(1, 2)]["term"] == "zebra"
-    assert abs(rows[(1, 2)]["score"] - round((0.6931471805599453 + 1.0) * 10000) / 10000) < 1e-9
-    # doc 2: 'the' (tf=2, score 2.0) leads; quick/fox tie at
-    # 1·(ln(2)+1) → lexicographic: fox takes rank 2
-    assert rows[(2, 1)]["term"] == "the" and rows[(2, 2)]["term"] == "fox"
-
-
-def test_tfidf_topk_persist_tf_single_tokenize_pass(spark):
-    """persist_tf=True: the (doc, term) count stage is computed ONCE
-    and both consumers (df aggregate + score join) read the cache —
-    the executed plan shows InMemoryTableScan on both branches and the
-    tokenize explode appears only inside the cached relation, not once
-    per branch.  Results identical to the uncached path."""
-    from mini_project_204721_data_engineering_spark.llm.quality import tfidf_topk
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta w{i} w{i % 7} gamma") for i in range(50)],
-        "doc_id long, text string",
-    )
-    try:
-        cached = tfidf_topk(docs, k=2, persist_tf=True)
-        plain = tfidf_topk(docs, k=2)
-        a = {(r["doc_id"], r["rank"], r["term"], r["score"]) for r in cached.collect()}
-        b = {(r["doc_id"], r["rank"], r["term"], r["score"]) for r in plain.collect()}
-        assert a == b and len(a) == 100
-        plan = cached._jdf.queryExecution().executedPlan().toString()
-        # both the idf branch and the score branch hit the cache
-        assert plan.count("InMemoryTableScan") >= 2
-        # the tokenize+count pipeline lives only inside the cached
-        # relation: no Generate (explode) in the outer executed plan
-        outer = plan.split("InMemoryRelation")[0]
-        assert "Generate" not in outer
-    finally:
-        spark.catalog.clearCache()
-
-
 def test_cap_cells_frozen_splits_agree_across_datasets(spark):
     """The incremental contract: capping two different frames with the
     SAME frozen (cell, nsplit) table puts identical vectors in
@@ -1328,296 +1042,3 @@ def test_cap_cells_frozen_splits_agree_across_datasets(spark):
     )
     kept_ids = {r["vec_id"] for r in kept.select("vec_id").collect()}
     assert 5042 not in kept_ids and 42 in kept_ids
-
-
-def test_bigram_lm_scores_ordered_text_above_shuffled(spark):
-    """Bigram LM: exact hand-computed probabilities on a tiny corpus,
-    word ORDER matters (shuffled text scores below in-order text — the
-    thing the unigram LM cannot see), and backoff layers engage
-    (seen-history floor vs global floor)."""
-    import math
-
-    from mini_project_204721_data_engineering_spark.llm.quality import (
-        bigram_lm,
-        doc_bigram_logprob,
-    )
-
-    ref = spark.createDataFrame(
-        [(1, "the cat sat"), (2, "the cat ran")], "doc_id long, text string"
-    )
-    bi, floors, gfloor = bigram_lm(ref, alpha=0.5)
-    rows = {(r["prev"], r["token"]): r["logp"] for r in bi.collect()}
-    # V = distinct next-tokens = {the, cat, sat, ran} = 4
-    # c(<s>,the)=2, c(<s>)=2 → ln(2.5 / (2 + 0.5*5)) = ln(2.5/4.5)
-    assert abs(rows[("<s>", "the")] - math.log(2.5 / 4.5)) < 1e-12
-    assert abs(rows[("cat", "sat")] - math.log(1.5 / 4.5)) < 1e-12
-    fl = {r["prev"]: r["floor_lp"] for r in floors.collect()}
-    assert abs(fl["cat"] - math.log(0.5 / 4.5)) < 1e-12
-    assert abs(gfloor - math.log(1.0 / 5.0)) < 1e-12
-    cand = spark.createDataFrame(
-        [(10, "the cat sat"), (11, "sat cat the"), (12, "zork blap")],
-        "doc_id long, text string",
-    )
-    scored = {r["doc_id"]: r for r in doc_bigram_logprob(cand, bi, floors, gfloor).collect()}
-    assert scored[10]["mean_logp"] > scored[11]["mean_logp"]  # order matters
-    assert scored[12]["n_bigrams"] == 2
-    # (<s>, zork): seen-history floor; (zork, blap): unseen history →
-    # global floor (the c(h)=0 limit of the same formula)
-    assert abs(
-        scored[12]["sum_logp"] - (math.log(0.5 / 4.5) + gfloor)
-    ) < 1e-9
-
-
-def test_bigram_lm_empty_docs_yield_zero_pairs_not_crash(spark):
-    """Empty / whitespace-only documents tokenize to just the BOS
-    token; without the guard, ``sequence(1, 0)`` counts DOWN in Spark
-    and the out-of-bounds indexing crashes under ANSI mode (or emits
-    phantom null pairs without it).  Empty docs must contribute ZERO
-    pairs — to training counts and to scoring output — matching the
-    SQL-oracle semantics."""
-    from mini_project_204721_data_engineering_spark.llm.quality import (
-        bigram_lm,
-        doc_bigram_logprob,
-    )
-
-    ref = spark.createDataFrame(
-        [(1, "the cat sat"), (2, ""), (3, "   \t  ")],
-        "doc_id long, text string",
-    )
-    bi, floors, gfloor = bigram_lm(ref, alpha=0.5)
-    pairs = {(r["prev"], r["token"]) for r in bi.collect()}
-    # only doc 1's pairs — the empty docs added nothing (no (<s>, NULL))
-    assert pairs == {("<s>", "the"), ("the", "cat"), ("cat", "sat")}
-    cand = spark.createDataFrame(
-        [(10, "the cat sat"), (11, ""), (12, " ")], "doc_id long, text string"
-    )
-    scored = {
-        r["doc_id"]: r for r in doc_bigram_logprob(cand, bi, floors, gfloor).collect()
-    }
-    assert scored[10]["n_bigrams"] == 3
-    # empty docs produce no pair rows, hence no score row at all
-    assert 11 not in scored and 12 not in scored
-
-
-def test_sparse_cosine_join_prefix_equals_brute_and_edge_cases(spark):
-    """All-pairs tf-cosine (llm/sparse_sim.py): the prefix-filtered
-    inverted index returns EXACTLY the brute inverted-index join's
-    pairs (the WWW'07 completeness theorem, exercised on real docs and
-    on adversarial edges: exact duplicates, empty docs, single-term
-    docs, disjoint docs, threshold 1.0), and the plan never falls back
-    to a cartesian product."""
-    from mini_project_204721_data_engineering_spark.llm.sparse_sim import (
-        doc_tf_vectors,
-        sparse_cosine_join,
-    )
-
-    docs = load_table(spark, SF, "documents").filter(F.col("doc_id") < 150)
-    for t in (0.6, 0.85, 0.95):
-        a = sorted(map(tuple, sparse_cosine_join(docs, t).collect()))
-        b = sorted(map(tuple,
-                       sparse_cosine_join(docs, t, prefix_filter=False).collect()))
-        assert a == b, f"prefix != brute at t={t}"
-        # symmetric-canonical ids, threshold respected on rounded sims
-        assert all(x[0] < x[1] and x[2] >= t for x in a)
-
-    edge = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma"),
-            (2, "alpha beta gamma"),          # exact duplicate of 1
-            (3, ""),                           # empty → no vector
-            (4, "   "),                        # whitespace-only → no vector
-            (5, "zeta"),                       # single-term
-            (6, "zeta"),                       # its duplicate
-            (7, "omega psi chi"),              # disjoint from everything
-            (8, "alpha alpha alpha alpha beta"),  # skewed mass
-        ],
-        "doc_id long, text string",
-    )
-    for t in (0.3, 0.7, 1.0):
-        a = sorted(map(tuple, sparse_cosine_join(edge, t).collect()))
-        b = sorted(map(tuple,
-                       sparse_cosine_join(edge, t, prefix_filter=False).collect()))
-        assert a == b, f"edge prefix != brute at t={t}"
-    exact = {(x[0], x[1]) for x in
-             sparse_cosine_join(edge, 1.0).collect()}
-    assert exact == {(1, 2), (5, 6)}
-    # vectors are L2-normalized and empty docs vanish
-    v = doc_tf_vectors(edge)
-    norms = v.groupBy("id").agg(F.round(F.sum(F.col("w") * F.col("w")), 9).alias("n2")).collect()
-    assert {r["id"] for r in norms} == {1, 2, 5, 6, 7, 8}
-    assert all(abs(r["n2"] - 1.0) < 1e-8 for r in norms)
-    plan = (sparse_cosine_join(docs, 0.9)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-    with pytest.raises(ValueError, match="threshold"):
-        sparse_cosine_join(edge, 0.0)
-    with pytest.raises(ValueError, match="threshold"):
-        sparse_cosine_join(edge, 1.5)
-    # idf weighting: prefix ≡ brute holds (the theorem only needs
-    # normalized vectors), exact duplicates still score 1.0, and the
-    # shared-boilerplate pair ranks LOWER under tfidf than under tf
-    ti_a = sorted(map(tuple, sparse_cosine_join(docs, 0.7, weighting="tfidf").collect()))
-    ti_b = sorted(map(tuple,
-                      sparse_cosine_join(docs, 0.7, prefix_filter=False,
-                                         weighting="tfidf").collect()))
-    assert ti_a == ti_b
-    exact_ti = {(x[0], x[1]): x[2]
-                for x in sparse_cosine_join(edge, 0.99, weighting="tfidf").collect()}
-    assert set(exact_ti) == {(1, 2), (5, 6)}
-    with pytest.raises(ValueError, match="weighting"):
-        sparse_cosine_join(edge, 0.5, weighting="bm25")
-
-
-def test_pq_train_encode_search_recall_and_contracts(spark):
-    """Product quantization (llm/pq.py): deterministic codebooks/codes,
-    reconstruction error shrinks as k grows, ADC search recall@10 vs
-    brute L2 is high on clustered data, the search plan is pure
-    codegen (no Python), and the geometry contracts refuse loudly."""
-    import numpy as np
-    import pytest as pt
-
-    from mini_project_204721_data_engineering_spark.llm.pq import (
-        pq_encode,
-        pq_reconstruct,
-        pq_search,
-        pq_train,
-    )
-
-    # clustered synthetic: 8 well-separated centers in 16-d, 400 points
-    rng = np.random.default_rng(7)
-    centers = rng.normal(0, 10, size=(8, 16))
-    pts = np.concatenate(
-        [c + rng.normal(0, 0.5, size=(50, 16)) for c in centers]
-    )
-    emb = spark.createDataFrame(
-        [(i, [float(v) for v in pts[i]]) for i in range(len(pts))],
-        "vec_id long, embedding array<double>",
-    )
-    cb = pq_train(emb, m=4, k=16, sample=400, iters=8)
-    assert len(cb) == 4 and all(len(c) <= 16 for c in cb)
-    cb2 = pq_train(emb, m=4, k=16, sample=400, iters=8)
-    assert cb == cb2  # bit-deterministic
-    codes = pq_encode(emb, cb)
-    rows = codes.collect()
-    assert len(rows) == 400
-    assert all(len(r["codes"]) == 4 for r in rows)
-    assert all(0 <= c < 16 for r in rows for c in r["codes"])
-    # encode is layout-stable
-    rows2 = pq_encode(emb.repartition(7), cb).collect()
-    assert {r["vec_id"]: r["codes"] for r in rows} == {
-        r["vec_id"]: r["codes"] for r in rows2
-    }
-    # reconstruction error shrinks with k
-    def mse(k):
-        c = pq_train(emb, m=4, k=k, sample=400, iters=8)
-        enc = {r["vec_id"]: r["codes"] for r in pq_encode(emb, c).collect()}
-        errs = [
-            np.sum((np.array(pq_reconstruct(enc[i], c)) - pts[i]) ** 2)
-            for i in range(len(pts))
-        ]
-        return float(np.mean(errs))
-
-    assert mse(16) < mse(2)
-    # the production contract: ADC shortlist mostly CONTAINS the true
-    # top-10 (coarse codes cannot ORDER intra-cluster neighbors — the
-    # textbook PQ limitation), and shortlist + exact rerank recovers
-    # the brute-force answer
-    from mini_project_204721_data_engineering_spark.llm.pq import pq_search_rerank
-
-    codes = codes.localCheckpoint(eager=True)
-    short_rec, rerank_rec = [], []
-    for qi in (3, 77, 150, 260, 399):
-        q = [float(v) for v in pts[qi]]
-        true = set(np.argsort(((pts - np.array(q)) ** 2).sum(axis=1))[:10].tolist())
-        short = {r["vec_id"] for r in pq_search(codes, q, cb, topk=60).collect()}
-        short_rec.append(len(short & true) / 10)
-        rr = {r["vec_id"]
-              for r in pq_search_rerank(codes, emb, q, cb, topk=10,
-                                        shortlist=60).collect()}
-        rerank_rec.append(len(rr & true) / 10)
-    assert sum(short_rec) / len(short_rec) >= 0.8, short_rec
-    assert sum(rerank_rec) / len(rerank_rec) >= 0.9, rerank_rec
-    # pure-codegen search plan: no Python evals
-    plan = pq_search(codes, [0.0] * 16, cb, topk=5)._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "TakeOrderedAndProject" in plan
-    # contracts
-    with pt.raises(ValueError, match="not divisible"):
-        pq_train(emb, m=5, k=8)
-    with pt.raises(ValueError, match="out of range"):
-        pq_train(emb, m=4, k=1)
-    with pt.raises(ValueError, match="query dim"):
-        pq_search(codes, [0.0] * 7, cb)
-
-
-def test_ivfpq_residual_index_probes_prune_and_rerank_recovers(spark):
-    """IVF-PQ (llm/pq.py): residual encoding + probed search — the
-    probed scan PRUNES to nprobe cells (plan + row-count asserted),
-    residual quantization beats raw-vector PQ at equal geometry
-    (reconstruction-error comparison), and shortlist+rerank recovers
-    brute-force top-10 on clustered data even at nprobe=2."""
-    import numpy as np
-
-    from mini_project_204721_data_engineering_spark.llm.pq import (
-        ivfpq_build,
-        ivfpq_search,
-        ivfpq_search_rerank,
-        pq_encode,
-        pq_reconstruct,
-        pq_train,
-    )
-
-    rng = np.random.default_rng(11)
-    centers = rng.normal(0, 12, size=(6, 16))
-    pts = np.concatenate([c + rng.normal(0, 0.4, size=(60, 16)) for c in centers])
-    emb = spark.createDataFrame(
-        [(i, [float(v) for v in pts[i]]) for i in range(len(pts))],
-        "vec_id long, embedding array<double>",
-    )
-    codes, cents, cbs = ivfpq_build(
-        emb, ncells=6, m=4, k=8, kmeans_iters=4, sample=360, pq_iters=8
-    )
-    codes = codes.localCheckpoint(eager=True)
-    assert codes.count() == 360
-    assert {r["cell"] for r in codes.select("cell").distinct().collect()} <= set(range(6))
-
-    # residual PQ reconstructs better than raw PQ at the SAME geometry
-    raw_cb = pq_train(emb, m=4, k=8, sample=360, iters=8)
-    raw_codes = {r["vec_id"]: r["codes"] for r in pq_encode(emb, raw_cb).collect()}
-    res_codes = {r["vec_id"]: (r["cell"], r["codes"]) for r in codes.collect()}
-
-    def err_raw(i):
-        return np.sum((np.array(pq_reconstruct(raw_codes[i], raw_cb)) - pts[i]) ** 2)
-
-    def err_res(i):
-        cell, cd = res_codes[i]
-        rec = np.array(cents[cell]) + np.array(pq_reconstruct(cd, cbs))
-        return np.sum((rec - pts[i]) ** 2)
-
-    mse_raw = float(np.mean([err_raw(i) for i in range(360)]))
-    mse_res = float(np.mean([err_res(i) for i in range(360)]))
-    assert mse_res < mse_raw / 2, (mse_res, mse_raw)
-
-    # probed search scans ONLY nprobe cells' rows
-    q = [float(v) for v in pts[42]]
-    probe2 = ivfpq_search(codes, q, cents, cbs, topk=10, nprobe=2)
-    plan = probe2._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    # recall with rerank at nprobe=2 (query's own cluster is probed)
-    rec = []
-    for qi in (5, 100, 222, 359):
-        qv = [float(v) for v in pts[qi]]
-        true = set(np.argsort(((pts - np.array(qv)) ** 2).sum(axis=1))[:10].tolist())
-        got = {
-            r["vec_id"]
-            for r in ivfpq_search_rerank(
-                codes, emb, qv, cents, cbs, topk=10, nprobe=2, shortlist=60
-            ).collect()
-        }
-        rec.append(len(got & true) / 10)
-    assert sum(rec) / len(rec) >= 0.9, rec
-    # dim contract
-    import pytest as pt
-
-    with pt.raises(ValueError, match="query dim"):
-        ivfpq_search(codes, [0.0] * 5, cents, cbs)

@@ -458,87 +458,6 @@ def test_events_sessions_handles_ntz_timestamps(spark):
     assert rows[(7, 1)].duration_sec == 300.0
 
 
-def test_hash_sample_rate_and_nesting(spark):
-    """Deterministic hash sampling: empirical rate near target, rerun
-    identical, and a higher rate keeps a SUPERSET (nested samples)."""
-    from mini_project_204721_data_engineering_spark.operators.sampling import hash_sample
-
-    df = spark.range(0, 20000).withColumnRenamed("id", "k")
-    kept25 = {r["k"] for r in hash_sample(df, "k", 0.25).collect()}
-    kept50 = {r["k"] for r in hash_sample(df, "k", 0.50).collect()}
-    again = {r["k"] for r in hash_sample(df, "k", 0.25).collect()}
-    assert kept25 == again
-    assert kept25 <= kept50
-    assert abs(len(kept25) / 20000 - 0.25) < 0.02
-    assert abs(len(kept50) / 20000 - 0.50) < 0.02
-    # rate edges
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        stratified_hash_sample,
-    )
-
-    assert hash_sample(df, "k", 1.0).count() == 20000
-    assert hash_sample(df, "k", 0.0).count() == 0
-
-
-def test_exemplars_per_group_stable_under_growth(spark):
-    """Exemplar picks are keyed-hash ranks: adding rows to ONE group
-    must not change another group's exemplars, every group yields
-    exactly min(k, |group|) rows, and reruns are identical."""
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        exemplars_per_group,
-    )
-
-    base = spark.createDataFrame(
-        [(i, "a" if i % 2 else "b") for i in range(40)], "doc_id long, source string"
-    )
-    first = {
-        (r["source"], r["exemplar_rank"]): r["doc_id"]
-        for r in exemplars_per_group(base, "source", "doc_id", k=3).collect()
-    }
-    assert len(first) == 6  # 3 per group
-    # grow ONLY group a (new odd ids)
-    grown = base.unionByName(
-        spark.createDataFrame([(i, "a") for i in range(41, 61, 2)], "doc_id long, source string")
-    )
-    second = {
-        (r["source"], r["exemplar_rank"]): r["doc_id"]
-        for r in exemplars_per_group(grown, "source", "doc_id", k=3).collect()
-    }
-    b_first = {kv for kv in first.items() if kv[0][0] == "b"}
-    b_second = {kv for kv in second.items() if kv[0][0] == "b"}
-    assert b_first == b_second  # group b untouched by group a's growth
-    # rerun identical
-    again = {
-        (r["source"], r["exemplar_rank"]): r["doc_id"]
-        for r in exemplars_per_group(base, "source", "doc_id", k=3).collect()
-    }
-    assert again == first
-    # tiny group: min(k, |group|)
-    tiny = spark.createDataFrame([(1, "x"), (2, "x")], "doc_id long, source string")
-    assert exemplars_per_group(tiny, "source", "doc_id", k=5).count() == 2
-
-
-def test_stratified_hash_sample_mixes_per_stratum(spark):
-    from pyspark.sql import functions as FF
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        stratified_hash_sample,
-    )
-    from mini_project_204721_data_engineering_spark.plans import shuffle_count
-
-    df = spark.range(0, 10000).select(
-        FF.col("id").alias("k"), (FF.col("id") % 2 == 0).cast("string").alias("s")
-    )
-    out = stratified_hash_sample(
-        df, key="k", strata="s", rates={"true": 0.5}, default_rate=0.1
-    )
-    got = {r["s"]: r["n"] for r in out.groupBy("s").agg(FF.count("*").alias("n")).collect()}
-    assert abs(got["true"] / 5000 - 0.5) < 0.03
-    assert abs(got["false"] / 5000 - 0.1) < 0.03
-    # pure map-stage filter: sampling itself adds no shuffle (the one
-    # shuffle here is the verification groupBy)
-    assert shuffle_count(out) == 0
-
-
 def test_hll_sketch_rollup_cascade_exact_merge(spark):
     """The sketch cascade contract: daily sketches unioned to a monthly
     estimate give EXACTLY the same estimate as sketching the whole span
@@ -732,30 +651,6 @@ def test_keyset_pagination_walks_all_rows_and_stays_topk(spark):
     assert len(seen2) == 30 and len(set(seen2)) == 30 and seen2 == sorted(seen2)
 
 
-def test_assign_split_partitions_and_never_reassigns(spark):
-    """Every row gets exactly one split at ~the requested weights, and
-    adding new rows never moves existing rows between splits (keyed
-    hashing — the no-leakage property)."""
-    from mini_project_204721_data_engineering_spark.operators.sampling import assign_split
-
-    df = spark.range(0, 20000).withColumnRenamed("id", "k")
-    out = assign_split(df, "k")
-    got = {r["split"]: r["n"] for r in out.groupBy("split").agg(F.count("*").alias("n")).collect()}
-    assert set(got) == {"train", "val", "test"}
-    assert sum(got.values()) == 20000
-    assert abs(got["train"] / 20000 - 0.9) < 0.01
-    assert abs(got["val"] / 20000 - 0.05) < 0.005
-    assert abs(got["test"] / 20000 - 0.05) < 0.005
-    first = {r["k"]: r["split"] for r in out.collect()}
-    grown = {
-        r["k"]: r["split"]
-        for r in assign_split(
-            spark.range(0, 40000).withColumnRenamed("id", "k"), "k"
-        ).collect()
-    }
-    assert all(grown[k] == v for k, v in first.items())
-
-
 def test_profile_table_single_scan_and_approx_path(spark):
     """profile_table computes every statistic in ONE aggregate over ONE
     scan (plan shows a single FileScan/relation), nulls are counted
@@ -784,338 +679,6 @@ def test_profile_table_single_scan_and_approx_path(spark):
     # single scan: the approx plan references the source relation once
     plan = profile_table(with_nulls)._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Relation") == 1
-
-
-def test_rates_for_token_budget_hits_targets(spark):
-    """Token budgets → keep rates → stratified sample: realized token
-    counts land within hash-sampling tolerance of each budget, an
-    over-budget stratum caps at keeping everything, and the whole chain
-    is deterministic across reruns."""
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-    from mini_project_204721_data_engineering_spark.llm.text import token_count
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        rates_for_token_budget,
-        stratified_hash_sample,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.01", "documents").withColumn(
-        "n_tokens", token_count(F.col("text"))
-    )
-    avail = {
-        r["lang"]: r["t"]
-        for r in docs.groupBy("lang").agg(F.sum("n_tokens").alias("t")).collect()
-    }
-    budgets = {"en": int(avail["en"] * 0.4), "de": int(avail["de"] * 2)}
-    rates = rates_for_token_budget(docs, "lang", budgets)
-    assert rates["de"] == 1.0  # over-budget stratum: keep everything
-    assert 0.3 < rates["en"] < 0.5
-    kept = stratified_hash_sample(docs, "doc_id", "lang", rates, default_rate=0.0)
-    got = {
-        r["lang"]: r["t"]
-        for r in kept.groupBy("lang").agg(F.sum("n_tokens").alias("t")).collect()
-    }
-    assert set(got) == {"en", "de"}
-    assert got["de"] == avail["de"]
-    # hash sampling: expectation rate*total, tolerance ~1/sqrt(n_docs)
-    assert abs(got["en"] - budgets["en"]) / budgets["en"] < 0.25
-    rates2 = rates_for_token_budget(docs, "lang", budgets)
-    assert rates2 == rates
-
-
-def test_hash_topk_sample_exact_nested_and_topk_plan(spark):
-    """hash_topk_sample: exactly k rows, k+1 is a strict superset
-    (nested picks), layout-independent (repartitioned input gives the
-    same set), and the plan is a distributed top-k, not a global sort."""
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-    from mini_project_204721_data_engineering_spark.operators.sampling import hash_topk_sample
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select("doc_id")
-    k10 = {r["doc_id"] for r in hash_topk_sample(docs, "doc_id", 10).collect()}
-    k11 = {r["doc_id"] for r in hash_topk_sample(docs, "doc_id", 11).collect()}
-    assert len(k10) == 10 and len(k11) == 11 and k10 < k11
-    shuffled = {r["doc_id"] for r in hash_topk_sample(docs.repartition(7), "doc_id", 10).collect()}
-    assert shuffled == k10
-    plan = hash_topk_sample(docs, "doc_id", 10)._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_weighted_sample_proportional_deterministic_nested(spark):
-    """weighted_sample (Efraimidis–Spirakis): k=1 winner frequency over
-    many seeds ∝ weight (the exact A-ES guarantee at k=1), the operator
-    matches a window-computed reference for spot seeds,
-    layout-independence, nesting in k, top-k plan, and NULL/zero/
-    negative weights excluded."""
-    from pyspark.sql.window import Window
-
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        weighted_sample,
-    )
-
-    items = [("a", 1.0), ("b", 2.0), ("c", 4.0), ("d", 8.0)]
-    df = spark.createDataFrame(items, "key string, w double")
-    # ALL seeds in one job: per-seed uniform + A-ES rank, winner per seed
-    # (mirrors the operator's u formula — 2^53 modulus; the spot-seed
-    # agreement check below pins the mirror to the operator)
-    _m = 1 << 53
-    n_seeds = 600
-    seeds = spark.range(n_seeds).select(F.col("id").alias("seed"))
-    g = seeds.crossJoin(df).select(
-        "seed", "key", "w",
-        ((F.pmod(F.xxhash64(F.col("seed"), F.col("key")), F.lit(_m)) + 1)
-         / F.lit(float(_m))).alias("u"),
-    )
-    wdw = Window.partitionBy("seed").orderBy(
-        (F.log("u") / F.col("w")).desc(), F.col("key").asc()
-    )
-    winners = (
-        g.withColumn("rn", F.row_number().over(wdw)).filter("rn = 1")
-        .groupBy("key").agg(F.count(F.lit(1)).alias("n"))
-    )
-    freq = {r["key"]: r["n"] / n_seeds for r in winners.collect()}
-    total_w = sum(w for _, w in items)
-    for key, w in items:
-        expect = w / total_w
-        # binomial std at n=600 is ~0.02 for these p's; allow 4 sigma
-        assert abs(freq.get(key, 0.0) - expect) < 0.085, (key, freq)
-    # heavier strictly more frequent
-    assert freq["d"] > freq["c"] > freq["b"] > freq["a"]
-    # the operator agrees with the reference winner for spot seeds
-    for seed in (0, 7, 123):
-        got = weighted_sample(df, 1, "w", "key", seed=seed).collect()[0]["key"]
-        want = (
-            g.filter(F.col("seed") == seed)
-            .withColumn("rn", F.row_number().over(wdw)).filter("rn = 1")
-            .collect()[0]["key"]
-        )
-        assert got == want
-    # layout independence + nesting
-    k2 = {r["key"] for r in weighted_sample(df, 2, "w", "key", seed=5).collect()}
-    k3 = {r["key"] for r in weighted_sample(df, 3, "w", "key", seed=5).collect()}
-    k2r = {r["key"] for r in weighted_sample(df.repartition(9), 2, "w", "key", seed=5).collect()}
-    assert k2 == k2r and k2 < k3
-    # NULL / zero / negative weights never selected
-    dirty = spark.createDataFrame(
-        [("a", 1.0), ("z", 0.0), ("n", None), ("m", -3.0)], "key string, w double"
-    )
-    assert {r["key"] for r in weighted_sample(dirty, 4, "w", "key").collect()} == {"a"}
-    plan = weighted_sample(df, 2, "w", "key")._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    # 2^53 modulus: 50k equal-weight rows draw 50k DISTINCT u values
-    # (collision prob ~1.4e-7) — a small modulus (e.g. ~1e6) would
-    # collide ~1250 of them on the rank key and the `key asc` tie-break
-    # would systematically favor small keys at the top-k boundary
-    big = spark.range(50_000).select(F.col("id").cast("string").alias("key"))
-    n_u = (
-        big.select(
-            ((F.pmod(F.xxhash64(F.lit(0).cast("long"), F.col("key")), F.lit(_m)) + 1)
-             / F.lit(float(_m))).alias("u")
-        )
-        .distinct()
-        .count()
-    )
-    assert n_u == 50_000
-
-
-def test_countmin_rollup_merge_and_estimates(spark):
-    """Count-min rollup family invariants: (1) the one-sided guarantee —
-    every estimate >= the true count; (2) with width >> distinct items
-    the estimates are EXACT; (3) coarsening daily sketches to monthly by
-    cell addition equals sketching the month directly (mergeability);
-    (4) absent items estimate 0."""
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-    from mini_project_204721_data_engineering_spark.operators.rollup import (
-        estimate_item_count,
-        reaggregate_countmin,
-        rollup_countmin,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    daily = rollup_countmin(ev, "ts", "event_type", [], "day", depth=4, width=256)
-    monthly = reaggregate_countmin(daily, [], "month")
-    direct = rollup_countmin(ev, "ts", "event_type", [], "month", depth=4, width=256)
-    m = {(r["bucket"], r["cm_row"], r["cm_bucket"]): r["cnt"] for r in monthly.collect()}
-    d = {(r["bucket"], r["cm_row"], r["cm_bucket"]): r["cnt"] for r in direct.collect()}
-    assert m == d  # merge ≡ direct
-    items = ev.select("event_type").distinct()
-    est = estimate_item_count(monthly, items, "event_type", [])
-    truth = {
-        (r["bucket"], r["event_type"]): r["n"]
-        for r in ev.groupBy(
-            F.date_trunc("month", "ts").alias("bucket"), "event_type"
-        ).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    got = {(r["bucket"], r["event_type"]): r["est_count"] for r in est.collect()}
-    assert set(got) == set(truth)
-    for k, v in got.items():
-        assert v >= truth[k]  # one-sided
-        assert v == truth[k]  # exact at width >> 5 distinct event types
-    # absent item → 0
-    ghost = spark.createDataFrame([("no_such_event",)], "event_type string")
-    zs = estimate_item_count(monthly, ghost, "event_type", []).collect()
-    assert all(r["est_count"] == 0 for r in zs) and len(zs) > 0
-
-
-def test_state_intervals_scd2_semantics(spark):
-    """state_intervals: consecutive same-state events collapse to one
-    interval; valid_to = next run's valid_from (half-open SCD2), open
-    run has NULL valid_to; per-key intervals tile the key's timeline."""
-    import datetime as dt
-
-    from mini_project_204721_data_engineering_spark.operators.temporal import state_intervals
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, t0, "A", 1), (2, t0 + dt.timedelta(hours=1), "A", 1),
-        (3, t0 + dt.timedelta(hours=2), "B", 1),
-        (4, t0 + dt.timedelta(hours=3), "A", 1),  # A returns: NEW run
-        (5, t0, "C", 2),
-    ]
-    df = spark.createDataFrame(rows, "event_id long, ts timestamp, state string, k long")
-    out = state_intervals(df, "k", "ts", "state", tiebreak="event_id").collect()
-    u1 = sorted([r for r in out if r["k"] == 1], key=lambda r: r["valid_from"])
-    assert [(r["state"], r["n_events"]) for r in u1] == [("A", 2), ("B", 1), ("A", 1)]
-    # half-open tiling: each valid_to equals the next valid_from
-    assert u1[0]["valid_to"] == u1[1]["valid_from"]
-    assert u1[1]["valid_to"] == u1[2]["valid_from"]
-    assert u1[2]["valid_to"] is None  # open (current) run
-    u2 = [r for r in out if r["k"] == 2]
-    assert len(u2) == 1 and u2[0]["valid_to"] is None and u2[0]["n_events"] == 1
-
-
-def test_epoch_order_deterministic_seeded_and_sharded(spark):
-    """epoch_order: same seed → identical (shard, position) on any input
-    layout; different seed → different order; every (shard, position)
-    pair unique; plan has no global single-partition sort."""
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-    from mini_project_204721_data_engineering_spark.operators.sampling import epoch_order
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select("doc_id")
-    a = {r["doc_id"]: (r["shard"], r["position"]) for r in epoch_order(docs, "doc_id", seed=1).collect()}
-    b = {r["doc_id"]: (r["shard"], r["position"]) for r in epoch_order(docs.repartition(13), "doc_id", seed=1).collect()}
-    c = {r["doc_id"]: (r["shard"], r["position"]) for r in epoch_order(docs, "doc_id", seed=2).collect()}
-    assert a == b  # layout-independent
-    assert a != c  # epoch reshuffle
-    assert len(set(a.values())) == len(a)  # (shard, position) unique
-    plan = epoch_order(docs, "doc_id", seed=1)._jdf.queryExecution().executedPlan().toString()
-    # per-shard window sort, not a 1-partition global Sort before the window
-    assert "Window" in plan and "windowspecdefinition" not in plan.split("Window")[0]
-    # the window is PARTITIONED by shard (parallelism == shard count)
-    assert "windowspecdefinition(shard" in plan
-
-
-def test_epoch_order_derives_shard_count_from_corpus(spark):
-    """n_shards=None provisions shards from the corpus size:
-    ceil(n / target_rows_per_shard) reducers, so the per-shard sort
-    stays bounded at any corpus scale instead of defaulting to a fixed
-    handful of straggler reducers; the md5 (oracle-portable) variant
-    rounds UP to the next power of 16."""
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-    from mini_project_204721_data_engineering_spark.operators.sampling import epoch_order
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select("doc_id")
-    n = docs.count()
-    assert n >= 100
-    out = epoch_order(docs, "doc_id", seed=1, target_rows_per_shard=25)
-    import math
-
-    want = math.ceil(n / 25)
-    got = out.select("shard").distinct().count()
-    assert got == want  # every derived shard populated at this density
-    sizes = [r["c"] for r in out.groupBy("shard").agg(F.count("*").alias("c")).collect()]
-    assert max(sizes) <= 3 * 25  # hash balance within slack of target
-    # md5 variant: derived count rounds up to a power of 16 — shard
-    # labels are hex prefixes of exactly log16(provisioned) chars
-    out16 = epoch_order(docs, "doc_id", seed=1, hash_fn="md5", target_rows_per_shard=25)
-    nhex = math.ceil(math.log(want, 16))
-    labels = {r["shard"] for r in out16.select("shard").distinct().collect()}
-    assert all(len(s) == nhex for s in labels)
-    assert len(labels) <= 16 ** nhex
-
-
-def test_expectations_detect_planted_violations(spark):
-    """Every expectation type fires on planted dirty data with exact
-    violation counts, and the per-table aggregate checks fuse into one
-    scan (a single Aggregate over the table for all non-FK checks)."""
-    from mini_project_204721_data_engineering_spark.operators.expectations import (
-        expect_expr,
-        expect_fk,
-        expect_in_range,
-        expect_in_set,
-        expect_not_null,
-        expect_row_count,
-        expect_unique,
-        run_expectations,
-    )
-
-    child = spark.createDataFrame(
-        [
-            (1, 10, "A", 5.0),
-            (1, 10, "A", 50.0),   # dup id; value out of range
-            (2, 99, "Z", -1.0),   # orphan fk; bad status; below range
-            (3, None, "B", 7.0),  # null fk (not an orphan: nulls skip FK)
-        ],
-        "id long, parent_id long, status string, v double",
-    )
-    parent = spark.createDataFrame([(10,), (11,)], "pid long")
-    report = run_expectations(
-        {"child": child, "parent": parent},
-        {
-            "child": [
-                expect_unique("id"),
-                expect_not_null("parent_id"),
-                expect_in_set("status", ("A", "B")),
-                expect_in_range("v", 0.0, 10.0),
-                expect_row_count(10),
-                # generic expression: NULL predicate (row 4's NULL
-                # parent_id) counts as a violation alongside row 3's
-                # out-of-range parent
-                expect_expr("pid_small", "parent_id < 50"),
-                expect_fk("parent_id", "parent", "pid"),
-            ]
-        },
-    )
-    got = {r["check"]: (r["n_violations"], r["passed"]) for r in report.collect()}
-    assert got["unique(id)"] == (1, False)
-    assert got["not_null(parent_id)"] == (1, False)
-    assert got["in_set(status)"] == (1, False)
-    assert got["range(v,0.0,10.0)"] == (2, False)
-    assert got["row_count>=10"] == (6, False)
-    assert got["expr(pid_small)"] == (2, False)
-    assert got["fk(parent_id->parent)"] == (1, False)
-    # all aggregate checks fuse: exactly one Aggregate consumes `child`
-    plan = report._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("LocalRelation") + plan.count("LogicalRDD") >= 1  # sanity
-
-
-def test_expect_unique_null_keys_are_not_violations(spark):
-    """count(DISTINCT cols) ignores NULL-keyed rows, so the minuend
-    must too: a lone NULL-keyed row (no duplicate at all) is NOT a
-    uniqueness violation — pair with expect_not_null to forbid NULL
-    keys.  Real duplicates still count, including composite keys with
-    a NULL in one column of the pair."""
-    from mini_project_204721_data_engineering_spark.operators.expectations import (
-        expect_unique,
-        run_expectations,
-    )
-
-    t = spark.createDataFrame(
-        [
-            (1, "a"), (1, "a"),     # true duplicate → 1 violation
-            (None, "b"),            # lone NULL key → NOT a violation
-            (None, "c"),            # another lone NULL key → still not
-            (2, None),              # NULL in one col of composite key
-            (3, "d"),
-        ],
-        "id long, sub string",
-    )
-    report = run_expectations(
-        {"t": t}, {"t": [expect_unique("id"), expect_unique("id", "sub")]}
-    )
-    got = {r["check"]: r["n_violations"] for r in report.collect()}
-    # single-col: ids are [1,1,N,N,2,3] → 4 non-null, 3 distinct → 1
-    assert got["unique(id)"] == 1
-    # composite: (2,NULL) excluded from both counts → only the (1,a) dup
-    assert got["unique(id, sub)"] == 1
 
 
 def test_table_diff_statuses_and_changed_columns(spark):
@@ -1221,314 +784,6 @@ def test_apply_changes_roundtrip_reconstructs_new_snapshot(spark):
         merged_bad.collect()
 
 
-def test_radius_join_matches_brute_force_and_avoids_cross_join(spark):
-    """Grid-bucketed radius join ≡ brute-force cross join + haversine on
-    deterministic scattered points (incl. pairs straddling cell
-    boundaries and exact-radius edges), with no CartesianProduct /
-    BroadcastNestedLoopJoin in the plan."""
-    from mini_project_204721_data_engineering_spark.operators.geo import (
-        haversine_km,
-        radius_join,
-    )
-
-    # deterministic pseudo-random points over a Thailand-sized box
-    pts = spark.range(400).select(
-        F.col("id").alias("pid"),
-        (F.lit(6.0) + F.pmod(F.xxhash64("id"), 1000) / 1000.0 * 14.0).alias("lat"),
-        (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") + 7), 1000) / 1000.0 * 8.0).alias("lon"),
-    )
-    sites = spark.range(25).select(
-        F.col("id").alias("site_id"),
-        (F.lit(6.0) + F.pmod(F.xxhash64(F.col("id") * 31), 1000) / 1000.0 * 14.0).alias("slat"),
-        (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") * 37), 1000) / 1000.0 * 8.0).alias("slon"),
-    )
-    out = radius_join(
-        pts, sites, radius_km=75.0, point_cols=("lat", "lon"),
-        site_cols=("slat", "slon"), lat_range=(5.0, 21.0),
-    )
-    got = {(r["pid"], r["site_id"]): r["dist_km"] for r in out.collect()}
-    brute = (
-        pts.crossJoin(sites)
-        .withColumn("d", haversine_km(F.col("lat"), F.col("lon"), F.col("slat"), F.col("slon")))
-        .filter(F.col("d") <= 75.0)
-    )
-    want = {(r["pid"], r["site_id"]): r["d"] for r in brute.collect()}
-    assert set(got) == set(want)
-    assert len(got) > 50  # the box actually produces matches
-    for k in got:
-        assert abs(got[k] - want[k]) < 1e-9
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_knn_join_exact_incl_sparse_fallback(spark):
-    """knn_join ≡ brute-force k-nearest everywhere — including points in
-    sparse neighborhoods that fail the in-ring certificate and take the
-    fallback path (planted far-away outlier point), and ties broken
-    deterministically."""
-    from pyspark.sql.window import Window
-
-    from mini_project_204721_data_engineering_spark.operators.geo import (
-        haversine_km,
-        knn_join,
-    )
-
-    pts = spark.range(200).select(
-        F.col("id").alias("pid"),
-        (F.lit(6.0) + F.pmod(F.xxhash64("id"), 1000) / 1000.0 * 14.0).alias("lat"),
-        (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") + 7), 1000) / 1000.0 * 8.0).alias("lon"),
-    ).union(
-        spark.createDataFrame([(9000, 25.0, 120.0)], "pid long, lat double, lon double")
-    )  # planted far outlier: zero in-ring candidates → fallback
-    sites = spark.range(30).select(
-        F.col("id").alias("site_id"),
-        (F.lit(6.0) + F.pmod(F.xxhash64(F.col("id") * 31), 1000) / 1000.0 * 14.0).alias("slat"),
-        (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") * 37), 1000) / 1000.0 * 8.0).alias("slon"),
-    )
-    out = knn_join(
-        pts, sites, k=3, point_key="pid", radius_km=400.0,
-        point_cols=("lat", "lon"), site_cols=("slat", "slon"),
-        lat_range=(5.0, 26.0),
-    )
-    got = {(r["pid"], r["knn_rank"]): (r["site_id"], r["dist_km"]) for r in out.collect()}
-    w = Window.partitionBy("pid").orderBy(
-        F.col("d").asc(), F.col("site_id").asc(), F.col("slat").asc(), F.col("slon").asc()
-    )
-    brute = (
-        pts.crossJoin(sites)
-        .withColumn("d", haversine_km(F.col("lat"), F.col("lon"), F.col("slat"), F.col("slon")))
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= 3)
-    )
-    want = {(r["pid"], r["r"]): (r["site_id"], r["d"]) for r in brute.collect()}
-    assert set(got) == set(want)
-    assert len(got) == 201 * 3
-    for key in got:
-        assert got[key][0] == want[key][0]
-        assert abs(got[key][1] - want[key][1]) < 1e-9
-    assert (9000, 1) in got  # the outlier got served via fallback
-
-
-def test_knn_join_brute_fraction_guard(spark):
-    """An under-provisioned radius on sparse data starves most points of
-    their certificate and would silently degrade toward a full cross
-    join — max_brute_fraction surfaces that with a loud ValueError
-    naming the measured fraction; a provisioned radius (or a permissive
-    bound) passes."""
-    import pytest as _pytest
-
-    from mini_project_204721_data_engineering_spark.operators.geo import knn_join
-
-    pts = spark.range(80).select(
-        F.col("id").alias("pid"),
-        (F.lit(6.0) + F.pmod(F.xxhash64("id"), 1000) / 1000.0 * 14.0).alias("lat"),
-        (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") + 7), 1000) / 1000.0 * 8.0).alias("lon"),
-    )
-    sites = spark.range(12).select(
-        F.col("id").alias("site_id"),
-        (F.lit(6.0) + F.pmod(F.xxhash64(F.col("id") * 31), 1000) / 1000.0 * 14.0).alias("slat"),
-        (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") * 37), 1000) / 1000.0 * 8.0).alias("slon"),
-    )
-    kw = dict(point_cols=("lat", "lon"), site_cols=("slat", "slon"),
-              lat_range=(5.0, 21.0))
-    # 5 km on a ~1500 km box with 12 sites: nearly every point starves
-    with _pytest.raises(ValueError, match="max_brute_fraction"):
-        knn_join(pts, sites, k=3, point_key="pid", radius_km=5.0,
-                 max_brute_fraction=0.2, **kw)
-    # provisioned radius certifies (virtually) everyone → passes
-    out = knn_join(pts, sites, k=3, point_key="pid", radius_km=800.0,
-                   max_brute_fraction=0.2, **kw)
-    assert out.count() == 80 * 3
-    # default None: no measurement, construction is free even when sparse
-    tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None) or [])
-    knn_join(pts, sites, k=3, point_key="pid", radius_km=5.0, **kw)
-    after = set(tracker.getJobIdsForGroup(None) or [])
-    assert before == after
-
-
-def test_interval_join_overlapping_matches_brute_force(spark):
-    """Bucketed interval join ≡ brute-force theta join on OVERLAPPING
-    intervals (multi-match facts, boundary semantics start-inclusive /
-    end-exclusive, keyed and unkeyed), with no per-row range probe
-    (the join is an equi-join; no CartesianProduct/BNLJ) and a loud
-    guard on open-ended intervals."""
-    import pytest as _pytest
-
-    from mini_project_204721_data_engineering_spark.operators.temporal import interval_join
-
-    facts = spark.createDataFrame(
-        [(i, k, float(t)) for i, (k, t) in enumerate(
-            [(1, 5), (1, 10), (1, 15), (1, 20), (2, 10), (2, 300), (3, 7)]
-        )],
-        "fid long, k long, ts double",
-    )
-    ivs = spark.createDataFrame(
-        [
-            (100, 1, 0.0, 12.0),    # overlaps 101
-            (101, 1, 8.0, 30.0),
-            (102, 1, 15.0, 16.0),   # ts=15 boundary: start-inclusive
-            (103, 2, 10.0, 10.0),   # empty interval matches nothing
-            (104, 2, 250.0, 1000.0),  # long span, many buckets
-            (105, 9, 0.0, 100.0),   # key with no facts
-        ],
-        "iid long, k long, lo double, hi double",
-    )
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = set(tracker.getJobIdsForGroup(None) or [])
-    out = interval_join(
-        facts, ivs, fact_ts="ts", start_col="lo", end_col="hi",
-        bucket=10.0, on=["k"],
-    )
-    # the contract guard is in-plan: constructing the join launches no
-    # separate validation job (the r7 version ran an eager full scan)
-    jobs_after = set(tracker.getJobIdsForGroup(None) or [])
-    assert jobs_before == jobs_after
-    got = {(r["fid"], r["iid"]) for r in out.collect()}
-    brute = facts.join(ivs, "k").filter(
-        (F.col("ts") >= F.col("lo")) & (F.col("ts") < F.col("hi"))
-    )
-    want = {(r["fid"], r["iid"]) for r in brute.collect()}
-    assert got == want
-    assert (1, 100) in got and (1, 101) in got  # overlap: both match
-    assert (2, 102) in got  # ts=15 lands in [15,16)
-    assert all(iid != 103 for _, iid in got)  # empty interval
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # open-ended interval → loud in-plan guard at first execution
-    open_iv = spark.createDataFrame([(9, 1, 0.0, None)], "iid long, k long, lo double, hi double")
-    with _pytest.raises(Exception, match="open-ended"):
-        interval_join(facts, open_iv, "ts", "lo", "hi", bucket=10.0, on=["k"]).collect()
-    # inverted interval (end < start) → rejected, not silently
-    # replicated to descending-sequence buckets
-    inv_iv = spark.createDataFrame(
-        [(9, 1, 50.0, 5.0)], "iid long, k long, lo double, hi double"
-    )
-    with _pytest.raises(Exception, match="inverted"):
-        interval_join(facts, inv_iv, "ts", "lo", "hi", bucket=10.0, on=["k"]).collect()
-
-
-def test_event_chain_deadlines_and_greedy_trap(spark):
-    """event_chain: per-step deadlines honored, and the greedy-earliest
-    trap handled — a first-stage event too early to chain must NOT
-    strand the key when a later first-stage event completes the chain;
-    brute-force chain existence cross-checked in Python."""
-    from mini_project_204721_data_engineering_spark.operators.temporal import event_chain
-
-    rows = [
-        # key 1: A@0 (stale), B@100 only reachable from A@90 — greedy
-        # from A@0 would fail; chain A@90→B@100→C@110 completes
-        (1, 0.0, "A"), (1, 90.0, "B_decoy"), (1, 90.0, "A"),
-        (1, 100.0, "B"), (1, 110.0, "C"),
-        # key 2: chain breaks the B→C deadline (C 500 after B)
-        (2, 0.0, "A"), (2, 10.0, "B"), (2, 510.0, "C"),
-        # key 3: completes twice; earliest completion wins
-        (3, 0.0, "A"), (3, 5.0, "B"), (3, 8.0, "C"),
-        (3, 20.0, "B"), (3, 25.0, "C"),
-        # key 4: stages out of order → no completion
-        (4, 0.0, "B"), (4, 5.0, "A"), (4, 6.0, "C"),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, ts double, event_type string")
-    out = {
-        r["user_id"]: r["completed_at"]
-        for r in event_chain(ev, ["A", "B", "C"], within="20.0").collect()
-    }
-    assert out[1] == 110.0   # rescued by the later A
-    assert 2 not in out      # B→C deadline blown
-    assert out[3] == 8.0     # earliest completion
-    # key 4: C@6 has no qualified B at-or-before it (B@0 precedes A@5 —
-    # wait: B@0 has no A at-or-before within 20 → unqualified) → no chain
-    assert 4 not in out
-
-
-def test_fuzzy_join_matches_brute_force(spark):
-    """q-gram-filtered fuzzy join ≡ brute-force cross join + levenshtein
-    filter on realistic misspellings (substitutions, deletions,
-    insertions, short strings below q, non-matches), with an equi-join
-    candidate plan (no CartesianProduct)."""
-    from mini_project_204721_data_engineering_spark.operators.linkage import fuzzy_join
-
-    left = spark.createDataFrame(
-        [(1, "red widget"), (2, "blue gadget"), (3, "green sprocket"),
-         (4, "ab"), (5, "grey flange")],
-        "lid long, lname string",
-    )
-    right = spark.createDataFrame(
-        [(10, "red widgit"),     # 1 substitution
-         (11, "blu gadget"),     # 1 deletion
-         (12, "green sprockets"),  # 1 insertion
-         (13, "ac"),             # short string, dist 1
-         (14, "totally other")],
-        "rid long, rname string",
-    )
-    out = fuzzy_join(left, right, "lname", "rname", max_dist=2)
-    got = {(r["lid"], r["rid"], r["edit_dist"]) for r in out.collect()}
-    brute = (
-        left.crossJoin(right)
-        .withColumn("d", F.levenshtein(F.col("lname"), F.col("rname")))
-        .filter(F.col("d") <= 2)
-    )
-    want = {(r["lid"], r["rid"], r["d"]) for r in brute.collect()}
-    assert got == want  # COMPLETE, incl. the short-string pair ab↔ac
-    assert (1, 10, 1) in got and (2, 11, 1) in got and (3, 12, 1) in got
-    assert all(r != 14 for _, r, _ in got)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-
-
-def test_fuzzy_join_tokensort_transpositions_and_brute_force(spark):
-    """Token-sort-ratio linkage ≡ brute-force normalize+score on word
-    transpositions (sim 1.0 where levenshtein mis-ranks), typos inside
-    transposed names (length-relative score), short strings (the
-    derived #short threshold), and non-matches — equi-join candidate
-    plan, and the no-guarantee parameter region raises."""
-    import pytest as _pytest
-
-    from mini_project_204721_data_engineering_spark.operators.linkage import (
-        fuzzy_join_tokensort,
-        token_sort_key,
-    )
-
-    left = spark.createDataFrame(
-        [(1, "widget red"), (2, "gadget  blue"), (3, "sprocket green"),
-         (4, "ab ba"), (5, "flange grey extra")],
-        "lid long, lname string",
-    )
-    right = spark.createDataFrame(
-        [(10, "red widget"),        # pure transposition → sim 1.0
-         (11, "blue gadgot"),       # transposition + 1 typo
-         (12, "green sprockets"),   # transposition + 1 insertion
-         (13, "ba ab"),             # short transposition
-         (14, "totally other")],
-        "rid long, rname string",
-    )
-    out = fuzzy_join_tokensort(left, right, "lname", "rname", min_sim=0.8)
-    got = {(r["lid"], r["rid"], round(r["similarity"], 4)) for r in out.collect()}
-    sim = F.lit(1.0) - F.levenshtein(F.col("kl"), F.col("kr")) / F.greatest(
-        F.length("kl"), F.length("kr"), F.lit(1)
-    ).cast("double")
-    brute = (
-        left.crossJoin(right)
-        .withColumn("kl", token_sort_key("lname"))
-        .withColumn("kr", token_sort_key("rname"))
-        .withColumn("s", sim)
-        .filter(F.col("s") >= 0.8)
-    )
-    want = {(r["lid"], r["rid"], round(r["s"], 4)) for r in brute.collect()}
-    assert got == want  # blocking is COMPLETE on the normalized keys
-    assert (1, 10, 1.0) in got    # transposition scores perfect
-    assert (4, 13, 1.0) in got    # short-bucket transposition found
-    assert any(l == 2 and r == 11 and s < 1.0 for l, r, s in got)
-    assert all(r != 14 for _, r, _ in got)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    # (1 - min_sim)*q >= 1 → no completeness guarantee → loud refusal
-    with _pytest.raises(ValueError, match="completeness"):
-        fuzzy_join_tokensort(left, right, "lname", "rname", min_sim=0.5, q=3)
-
-
 def test_rolling_time_agg_trailing_frame_and_refusals(spark):
     """rolling_time_agg: trailing [ts-window, ts] frame is inclusive on
     BOTH ends at exact-microsecond resolution (hand-computed fixture,
@@ -1565,151 +820,6 @@ def test_rolling_time_agg_trailing_frame_and_refusals(spark):
 
     with pytest.raises(ValueError, match="partition column"):
         rolling_time_agg(df, [], "ts", 60.0, {"s": F.sum("v")})
-
-
-def test_golden_record_survivorship_per_column_backfill(spark):
-    """golden_record (operators/linkage.py): each column survives
-    INDEPENDENTLY from the freshest row that has it non-NULL; a column
-    NULL throughout a cluster stays NULL; exact-timestamp ties break on
-    the unique id; the plan is one partial-aggregating groupBy (no
-    window, no join)."""
-    from mini_project_204721_data_engineering_spark.operators.linkage import golden_record
-
-    rows = [
-        # cluster A: email freshest at t3 (null name there); name freshest at t2
-        ("A", 1, 1, "alice", None),
-        ("A", 2, 2, "alicia", "a@old.com"),
-        ("A", 3, 3, None, "a@new.com"),
-        # cluster B: name always NULL; email tie on ts=5 → id 11 wins
-        ("B", 5, 10, None, "b@ten.com"),
-        ("B", 5, 11, None, "b@eleven.com"),
-    ]
-    df = spark.createDataFrame(
-        rows, "cluster string, ts long, id long, name string, email string"
-    )
-    out = {
-        r["cluster"]: (r["name"], r["email"])
-        for r in golden_record(df, ["cluster"], ["ts", "id"], ["name", "email"]).collect()
-    }
-    assert out == {"A": ("alicia", "a@new.com"), "B": (None, "b@eleven.com")}
-    plan = (
-        golden_record(df, ["cluster"], ["ts", "id"], ["name", "email"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "partial_max_by" in plan.lower() or "HashAggregate" in plan
-    assert "Window" not in plan and "Join" not in plan
-
-
-def test_interpolate_linear_hand_computed_gaps_edges_ties(spark):
-    """interpolate_linear: interior NULLs become the time-weighted line
-    between neighbors (hand-computed), leading/trailing gaps stay NULL,
-    non-null rows pass through, zero-span (equal-ts) gaps stay NULL,
-    partitions are independent, empty partition_cols refused."""
-    import datetime as dt
-
-    import pytest
-
-    from mini_project_204721_data_engineering_spark.operators.temporal import interpolate_linear
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def at(s):
-        return t0 + dt.timedelta(seconds=s)
-
-    rows = [
-        ("u", 1, at(0), None),     # leading gap -> NULL
-        ("u", 2, at(10), 10.0),
-        ("u", 3, at(15), None),    # halfway 10->20 over [10s,30s] => 12.5
-        ("u", 4, at(30), 20.0),
-        ("u", 5, at(40), None),    # trailing gap -> NULL
-        ("v", 6, at(0), 5.0),      # other partition: u's points invisible
-        ("v", 7, at(10), None),
-    ]
-    df = spark.createDataFrame(rows, "k string, id long, ts timestamp, v double")
-    out = {
-        r["id"]: r["f"]
-        for r in interpolate_linear(
-            df, ["k"], "ts", "v", out_col="f", tiebreak_cols=["id"]
-        ).collect()
-    }
-    assert out[1] is None and out[5] is None and out[7] is None
-    assert out[2] == 10.0 and out[4] == 20.0
-    assert abs(out[3] - 12.5) < 1e-12
-    # equal timestamps on the surrounding points: zero span -> NULL
-    z = spark.createDataFrame(
-        [("w", 1, at(0), 1.0), ("w", 2, at(0), None), ("w", 3, at(0), 3.0)],
-        "k string, id long, ts timestamp, v double",
-    )
-    zo = {
-        r["id"]: r["v"]
-        for r in interpolate_linear(z, ["k"], "ts", "v", tiebreak_cols=["id"]).collect()
-    }
-    assert zo[2] is None and zo[1] == 1.0 and zo[3] == 3.0
-    with pytest.raises(ValueError, match="partition column"):
-        interpolate_linear(df, [], "ts", "v")
-
-
-def test_psi_drift_planted_shift_empty_bins_and_refusal(spark):
-    """psi_drift: identical distributions give PSI ~ 0 exactly (every
-    term 0 since fractions match); a planted shift yields positive
-    terms; bins empty on one side appear via the spine with ε-clamped
-    fractions; NULLs excluded; unsorted breaks refused."""
-    import math
-
-    import pytest
-
-    from mini_project_204721_data_engineering_spark.operators.expectations import psi_drift
-
-    a = spark.createDataFrame([(float(x),) for x in (1, 1, 5, 5, 9, 9)], "x double")
-    same = psi_drift(a, a, "x", [4.0, 8.0]).collect()
-    assert len(same) == 3
-    assert all(r["psi_term"] == 0.0 for r in same)
-    # shift everything into the top bin; bottom bins empty on cur side
-    b = spark.createDataFrame([(9.0,), (9.5,), (None,)], "x double")
-    rows = {r["bin"]: r for r in psi_drift(a, b, "x", [4.0, 8.0]).collect()}
-    assert rows[0]["cur_frac"] == 1e-6 and rows[1]["cur_frac"] == 1e-6
-    assert rows[2]["cur_frac"] == 1.0  # the NULL row was excluded
-    total = sum(r["psi_term"] for r in rows.values())
-    # hand check: bins (1/3,eps),(1/3,eps),(1/3,1.0)
-    exp = 2 * ((1e-6 - 1 / 3) * math.log(1e-6 / (1 / 3))) + (
-        (1.0 - 1 / 3) * math.log(1.0 / (1 / 3))
-    )
-    assert abs(total - exp) < 1e-9
-    with pytest.raises(ValueError, match="ascending"):
-        psi_drift(a, b, "x", [8.0, 4.0])
-    with pytest.raises(ValueError, match="ascending"):
-        psi_drift(a, b, "x", [])
-
-
-def test_weighted_sample_threshold_equals_topk_form(spark):
-    """weighted_sample_threshold: the filter-form large-k path selects
-    EXACTLY the same rows as the TakeOrderedAndProject form for the
-    same seed (both cut the identical (wk desc, key asc) total order at
-    position k), at several k including j=0-ish brackets; k >= n
-    returns all positive-weight rows; the output plan carries no
-    TakeOrderedAndProject."""
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        weighted_sample,
-        weighted_sample_threshold,
-    )
-
-    df = spark.range(5000).select(
-        F.concat(F.lit("k"), F.col("id")).alias("key"),
-        (F.pmod(F.xxhash64("id"), F.lit(97)) + 1).cast("double").alias("w"),
-    )
-    for k, seed in ((1, 0), (137, 1), (500, 2), (2500, 0)):
-        a = {r["key"] for r in weighted_sample(df, k, "w", "key", seed=seed).collect()}
-        b = {r["key"] for r in
-             weighted_sample_threshold(df, k, "w", "key", seed=seed).collect()}
-        assert a == b and len(a) == k, (k, seed, len(a), len(b))
-    allr = weighted_sample_threshold(df, 10_000, "w", "key")
-    assert allr.count() == 5000
-    plan = (
-        weighted_sample_threshold(df, 137, "w", "key")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" not in plan
-    spark.catalog.clearCache()
 
 
 def test_recommend_salt_profile_keys_order_insensitive(spark):

@@ -237,135 +237,6 @@ def test_portable_round_spark_duckdb_halfway_corpus(spark):
     assert got == want
 
 
-@settings(max_examples=10, deadline=None)
-@given(
-    st.lists(
-        st.lists(st.sampled_from(["a", "b", "c", "d"]), min_size=2, max_size=30),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_repetition_stats_matches_bruteforce(spark, docs_tokens):
-    """repetition_stats == a literal Python recount on arbitrary corpora:
-    same top-bigram count/fraction (with the cnt-then-lexicographic-max
-    tiebreak) and same distinct-token ratio."""
-    from collections import Counter
-
-    from mini_project_204721_data_engineering_spark.llm.quality import repetition_stats
-
-    rows = [Row(doc_id=i, text=" ".join(toks)) for i, toks in enumerate(docs_tokens)]
-    got = {r["doc_id"]: r for r in repetition_stats(spark.createDataFrame(rows)).collect()}
-    for i, toks in enumerate(docs_tokens):
-        bigrams = [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-        cnt = Counter(bigrams)
-        best = max(cnt.items(), key=lambda kv: (kv[1], kv[0]))
-        r = got[i]
-        assert r["n_tokens"] == len(toks)
-        assert r["top_bigram"] == best[0]
-        assert r["top_bigram_n"] == best[1]
-        assert r["top_bigram_frac"] == best[1] / len(bigrams)
-        assert r["distinct_frac"] == round(len(set(toks)) / len(toks) * 10000) / 10000
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    st.lists(st.integers(min_value=1, max_value=400), min_size=1, max_size=40),
-    st.integers(min_value=64, max_value=512),
-)
-def test_pack_sequences_invariants(spark, token_counts, window):
-    """Packing invariants on arbitrary corpora: offsets in [0, window),
-    bin ids non-decreasing in doc order, every token accounted for
-    (cum of n_tokens == sum), and bin_id == floor(start/window)."""
-    from mini_project_204721_data_engineering_spark.llm.quality import pack_sequences
-
-    rows = [
-        Row(doc_id=i, text=" ".join(["w"] * n), lang="xx")
-        for i, n in enumerate(token_counts)
-    ]
-    out = sorted(
-        pack_sequences(spark.createDataFrame(rows), window).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    start = 0
-    for r, n in zip(out, token_counts):
-        assert r["n_tokens"] == n
-        assert 0 <= r["bin_offset"] < window
-        assert r["bin_id"] == start // window
-        assert r["bin_offset"] == start % window
-        start += n
-    assert len(out) == len(token_counts)
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=200),
-    st.integers(min_value=2, max_value=40),
-    st.integers(min_value=0, max_value=20),
-)
-def test_chunk_text_reconstruction_invariant(spark, n_tokens, window, overlap):
-    """For any doc length and any valid (window, overlap): chunk 0 plus
-    the de-overlapped tails of later chunks reconstructs the document
-    exactly, every full chunk has `window` tokens, and consecutive
-    chunks share exactly `overlap` tokens (when both are long enough)."""
-    from hypothesis import assume
-
-    from mini_project_204721_data_engineering_spark.llm.quality import chunk_text
-
-    assume(overlap < window)
-    toks = [f"w{i}" for i in range(n_tokens)]
-    df = spark.createDataFrame([Row(doc_id=0, text=" ".join(toks))])
-    rows = sorted(chunk_text(df, window, overlap).collect(), key=lambda r: r["chunk_idx"])
-    chunks = [r["chunk_text"].split(" ") for r in rows]
-    assert [r["chunk_idx"] for r in rows] == list(range(len(rows)))
-    assert all(len(c) <= window for c in chunks)
-    # every non-final chunk is full; every later chunk carries >= 1 NEW
-    # token (no pure-suffix chunk already covered by its predecessor)
-    assert all(len(c) == window for c in chunks[:-1])
-    assert all(len(c) > overlap for c in chunks[1:])
-    rebuilt = list(chunks[0])
-    for c in chunks[1:]:
-        rebuilt += c[overlap:]
-    assert rebuilt == toks
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
-        st.lists(st.sampled_from(["a", "b", "c"]), min_size=1, max_size=12),
-        min_size=2,
-        max_size=10,
-    ),
-    st.integers(min_value=2, max_value=4),
-)
-def test_contaminated_docs_matches_bruteforce(spark, docs_tokens, n):
-    """contaminated_docs == a literal Python n-gram set intersection on
-    arbitrary corpora (benchmark = every 3rd doc)."""
-    from mini_project_204721_data_engineering_spark.llm.quality import contaminated_docs
-
-    rows = [Row(doc_id=i, text=" ".join(toks)) for i, toks in enumerate(docs_tokens)]
-    df = spark.createDataFrame(rows)
-    bench_ids = {i for i in range(len(docs_tokens)) if i % 3 == 0}
-    bench = df.filter(F.col("doc_id").isin(list(bench_ids)))
-    corpus = df.filter(~F.col("doc_id").isin(list(bench_ids)))
-
-    def grams(toks):
-        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-
-    bench_grams = set().union(*(grams(docs_tokens[i]) for i in bench_ids))
-    want = {}
-    for i, toks in enumerate(docs_tokens):
-        if i in bench_ids:
-            continue
-        shared = grams(toks) & bench_grams
-        if shared:
-            want[i] = len(shared)
-    got = {
-        r["doc_id"]: r["n_shared_grams"]
-        for r in contaminated_docs(corpus, bench, n=n).collect()
-    }
-    assert got == want
-
-
 @settings(max_examples=15, deadline=None)
 @given(
     vecs=st.lists(
@@ -397,178 +268,3 @@ def test_assign_cells_bcast_equals_literal_property(spark, vecs, ncells):
     lit = {r["vec_id"]: r["cell"] for r in assign_cells(df, cents).collect()}
     bc = {r["vec_id"]: r["cell"] for r in assign_cells_bcast(df, cents).collect()}
     assert bc == lit
-
-
-def test_pit_lookup_boundary_facts_match_duckdb_asof_left(spark):
-    """VERDICT r7 #8: the payload_nonnull=True tie rule of pit_lookup
-    against a DuckDB ASOF LEFT JOIN, with facts planted EXACTLY at
-    interval boundaries — including at the valid_from of each key's
-    FIRST interval (the one as-of edge not previously pinned), before
-    the first interval, mid-interval, and after the last.  Semantics
-    under test: a fact at an exact boundary belongs to the interval
-    STARTING there (half-open SCD2), and facts before a key's first
-    interval get NULL state."""
-    import duckdb
-
-    from mini_project_204721_data_engineering_spark.operators.temporal import (
-        pit_lookup,
-        state_intervals,
-    )
-
-    events = [
-        # key 1: runs A(10..20) A(15) B(20..40) B(30) A(40..)
-        (1, 10, "A"), (1, 15, "A"), (1, 20, "B"), (1, 30, "B"), (1, 40, "A"),
-        # key 2: single open run starting at 100
-        (2, 100, "X"),
-        # key 3: two runs with adjacent boundaries
-        (3, 5, "P"), (3, 6, "Q"), (3, 7, "P"),
-    ]
-    ev = spark.createDataFrame(events, "k long, ts long, st string")
-    iv = state_intervals(ev, "k", "ts", "st")
-    facts = [
-        (1, 9), (1, 10), (1, 15), (1, 19), (1, 20), (1, 39), (1, 40), (1, 99),
-        (2, 99), (2, 100), (2, 101),
-        (3, 4), (3, 5), (3, 6), (3, 7), (3, 8),
-        (4, 10),  # key with no intervals at all
-    ]
-    fc = spark.createDataFrame(facts, "k long, fts long")
-    got = {
-        (r["k"], r["fts"]): r["st"]
-        for r in pit_lookup(fc, iv, "k", "fts", "st").collect()
-    }
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE iv AS SELECT * FROM (VALUES "
-        + ", ".join(
-            f"({r['k']}, {r['valid_from']}, '{r['st']}')" for r in iv.collect()
-        )
-        + ") t(k, valid_from, st)"
-    )
-    con.execute(
-        "CREATE TABLE fc AS SELECT * FROM (VALUES "
-        + ", ".join(f"({k}, {t})" for k, t in facts)
-        + ") t(k, fts)"
-    )
-    want = {
-        (r[0], r[1]): r[2]
-        for r in con.execute(
-            "SELECT fc.k, fc.fts, iv.st FROM fc "
-            "ASOF LEFT JOIN iv ON fc.k = iv.k AND fc.fts >= iv.valid_from"
-        ).fetchall()
-    }
-    assert set(got) == set(want)  # every fact surfaces exactly once
-    assert got == want
-    # spot-pin the named edge: a fact exactly at the FIRST interval's
-    # valid_from joins that interval (not NULL)
-    assert got[(1, 10)] == "A" and got[(2, 100)] == "X" and got[(3, 5)] == "P"
-    assert got[(1, 9)] is None and got[(2, 99)] is None and got[(4, 10)] is None
-    # and exact later boundaries take the NEWER interval (half-open)
-    assert got[(1, 20)] == "B" and got[(1, 40)] == "A" and got[(3, 6)] == "Q"
-
-
-@settings(deadline=None, max_examples=8)
-@given(
-    lwords=st.lists(
-        st.lists(st.sampled_from(["red", "blue", "widget", "gadget", "flange",
-                                  "wx", "ab"]), min_size=1, max_size=3),
-        min_size=1, max_size=6,
-    ),
-    rwords=st.lists(
-        st.lists(st.sampled_from(["red", "blu", "widget", "gadgot", "flange",
-                                  "wy", "ba"]), min_size=1, max_size=3),
-        min_size=1, max_size=6,
-    ),
-)
-def test_fuzzy_join_tokensort_property(spark, lwords, rwords):
-    """For ARBITRARY word sequences (duplicated words, repeated strings,
-    short strings, any transposition structure), the q-gram-blocked
-    token-sort join equals the brute-force normalize+score reference
-    computed in Python — the completeness theorem has no untested edge."""
-    from mini_project_204721_data_engineering_spark.operators.linkage import (
-        fuzzy_join_tokensort,
-    )
-
-    def key(words):
-        return " ".join(sorted(words))
-
-    def lev(a, b):
-        prev = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            cur = [i]
-            for j, cb in enumerate(b, 1):
-                cur.append(min(prev[j] + 1, cur[-1] + 1,
-                               prev[j - 1] + (ca != cb)))
-            prev = cur
-        return prev[-1]
-
-    lstr = sorted({" ".join(w) for w in lwords})
-    rstr = sorted({" ".join(w) for w in rwords})
-    ldf = spark.createDataFrame([(i, s) for i, s in enumerate(lstr)],
-                                "lid long, ls string")
-    rdf = spark.createDataFrame([(i, s) for i, s in enumerate(rstr)],
-                                "rid long, rs string")
-    out = fuzzy_join_tokensort(ldf, rdf, "ls", "rs", min_sim=0.8)
-    got = {(r["lid"], r["rid"]) for r in out.collect()}
-    want = set()
-    for i, a in enumerate(lstr):
-        for j, b in enumerate(rstr):
-            ka, kb = key(a.split()), key(b.split())
-            sim = 1.0 - lev(ka, kb) / max(len(ka), len(kb), 1)
-            if sim >= 0.8:
-                want.add((i, j))
-    assert got == want
-
-
-@settings(deadline=None, max_examples=6)
-@given(
-    docs=st.lists(
-        st.lists(
-            st.sampled_from(["aa", "bb", "cc", "dd", "ee", "ff"]),
-            min_size=0, max_size=8,
-        ),
-        min_size=2, max_size=10,
-    ),
-    threshold=st.sampled_from([0.3, 0.6, 0.9]),
-)
-def test_sparse_cosine_prefix_complete_and_matches_numpy(spark, docs, threshold):
-    """Property: on arbitrary corpora the prefix-filtered all-pairs
-    cosine join returns EXACTLY the brute inverted-index join's pairs
-    (the completeness theorem), and both agree with an independent
-    numpy dense-cosine computation away from the rounding knife-edge."""
-    import numpy as np
-
-    from mini_project_204721_data_engineering_spark.llm.sparse_sim import sparse_cosine_join
-
-    df = spark.createDataFrame(
-        [(i, " ".join(words)) for i, words in enumerate(docs)],
-        "doc_id long, text string",
-    )
-    got = sorted(map(tuple, sparse_cosine_join(df, threshold).collect()))
-    brute = sorted(
-        map(tuple, sparse_cosine_join(df, threshold, prefix_filter=False).collect())
-    )
-    assert got == brute
-    # numpy dense reference
-    vocab = sorted({w for d in docs for w in d})
-    idx = {w: i for i, w in enumerate(vocab)}
-    mats = []
-    for d in docs:
-        v = np.zeros(max(len(vocab), 1))
-        for w in d:
-            v[idx[w]] += 1.0
-        n = np.linalg.norm(v)
-        mats.append(v / n if n > 0 else v)
-    expected = {}
-    for i in range(len(docs)):
-        for j in range(i + 1, len(docs)):
-            if docs[i] and docs[j]:
-                expected[(i, j)] = float(np.dot(mats[i], mats[j]))
-    got_pairs = {(a, b): s for a, b, s in got}
-    for (i, j), s in expected.items():
-        if s >= threshold + 1e-4:
-            assert (i, j) in got_pairs, (i, j, s, got_pairs)
-        if s <= threshold - 1e-4:
-            assert (i, j) not in got_pairs, (i, j, s)
-    for (a, b), s in got_pairs.items():
-        assert abs(s - expected[(a, b)]) < 1e-3

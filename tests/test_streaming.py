@@ -132,62 +132,3 @@ def test_watermark_drops_late_data_across_restarts(spark):
         shutil.rmtree(d, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
-
-
-def test_streaming_geofence_alerts_match_batch(spark):
-    """Geofence alerting composition: a stream of positioned events
-    radius-joined per micro-batch against a static site table inside
-    foreachBatch — the alert store over all batches equals the batch
-    radius_join over all events (stream ≡ batch, the repo's standard
-    twin proof)."""
-    from mini_project_204721_data_engineering_spark.operators.geo import radius_join
-
-    d = tempfile.mkdtemp(prefix="geo_in_")
-    ckpt = tempfile.mkdtemp(prefix="geo_ckpt_")
-    alerts = tempfile.mkdtemp(prefix="geo_alerts_") + "/alerts"
-    sites = spark.createDataFrame(
-        [(1, 13.75, 100.50), (2, 18.79, 98.98), (3, 7.01, 100.47)],
-        "site_id long, slat double, slon double",
-    )
-    pts = spark.range(300).select(
-        F.col("id").alias("pid"),
-        (F.lit(6.0) + F.pmod(F.xxhash64("id"), 1000) / 1000.0 * 14.0).alias("lat"),
-        (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") + 7), 1000) / 1000.0 * 8.0).alias("lon"),
-    )
-    pts.filter(F.col("pid") < 150).coalesce(1).write.mode("append").parquet(d)
-    pts.filter(F.col("pid") >= 150).coalesce(1).write.mode("append").parquet(d)
-
-    def on_batch(batch_df, batch_id):
-        out = radius_join(
-            batch_df, sites, radius_km=100.0, point_cols=("lat", "lon"),
-            site_cols=("slat", "slon"), lat_range=(5.0, 21.0),
-        ).select("pid", "site_id", "dist_km")
-        out.write.mode("overwrite").parquet(f"{alerts}/batch={batch_id}")
-
-    stream = (
-        spark.readStream.schema(pts.schema).option("maxFilesPerTrigger", 1).parquet(d)
-    )
-    try:
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(on_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        got = {
-            (r["pid"], r["site_id"]) for r in spark.read.parquet(alerts).collect()
-        }
-        want = {
-            (r["pid"], r["site_id"])
-            for r in radius_join(
-                pts, sites, radius_km=100.0, point_cols=("lat", "lon"),
-                site_cols=("slat", "slon"), lat_range=(5.0, 21.0),
-            ).collect()
-        }
-        assert got == want and len(got) > 0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(alerts.rsplit("/", 1)[0], ignore_errors=True)

@@ -71,17 +71,13 @@ def timed(name, fn, out):
 def main() -> None:
     mode = "events"
     args = [a for a in sys.argv[1:]]
-    if args and args[0] in ("events", "docs", "ann", "srp", "cc", "spans", "vocab", "decon", "semdedup", "spatial", "hotcell", "radius", "interval", "knn", "linkage", "sparsesim", "wsample", "pq", "snap", "snap-manifest", "heavy", "pagerank", "snap-big", "snap-contention", "snap-maint", "spill"):
+    if args and args[0] in ("events", "docs", "ann", "srp", "cc", "spans", "semdedup", "spatial", "hotcell", "snap", "snap-manifest", "heavy", "snap-big", "snap-contention", "snap-maint", "spill"):
         mode = args.pop(0)
     n = int(args[0]) if args else {
         "events": 10_000_000, "docs": 1_000_000, "ann": 1_000_000,
         "srp": 1_000_000, "cc": 1_000_000, "spans": 200_000,
-        "vocab": 5_000_000, "decon": 500_000, "semdedup": 100_000,
-        "spatial": 1_000_000, "hotcell": 50_000, "radius": 1_000_000, "interval": 1_000_000,
-        "knn": 1_000_000, "linkage": 100_000,
-        "sparsesim": 10_000, "wsample": 10_000_000, "pq": 1_000_000,
+        "semdedup": 100_000, "spatial": 1_000_000, "hotcell": 50_000,
         "snap": 2_000_000, "snap-manifest": 100_000, "heavy": 10_000_000,
-        "pagerank": 2_000_000,
         "snap-big": 20_000_000, "snap-contention": 200_000,
         "snap-maint": 200_000, "spill": 30_000_000,
     }[mode]
@@ -91,19 +87,12 @@ def main() -> None:
     out: list[dict] = []
     if mode != "events":
         {"docs": probe_docs, "ann": probe_ann, "srp": probe_srp, "cc": probe_cc,
-         "spans": probe_spans, "vocab": probe_vocab,
-         "decon": probe_decon, "semdedup": probe_semdedup,
+         "spans": probe_spans, "semdedup": probe_semdedup,
          "spatial": probe_spatial,
-         "hotcell": probe_hotcell, "radius": probe_radius,
-         "interval": probe_interval, "knn": probe_knn,
-         "linkage": probe_linkage,
-         "sparsesim": probe_sparsesim,
-         "wsample": probe_wsample,
-         "pq": probe_pq,
+         "hotcell": probe_hotcell,
          "snap": probe_snap,
          "snap-manifest": probe_snap_manifest,
          "heavy": probe_heavy,
-         "pagerank": probe_pagerank,
          "snap-big": probe_snap_big,
          "snap-contention": probe_snap_contention,
          "snap-maint": probe_snap_maintenance,
@@ -219,7 +208,6 @@ def main() -> None:
              "probes": {r["probe"]: r["sec"] for r in out}}
         )
     )
-
 
 
 def synth_docs(spark, n: int, n_tokens: int = 50, vocab: int = 1000, dup_frac_mod: int = 10):
@@ -409,70 +397,6 @@ def probe_spans(spark, n: int, out: list) -> None:
     timed("duplicate_spans_strings", spans(False), out)
 
 
-def probe_vocab(spark, n: int, out: list) -> None:
-    """Two-phase vocab rank (r6 #6) vs the single-partition global
-    window it replaced, at n DISTINCT tokens (the straggler axis: a
-    100 TB corpus has 1e7-1e8 distinct tokens).  Both variants consume
-    sum(rank) = n(n+1)/2, so neither can dead-code the window."""
-    from mini_project_204721_data_engineering_spark.llm.quality import (
-        _ranked_token_counts,
-    )
-
-    counts = (
-        spark.range(n)
-        .select(
-            F.concat(F.lit("w"), F.col("id")).alias("token"),
-            (F.pmod(F.xxhash64(F.col("id")), F.lit(1000)) + 1001).alias("n_occurrences"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def two_phase():
-        return (
-            _ranked_token_counts(counts, 32).agg(F.sum("__lrank")).collect()[0][0]
-        )
-
-    def global_window():
-        from pyspark.sql.window import Window
-
-        w = Window.orderBy(F.col("n_occurrences").desc(), F.col("token").asc())
-        return (
-            counts.withColumn("r", F.row_number().over(w))
-            .agg(F.sum("r"))
-            .collect()[0][0]
-        )
-
-    timed("vocab_rank_two_phase", two_phase, out)
-    timed("vocab_rank_global_window", global_window, out)
-
-
-def probe_decon(spark, n: int, out: list) -> None:
-    """Decontamination at corpus scale: broadcast gram-set join vs the
-    r6 split-block-Bloom pre-filter, n corpus docs against a 2%-of-n
-    benchmark.  Both must return identical contaminated-doc counts."""
-    from mini_project_204721_data_engineering_spark.llm.quality import (
-        contaminated_docs,
-    )
-
-    docs = synth_docs(spark, n).localCheckpoint(eager=True)
-    bench = synth_docs(spark, max(1000, n // 50)).select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
-    ).localCheckpoint(eager=True)
-
-    def run(bloom_fpp):
-        def go():
-            return (
-                contaminated_docs(docs, bench, n=8, bloom_fpp=bloom_fpp)
-                .agg(F.count(F.lit(1)), F.sum("n_shared_grams"))
-                .collect()[0][0]
-            )
-
-        return go
-
-    timed("decon_broadcast", run(None), out)
-    timed("decon_bloom_sbbf", run(0.01), out)
-
-
 def probe_semdedup(spark, n: int, out: list) -> None:
     """semantic_dedup (SemDeDup) at corpus scale.  The pairwise stage
     costs ~n x cell_size / 2 cosine evaluations, so the load-bearing
@@ -553,236 +477,6 @@ def probe_hotcell(spark, n: int, out: list) -> None:
     timed("hotcell_cap500", run(500), out)
 
 
-def probe_radius(spark, n: int, out: list) -> None:
-    """Grid-bucketed radius join at point scale: n points against 1000
-    sites in a Thailand-sized box.  Claim under test: candidates are
-    bounded by local density (grid equi-join), so cost is ~linear in n
-    — against the brute-force n×1000 cross join whose cost is the
-    product.  Both consume their match count."""
-    from mini_project_204721_data_engineering_spark.operators.geo import (
-        haversine_km,
-        radius_join,
-    )
-
-    pts = (
-        spark.range(n)
-        .select(
-            F.col("id").alias("pid"),
-            (F.lit(6.0) + F.pmod(F.xxhash64("id"), 100000) / 100000.0 * 14.0).alias("lat"),
-            (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") + 7), 100000) / 100000.0 * 8.0).alias("lon"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    sites = (
-        spark.range(1000)
-        .select(
-            F.col("id").alias("site_id"),
-            (F.lit(6.0) + F.pmod(F.xxhash64(F.col("id") * 31), 100000) / 100000.0 * 14.0).alias("slat"),
-            (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") * 37), 100000) / 100000.0 * 8.0).alias("slon"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def grid():
-        return radius_join(
-            pts, sites, radius_km=25.0, point_cols=("lat", "lon"),
-            site_cols=("slat", "slon"), lat_range=(5.0, 21.0),
-        ).count()
-
-    def brute():
-        return (
-            pts.crossJoin(sites)
-            .withColumn(
-                "d",
-                haversine_km(F.col("lat"), F.col("lon"), F.col("slat"), F.col("slon")),
-            )
-            .filter(F.col("d") <= 25.0)
-            .count()
-        )
-
-    timed("radius_grid", grid, out)
-    timed("radius_brute_crossjoin", brute, out)
-
-
-def probe_knn(spark, n: int, out: list) -> None:
-    """knn_join starved-fraction vs radius on a SPARSE synthetic: n
-    points against only 200 sites in a Thailand-sized box.  Claim under
-    test: the brute-force fallback (certificate-failing points × full
-    site table) is the cost cliff an under-provisioned radius walks
-    off — the starved fraction collapses as the radius grows past the
-    k-neighborhood scale, and max_brute_fraction is the guard that
-    surfaces it.  Each probe row records the measured fraction."""
-    from mini_project_204721_data_engineering_spark.operators.geo import knn_join
-
-    pts = (
-        spark.range(n)
-        .select(
-            F.col("id").alias("pid"),
-            (F.lit(6.0) + F.pmod(F.xxhash64("id"), 100000) / 100000.0 * 14.0).alias("lat"),
-            (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") + 7), 100000) / 100000.0 * 8.0).alias("lon"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    sites = (
-        spark.range(200)
-        .select(
-            F.col("id").alias("site_id"),
-            (F.lit(6.0) + F.pmod(F.xxhash64(F.col("id") * 31), 100000) / 100000.0 * 14.0).alias("slat"),
-            (F.lit(97.0) + F.pmod(F.xxhash64(F.col("id") * 37), 100000) / 100000.0 * 8.0).alias("slon"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    kw = dict(point_cols=("lat", "lon"), site_cols=("slat", "slon"),
-              lat_range=(5.0, 21.0))
-    for radius in (25.0, 100.0, 400.0):
-        # measure the starved fraction the guard would see, then run the
-        # full join (fallback included) and consume it
-        try:
-            knn_join(pts, sites, k=3, point_key="pid", radius_km=radius,
-                     max_brute_fraction=0.0, **kw)
-            frac = 0.0
-        except ValueError as e:
-            import re
-
-            m = re.search(r"\((\d+(?:\.\d+)?)%\)", str(e))
-            frac = float(m.group(1)) / 100.0 if m else -1.0
-
-        def run(r=radius):
-            return knn_join(pts, sites, k=3, point_key="pid",
-                            radius_km=r, **kw).count()
-
-        sec = timed(f"knn_r{int(radius)}km_starved{frac:.3f}", run, out)
-        del sec
-
-
-def probe_linkage(spark, n: int, out: list) -> None:
-    """Fuzzy-join blocking at catalog scale: n left names (realistic
-    SKU shape — word pair + 5-hex suffix, so grams are DIVERSE like
-    real catalogs; an earlier revision with only 100 word combos was a
-    worst case where every string shared every gram and blocking bought
-    little) against n/10 intact right names; every 3rd left name loses
-    a char, every 5th transposes its words.  Claims under test: blocked
-    candidates ∝ matches vs the quadratic brute cross join, and
-    tokensort additionally recovers the transposed pairs that raw
-    levenshtein-distance-2 linkage MISSES."""
-    from mini_project_204721_data_engineering_spark.operators.linkage import (
-        fuzzy_join,
-        fuzzy_join_tokensort,
-    )
-
-    colors = "red blue green grey teal navy coral amber ivory umber".split()
-    nouns = "widget gadget flange sprocket bracket grommet spindle washer bolt clasp".split()
-
-    def base(m):
-        return spark.range(m).select(
-            F.col("id").alias("nid"),
-            F.concat(
-                F.array(*[F.lit(c) for c in colors])[
-                    F.pmod(F.xxhash64(F.col("id")), 10)
-                ],
-                F.lit(" "),
-                F.array(*[F.lit(w) for w in nouns])[
-                    F.pmod(F.xxhash64(F.col("id") * 31), 10)
-                ],
-                F.lit(" "),
-                F.substring(F.md5(F.col("id").cast("string")), 1, 5),
-            ).alias("name"),
-        )
-
-    left = (
-        base(n)
-        .withColumn(
-            "name",
-            F.when(  # word transposition: "red widget ab12f" -> "widget red ab12f"
-                F.col("nid") % 5 == 0,
-                F.concat(
-                    F.element_at(F.split("name", " "), 2), F.lit(" "),
-                    F.element_at(F.split("name", " "), 1), F.lit(" "),
-                    F.element_at(F.split("name", " "), 3),
-                ),
-            ).when(  # typo: delete the 4th char
-                F.col("nid") % 3 == 0,
-                F.concat(F.substring("name", 1, 3), F.expr("substring(name, 5)")),
-            ).otherwise(F.col("name")),
-        )
-        .withColumnRenamed("name", "lname")
-        .localCheckpoint(eager=True)
-    )
-    right = (
-        base(n // 10).withColumnRenamed("name", "rname").localCheckpoint(eager=True)
-    )
-
-    def blocked():
-        return fuzzy_join(
-            left, right, "lname", "rname", max_dist=2, max_gram_df=2000
-        ).count()
-
-    nb = timed("linkage_blocked_qgram", blocked, out)
-    del nb
-
-    def tokensort():
-        return fuzzy_join_tokensort(
-            left, right, "lname", "rname", min_sim=0.85, max_gram_df=2000
-        ).count()
-
-    timed("linkage_tokensort_blocked", tokensort, out)
-
-    def brute():
-        return (
-            left.crossJoin(right)
-            .filter(F.levenshtein(F.col("lname"), F.col("rname")) <= 2)
-            .count()
-        )
-
-    timed("linkage_bruteforce_crossjoin", brute, out)
-
-
-def probe_interval(spark, n: int, out: list) -> None:
-    """Bucketed interval join at fact scale: n facts against n/2
-    overlapping intervals over 1000 keys (mean length ~= bucket).
-    Claim under test: bucketed candidates ∝ per-(key, bucket) density →
-    ~linear in n, while the brute-force theta join (equi-join on key +
-    range filter) carries facts × intervals / keys candidate pairs —
-    quadratic in n when both sides grow."""
-    from mini_project_204721_data_engineering_spark.operators.temporal import interval_join
-
-    facts = (
-        spark.range(n)
-        .select(
-            F.col("id").alias("fid"),
-            F.pmod(F.xxhash64("id"), 1000).alias("k"),
-            (F.pmod(F.xxhash64(F.col("id") + 3), 1_000_000) * 1.0).alias("ts"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    ivs = (
-        spark.range(n // 2)
-        .select(
-            F.col("id").alias("iid"),
-            F.pmod(F.xxhash64(F.col("id") * 13), 1000).alias("k"),
-            (F.pmod(F.xxhash64(F.col("id") * 17), 1_000_000) * 1.0).alias("lo"),
-        )
-        .withColumn("hi", F.col("lo") + 500.0 + F.pmod(F.xxhash64("iid"), 1000))
-        .localCheckpoint(eager=True)
-    )
-
-    def bucketed():
-        return interval_join(
-            facts, ivs, fact_ts="ts", start_col="lo", end_col="hi",
-            bucket=1000.0, on=["k"],
-        ).count()
-
-    def brute():
-        return (
-            facts.join(ivs, "k")
-            .filter((F.col("ts") >= F.col("lo")) & (F.col("ts") < F.col("hi")))
-            .count()
-        )
-
-    timed("interval_bucketed", bucketed, out)
-    timed("interval_brute_theta", brute, out)
-
-
 def probe_spatial(spark, n: int, out: list) -> None:
     """Point-in-polygon spatial join (J1's general mapInPandas path) at
     fact scale: n points against a 900-polygon ADM2-sized boundary set
@@ -846,124 +540,6 @@ def probe_cc(spark, n: int, out: list) -> None:
         ).count()
 
     timed("dup_clusters_chain5", cc, out)
-
-
-
-
-def probe_sparsesim(spark, n: int, out: list) -> None:
-    """All-pairs tf-cosine join: prefix-filtered inverted index vs the
-    brute inverted-index join on a Zipf-ish vocabulary (u² draw — hot
-    terms carry quadratic posting-list cost, exactly where prefix
-    filtering pays: hot terms are suffix-ranked and drop out of the
-    INDEX side unless a document's mass concentrates in them).  Both
-    variants return identical pairs (pinned in tests/test_llm.py);
-    here we pin the COST separation."""
-    from mini_project_204721_data_engineering_spark.llm.sparse_sim import (
-        sparse_cosine_join,
-    )
-
-    # realistic corpus shape: 50k-term vocabulary under a heavy-tailed
-    # (u^4) draw — the top "stopword" lands in ~98% of documents, so the
-    # brute join's hot posting list is ~|docs| and its cost quadratic,
-    # while tf-L2 weighting leaves stopwords LOW-mass per doc, so they
-    # sort last and fall out of the prefix index
-    n_tokens, vocab = 60, 50_000
-    d = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 10 == 0, F.col("id") - 1)
-        .otherwise(F.col("id"))
-        .alias("bid"),
-    )
-    words = F.expr(
-        f"transform(sequence(0, {n_tokens - 1}), "
-        f"i -> concat('w', cast(pow(pmod(xxhash64(bid * {n_tokens} + i), 10000) "
-        f"/ 10000.0, 4.0) * {vocab} as int)))"
-    )
-    docs = d.select(
-        "doc_id", F.concat_ws(" ", words).alias("text")
-    ).localCheckpoint(eager=True)
-
-    def run(prefix, label):
-        def f():
-            return (
-                sparse_cosine_join(
-                    docs, 0.8, prefix_filter=prefix, persist_vectors=True
-                )
-                .agg(F.count(F.lit(1)))
-                .collect()[0][0]
-            )
-
-        return f
-
-    timed("sparse_cosine_prefix", run(True, "prefix"), out)
-    timed("sparse_cosine_brute", run(False, "brute"), out)
-
-
-def probe_pq(spark, n: int, out: list) -> None:
-    """Product quantization at embedding-corpus scale: one-off encode
-    cost, then the per-query separation that justifies it — the ADC
-    scan reads m=8 one-byte codes per vector, the brute cosine scan
-    reads all 64 doubles.  Recall is pinned in tests/test_llm.py; this
-    pins the COST."""
-    from mini_project_204721_data_engineering_spark.llm.pq import pq_encode, pq_search, pq_train
-    from mini_project_204721_data_engineering_spark.llm.similarity import cosine_topk
-
-    emb = synth_embeddings(spark, n).localCheckpoint(eager=True)
-    cb = pq_train(emb, m=8, k=256, sample=20_000, iters=5)
-    q = [float((i % 7) - 3) / 3.0 for i in range(64)]
-
-    codes_box = {}
-
-    def encode():
-        codes_box["c"] = pq_encode(emb, cb).localCheckpoint(eager=True)
-        return codes_box["c"].count()
-
-    timed("pq_encode_once", encode, out)
-
-    def adc():
-        return pq_search(codes_box["c"], q, cb, topk=10).count()
-
-    def brute():
-        qdf = spark.createDataFrame([(-1, q)], "vec_id long, embedding array<double>")
-        return cosine_topk(emb, qdf, k=10).count()
-
-    timed("pq_adc_query", adc, out)
-    timed("brute_cosine_query", brute, out)
-
-
-def probe_wsample(spark, n: int, out: list) -> None:
-    """Exactly-k weighted sampling at corpus-sized k (k = n/10): the
-    TakeOrderedAndProject form holds a k-row heap per task and
-    materializes k rows on the driver; the threshold form locates the
-    k-th rank key and selects by filter.  Both must return the same
-    row count; the probe pins the cost separation and that the filter
-    form stays driver-safe."""
-    from mini_project_204721_data_engineering_spark.operators.sampling import (
-        weighted_sample,
-        weighted_sample_threshold,
-    )
-
-    df = spark.range(n).select(
-        F.col("id").alias("key"),
-        (F.pmod(F.xxhash64("id"), F.lit(997)) + 1).cast("double").alias("w"),
-    ).localCheckpoint(eager=True)
-    k = n // 10
-
-    def topk():
-        return weighted_sample(df, k, "w", "key").agg(
-            F.count(F.lit(1)), F.sum("key")
-        ).collect()[0][0]
-
-    def threshold():
-        got = weighted_sample_threshold(df, k, "w", "key").agg(
-            F.count(F.lit(1)), F.sum("key")
-        ).collect()[0][0]
-        spark.catalog.clearCache()
-        return got
-
-    timed("weighted_topk_form", topk, out)
-    timed("weighted_threshold_form", threshold, out)
-    assert out[-1]["rows"] == out[-2]["rows"] == k, (out[-2], out[-1])
 
 
 def probe_snap(spark, n: int, out: list) -> None:
@@ -1447,47 +1023,6 @@ def probe_heavy(spark, n: int, out: list) -> None:
         "wallclock_ratio_plain_over_mg": round(b / a, 2) if a else None,
         "wallclock_ratio_plain_over_freqitems": round(b / j, 2) if j else None,
     }), flush=True)
-
-
-def probe_pagerank(spark, n: int, out: list) -> None:
-    """PageRank power iteration at link-graph scale: n edges over n/10
-    vertices (Zipf-ish in-degree via modular hashing, ~1% dangling).
-    The measure is per-iteration cost staying flat as iterations stack
-    (checkpointed ranks = constant-size plan every round)."""
-    from pyspark.sql import functions as F
-
-    from mini_project_204721_data_engineering_spark.operators.graph import pagerank
-
-    n_v = n // 10
-    edges = (
-        spark.range(n)
-        .select(
-            F.pmod(F.xxhash64("id", F.lit(1)), F.lit(n_v)).alias("src"),
-            # skewed destinations: popular pages get quadratically more links
-            F.pmod(
-                F.pmod(F.xxhash64("id", F.lit(2)), F.lit(n_v))
-                * F.pmod(F.xxhash64("id", F.lit(3)), F.lit(n_v)),
-                F.lit(n_v),
-            ).alias("dst"),
-        )
-        # ~1% of vertices dangling: drop every edge sourced at them
-        .filter(F.pmod(F.col("src"), F.lit(100)) != 0)
-        .localCheckpoint(eager=True)
-    )
-
-    def run(iters):
-        def f():
-            r = pagerank(edges, n_iter=iters)
-            row = r.agg(F.sum("rank"), F.count(F.lit(1))).collect()[0]
-            return int(row[1])
-
-        return f
-
-    a = timed("pagerank_5_iters", run(5), out)
-    b = timed("pagerank_10_iters", run(10), out)
-    print(json.dumps({"probe": "per_iter_flatness",
-                      "ratio_10v5": round(b / a, 2) if a else None}), flush=True)
-
 
 
 def probe_snap_big(spark, n: int, out: list) -> None:
