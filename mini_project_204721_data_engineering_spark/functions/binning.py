@@ -3,14 +3,16 @@
 All pure expressions — ``CASE WHEN`` chains compile into whole-stage
 codegen; no UDFs.
 
-C5 (``avg_to_level``), C16 (``estimate_probability``) and C17
-(``probability_color``, ``risk_label``) are each defined ONCE, as Spark
-SQL text: the ``*_sql`` functions take SQL operand text and return the
-formula's text.  The served ``spark.sql`` statements
-(``queries/dashboard.py``, ``queries/analytics.avg_level_by_brand``)
-splice that text in, and each Column helper is ``F.expr`` over the same
-text, so the DataFrame pipelines (``pipelines/risk.py``) and the tests
-run exactly the formula the dashboard runs.  Double literals carry a
+C4 (``class_to_num``), C5 (``avg_to_level``), C16
+(``estimate_probability``) and C17 (``probability_color``,
+``risk_label``) are each defined ONCE, as Spark SQL text: the ``*_sql``
+functions take SQL operand text and return the formula's text.  The
+served ``spark.sql`` statements (``queries/dashboard.py``,
+``queries/analytics.avg_level_by_brand``) splice that text in; the
+driver-side risk pipeline (``pipelines/risk.py``) evaluates the same
+text in a ``selectExpr`` over its upload's local relation; and each
+Column helper is ``F.expr`` over the same text, so the pipeline, the
+queries and the tests run exactly one formula.  Double literals carry a
 ``D`` suffix: a bare ``1.5`` is a DECIMAL in Spark SQL.  The DuckDB
 oracle strings spell their own copies on purpose, so the oracle stays an
 independent check.
@@ -25,6 +27,7 @@ from mini_project_204721_data_engineering_spark.functions.parity import sql_oper
 
 __all__ = [
     "class_to_num",
+    "class_to_num_sql",
     "avg_to_level",
     "avg_to_level_sql",
     "estimate_probability",
@@ -51,8 +54,9 @@ _WORD_LEVELS: dict[str, int] = {
 }
 
 
-def class_to_num(col: Column) -> Column:
-    """Reference ``class_to_num`` (``backend/app/utils.py:255-274``).
+def class_to_num_sql(x: str) -> str:
+    """Reference ``class_to_num`` (``backend/app/utils.py:255-274``) as
+    SQL text over operand text ``x`` (INT).
 
     CASE semantics:
     1. risk words (Thai/English, case-insensitive) → {1,2,3}
@@ -60,25 +64,25 @@ def class_to_num(col: Column) -> Column:
     3. other numerics → round, clamp to [1,3]
     4. unparseable → null
     """
-    s = F.lower(F.trim(col.cast("string")))
+    s = f"lower(trim(CAST({x} AS STRING)))"
     # try_cast: null on unparseable input — matches pandas to_numeric
     # errors="coerce" and survives Spark 4's ANSI-mode strict cast
-    num = s.try_cast("double")
-    word = F.lit(None).cast("int")
-    for w, lvl in _WORD_LEVELS.items():
-        word = F.when(s == w.lower(), F.lit(lvl)).otherwise(word)
-    tertile = (
-        F.when(num < 1.0 / 3.0, 1).when(num < 2.0 / 3.0, 2).otherwise(3)
-    )
+    num = f"try_cast({s} AS DOUBLE)"
+    words = " ".join(f"WHEN '{w}' THEN {lvl}" for w, lvl in _WORD_LEVELS.items())
+    tertile = f"CASE WHEN {num} < 1.0D / 3.0D THEN 1 WHEN {num} < 2.0D / 3.0D THEN 2 ELSE 3 END"
     # bround = HALF_EVEN, matching the reference's Python round()
-    # (int(round(val)), utils.py:268); F.round's HALF_UP would differ at 2.5
-    clamped = F.least(F.greatest(F.bround(num).cast("int"), F.lit(1)), F.lit(3))
+    # (int(round(val)), utils.py:268); round's HALF_UP would differ at 2.5
+    clamped = f"least(greatest(CAST(bround({num}) AS INT), 1), 3)"
     return (
-        F.when(word.isNotNull(), word)
-        .when(num.isNull(), F.lit(None).cast("int"))
-        .when((num >= 0.0) & (num <= 1.0), tertile)
-        .otherwise(clamped)
-    ).cast("int")
+        f"coalesce(CASE {s} {words} END, "
+        f"CASE WHEN {num} IS NULL THEN CAST(NULL AS INT) "
+        f"WHEN {num} >= 0.0D AND {num} <= 1.0D THEN {tertile} ELSE {clamped} END)"
+    )
+
+
+def class_to_num(col: Column | str) -> Column:
+    """:func:`class_to_num_sql` as a Column (operand: :func:`sql_operand`)."""
+    return F.expr(class_to_num_sql(sql_operand(col)))
 
 
 def avg_to_level_sql(avg: str) -> str:

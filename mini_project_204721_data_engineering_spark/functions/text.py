@@ -11,8 +11,10 @@ Reference semantics:
   name canonicalization (lowercase, drop non-word chars, strip trailing
   CE/BE years) — plain Python, the sheet list exists before any DataFrame.
 
-All but NFC are pure Column expressions (regexp_replace chains stay inside
-whole-stage codegen).  NFC is a pandas UDF over Arrow batches; note the
+All but NFC are pure expressions (regexp_replace chains stay inside
+whole-stage codegen); ``normalize_th`` is defined once as SQL text
+(:func:`normalize_th_sql`), which the driver-side risk pipeline evaluates
+in a ``selectExpr``.  NFC is a pandas UDF over Arrow batches; note the
 DuckDB oracle equivalent is its built-in ``nfc_normalize``.
 """
 
@@ -26,7 +28,15 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-__all__ = ["clean_text", "normalize_th", "nfc_normalize", "normalize_sheet_name"]
+from mini_project_204721_data_engineering_spark.functions.parity import sql_operand
+
+__all__ = [
+    "clean_text",
+    "normalize_th",
+    "normalize_th_sql",
+    "nfc_normalize",
+    "normalize_sheet_name",
+]
 
 
 def _nfc_batch(s: pd.Series) -> pd.Series:
@@ -69,13 +79,19 @@ def clean_text(col: Column, *, nfc: bool = False) -> Column:
     return c
 
 
-def normalize_th(col: Column) -> Column:
-    """Reference ``normalize_th`` (``backend/app/utils.py:276-284``)."""
-    c = F.trim(col)
-    c = F.regexp_replace(c, r"\s+", " ")
-    c = F.regexp_replace(c, r"^จ\.", "")
-    c = F.regexp_replace(c, r"^อ\.", "")
-    return F.trim(c)
+def normalize_th_sql(s: str) -> str:
+    """Reference ``normalize_th`` (``backend/app/utils.py:276-284``) as
+    Spark SQL text over operand text ``s``: trim, collapse whitespace
+    runs, strip a leading ``จ.`` / ``อ.``, trim.  ``trim`` strips spaces
+    only and ``\\s`` is the Java class (no NBSP)."""
+    c = rf"regexp_replace(trim({s}), '\\s+', ' ')"
+    c = rf"regexp_replace(regexp_replace({c}, '^จ\\.', ''), '^อ\\.', '')"
+    return f"trim({c})"
+
+
+def normalize_th(col: Column | str) -> Column:
+    """:func:`normalize_th_sql` as a Column (operand: :func:`sql_operand`)."""
+    return F.expr(normalize_th_sql(sql_operand(col)))
 
 
 _SHEET_YEAR_RE = re.compile(r"(19|20|25)\d{2}\s*$")

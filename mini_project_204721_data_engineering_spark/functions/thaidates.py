@@ -27,46 +27,67 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["BE_YEAR_MIN", "BE_CE_OFFSET", "parse_be_date", "be_to_ce"]
+from mini_project_204721_data_engineering_spark.functions.parity import sql_operand
+
+__all__ = [
+    "BE_YEAR_MIN",
+    "BE_CE_OFFSET",
+    "parse_be_date",
+    "parse_be_date_sql",
+    "be_to_ce",
+    "be_to_ce_sql",
+]
 
 BE_YEAR_MIN = 2400
 BE_CE_OFFSET = 543
 
 
-def parse_be_date(col: Column) -> Column:
-    """Strict ISO ``yyyy-MM-dd`` parse accepting BOTH CE and BE years:
-    a leading 4-digit year ≥ 2400 has 543 subtracted in the string
-    BEFORE parsing (see module docstring for why), anything else goes
-    through the same ``try_to_date`` as the strict default — malformed
-    input still coerces to NULL, never throws (ANSI-safe)."""
-    s = F.trim(col)
-    yr = F.substring(s, 1, 4).try_cast("int")
-    shifted = F.concat(
-        F.lpad((yr - BE_CE_OFFSET).cast("string"), 4, "0"),
-        F.substring(s, 5, 6),
+def parse_be_date_sql(x: str) -> str:
+    """Strict ISO ``yyyy-MM-dd`` parse accepting BOTH CE and BE years, as
+    SQL text over operand text ``x``: a leading 4-digit year ≥ 2400 has
+    543 subtracted in the string BEFORE parsing (see module docstring for
+    why), anything else goes through the same ``try_to_date`` as the
+    strict default — malformed input still coerces to NULL, never throws
+    (ANSI-safe)."""
+    s = f"trim({x})"
+    yr = f"try_cast(substring({s}, 1, 4) AS INT)"
+    shifted = (
+        f"concat(lpad(CAST({yr} - {BE_CE_OFFSET} AS STRING), 4, '0'), substring({s}, 5, 6))"
     )
-    return F.when(
-        (yr >= BE_YEAR_MIN) & s.rlike(r"^\d{4}-\d{2}-\d{2}$"),
-        F.try_to_date(shifted, "yyyy-MM-dd"),
-    ).otherwise(F.try_to_date(s, "yyyy-MM-dd"))
+    return (
+        rf"CASE WHEN {yr} >= {BE_YEAR_MIN} AND {s} RLIKE '^\\d{{4}}-\\d{{2}}-\\d{{2}}$' "
+        f"THEN try_to_date({shifted}, 'yyyy-MM-dd') ELSE try_to_date({s}, 'yyyy-MM-dd') END"
+    )
 
 
-def be_to_ce(col: Column) -> Column:
-    """BE→CE for an already-TYPED date/timestamp column (a
-    pandas+openpyxl read surfaces date-styled cells as datetimes): a
-    year ≥ 2400 shifts back 543 years via ``add_months``.
+def parse_be_date(col: Column | str) -> Column:
+    """:func:`parse_be_date_sql` as a Column (operand: :func:`sql_operand`)."""
+    return F.expr(parse_be_date_sql(sql_operand(col)))
+
+
+def be_to_ce_sql(x: str) -> str:
+    """BE→CE for an already-TYPED date/timestamp operand (a
+    pandas+openpyxl read surfaces date-styled cells as datetimes), as SQL
+    text over operand text ``x``: a year ≥ 2400 shifts back 543 years via
+    ``add_months``.
 
     A typed BE Feb 29 can NEVER map to a CE Feb 29: BE leap years are
     ≡ 0 (mod 4), so CE = BE − 543 ≡ 1 (mod 4) — never leap.  Such a
     value is therefore not a real Thai date (the workbook's Feb 29 was
     typed under the wrong-era calendar); ``add_months`` would silently
     CLAMP it to Feb 28, fabricating a date the string path
-    (:func:`parse_be_date`) correctly nulls.  We null it too — the two
-    paths agree: malformed-for-the-era input coerces to NULL."""
-    d = col.cast("date")
-    shifted = F.add_months(d, -BE_CE_OFFSET * 12)
-    return F.when(
-        F.year(d) >= BE_YEAR_MIN,
-        # a clamped day-of-month means the CE date does not exist
-        F.when(F.dayofmonth(shifted) == F.dayofmonth(d), shifted),
-    ).otherwise(d)
+    (:func:`parse_be_date_sql`) correctly nulls.  We null it too — the
+    two paths agree: malformed-for-the-era input coerces to NULL."""
+    d = f"CAST({x} AS DATE)"
+    shifted = f"add_months({d}, {-BE_CE_OFFSET * 12})"
+    # a clamped day-of-month means the CE date does not exist
+    return (
+        f"CASE WHEN year({d}) >= {BE_YEAR_MIN} THEN "
+        f"CASE WHEN dayofmonth({shifted}) = dayofmonth({d}) THEN {shifted} END "
+        f"ELSE {d} END"
+    )
+
+
+def be_to_ce(col: Column | str) -> Column:
+    """:func:`be_to_ce_sql` as a Column (operand: :func:`sql_operand`)."""
+    return F.expr(be_to_ce_sql(sql_operand(col)))

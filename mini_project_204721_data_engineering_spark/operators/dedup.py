@@ -16,7 +16,6 @@ from pyspark.sql.window import Window
 
 __all__ = [
     "dedup_keep_first",
-    "dedup_keep_first_agg",
     "dedup_keep_first_packed",
     "packed_order_key",
     "unpack_minor",
@@ -70,68 +69,15 @@ def dedup_keep_first(
     ``row_number`` over a window partitioned by the dedup keys — the
     partial sort happens within each hash partition of the key, so the
     shuffle is the same one a groupBy would need; no global sort.
-    Accepts arbitrary ``Column`` orderings (desc, expressions); when the
-    order is plain ascending column names, prefer
-    :func:`dedup_keep_first_agg` — it map-side-combines.
+    Accepts arbitrary ``Column`` orderings (desc, expressions); when only
+    the winning row's id is needed, prefer
+    :func:`dedup_keep_first_packed` — it map-side-combines.
     """
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def dedup_keep_first_agg(
-    df: DataFrame, keys: Sequence[str], order_cols: Sequence[str]
-) -> DataFrame:
-    """A9, aggregation form: ``min(struct(order..., row))`` per key.
-
-    Row-for-row identical to :func:`dedup_keep_first` with the same
-    ascending order (struct comparison is field-lexicographic and treats
-    a NULL field as smallest — exactly the window's asc nulls-first), but
-    executes as a hash aggregate instead of shuffle-then-sort: partial
-    aggregation keeps ONE candidate row per key per map partition, so
-    only |keys| rows cross the shuffle instead of ALL rows.  At 100 TB
-    with any meaningful duplication that is the difference between
-    shuffling the table and shuffling the distinct keys.
-
-    ``order_cols`` are ascending column names; ties beyond them fall to
-    the remaining columns' values (pass a total order — a unique
-    tiebreaker column — for fully deterministic output, same contract as
-    the window form).
-
-    r15 optimization (guide §2.3, shuffle fewer bytes): order columns are
-    packed ONCE, at the front of the struct, and reconstructed from there —
-    they used to be duplicated inside ``__row``, so every aggregation
-    buffer, every sort row and every shuffled candidate carried them
-    twice.  Tie-break semantics are unchanged: beyond the order columns
-    the old comparator re-compared the (already tied) order columns
-    first and then the remaining tail — exactly the remaining-tail
-    comparison the slimmer struct performs.  Callers should ALSO project
-    to the columns they need before calling (the min(struct) is opaque to
-    Catalyst, so unused columns are neither pruned from the scan nor from
-    the sort/shuffle — see ``dedup_first_event`` for the shape).
-    """
-    keys = list(keys)
-    order_cols = list(order_cols)
-    tail = [c for c in df.columns if c not in keys]
-    rest = [c for c in tail if c not in order_cols]
-    fields = [F.col(c) for c in order_cols]
-    if rest:
-        fields.append(F.struct(*[F.col(c) for c in rest]).alias("__row"))
-    return (
-        df.groupBy(*keys)
-        .agg(F.min(F.struct(*fields)).alias("__best"))
-        .select(
-            *keys,
-            *[
-                F.col(
-                    f"__best.{c}" if c in order_cols else f"__best.__row.{c}"
-                ).alias(c)
-                for c in tail
-            ],
-        )
     )
 
 
@@ -145,8 +91,8 @@ def dedup_keep_first_packed(
     row under ``(order_major, id_col)`` ascending — as a PURE
     HashAggregate (r15; guide §2 "the distributed algorithm").
 
-    :func:`dedup_keep_first_agg` must fall back to SortAggregate because
-    its ``min(struct(...))`` buffer is not mutable; when the caller only
+    A ``min(struct(...))`` keep-first must fall back to SortAggregate
+    because its buffer is not mutable; when the caller only
     needs the winning row's id (the ``dedup_first_event`` shape — and any
     keep-first whose payload can be re-attached by id), packing the
     ordering into one decimal via :func:`packed_order_key` keeps the

@@ -9,20 +9,21 @@ Scale notes
 - Anti/semi joins (J8/J9/J13) are first-class Spark join types — no
   indicator-column trick needed, and they stay null-safe and shuffle-
   partitioned on the key.
-- ``idempotent_append`` reproduces the reference's read-then-anti-join
-  incremental ingest (``backend/app/utils.py:565-591``) as one plan: the
-  existing-key scan is range-pruned (F6) before the anti join, so at scale
-  it reads only the affected date partitions, never the full fact table.
+- The side-upload pipelines (``pipelines/risk.py``,
+  ``pipelines/incidents.py``) join upload-sized frames against the dims
+  on the driver, in pandas; their idempotent append (J9) reads the
+  existing keys of the upload's date range only.  The operators here
+  serve the queries.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["anti_join", "semi_join", "idempotent_append", "asof_join"]
+__all__ = ["anti_join", "semi_join", "asof_join"]
 
 
 def anti_join(left: DataFrame, right: DataFrame, on: Sequence[str]) -> DataFrame:
@@ -38,32 +39,6 @@ def anti_join(left: DataFrame, right: DataFrame, on: Sequence[str]) -> DataFrame
 def semi_join(left: DataFrame, right: DataFrame, on: Sequence[str]) -> DataFrame:
     """J13: rows of ``left`` that have at least one match in ``right``."""
     return left.join(right.select(*on).dropDuplicates(list(on)), list(on), "left_semi")
-
-
-def idempotent_append(
-    incoming: DataFrame,
-    existing: DataFrame,
-    keys: Sequence[str],
-    range_col: str | None = None,
-) -> DataFrame:
-    """J9: incremental idempotent ingest — keep only incoming rows whose key
-    is not already present (reference ``backend/app/utils.py:565-591``).
-
-    When ``range_col`` is given, the existing-side scan is bounded to the
-    incoming min/max of that column first (the reference's
-    ``WHERE disaster_date BETWEEN :min AND :max``, ``utils.py:568-575``) —
-    at scale this is the difference between scanning 2 partitions and 2000.
-    """
-    if range_col is not None:
-        bounds = incoming.agg(
-            F.min(range_col).alias("lo"), F.max(range_col).alias("hi")
-        ).first()
-        if bounds["lo"] is not None:
-            existing = existing.filter(
-                (F.col(range_col) >= F.lit(bounds["lo"]))
-                & (F.col(range_col) <= F.lit(bounds["hi"]))
-            )
-    return anti_join(incoming, existing, keys)
 
 
 def asof_join(

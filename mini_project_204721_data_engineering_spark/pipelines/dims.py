@@ -9,13 +9,14 @@ Postgres sequences, ours are reproducible).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mini_project_204721_data_engineering_spark.functions.text import clean_text
 
-__all__ = ["NORTH_PROVINCES_EN", "build_dims"]
+__all__ = ["NORTH_PROVINCES_EN", "build_dims", "collect_dims"]
 
 #: the 9 northern provinces kept by F3 (reference ``utils.py:83-85``)
 NORTH_PROVINCES_EN = (
@@ -66,3 +67,25 @@ def build_dims(
         .select("district_id", "district_name", "district_name_en", "province_id")
     )
     return province, district
+
+
+def collect_dims(
+    province: DataFrame, district: DataFrame, cols: dict[str, tuple[str | None, str | None]]
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Project both dims and bring them to the driver in ONE Spark job
+    (one collect of a union), as pandas frames.  ``cols`` maps an output
+    column to its (province, district) SQL text; ``None`` leaves the
+    column out of that side's frame.  The dims are ≈ 100 rows."""
+    def side(df: DataFrame, tag: str, pick: int) -> DataFrame:
+        return df.selectExpr(
+            f"'{tag}' AS dim", *[f"{e[pick] or 'NULL'} AS {c}" for c, e in cols.items()]
+        )
+
+    both = side(province, "province", 0).union(side(district, "district", 1))
+    rows = both.collect()
+    return tuple(
+        pd.DataFrame([r for r in rows if r["dim"] == tag], columns=both.columns)[
+            [c for c, e in cols.items() if e[pick]]
+        ]
+        for tag, pick in (("province", 0), ("district", 1))
+    )

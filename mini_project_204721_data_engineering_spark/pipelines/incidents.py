@@ -1,27 +1,43 @@
 """Incident-log ingest: normalized workbook rows → per-day counts with
-idempotent append.
+idempotent append, computed on the driver.
 
-Reference: ``backend/app/utils.py:470-616``.  Dataflow:
+Reference: ``backend/app/utils.py:470-616``.  An incident workbook is a
+few dozen to a few thousand rows and reaches the driver as pandas by
+contract (``read_incident_workbook``); the dims are ≈ 100 rows.  As in
+:mod:`.risk`, the relational steps run in pandas, the row formulas run
+in one Spark projection over the input's local relation (no job), and
+the result returns as one single-partition local frame.  Dataflow:
 
-1. name→id dim joins on trimmed names (J12, broadcast)
-2. strict-format date parse with null coercion (C6) + year (C7)
+1. strict-format date parse with null coercion (C6) + year (C7); trimmed
+   names
+2. name→id dim matches on trimmed names (J12)
 3. drop unmapped/unparseable rows (F8)
 4. count per (disaster_date, province_id, district_id) (A5)
-5. anti-join against keys already in the target, range-bounded scan
-   (S7 + J9 — the reference's read-then-filter becomes one plan via
-   :func:`operators.joins.idempotent_append`)
-6. re-attach counts, defaulting new singletons to 1 (J10,
-   ``utils.py:595-596``)
+5. anti-join against the keys already in ``existing`` (S7 + J9): one
+   collect of ``existing``'s keys, bounded to the upload's date range
+   (the reference's ``WHERE disaster_date BETWEEN :min AND :max``,
+   ``utils.py:565-591``), so it reads days × districts, never the table
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 
-from mini_project_204721_data_engineering_spark.operators.joins import idempotent_append
+from mini_project_204721_data_engineering_spark.functions.thaidates import (
+    be_to_ce_sql,
+    parse_be_date_sql,
+)
+from mini_project_204721_data_engineering_spark.pipelines.dims import collect_dims
 
 __all__ = ["ingest_incidents"]
+
+KEYS = ["disaster_date", "province_id", "district_id"]
+_OUT_DDL = (
+    "disaster_date date, year int, province_id int, district_id int, count_of_disasters int"
+)
 
 
 def ingest_incidents(
@@ -40,62 +56,54 @@ def ingest_incidents(
     2566 = 2023 — real Thai workbooks carry these) via
     `functions/thaidates.py`; the default stays the reference's strict
     CE-only parse (``utils.py:520-524``)."""
-    prov_keyed = province.select(
-        "province_id", F.trim(F.col("province_name")).alias("Province")
-    )
-    dist_keyed = district.select(
-        "district_id", "province_id", F.trim(F.col("district_name")).alias("District")
-    )
-
-    from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
-
     # C6: strict yyyy-MM-dd parse, null on malformed — try_to_date matches
     # pandas errors="coerce" and survives ANSI mode.  A workbook read via
     # pandas+openpyxl surfaces date-styled cells as datetime columns
     # already (reference utils.py:520-524) — accept those directly.
-    dd_type = workbook_rows.schema["Disaster Date"].dataType
-    if isinstance(dd_type, (DateType, TimestampType, TimestampNTZType)):
-        if be_years:
-            from mini_project_204721_data_engineering_spark.functions.thaidates import be_to_ce
-
-            parsed_date = be_to_ce(F.col("Disaster Date"))
-        else:
-            parsed_date = F.col("Disaster Date").cast("date")
+    dd = "`Disaster Date`"
+    if isinstance(
+        workbook_rows.schema["Disaster Date"].dataType,
+        (DateType, TimestampType, TimestampNTZType),
+    ):
+        parsed = be_to_ce_sql(dd) if be_years else f"CAST({dd} AS DATE)"
     elif be_years:
-        from mini_project_204721_data_engineering_spark.functions.thaidates import parse_be_date
-
-        parsed_date = parse_be_date(F.col("Disaster Date"))
+        parsed = parse_be_date_sql(dd)
     else:
-        parsed_date = F.try_to_date(F.col("Disaster Date"), "yyyy-MM-dd")
-    rows = (
-        workbook_rows.withColumn("Province", F.trim(F.col("Province")))
-        .withColumn("District", F.trim(F.col("District")))
-        .withColumn("disaster_date", parsed_date)
-        .join(F.broadcast(prov_keyed), "Province", "left")
-        .join(F.broadcast(dist_keyed), ["province_id", "District"], "left")
-        .na.drop(subset=["disaster_date", "province_id", "district_id"])
+        parsed = f"try_to_date({dd}, 'yyyy-MM-dd')"
+    parsed_rows = workbook_rows.selectExpr(
+        f"{parsed} AS disaster_date",
+        f"year({parsed}) AS year",
+        "trim(Province) AS Province",
+        "trim(District) AS District",
+    )
+    rows = pd.DataFrame(parsed_rows.collect(), columns=parsed_rows.columns)
+    prov, dist = collect_dims(
+        province,
+        district,
+        {
+            "province_id": ("province_id", "province_id"),
+            "Province": ("trim(province_name)", None),
+            "district_id": (None, "district_id"),
+            "District": (None, "trim(district_name)"),
+        },
     )
 
-    counts = rows.groupBy("disaster_date", "province_id", "district_id").agg(
-        F.count(F.lit(1)).alias("count_of_disasters")
+    # J12 + F8: an equi-join never matches a null key, so null keys drop
+    # first (pandas would match them to each other)
+    counts = (
+        rows.dropna()
+        .merge(prov.dropna(), on="Province")
+        .merge(dist.dropna(), on=["province_id", "District"])
+        .groupby(["disaster_date", "year", "province_id", "district_id"])
+        .size()
+        .rename("count_of_disasters")
+        .reset_index()
     )
 
-    if existing is not None:
-        new_keys = idempotent_append(
-            counts.select("disaster_date", "province_id", "district_id"),
-            existing.select("disaster_date", "province_id", "district_id"),
-            ["disaster_date", "province_id", "district_id"],
-            range_col="disaster_date",
-        )
-        # J10: re-attach counts; a key with no count row defaults to 1
-        counts = new_keys.join(
-            counts, ["disaster_date", "province_id", "district_id"], "left"
-        ).withColumn("count_of_disasters", F.coalesce(F.col("count_of_disasters"), F.lit(1)))
+    if existing is not None and len(counts):
+        # J9: keep only keys not already in the table
+        lo, hi = counts["disaster_date"].min(), counts["disaster_date"].max()
+        seen = existing.where(F.col("disaster_date").between(lo, hi)).select(*KEYS).collect()
+        counts = counts[~pd.MultiIndex.from_frame(counts[KEYS]).isin(seen)]
 
-    return counts.select(
-        "disaster_date",
-        F.year("disaster_date").alias("year"),
-        F.col("province_id").cast("int"),
-        F.col("district_id").cast("int"),
-        F.col("count_of_disasters").cast("int"),
-    )
+    return workbook_rows.sparkSession.createDataFrame(counts, _OUT_DDL).coalesce(1)

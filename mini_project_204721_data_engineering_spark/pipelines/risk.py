@@ -1,43 +1,43 @@
-"""Risk-table ingest: DBF rows → per-district risk levels.
+"""Risk-table ingest: DBF rows → per-district risk levels, computed on
+the driver.
 
-Reference: ``backend/app/utils.py:286-434``.  Dataflow (same semantics,
-set-based):
+Reference: ``backend/app/utils.py:286-434``.  A DBF risk table is a few
+dozen to a few thousand rows and reaches the driver as pandas by
+contract (``read_dbf``); the dims are ≈ 100 rows.  Run as a Spark plan,
+its joins and shuffles cost ~15 jobs per upload whatever the size, so
+the relational steps run in pandas and only the row formulas stay in
+Spark: one projection over the input's local relation, which Catalyst
+evaluates on the driver without a job.  The result returns as one
+single-partition local frame, so ``snapshot_append`` writes one file in
+one job.  Dataflow:
 
-1. normalize Thai keys (C2) on file rows and dims
+1. normalize Thai keys (C2) on file rows and dims; ``class_to_num`` (C4)
 2. optional ``special_fix`` (F9): province keys not present in the dims
    are overwritten to Uttaradit (``utils.py:321-332``)
-3. ``class_to_num`` (C4) with unmapped-class report (A8,
-   ``utils.py:347-350``)
-4. mean class per (province, district) (A4) → ``avg_to_level`` (C5)
-5. match against dims (J6/J7), fill every unmatched district of an
-   in-file province with risk_level=1 (J8 anti join + U1 union)
-6. dedup one row per district, matched rows win (A9 — the reference's
-   concat order makes ``keep="first"`` prefer matched rows; we encode
-   that order explicitly)
+3. mean class per (province, district) (A4)
+4. match against dims (J6/J7); add a fill row for every district of an
+   in-file province (J8 + U1)
+5. one row per district, matched rows win (A9 — the reference's concat
+   order makes ``keep="first"`` prefer matched rows; we encode that order
+   explicitly), so a fill row survives only where nothing matched
+6. mean → ``avg_to_level`` (C5) in Spark; a fill row gets risk_level 1
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from mini_project_204721_data_engineering_spark.functions.binning import avg_to_level, class_to_num
-from mini_project_204721_data_engineering_spark.functions.text import normalize_th
-from mini_project_204721_data_engineering_spark.operators.dedup import dedup_keep_first_agg
-from mini_project_204721_data_engineering_spark.operators.joins import anti_join
+from mini_project_204721_data_engineering_spark.functions.binning import (
+    avg_to_level_sql,
+    class_to_num_sql,
+)
+from mini_project_204721_data_engineering_spark.functions.text import normalize_th_sql
+from mini_project_204721_data_engineering_spark.pipelines.dims import collect_dims
 
-__all__ = ["ingest_risk_dbf", "unmapped_classes"]
+__all__ = ["ingest_risk_dbf"]
 
-
-def unmapped_classes(dbf: DataFrame) -> DataFrame:
-    """A8 diagnostic: distinct class values ``class_to_num`` can't map
-    (reference warning print, ``utils.py:347-350``)."""
-    return (
-        dbf.select(F.col("class").alias("raw_class"), class_to_num(F.col("class")).alias("n"))
-        .filter(F.col("n").isNull())
-        .select("raw_class")
-        .distinct()
-    )
+_MEANS_DDL = "upload_risk_id int, province_id int, district_id int, risk_avg double"
 
 
 def ingest_risk_dbf(
@@ -50,92 +50,68 @@ def ingest_risk_dbf(
     """DBF-shaped rows (prov_nam_t, amphoe_t, class) → risk_points rows
     ``(upload_risk_id, province_id, district_id, risk_level)``
     (storage DDL ``models.py:68-76``)."""
-    prov_keyed = province.select(
-        "province_id",
-        normalize_th(F.col("province_name")).alias("prov_key"),
-        "province_name_en",
+    keyed = dbf.selectExpr(
+        f"{normalize_th_sql('prov_nam_t')} AS prov_key",
+        f"{normalize_th_sql('amphoe_t')} AS dist_key",
+        f"{class_to_num_sql('`class`')} AS class_num",
     )
-    dist_keyed = district.select(
-        "district_id",
-        "province_id",
-        normalize_th(F.col("district_name")).alias("dist_key"),
-    )
-
-    rows = dbf.select(
-        normalize_th(F.col("prov_nam_t")).alias("prov_key"),
-        normalize_th(F.col("amphoe_t")).alias("dist_key"),
-        class_to_num(F.col("class")).alias("class_num"),
+    rows = pd.DataFrame(keyed.collect(), columns=keyed.columns)
+    prov, dist = collect_dims(
+        province,
+        district,
+        {
+            "province_id": ("province_id", "province_id"),
+            "prov_key": (normalize_th_sql("province_name"), None),
+            "province_name_en": ("province_name_en", None),
+            "district_id": (None, "district_id"),
+            "dist_key": (None, normalize_th_sql("district_name")),
+        },
     )
 
     if special_fix:
-        # F9: any unknown province key → Uttaradit (utils.py:321-332)
-        utt = (
-            prov_keyed.filter(F.col("province_name_en") == "Uttaradit")
-            .select("prov_key")
-            .first()
-        )
-        # driver-side collect is safe BY CONTRACT: prov_keyed is the
-        # province dimension (Thailand has 77 provinces; any country is
-        # O(100)) — the isin literal stays a few KB at any fact scale
-        known = [r["prov_key"] for r in prov_keyed.select("prov_key").collect()]
-        if utt is not None:
-            rows = rows.withColumn(
-                "prov_key",
-                F.when(~F.col("prov_key").isin(known), F.lit(utt["prov_key"])).otherwise(
-                    F.col("prov_key")
-                ),
-            )
+        # F9: any unknown province key → Uttaradit (utils.py:321-332), with
+        # SQL NOT IN semantics: a null key, or a null among the known
+        # keys, leaves the row as it is
+        utt = prov.loc[prov["province_name_en"] == "Uttaradit", "prov_key"]
+        if len(utt) and prov["prov_key"].notna().all():
+            unknown = rows["prov_key"].notna() & ~rows["prov_key"].isin(prov["prov_key"])
+            rows.loc[unknown, "prov_key"] = utt.iloc[0]
 
-    # A4 + C5: mean class per (province, district) → level
-    risk_by_amp = (
-        rows.dropna(subset=["class_num"])
-        .groupBy("prov_key", "dist_key")
-        .agg(F.avg("class_num").alias("risk_avg"))
-        .withColumn("risk_level", avg_to_level(F.col("risk_avg")))
+    # A4: mean class per (province, district).  Groups with a null key
+    # are dropped here: an equi-join never matches them below
+    means = (
+        rows.astype({"class_num": "float64"})
+        .dropna(subset=["class_num"])
+        .groupby(["prov_key", "dist_key"])["class_num"]
+        .mean()
+        .rename("risk_avg")
+        .reset_index()
     )
 
     # J6/J7: match to dims via (province key, district key)
-    dist_with_prov = dist_keyed.join(
-        F.broadcast(prov_keyed.select("province_id", F.col("prov_key").alias("prov_key_db"))),
-        "province_id",
-    )
-    matched = risk_by_amp.join(
-        F.broadcast(dist_with_prov),
-        (risk_by_amp.prov_key == dist_with_prov.prov_key_db)
-        & (risk_by_amp.dist_key == dist_with_prov.dist_key),
-        "left",
-    ).select("province_id", "district_id", "risk_level", risk_by_amp.prov_key)
+    dist_with_prov = dist.merge(prov[["province_id", "prov_key"]].dropna(), on="province_id")
+    matched = means.merge(dist_with_prov, on=["prov_key", "dist_key"])
 
-    matched_ok = matched.dropna(subset=["province_id", "district_id"]).select(
-        "province_id", "district_id", "risk_level"
-    )
-
-    # J8 + U1: every district of an in-file province with no match → level 1
-    prov_ids_in_file = (
-        risk_by_amp.select("prov_key")
-        .distinct()
-        .join(F.broadcast(prov_keyed.select("province_id", "prov_key")), "prov_key")
-        .select("province_id")
-        .distinct()
-    )
-    all_districts = dist_with_prov.join(
-        F.broadcast(prov_ids_in_file), "province_id", "left_semi"
-    ).select("province_id", "district_id")
-    missing = anti_join(
-        all_districts, matched_ok.select("province_id", "district_id"), ["province_id", "district_id"]
-    ).withColumn("risk_level", F.lit(1))
+    # J8 + U1: a fill row for every district of an in-file province
+    in_file = prov.loc[prov["prov_key"].isin(means["prov_key"]), "province_id"]
+    fill = dist_with_prov.loc[dist_with_prov["province_id"].isin(in_file)]
+    result = pd.concat([matched.assign(_src=0), fill.assign(_src=1, risk_avg=float("nan"))])
 
     # A9: matched rows win over fill rows; one row per district
     result = (
-        matched_ok.withColumn("_src", F.lit(0))
-        .unionByName(missing.withColumn("_src", F.lit(1)))
+        result.sort_values(["district_id", "_src", "province_id", "risk_avg"])
+        .drop_duplicates("district_id")
+        .assign(upload_risk_id=upload_risk_id)
     )
-    result = dedup_keep_first_agg(
-        result, ["district_id"], ["_src", "province_id"]
-    ).drop("_src")
-    return result.select(
-        F.lit(upload_risk_id).alias("upload_risk_id"),
-        F.col("province_id").cast("int"),
-        F.col("district_id").cast("int"),
-        F.col("risk_level").cast("int"),
+    return (
+        dbf.sparkSession.createDataFrame(
+            result[["upload_risk_id", "province_id", "district_id", "risk_avg"]], _MEANS_DDL
+        )
+        .selectExpr(
+            "upload_risk_id",
+            "province_id",
+            "district_id",
+            f"coalesce({avg_to_level_sql('risk_avg')}, 1) AS risk_level",
+        )
+        .coalesce(1)
     )

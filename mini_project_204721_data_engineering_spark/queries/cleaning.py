@@ -61,12 +61,15 @@ def special_fix_masked_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(fixed == "MACHINERY", F.lit("ต่ำ"))
         .otherwise(F.lit("very low"))
     )
-    return cust.select(
+    worded = cust.select(
+        "c_custkey", "c_nationkey", fixed.alias("segment_fixed"), word.alias("risk_word")
+    )
+    return worded.select(
         "c_custkey",
-        fixed.alias("segment_fixed"),
-        word.alias("risk_word"),
-        class_to_num(word).alias("class_from_word"),
-        class_to_num(F.col("c_nationkey")).alias("natkey_clamped"),
+        "segment_fixed",
+        "risk_word",
+        class_to_num("risk_word").alias("class_from_word"),
+        class_to_num("c_nationkey").alias("natkey_clamped"),
     )
 
 

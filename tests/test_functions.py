@@ -198,12 +198,9 @@ class TestThaiDates:
         )
         checked = spine.select(
             "d",
-            parse_be_date(F.date_format("d", "yyyy-MM-dd")).alias("ce"),
+            parse_be_date("date_format(d, 'yyyy-MM-dd')").alias("ce"),
             parse_be_date(
-                F.concat(
-                    F.lpad((F.year("d") + 543).cast("string"), 4, "0"),
-                    F.date_format("d", "-MM-dd"),
-                )
+                "concat(lpad(CAST(year(d) + 543 AS STRING), 4, '0'), date_format(d, '-MM-dd'))"
             ).alias("be"),
         )
         bad = checked.filter(

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from mini_project_204721_data_engineering_spark.operators.aggregates import min_coord_step, weighted_mean
 from mini_project_204721_data_engineering_spark.operators.dedup import dedup_keep_first
-from mini_project_204721_data_engineering_spark.operators.joins import anti_join, idempotent_append, semi_join
+from mini_project_204721_data_engineering_spark.operators.joins import anti_join, semi_join
 from mini_project_204721_data_engineering_spark.operators.query_builder import ListQuery
 
 
@@ -56,17 +56,6 @@ def test_anti_and_semi_join_partition(spark):
     assert missing == {1, 3, 5, 7, 9}
     assert present == {0, 2, 4, 6, 8}
     assert missing | present == set(range(10))
-
-
-def test_idempotent_append_range_pruned(spark):
-    incoming = spark.createDataFrame(
-        [Row(k=1, d="2024-01-02"), Row(k=2, d="2024-01-03"), Row(k=3, d="2024-01-04")]
-    )
-    existing = spark.createDataFrame(
-        [Row(k=2, d="2024-01-03"), Row(k=9, d="2023-06-01")]
-    )
-    out = idempotent_append(incoming, existing, ["k", "d"], range_col="d")
-    assert sorted(r["k"] for r in out.collect()) == [1, 3]
 
 
 def test_dedup_keep_first_deterministic(spark):
@@ -118,39 +107,6 @@ def test_asof_join_picks_latest_at_or_before(spark):
     assert out["c"] == (None, None)   # nothing at or before t=2
     assert out["d"] == (None, None)   # k=2 only has rt=9 > 7
     assert out["e"] == (None, None)   # key absent on right
-
-
-def test_dedup_keep_first_agg_matches_window_form(spark):
-    """The min(struct) aggregation form must be row-for-row identical to
-    the row_number window form for ascending orders — including NULL
-    order values (struct comparison treats a null field as smallest,
-    matching the window's asc nulls-first)."""
-    from mini_project_204721_data_engineering_spark.operators.dedup import (
-        dedup_keep_first,
-        dedup_keep_first_agg,
-    )
-
-    df = spark.createDataFrame(
-        [
-            Row(k="a", o=3, id=1, v="x"),
-            Row(k="a", o=1, id=2, v="y"),
-            Row(k="a", o=1, id=3, v="z"),  # tie on o → id breaks it
-            Row(k="b", o=None, id=4, v="n"),  # null sorts FIRST
-            Row(k="b", o=0, id=5, v="m"),
-            Row(k="c", o=7, id=6, v="s"),
-        ]
-    )
-    win = sorted(
-        map(tuple, dedup_keep_first(df, ["k"], [F.col("o").asc(), F.col("id").asc()])
-            .select("k", "o", "id", "v").collect())
-    )
-    agg = sorted(
-        map(tuple, dedup_keep_first_agg(df, ["k"], ["o", "id"])
-            .select("k", "o", "id", "v").collect())
-    )
-    assert agg == win
-    assert [r[0] for r in agg] == ["a", "b", "c"]
-    assert {r[2] for r in agg} == {2, 4, 6}
 
 
 def test_packed_order_key_isomorphic_to_tuple_order(spark):

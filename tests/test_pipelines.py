@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from mini_project_204721_data_engineering_spark.pipelines.dims import build_dims
 from mini_project_204721_data_engineering_spark.pipelines.incidents import ingest_incidents
 from mini_project_204721_data_engineering_spark.pipelines.rain import ingest_rain_grid
-from mini_project_204721_data_engineering_spark.pipelines.risk import ingest_risk_dbf, unmapped_classes
+from mini_project_204721_data_engineering_spark.pipelines.risk import ingest_risk_dbf
 from mini_project_204721_data_engineering_spark.sources.dbf import read_dbf, write_dbf
 from mini_project_204721_data_engineering_spark.sources.excel import choose_sheet, normalize_incident_sheet
 from mini_project_204721_data_engineering_spark.sources.geometry import parse_wkt_polygon, point_in_ring
@@ -148,8 +148,6 @@ def test_risk_pipeline_with_real_dbf_roundtrip(spark, dims, tmp_path):
     assert back["prov_nam_t"][0] == "จ.เชียงใหม่"
 
     dbf = spark.createDataFrame(back)
-    assert [r["raw_class"] for r in unmapped_classes(dbf).collect()] == ["junk"]
-
     out = ingest_risk_dbf(dbf, province, district, upload_risk_id=3)
     got = {r["district_id"]: r for r in out.collect()}
     ids = {r["district_name"]: r["district_id"] for r in district.collect()}

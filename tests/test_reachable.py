@@ -6,9 +6,9 @@ the correctness gate (``tools/verify_local.py``).  A module that none of
 them imports is code only tests reach; this guard keeps such modules
 from growing back.  ``plans`` is the one deliberate exception: it is the
 plan-shape assertion helper the tests use to check reachable queries.
-Four unreached modules are listed by name in ``NOT_YET_CUT`` until they
+Three unreached modules are listed by name in ``NOT_YET_CUT`` until they
 are cut too: the ``jsonl`` and ``protobuf`` readers, and the ``heavy``
-(heavy hitters) and ``incremental`` (delta view maintenance) operators.
+(heavy hitters) operator.
 
 Stdlib only, no Spark session: the walk reads ``import`` statements with
 :mod:`ast`, at any depth (function-level imports count) and with relative
@@ -33,7 +33,6 @@ NOT_YET_CUT = {
     "sources.jsonl",
     "sources.protobuf",
     "operators.heavy",
-    "operators.incremental",
 }
 
 

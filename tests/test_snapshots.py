@@ -490,78 +490,6 @@ def test_compact_packs_small_files_preserving_content(spark, tmp_path):
     assert snapshot_compact(spark, t, target_file_bytes=1 << 30)["version"] == m["version"]
 
 
-def test_lakehouse_loop_stream_to_snapshot_to_maintained_aggregate(spark, tmp_path):
-    """The full loop: a CDC-shaped stream lands EXACTLY-ONCE into the
-    snapshot log fact table while a serving aggregate is maintained
-    INCREMENTALLY from the same batches — after every batch (and after
-    a full replay), the maintained aggregate ≡ a from-scratch recompute
-    over the snapshot tip.  Ties streaming + snapshots + incremental
-    maintenance into the architecture the pieces exist for."""
-    from mini_project_204721_data_engineering_spark.operators.incremental import (
-        base_aggregate,
-        maintain_aggregate,
-    )
-    from mini_project_204721_data_engineering_spark.sources.snapshots import (
-        snapshot_txn_append,
-    )
-
-    src = str(tmp_path / "src")
-    fact = str(tmp_path / "fact")
-    os.makedirs(src)
-    schema = "id bigint, grp string, val double"
-    feed_schema = (
-        "op string, before struct<id:bigint,grp:string,val:double>, "
-        "after struct<id:bigint,grp:string,val:double>"
-    )
-    meas = {"cents": lambda r: F.round(r["val"] * 100).cast("long")}
-    for i in range(4):  # four source files = four micro-batches
-        spark.createDataFrame(
-            [(i * 10 + j, "g" + str(j % 3), float(j)) for j in range(10)], schema
-        ).coalesce(1).write.parquet(os.path.join(src, f"b{i}"))
-
-    agg_state = {"df": base_aggregate(
-        spark.createDataFrame([], schema), ["grp"], meas
-    ).localCheckpoint()}
-
-    def land(batch_df, batch_id):
-        committed = snapshot_txn_append(batch_df, fact, "loop", int(batch_id))
-        if committed is None:
-            return  # replayed batch: fact unchanged, aggregate unchanged
-        row = F.struct(*[F.col(c) for c in batch_df.columns])
-        feed = batch_df.select(
-            F.lit("insert").alias("op"),
-            F.when(F.lit(False), row).alias("before"),
-            row.alias("after"),
-        )
-        agg_state["df"] = maintain_aggregate(
-            agg_state["df"], feed, ["grp"], meas
-        ).localCheckpoint()
-
-    def run(chk):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/*")
-            .writeStream.foreachBatch(land)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run(str(tmp_path / "chk1"))
-    tip = read_snapshot(spark, fact)
-    assert tip.count() == 40
-    recomputed = base_aggregate(tip, ["grp"], meas)
-    as_dict = lambda df: {r["grp"]: (r["cents"], r["n"]) for r in df.collect()}
-    assert as_dict(agg_state["df"]) == as_dict(recomputed)
-
-    # lost-checkpoint full replay: fact AND aggregate both unmoved
-    run(str(tmp_path / "chk2"))
-    assert read_snapshot(spark, fact).count() == 40
-    assert as_dict(agg_state["df"]) == as_dict(recomputed)
-
-
 def test_replace_where_atomic_slice_reload(spark, tmp_path):
     from mini_project_204721_data_engineering_spark.sources.snapshots import snapshot_replace_where
 

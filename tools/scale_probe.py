@@ -5,7 +5,7 @@ this generates 1e7-4e7) with a DELIBERATE hot key, and time them.
 The point is to measure, not guess, the claims SCALE.md leans on.
 Measured findings (SCALE.md "Measured at 100-400x" table):
 
-1. the wide operators (dedup agg, asof union+window, rollup cascade)
+1. the wide operators (asof union+window, rollup cascade)
    scale linearly-to-sublinearly from 1e7 to 4e7 rows; the rollup and
    the plain groupBy stay nearly FLAT because their shuffle volume is
    |groups|, not |rows| (map-side combine absorbs the growth);
@@ -130,19 +130,7 @@ def main() -> None:
 
     timed("groupby_salted_skewed", salted, out)
 
-    # 2. exact dedup (agg form) on a 50%-duplicated key space
-    def dedup():
-        from mini_project_204721_data_engineering_spark.operators.dedup import (
-            dedup_keep_first_agg,
-        )
-
-        d = ev.withColumn("k", F.pmod(F.col("event_id"), F.lit(n // 2)))
-        kept = dedup_keep_first_agg(d, ["k"], ["event_id"])
-        return kept.agg(F.count(F.lit(1)), F.sum("event_id")).collect()[0][0]
-
-    timed("dedup_keep_first_agg_50pct_dups", dedup, out)
-
-    # 3. as-of join: every event against a daily per-user spine (fact-fact)
+    # 2. as-of join: every event against a daily per-user spine (fact-fact)
     def asof():
         from mini_project_204721_data_engineering_spark.operators.joins import asof_join
 
@@ -188,7 +176,7 @@ def main() -> None:
 
     timed("asof_union_window_tolerance_12h", asof_tolerance, out)
 
-    # 4. hourly -> daily rollup cascade
+    # 3. hourly -> daily rollup cascade
     def rollup():
         from mini_project_204721_data_engineering_spark.operators.rollup import (
             reaggregate,
