@@ -33,9 +33,10 @@ nanos fix-up flag — and every later :func:`load_table` is
 
 Version-keyed views
 -------------------
-The served queries are single ``spark.sql`` statements; they name their
-tables through :func:`table_view`, which returns a session temp view over
-the same pinned read (``events`` nanos fix-up included).
+The served queries are single ``spark.sql`` statements run through
+:func:`served_sql`, which names their tables by :func:`table_view`: a
+session temp view over the same pinned read (``events`` nanos fix-up
+included).
 
 - **Name = version.**  The view name is derived from the table's absolute
   path and its version token, so a rewritten table gets a NEW view and
@@ -46,11 +47,48 @@ the same pinned read (``events`` nanos fix-up included).
 - **Listing.**  A view keeps the file listing its read took.  The token
   is taken before and after that read, and the view is named only by a
   token that held across it, so a name always means one set of files.
-- **Lifetime.**  Views are session temp views: they live as long as the
-  session, and a new session registers its own.  A superseded view is
-  left registered, not dropped, because a statement another thread is
-  analysing at that moment may still name it; a table rewritten n times
-  in one session leaves n views (each a plan and its file listing).
+- **Version in the plan.**  The view's read carries its version digest
+  as a reader option.  Spark's own cache matches plans by path, not by
+  what is on disk; with the digest in the relation, a persisted plan of
+  one version never stands in for another version's read.
+- **Lifetime.**  Views are session temp views, and a new session
+  registers its own.  A served build (:func:`served_sql`) holds the names
+  it formats into its statement until its analysis returns.  Once a newer
+  version's view is registered, the superseded view is dropped as soon as
+  no build holds it, together with every served result that reads it.
+  So a table rewritten n times in one session keeps one view, plus one
+  per superseded version a build is analysing at that moment.  A name
+  from :func:`table_view` itself is held by nothing: it stays registered
+  until the table is rewritten and a later call registers the new view.
+
+Result reuse
+------------
+:func:`served_sql` runs the served named queries (the dashboard,
+``avg_level_by_brand``, ``order_scalar_stats``) and keeps each result,
+so a repeated request in one table version is a dictionary lookup.
+
+- **Key.**  The formatted statement text plus its named parameters.  The
+  text names each table by its version-keyed view, so a rewritten table
+  yields a new key: a stale hit cannot happen, and no version bookkeeping
+  is needed.
+- **Value.**  A persisted DataFrame (``MEMORY_AND_DISK``, lineage kept).
+  Its first action fills Spark's cache, and every later action reads the
+  cached rows.  Callers still get a DataFrame (``toPandas``, ``collect``),
+  and concurrent actions on one DataFrame are safe.  No Arrow copy is
+  kept: serving one would take a ``createDataFrame`` per request, a new
+  plan and the rows shipped back to the JVM, which measured slower than
+  reading the persisted rows.
+- **Bounds.**  At most ``_RESULTS_KEPT`` results per session, in LRU
+  order; an evicted result is unpersisted.  A result is also unpersisted
+  when a view it reads is dropped (see "Lifetime").  Results live per
+  session in a ``WeakKeyDictionary``, like the resolutions and views,
+  and a new session builds its own.  A session dropped while it still
+  keeps results does not unpersist them; the served sessions live as
+  long as their process.
+- **Sharing.**  Spark's cache is shared across sessions, so two
+  sessions' results of one statement and version share one cached copy,
+  and unpersisting either one uncaches it for both.  The other session's
+  result then reads from its lineage again: the same rows, only slower.
 
 Scale notes
 -----------
@@ -71,7 +109,8 @@ import os
 import stat
 import threading
 import weakref
-from typing import NamedTuple
+from collections import Counter, OrderedDict
+from typing import Any, NamedTuple
 
 import pyarrow as pa
 import pyarrow.dataset as ds
@@ -80,7 +119,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
-__all__ = ["TABLES", "SMALL_DIMS", "load_table", "load_tables", "table_view"]
+__all__ = ["TABLES", "SMALL_DIMS", "load_table", "load_tables", "served_sql", "table_view"]
 
 TABLES = (
     "region",
@@ -113,8 +152,27 @@ _RESOLVED: weakref.WeakKeyDictionary[SparkSession, dict[str, _Resolved]] = (
 _VIEWS: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, str]]] = (
     weakref.WeakKeyDictionary()
 )
+#: served results kept per session (LRU; an evicted one is unpersisted)
+_RESULTS_KEPT = 16
+
+
+class _Served:
+    """One session's served-build state; guarded by ``_LOCK``."""
+
+    def __init__(self) -> None:
+        #: (statement text, args) -> (views it reads, persisted DataFrame)
+        self.results: OrderedDict[tuple, tuple[frozenset[str], DataFrame]] = OrderedDict()
+        #: view name -> served builds holding it
+        self.held: Counter[str] = Counter()
+        #: views replaced by a newer version but still held
+        self.superseded: set[str] = set()
+
+
+#: session -> served-build state
+_SERVED: weakref.WeakKeyDictionary[SparkSession, _Served] = weakref.WeakKeyDictionary()
 _LOCK = threading.Lock()
-#: serializes view registration only; hits never take it
+#: serializes view registration and drops; hits never take it.  Taken
+#: before ``_LOCK``, never while holding it
 _REGISTER = threading.Lock()
 
 
@@ -191,30 +249,124 @@ def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
     now, for ``spark.sql`` statements (see "Version-keyed views" in the
     module docstring): registered on the first call per (session, path,
     version token), a ``stat`` and a dict lookup after that."""
-    key = _table_path(sf_dir, name)
+    return _view(spark, _table_path(sf_dir, name), name, hold=False)
+
+
+def served_sql(
+    spark: SparkSession,
+    sf_dir: str,
+    template: str,
+    tables: tuple[str, ...],
+    args: dict[str, Any] | None = None,
+) -> DataFrame:
+    """``spark.sql`` of ``template`` formatted with the version-keyed view
+    of each table in ``tables`` (``{orders}`` → :func:`table_view`), with
+    named parameters ``args``.  The result is persisted and kept per
+    session, so a repeat in the same table versions returns the same
+    DataFrame with no py4j call (see "Result reuse" in the module
+    docstring)."""
+    state = _state(spark)
+    held: list[str] = []
+    try:
+        views = {}
+        for t in tables:
+            views[t] = _view(spark, _table_path(sf_dir, t), t, hold=True)
+            held.append(views[t])
+        key = (template.format(**views), tuple(sorted((args or {}).items())))
+        with _LOCK:
+            hit = state.results.get(key)
+            if hit is not None:
+                state.results.move_to_end(key)
+                return hit[1]
+        # two threads may both build a new key; both return the one kept,
+        # and Spark caches one copy of the plan for both
+        df = spark.sql(key[0], args=args).persist()
+        with _LOCK:
+            kept = state.results.setdefault(key, (frozenset(held), df))[1]
+            state.results.move_to_end(key)
+            evicted = [
+                state.results.popitem(last=False)[1][1]
+                for _ in range(len(state.results) - _RESULTS_KEPT)
+            ]
+        for old in evicted:
+            old.unpersist()
+        return kept
+    finally:
+        _release(spark, held)
+
+
+def _state(spark: SparkSession) -> _Served:
+    with _LOCK:
+        return _SERVED.setdefault(spark, _Served())
+
+
+def _view(spark: SparkSession, key: str, name: str, hold: bool) -> str:
+    """:func:`table_view` for absolute path ``key``; ``hold`` takes a hold
+    on the returned name (released by :func:`_release`)."""
     token = _version_token(key)
+    state = _state(spark)
     with _LOCK:
         hit = _VIEWS.setdefault(spark, {}).get(key)
-    if hit is not None and hit[0] == token:
-        return hit[1]
+        if hit is not None and hit[0] == token:
+            if hold:
+                state.held[hit[1]] += 1
+            return hit[1]
     with _REGISTER:
         while True:
             with _LOCK:
                 hit = _VIEWS[spark].get(key)
-            if hit is not None and hit[0] == token:
-                return hit[1]  # another thread registered it meanwhile
-            df = _read(spark, key, token, name)
+                if hit is not None and hit[0] == token:  # registered meanwhile
+                    if hold:
+                        state.held[hit[1]] += 1
+                    return hit[1]
+            digest = hashlib.blake2b(repr((key, token)).encode(), digest_size=8).hexdigest()
+            df = _read(spark, key, token, name, version=digest)
             # the view keeps the file listing the read just took: name it
             # by the token only if the table did not change around it
             listed, token = token, _version_token(key)
             if token == listed:
                 break
-        digest = hashlib.blake2b(repr((key, token)).encode(), digest_size=8).hexdigest()
         view = f"graft_{name}_{digest}"
         df.createOrReplaceTempView(view)
         with _LOCK:
+            if hold:
+                state.held[view] += 1
+            state.superseded.discard(view)
+            if hit is not None and hit[1] != view:
+                state.superseded.add(hit[1])
             _VIEWS[spark][key] = (token, view)
+        _drop_superseded(spark, state)
     return view
+
+
+def _release(spark: SparkSession, names: list[str]) -> None:
+    """Give up a build's holds; drop what no build holds any more."""
+    if not names:
+        return
+    state = _state(spark)
+    with _LOCK:
+        state.held -= Counter(names)  # in place; keeps positive counts only
+        if not any(state.held[n] == 0 and n in state.superseded for n in names):
+            return
+    with _REGISTER:
+        _drop_superseded(spark, state)
+
+
+def _drop_superseded(spark: SparkSession, state: _Served) -> None:
+    """Drop every superseded view no build holds, and unpersist the
+    results that read one.  Runs under ``_REGISTER``, so no view is
+    registered (nor a superseded one made current) meanwhile."""
+    with _LOCK:
+        drop = {n for n in state.superseded if state.held[n] == 0}
+        if not drop:
+            return
+        state.superseded -= drop
+        stale = [k for k, (views, _) in state.results.items() if views & drop]
+        evicted = [state.results.pop(k)[1] for k in stale]
+    for df in evicted:
+        df.unpersist()
+    for n in sorted(drop):
+        spark.catalog.dropTempView(n)
 
 
 def _table_path(sf_dir: str, name: str) -> str:
@@ -223,9 +375,15 @@ def _table_path(sf_dir: str, name: str) -> str:
     return os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _read(spark: SparkSession, key: str, token: tuple, name: str) -> DataFrame:
+def _read(
+    spark: SparkSession, key: str, token: tuple, name: str, version: str | None = None
+) -> DataFrame:
     schema, nanos = _pinned(spark, key, token, name)
-    df = spark.read.schema(schema).parquet(key)
+    reader = spark.read.schema(schema)
+    if version is not None:
+        # part of the relation, so Spark's cache tells versions apart
+        reader = reader.option("graft.version", version)
+    df = reader.parquet(key)
     if nanos:
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

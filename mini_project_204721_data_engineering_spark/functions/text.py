@@ -7,6 +7,9 @@ Reference semantics:
   normalization, whitespace trim; null-safe.
 - ``normalize_th`` (``backend/app/utils.py:276-284``): trim, collapse runs
   of whitespace to one space, strip leading ``จ.`` / ``อ.`` prefixes.
+  "Whitespace" is Python's (``str.strip()`` / ``re`` ``\\s``: tab, NBSP,
+  U+3000 …); Spark ``trim`` strips U+0020 only and Java ``\\s`` has no
+  NBSP, so the SQL text spells Python's set out (:data:`WHITESPACE`).
 - ``normalize_sheets`` (``backend/app/utils.py:437-449``): driver-side sheet
   name canonicalization (lowercase, drop non-word chars, strip trailing
   CE/BE years) — plain Python, the sheet list exists before any DataFrame.
@@ -34,6 +37,7 @@ __all__ = [
     "clean_text",
     "normalize_th",
     "normalize_th_sql",
+    "strip_sql",
     "nfc_normalize",
     "normalize_sheet_name",
 ]
@@ -79,12 +83,24 @@ def clean_text(col: Column, *, nfc: bool = False) -> Column:
     return c
 
 
+#: the characters Python's ``str.isspace`` (and ``re`` ``\\s``) accept, as
+#: a Java regex class in SQL-literal escaping
+WHITESPACE = (
+    r"[\\x{9}-\\x{d}\\x{1c}-\\x{20}\\x{85}\\x{a0}\\x{1680}\\x{2000}-\\x{200a}"
+    r"\\x{2028}\\x{2029}\\x{202f}\\x{205f}\\x{3000}]"
+)
+
+
+def strip_sql(s: str) -> str:
+    """Python ``str.strip()`` as Spark SQL text over operand text ``s``."""
+    return f"regexp_replace({s}, '^{WHITESPACE}+|{WHITESPACE}+$', '')"
+
+
 def normalize_th_sql(s: str) -> str:
     """Reference ``normalize_th`` (``backend/app/utils.py:276-284``) as
-    Spark SQL text over operand text ``s``: trim, collapse whitespace
-    runs, strip a leading ``จ.`` / ``อ.``, trim.  ``trim`` strips spaces
-    only and ``\\s`` is the Java class (no NBSP)."""
-    c = rf"regexp_replace(trim({s}), '\\s+', ' ')"
+    Spark SQL text over operand text ``s``: collapse whitespace runs to
+    one space and trim, strip a leading ``จ.`` / ``อ.``, trim."""
+    c = f"trim(regexp_replace({s}, '{WHITESPACE}+', ' '))"
     c = rf"regexp_replace(regexp_replace({c}, '^จ\\.', ''), '^อ\\.', '')"
     return f"trim({c})"
 

@@ -1,9 +1,6 @@
 """Distributed operator library (SURVEY §2.2-§2.7): the joins, dedup,
 aggregates, rollups, skew handling, bloom pruning, diff and pagination
-that the declared queries and snapshot tables call.
-
-``heavy`` is reached by no entry point; ``tests/test_reachable.py``
-lists it until it is cut."""
+that the declared queries and snapshot tables call."""
 
 from mini_project_204721_data_engineering_spark.operators.query_builder import ListQuery, Page
 from mini_project_204721_data_engineering_spark.operators.joins import anti_join, semi_join

@@ -8,9 +8,9 @@ contract (``read_incident_workbook``); the dims are ≈ 100 rows.  As in
 in one Spark projection over the input's local relation (no job), and
 the result returns as one single-partition local frame.  Dataflow:
 
-1. strict-format date parse with null coercion (C6) + year (C7); trimmed
-   names
-2. name→id dim matches on trimmed names (J12)
+1. strict-format date parse with null coercion (C6) + year (C7); names
+   stripped of Python's whitespace (``str.strip()``, tab and NBSP too)
+2. name→id dim matches on stripped names (J12)
 3. drop unmapped/unparseable rows (F8)
 4. count per (disaster_date, province_id, district_id) (A5)
 5. anti-join against the keys already in ``existing`` (S7 + J9): one
@@ -30,6 +30,7 @@ from mini_project_204721_data_engineering_spark.functions.thaidates import (
     be_to_ce_sql,
     parse_be_date_sql,
 )
+from mini_project_204721_data_engineering_spark.functions.text import strip_sql
 from mini_project_204721_data_engineering_spark.pipelines.dims import collect_dims
 
 __all__ = ["ingest_incidents"]
@@ -73,8 +74,8 @@ def ingest_incidents(
     parsed_rows = workbook_rows.selectExpr(
         f"{parsed} AS disaster_date",
         f"year({parsed}) AS year",
-        "trim(Province) AS Province",
-        "trim(District) AS District",
+        f"{strip_sql('Province')} AS Province",
+        f"{strip_sql('District')} AS District",
     )
     rows = pd.DataFrame(parsed_rows.collect(), columns=parsed_rows.columns)
     prov, dist = collect_dims(
@@ -82,9 +83,9 @@ def ingest_incidents(
         district,
         {
             "province_id": ("province_id", "province_id"),
-            "Province": ("trim(province_name)", None),
+            "Province": (strip_sql("province_name"), None),
             "district_id": (None, "district_id"),
-            "District": (None, "trim(district_name)"),
+            "District": (None, strip_sql("district_name")),
         },
     )
 

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mini_project_204721_data_engineering_spark.catalog import load_table, table_view
+from mini_project_204721_data_engineering_spark.catalog import load_table, served_sql
 from mini_project_204721_data_engineering_spark.functions.binning import avg_to_level_sql
 from mini_project_204721_data_engineering_spark.operators.aggregates import min_coord_step, weighted_mean
 from mini_project_204721_data_engineering_spark.operators.dedup import dedup_keep_first_packed
@@ -144,15 +144,10 @@ ORDER BY brand
 def avg_level_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4+C5: grouped mean then ``avg_to_level`` binning (reference
     ``utils.py:353-366``) — mean discount scaled to the 1-3 class range.
-    One ``spark.sql`` statement over the catalog's version-keyed views
-    (one analysis per request); C5 is spliced in from its single SQL-text
-    definition."""
-    return spark.sql(
-        _AVG_LEVEL_BY_BRAND.format(
-            lineitem=table_view(spark, sf_dir, "lineitem"),
-            part=table_view(spark, sf_dir, "part"),
-        )
-    )
+    One ``spark.sql`` statement over the catalog's version-keyed views,
+    its result reused until a table changes (``catalog.served_sql``); C5
+    is spliced in from its single SQL-text definition."""
+    return served_sql(spark, sf_dir, _AVG_LEVEL_BY_BRAND, ("lineitem", "part"))
 
 
 AVG_LEVEL_BY_BRAND_SQL = """

@@ -13,8 +13,10 @@ incidents.  The probability formula C16 is promoted into the engine.
 
 The query is ONE ``spark.sql`` statement with the incident day as the
 named parameter ``:day``, over the catalog's version-keyed views
-(``catalog.table_view``), so each request costs one parse and one
-Catalyst analysis instead of one re-analysis per DataFrame step.  The
+(``catalog.served_sql``), so a build costs one parse and one Catalyst
+analysis instead of one re-analysis per DataFrame step.  The dashboard
+takes no request parameters, so every request after the first in a
+table version reuses the first one's persisted result.  The
 C16/C17 formulas and ``portable_round`` are spliced in from their single
 SQL-text definitions (``functions/binning.py``, ``functions/parity.py``).
 
@@ -31,7 +33,7 @@ import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mini_project_204721_data_engineering_spark.catalog import table_view
+from mini_project_204721_data_engineering_spark.catalog import served_sql
 from mini_project_204721_data_engineering_spark.functions.binning import (
     estimate_probability_sql,
     probability_color_sql,
@@ -115,9 +117,11 @@ FROM probable
 def dashboard_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J11 4-way left join + C16 probability + C17 binning, as one
     statement (see the module docstring)."""
-    views = {t: table_view(spark, sf_dir, t) for t in ("customer", "nation", "orders", "events")}
-    return spark.sql(
-        _STATEMENT.format(**views),
+    return served_sql(
+        spark,
+        sf_dir,
+        _STATEMENT,
+        ("customer", "nation", "orders", "events"),
         args={"day": datetime.date.fromisoformat(INCIDENT_DAY)},
     )
 

@@ -18,7 +18,7 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mini_project_204721_data_engineering_spark.catalog import load_table, table_view
+from mini_project_204721_data_engineering_spark.catalog import load_table, served_sql
 from mini_project_204721_data_engineering_spark.operators.query_builder import ListQuery
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -187,9 +187,13 @@ def order_scalar_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     date endpoint (``main.py:668-676``) — a conditional count plus
     unconditional min/max needs no second pass over the table.  One
     ``spark.sql`` statement over the catalog's version-keyed view of
-    ``orders``, the date bounds as named parameters."""
-    return spark.sql(
-        _ORDER_SCALAR_STATS.format(orders=table_view(spark, sf_dir, "orders")),
+    ``orders``, the date bounds as named parameters; its result is reused
+    until ``orders`` changes (``catalog.served_sql``)."""
+    return served_sql(
+        spark,
+        sf_dir,
+        _ORDER_SCALAR_STATS,
+        ("orders",),
         args={"start_date": datetime.date(1995, 6, 1), "end_date": datetime.date(1997, 5, 31)},
     )
 

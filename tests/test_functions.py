@@ -256,3 +256,21 @@ class TestThaiDates:
         )
         got = [r["c"] for r in df.select(be_to_ce(F.col("d")).alias("c")).collect()]
         assert got == [None, datetime.date(2017, 2, 28)]
+
+
+def test_normalize_th_strips_and_collapses_python_whitespace(spark):
+    """Every character Python's ``re`` ``\\s`` / ``str.isspace`` treats
+    as whitespace (tab, NBSP, U+1C-1F, U+3000 …) collapses and strips
+    as in the reference's ``normalize_th``; U+200B is not whitespace."""
+    import re
+    import sys
+
+    def reference(s):
+        s = re.sub(r"\s+", " ", s.strip())
+        return re.sub(r"^อ\.", "", re.sub(r"^จ\.", "", s)).strip()
+
+    spaces = [chr(c) for c in range(sys.maxunicode + 1) if chr(c).isspace()]
+    data = [f"{w}จ.a{w}{w}b{w}" for w in spaces] + ["\u200ba\u200b b"]
+    got = _vals(spark, data, normalize_th)
+    assert got == [reference(s) for s in data]
+    assert got[:-1] == ["a b"] * len(spaces)

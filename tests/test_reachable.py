@@ -6,9 +6,8 @@ the correctness gate (``tools/verify_local.py``).  A module that none of
 them imports is code only tests reach; this guard keeps such modules
 from growing back.  ``plans`` is the one deliberate exception: it is the
 plan-shape assertion helper the tests use to check reachable queries.
-Three unreached modules are listed by name in ``NOT_YET_CUT`` until they
-are cut too: the ``jsonl`` and ``protobuf`` readers, and the ``heavy``
-(heavy hitters) operator.
+Two unreached modules are listed by name in ``NOT_YET_CUT`` until they
+are cut too: the ``jsonl`` and ``protobuf`` readers.
 
 Stdlib only, no Spark session: the walk reads ``import`` statements with
 :mod:`ast`, at any depth (function-level imports count) and with relative
@@ -32,7 +31,6 @@ TEST_ONLY = {"plans", "plans.checks"}
 NOT_YET_CUT = {
     "sources.jsonl",
     "sources.protobuf",
-    "operators.heavy",
 }
 
 

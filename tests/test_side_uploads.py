@@ -3,7 +3,9 @@ row.  Each expected frame below was produced by the DataFrame pipelines
 the driver-side ones replaced, on exactly these inputs, so any drift in
 key normalization (C2), class mapping (C4/C5), date parsing (C6/C7),
 district matching and fill (J6–J8/J12), keep-first (A9), counting
-(A4/A5) or the idempotent anti-join (J9) shows up here.  The job-count
+(A4/A5) or the idempotent anti-join (J9) shows up here.  Key
+normalization strips Python's whitespace (tab and NBSP too), as the
+reference's ``str.strip()`` / ``re`` ``\\s`` do.  The job-count
 guards pin the cost: a side upload is a handful of Spark jobs, not a
 multi-join plan of fifteen."""
 
@@ -98,8 +100,9 @@ def test_risk_keys_classes_and_fill(spark, dims):
             ("เชียงใหม่", "สันทราย", "3.5"),
             ("เชียงใหม่", "สันทราย", "-1"),
             ("เชียงใหม่", "สันทราย", "HIGH "),
-            # NBSP is not whitespace to the key formula: no match
-            ("เชียงใหม่", f"แม่{NBSP}ริม", "ต่ำ"),
+            # NBSP is whitespace, as to Python's re: it collapses to the
+            # single space, so no match for the space-free dims name
+            ("เชียงใหม่", f"แม่{NBSP}ริม", "สูง"),
             # unmapped classes drop before the mean
             ("เชียงใหม่", "แม่ริม", "junk"),
             ("เชียงใหม่", "แม่ริม", "very  high"),
@@ -173,7 +176,7 @@ INCIDENT_ROWS = [
     ("2023-06-04 10:00:00", "อุตรดิตถ์", "ลับแล"),
     ("garbage", "อุตรดิตถ์", "ลับแล"),
     ("nan", "อุตรดิตถ์", "ลับแล"),
-    # trim is spaces only: a tab or NBSP leaves the key unmatched
+    # a tab or NBSP strips like any whitespace: both rows match
     ("2023-06-05", "เชียงใหม่\t", "แม่ริม"),
     ("2023-06-05", "เชียงใหม่", f"แม่ริม{NBSP}"),
     # unknown province, unknown district, district of another province
@@ -191,6 +194,7 @@ def test_incidents_keys_dates_and_counts(spark, dims):
         (D(2023, 6, 2), 2023, 1, 12, 1),
         (D(2023, 6, 2), 2023, 1, 13, 1),
         (D(2023, 6, 3), 2023, 2, 21, 1),
+        (D(2023, 6, 5), 2023, 1, 11, 2),
     ]
 
 
@@ -210,6 +214,7 @@ def test_incidents_existing_partly_overlapping(spark, dims):
         (D(2023, 6, 1), 2023, 1, 11, 1),
         (D(2023, 6, 2), 2023, 1, 13, 1),
         (D(2023, 6, 3), 2023, 2, 21, 1),
+        (D(2023, 6, 5), 2023, 1, 11, 2),
     ]
     # re-uploading against its own output adds nothing
     first = ingest_incidents(_wb(spark, INCIDENT_ROWS), *dims)
@@ -273,6 +278,43 @@ def test_incidents_all_dropped_keeps_schema(spark, dims):
     assert _incidents(spark, dims, wb) == []
     covered = ingest_incidents(_wb(spark, INCIDENT_ROWS[:3]), *dims)
     assert _incidents(spark, dims, _wb(spark, INCIDENT_ROWS[:3]), existing=covered) == []
+
+
+# --------------------------------------------------------------------------
+# whitespace: both pipelines strip what Python's str.strip() / re \s strip
+# --------------------------------------------------------------------------
+
+def test_unicode_whitespace_pads_match_like_python(spark, dims):
+    """Tab-, NBSP- and ideographic-space-padded names match, as in the
+    reference's Python ``normalize_th`` and ``str.strip()``; a
+    zero-width space is not whitespace to Python and still drops."""
+    got = _risk(
+        spark,
+        dims,
+        [
+            ("เชียงใหม่\t", f"แม่ริม{NBSP}", "สูง"),
+            ("\u3000เชียงใหม่", f"ดอย{NBSP}สะเก็ด", "สูง"),  # inner NBSP collapses
+            ("เชียงใหม่", "\u2009เมืองเชียงใหม่\u202f", "สูง"),
+            ("เชียงใหม่", "\u200bสันทราย", "สูง"),
+        ],
+        upload_risk_id=5,
+    )
+    assert got == [(5, 1, 10, 3), (5, 1, 11, 3), (5, 1, 12, 3), (5, 1, 13, 1)]
+    wb = _wb(
+        spark,
+        [
+            ("2023-06-01", "เชียงใหม่\t", "แม่ริม"),
+            ("2023-06-01", "เชียงใหม่", f"แม่ริม{NBSP}"),
+            ("2023-06-01", "\u3000เชียงใหม่\x1f", "\u2009เมืองเชียงใหม่\u202f"),
+            # str.strip() keeps inner whitespace: no match, as in Python
+            ("2023-06-01", "เชียงใหม่", f"ดอย{NBSP}สะเก็ด"),
+            ("2023-06-01", "เชียงใหม่", "\u200bสันทราย"),
+        ],
+    )
+    assert _incidents(spark, dims, wb) == [
+        (D(2023, 6, 1), 2023, 1, 10, 1),
+        (D(2023, 6, 1), 2023, 1, 11, 2),
+    ]
 
 
 # --------------------------------------------------------------------------

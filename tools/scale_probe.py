@@ -71,13 +71,13 @@ def timed(name, fn, out):
 def main() -> None:
     mode = "events"
     args = [a for a in sys.argv[1:]]
-    if args and args[0] in ("events", "docs", "ann", "srp", "cc", "spans", "semdedup", "spatial", "hotcell", "snap", "snap-manifest", "heavy", "snap-big", "snap-contention", "snap-maint", "spill"):
+    if args and args[0] in ("events", "docs", "ann", "srp", "cc", "spans", "semdedup", "spatial", "hotcell", "snap", "snap-manifest", "snap-big", "snap-contention", "snap-maint", "spill"):
         mode = args.pop(0)
     n = int(args[0]) if args else {
         "events": 10_000_000, "docs": 1_000_000, "ann": 1_000_000,
         "srp": 1_000_000, "cc": 1_000_000, "spans": 200_000,
         "semdedup": 100_000, "spatial": 1_000_000, "hotcell": 50_000,
-        "snap": 2_000_000, "snap-manifest": 100_000, "heavy": 10_000_000,
+        "snap": 2_000_000, "snap-manifest": 100_000,
         "snap-big": 20_000_000, "snap-contention": 200_000,
         "snap-maint": 200_000, "spill": 30_000_000,
     }[mode]
@@ -92,7 +92,6 @@ def main() -> None:
          "hotcell": probe_hotcell,
          "snap": probe_snap,
          "snap-manifest": probe_snap_manifest,
-         "heavy": probe_heavy,
          "snap-big": probe_snap_big,
          "snap-contention": probe_snap_contention,
          "snap-maint": probe_snap_maintenance,
@@ -949,68 +948,6 @@ def probe_snap_manifest(spark, n: int, out: list) -> None:
                               "bytes": size}), flush=True)
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-
-def probe_heavy(spark, n: int, out: list) -> None:
-    """Heavy hitters vs plain GROUP BY/HAVING at high key cardinality:
-    n rows over ~n/2 distinct keys with 10 planted hitters at ~1% each.
-    The claim is shuffle VOLUME (candidates ≤ m×P vs one group per
-    distinct key), measured alongside wall-clock (local[32] over warm
-    columnar input may hide the win — the shuffle numbers don't)."""
-    from pyspark.sql import functions as F
-
-    from mini_project_204721_data_engineering_spark.operators.heavy import heavy_hitters
-
-    th = 0.005
-    hot = (F.col("id") % 100 < 10)  # 10% of rows spread over 10 hot keys
-    df = (
-        spark.range(n)
-        .select(
-            F.when(hot, F.concat(F.lit("hot"), (F.col("id") % 10)))
-            .otherwise(
-                F.concat(F.lit("u"), F.pmod(F.xxhash64("id"), F.lit(n // 2)))
-            )
-            .alias("k")
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def sketch():
-        rows = heavy_hitters(df, ["k"], th).collect()
-        assert len(rows) == 10, len(rows)
-        return len(rows)
-
-    def sketch_jvm():
-        rows = heavy_hitters(df, ["k"], th, candidates="freqItems").collect()
-        assert len(rows) == 10, len(rows)
-        return len(rows)
-
-    def plain():
-        total = df.count()
-        rows = (
-            df.groupBy("k").agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") >= th * total)
-            .collect()
-        )
-        assert len(rows) == 10, len(rows)
-        return len(rows)
-
-    a = timed("heavy_hitters_mg_recount", sketch, out)
-    j = timed("heavy_hitters_freqitems_recount", sketch_jvm, out)
-    b = timed("plain_groupby_having", plain, out)
-    # the structural number: groups crossing the shuffle
-    n_distinct = df.select("k").distinct().count()
-    import math as _math
-
-    m = _math.ceil(2.0 / th)
-    n_parts = df.rdd.getNumPartitions()
-    print(json.dumps({
-        "probe": "heavy_shuffle_volume",
-        "distinct_keys_plain_shuffles": n_distinct,
-        "candidate_bound_mg": m * n_parts,
-        "wallclock_ratio_plain_over_mg": round(b / a, 2) if a else None,
-        "wallclock_ratio_plain_over_freqitems": round(b / j, 2) if j else None,
-    }), flush=True)
 
 
 def probe_snap_big(spark, n: int, out: list) -> None:
