@@ -30,6 +30,13 @@ nanos fix-up flag — and every later :func:`load_table` is
   after the change.
 - Only the schema is kept.  Each call builds a new DataFrame, so attribute
   ids are fresh and self-joins behave as with a plain read.
+- **Version in the plan.**  Every read carries its version digest (a hash
+  of the path and token) as the ``graft.version`` reader option, so two
+  versions of one path are different plans.  The read lists the files
+  when it is created, after the token was taken; the token is taken
+  again after the read, which is retried while the table moved in
+  between.  So a read's schema and digest always belong to the files it
+  lists.
 
 Version-keyed views
 -------------------
@@ -44,13 +51,11 @@ included).
   path, token) registers the view (a pinned read plus
   ``createOrReplaceTempView``); every later call re-takes the token (a
   ``stat``) and returns the name with no py4j call.
-- **Listing.**  A view keeps the file listing its read took.  The token
-  is taken before and after that read, and the view is named only by a
-  token that held across it, so a name always means one set of files.
-- **Version in the plan.**  The view's read carries its version digest
-  as a reader option.  Spark's own cache matches plans by path, not by
-  what is on disk; with the digest in the relation, a persisted plan of
-  one version never stands in for another version's read.
+- **Listing.**  A view keeps the file listing its read took: the same
+  read as :func:`load_table`'s, so a name always means one set of files.
+- **Version in the plan.**  Spark's own cache matches plans by path, not
+  by what is on disk; with the digest in the relation, a persisted plan
+  of one version never stands in for another version's read.
 - **Lifetime.**  Views are session temp views, and a new session
   registers its own.  A served build (:func:`served_sql`) holds the names
   it formats into its statement until its analysis returns.  Once a newer
@@ -66,11 +71,28 @@ Result reuse
 :func:`served_sql` runs the served named queries (the dashboard,
 ``avg_level_by_brand``, ``order_scalar_stats``) and keeps each result,
 so a repeated request in one table version is a dictionary lookup.
+:func:`served_plan` does the same for a DataFrame built through the
+DataFrame API: ``ListQuery.page_df`` hands it every list page.
 
-- **Key.**  The formatted statement text plus its named parameters.  The
-  text names each table by its version-keyed view, so a rewritten table
-  yields a new key: a stale hit cannot happen, and no version bookkeeping
-  is needed.
+- **Key.**  For :func:`served_sql`, the formatted statement text plus its
+  named parameters.  The text names each table by its version-keyed
+  view, so a rewritten table yields a new key: a stale hit cannot
+  happen, and no version bookkeeping is needed.
+- **Plan key.**  For :func:`served_plan`, the plan's ``semanticHash``
+  plus the output schema (names and types), and a hit is confirmed by
+  ``sameSemantics`` against the kept plan.  The schema is in the key
+  because Spark's canonical plan drops output names: two pages that
+  differ only in a column alias are the same canonical plan.  Each read
+  carries its version digest (see "Resolve once, read pinned"), so a
+  rewritten table yields a different plan.
+- **Only versioned plans are kept.**  A plan is kept only if every leaf
+  of its analysed plan and of its subqueries is a catalog read with a
+  digest; any other plan (``createDataFrame``, a plain
+  ``spark.read.parquet``) is returned as it came, since nothing in it
+  names the version of what it reads.  The leaves are checked on a miss
+  only: a hit matches a plan that passed.  A hit costs four py4j calls
+  (hash, schema, its JSON, compare) and returns the kept DataFrame
+  itself.
 - **Value.**  A persisted DataFrame (``MEMORY_AND_DISK``, lineage kept).
   Its first action fills Spark's cache, and every later action reads the
   cached rows.  Callers still get a DataFrame (``toPandas``, ``collect``),
@@ -79,8 +101,10 @@ so a repeated request in one table version is a dictionary lookup.
   plan and the rows shipped back to the JVM, which measured slower than
   reading the persisted rows.
 - **Bounds.**  At most ``_RESULTS_KEPT`` results per session, in LRU
-  order; an evicted result is unpersisted.  A result is also unpersisted
-  when a view it reads is dropped (see "Lifetime").  Results live per
+  order, statement- and plan-keyed ones in one store; an evicted result
+  is unpersisted.  A statement's result is also unpersisted when a view
+  it reads is dropped (see "Lifetime"); a page of a superseded version
+  ages out by LRU, since no later plan can match it.  Results live per
   session in a ``WeakKeyDictionary``, like the resolutions and views,
   and a new session builds its own.  A session dropped while it still
   keeps results does not unpersist them; the served sessions live as
@@ -89,6 +113,8 @@ so a repeated request in one table version is a dictionary lookup.
   sessions' results of one statement and version share one cached copy,
   and unpersisting either one uncaches it for both.  The other session's
   result then reads from its lineage again: the same rows, only slower.
+  Two kept pages that differ only in output names share one cached copy
+  the same way: Spark's cache matches plans as the canonical form does.
 
 Scale notes
 -----------
@@ -119,7 +145,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
-__all__ = ["TABLES", "SMALL_DIMS", "load_table", "load_tables", "served_sql", "table_view"]
+__all__ = [
+    "TABLES",
+    "SMALL_DIMS",
+    "load_table",
+    "load_tables",
+    "served_plan",
+    "served_sql",
+    "table_view",
+]
 
 TABLES = (
     "region",
@@ -142,18 +176,25 @@ class _Resolved(NamedTuple):
     token: tuple
     schema: StructType
     nanos: bool  # ts is raw TIMESTAMP(NANOS) read as bigint
+    #: the analysed relation of a read of this version (a JVM plan), once
+    #: one read has listed the files with the token unchanged
+    relation: Any = None
 
 
 #: session -> {absolute table path -> resolution}
 _RESOLVED: weakref.WeakKeyDictionary[SparkSession, dict[str, _Resolved]] = (
     weakref.WeakKeyDictionary()
 )
+#: session -> its JVM ``Dataset`` class (the lookup is several py4j calls)
+_DATASET: weakref.WeakKeyDictionary[SparkSession, Any] = weakref.WeakKeyDictionary()
 #: session -> {absolute table path -> (token, view name)}
 _VIEWS: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, str]]] = (
     weakref.WeakKeyDictionary()
 )
 #: served results kept per session (LRU; an evicted one is unpersisted)
-_RESULTS_KEPT = 16
+_RESULTS_KEPT = 128
+#: reader option that carries a read's version digest
+VERSION_OPTION = "graft.version"
 
 
 class _Served:
@@ -207,8 +248,8 @@ def _resolve(spark: SparkSession, path: str, name: str) -> tuple[StructType, boo
     return spark.read.parquet(path).schema, False
 
 
-def _pinned(spark: SparkSession, key: str, token: tuple, name: str) -> tuple[StructType, bool]:
-    """(schema, nanos) of the table at absolute path ``key`` as of ``token``."""
+def _pinned(spark: SparkSession, key: str, token: tuple, name: str) -> _Resolved:
+    """The resolution of the table at absolute path ``key`` as of ``token``."""
     with _LOCK:
         hit = _RESOLVED.setdefault(spark, {}).get(key)
     if hit is None or hit.token != token:
@@ -216,7 +257,7 @@ def _pinned(spark: SparkSession, key: str, token: tuple, name: str) -> tuple[Str
         hit = _Resolved(token, *_resolve(spark, key, name))
         with _LOCK:
             _RESOLVED[spark][key] = hit
-    return hit.schema, hit.nanos
+    return hit
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -241,7 +282,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       expressions (``timestamp_diff``, never ``unix_micros``).
     """
     key = _table_path(sf_dir, name)
-    return _read(spark, key, _version_token(key), name)
+    return _listed(spark, key, name, _version_token(key))[0]
 
 
 def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
@@ -278,21 +319,78 @@ def served_sql(
             if hit is not None:
                 state.results.move_to_end(key)
                 return hit[1]
-        # two threads may both build a new key; both return the one kept,
-        # and Spark caches one copy of the plan for both
-        df = spark.sql(key[0], args=args).persist()
-        with _LOCK:
-            kept = state.results.setdefault(key, (frozenset(held), df))[1]
-            state.results.move_to_end(key)
-            evicted = [
-                state.results.popitem(last=False)[1][1]
-                for _ in range(len(state.results) - _RESULTS_KEPT)
-            ]
-        for old in evicted:
-            old.unpersist()
-        return kept
+        return _keep(state, key, frozenset(held), spark.sql(key[0], args=args).persist())
     finally:
         _release(spark, held)
+
+
+def served_plan(df: DataFrame) -> DataFrame:
+    """``df``, or the kept result of an earlier DataFrame with the same
+    plan over the same table versions (see "Result reuse" in the module
+    docstring).
+
+    A plan is kept, persisted, only when every leaf of it (subqueries
+    included) is a catalog read that carries its version digest; any
+    other plan is returned as it came.  A repeat returns the kept
+    DataFrame itself, whose actions read the cached rows."""
+    jdf = df._jdf
+    # the canonical plan drops output names: the schema is in the key
+    key = ("plan", jdf.semanticHash(), jdf.schema().json())
+    state = _state(df.sparkSession)
+    with _LOCK:
+        hit = state.results.get(key)
+        if hit is not None:
+            state.results.move_to_end(key)
+    if hit is not None:
+        # a hit matches a plan that passed the leaf check on its miss
+        return hit[1] if hit[1]._jdf.sameSemantics(jdf) else df
+    if _versions(jdf) is None:
+        return df
+    kept = _keep(state, key, frozenset(), df.persist())
+    if kept is df or kept._jdf.sameSemantics(jdf):
+        return kept
+    # another plan under the same hash and schema: serve this one unkept
+    df.unpersist()
+    return df
+
+
+def _keep(state: _Served, key: tuple, views: frozenset[str], df: DataFrame) -> DataFrame:
+    """Keep the persisted ``df`` under ``key`` and return the result kept
+    there; past ``_RESULTS_KEPT`` the oldest is evicted and unpersisted.
+    Two threads may both build a new key; both return the one kept, and
+    Spark caches one copy of the plan for both."""
+    with _LOCK:
+        kept = state.results.setdefault(key, (views, df))[1]
+        state.results.move_to_end(key)
+        evicted = [
+            state.results.popitem(last=False)[1][1]
+            for _ in range(len(state.results) - _RESULTS_KEPT)
+        ]
+    for old in evicted:
+        old.unpersist()
+    return kept
+
+
+def _versions(jdf) -> list[str] | None:
+    """The version digest of every leaf of ``jdf``'s analysed plan and
+    its subqueries, or ``None`` if a leaf is not a catalog read."""
+    plan = jdf.queryExecution().analyzed()
+    subqueries = plan.subqueriesAll()
+    digests = []
+    for p in [plan] + [subqueries.apply(i) for i in range(subqueries.size())]:
+        leaves = p.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() != "LogicalRelation":
+                return None
+            rel = leaf.relation()
+            if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                return None
+            digest = rel.options().get(VERSION_OPTION)
+            if digest.isEmpty():
+                return None
+            digests.append(digest.get())
+    return digests or None
 
 
 def _state(spark: SparkSession) -> _Served:
@@ -312,20 +410,13 @@ def _view(spark: SparkSession, key: str, name: str, hold: bool) -> str:
                 state.held[hit[1]] += 1
             return hit[1]
     with _REGISTER:
-        while True:
-            with _LOCK:
-                hit = _VIEWS[spark].get(key)
-                if hit is not None and hit[0] == token:  # registered meanwhile
-                    if hold:
-                        state.held[hit[1]] += 1
-                    return hit[1]
-            digest = hashlib.blake2b(repr((key, token)).encode(), digest_size=8).hexdigest()
-            df = _read(spark, key, token, name, version=digest)
-            # the view keeps the file listing the read just took: name it
-            # by the token only if the table did not change around it
-            listed, token = token, _version_token(key)
-            if token == listed:
-                break
+        with _LOCK:
+            hit = _VIEWS[spark].get(key)
+            if hit is not None and hit[0] == token:  # registered meanwhile
+                if hold:
+                    state.held[hit[1]] += 1
+                return hit[1]
+        df, token, digest = _listed(spark, key, name, token)
         view = f"graft_{name}_{digest}"
         df.createOrReplaceTempView(view)
         with _LOCK:
@@ -375,18 +466,49 @@ def _table_path(sf_dir: str, name: str) -> str:
     return os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _read(
-    spark: SparkSession, key: str, token: tuple, name: str, version: str | None = None
-) -> DataFrame:
-    schema, nanos = _pinned(spark, key, token, name)
-    reader = spark.read.schema(schema)
-    if version is not None:
-        # part of the relation, so Spark's cache tells versions apart
-        reader = reader.option("graft.version", version)
-    df = reader.parquet(key)
-    if nanos:
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+def _listed(
+    spark: SparkSession, key: str, name: str, token: tuple
+) -> tuple[DataFrame, tuple, str]:
+    """A pinned read of the table at absolute path ``key`` that carries
+    its version digest, with the token and digest of the files it listed.
+
+    The first read of a version lists the files when it is created, after
+    ``token`` was taken.  The token is taken again after the read, and the
+    read is retried while the table moved in between, so its schema and
+    digest always belong to the files it lists.  The relation of a read
+    that held is kept with the resolution; a later read of the version is
+    a new instance of it (fresh attribute ids, no listing, no analysis of
+    the files)."""
+    while True:
+        hit = _pinned(spark, key, token, name)
+        digest = hashlib.blake2b(repr((key, token)).encode(), digest_size=8).hexdigest()
+        if hit.relation is not None:
+            df = _instance(spark, hit.relation)
+        else:
+            # the digest is part of the relation, so Spark's cache and the
+            # kept results tell versions of one path apart
+            df = spark.read.schema(hit.schema).option(VERSION_OPTION, digest).parquet(key)
+        relation = df._jdf.queryExecution().analyzed() if hit.relation is None else None
+        if hit.nanos:
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        listed, token = token, _version_token(key)
+        if token == listed:
+            if relation is not None:
+                with _LOCK:
+                    if _RESOLVED[spark].get(key) is hit:
+                        _RESOLVED[spark][key] = hit._replace(relation=relation)
+            return df, token, digest
+
+
+def _instance(spark: SparkSession, relation) -> DataFrame:
+    """A DataFrame over a new instance of a kept relation."""
+    with _LOCK:
+        cls = _DATASET.get(spark)
+    if cls is None:
+        cls = spark._jvm.org.apache.spark.sql.classic.Dataset
+        with _LOCK:
+            _DATASET[spark] = cls
+    return DataFrame(cls.ofRows(spark._jsparkSession, relation.newInstance()), spark)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -27,7 +27,19 @@ Scale notes
   we make it explicit.
 - The count and the page are built from one filtered DataFrame, but they
   are two Spark actions: ``count()`` runs (and scans) first, then the
-  page's own action scans again. Nothing is cached between them.
+  page's own action scans again.
+
+Reuse
+-----
+``page_df`` returns the page through ``catalog.served_plan``.  When every
+table the page reads comes from ``catalog.load_table`` (each read carries
+its table's version digest), the page is persisted and kept per session:
+a later request with the same plan over the same table versions gets the
+kept DataFrame back, and its action reads the cached rows, one small job
+instead of the joins, the scan and the top-k.  A rewritten table changes
+the plan, so it never matches a page of the old version.  A page over any
+other base (``createDataFrame``, a plain ``spark.read.parquet``) is not
+kept.  ``count()`` and ``keyset_page`` keep nothing.
 """
 
 from __future__ import annotations
@@ -40,6 +52,8 @@ from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from mini_project_204721_data_engineering_spark.catalog import served_plan
 
 __all__ = ["ListQuery", "Page"]
 
@@ -126,7 +140,7 @@ class ListQuery:
         page_size = max(1, min(self.max_page_size, page_size))
         page = max(1, page)
         df = self._filtered().orderBy(*self._order(order_by, order_type))
-        return df.offset((page - 1) * page_size).limit(page_size)
+        return served_plan(df.offset((page - 1) * page_size).limit(page_size))
 
     def keyset_page(
         self,

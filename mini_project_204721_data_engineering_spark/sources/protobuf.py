@@ -13,8 +13,8 @@ dependency-free decoder earns its keep).
 The caller declares the schema as ``{field_number: (name, type)}`` or
 ``(name, type, opts)`` with type in {int64, sint64, bool, double,
 float, string, bytes, message} and opts ``{"repeated": True}`` /
-``{"schema": {...}}`` for nested messages — the same
-declare-your-contract discipline as the JSONL and Avro readers.
+``{"schema": {...}}`` for nested messages: the caller declares the
+contract, nothing is inferred.
 Groups (wire types 3/4, deprecated since proto2) refuse loudly.
 
 Distributed shape: ``binaryFile`` lists the shard directory, each task
@@ -356,8 +356,7 @@ def write_protobuf_shard(records: Sequence[Mapping], path: str,
 # field options like ``[packed=true]`` are accepted and ignored because
 # the decoder handles packed and unpacked runs interchangeably; proto2
 # ``[default=...]`` is accepted but NOT materialized — absent fields
-# stay null, the same declare-your-contract posture as the JSONL and
-# Avro readers.
+# stay null: the declared contract, nothing inferred.
 
 _PROTO_SCALARS = {
     "int32": "int64", "int64": "int64", "uint32": "int64",

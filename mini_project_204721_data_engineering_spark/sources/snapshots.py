@@ -556,17 +556,24 @@ def _file_stats(
     fs, _, jvm = _fs_for(spark, files[0])
     reader = spark.read if schema is None else spark.read.schema(schema)
     scan = reader.parquet(*files)
-    # a merge_schema append may legitimately omit a stats column — those
-    # files simply record no stats for it (never pruned on it) instead
-    # of failing the whole commit on an unresolvable expression
+    # one analysis resolves the whole spec; a merge_schema append may
+    # legitimately omit a stats column — those files simply record no
+    # stats for it (never pruned on it) instead of failing the whole
+    # commit on an unresolvable expression
     cols = {}
     dtypes = {}
-    for alias, expr in stats.items():
-        try:
-            dtypes[alias] = scan.select(F.expr(expr)).schema[0].dataType
-            cols[alias] = expr
-        except Exception:
-            continue
+    try:
+        if stats:
+            fields = _stats_select(scan, stats).schema
+            cols = dict(stats)
+            dtypes = {alias: f.dataType for alias, f in zip(stats, fields)}
+    except Exception:
+        for alias, expr in stats.items():
+            try:
+                dtypes[alias] = _stats_select(scan, {alias: expr}).schema[0].dataType
+                cols[alias] = expr
+            except Exception:
+                continue
     from pyspark.sql.types import (
         ByteType,
         DoubleType,
@@ -682,16 +689,30 @@ def _validate_stats(df: DataFrame, stats_cols) -> None:
     silently recording no stats would leave every 100 TB read unpruned
     while the user believes otherwise.  (Sticky inherited specs stay
     tolerant: schema evolution may legitimately outgrow them.)"""
-    from pyspark.sql import functions as F
-
-    for alias, expr in _norm_stats(stats_cols).items():
+    spec = _norm_stats(stats_cols)
+    try:
+        if spec:
+            _stats_select(df, spec)
+        return
+    except Exception:
+        pass  # the loop below names the expression that fails
+    for alias, expr in spec.items():
         try:
-            df.select(F.expr(expr))
+            _stats_select(df, {alias: expr})
         except Exception as e:
             raise ValueError(
                 f"stats_cols[{alias!r}] = {expr!r} does not resolve against "
                 f"the written frame: {e}"
             ) from e
+
+
+def _stats_select(df: DataFrame, spec: dict[str, str]) -> DataFrame:
+    """``df`` selecting every stats expression of ``spec`` in spec order:
+    one analysis for the whole spec, which raises if any does not
+    resolve."""
+    from pyspark.sql import functions as F
+
+    return df.select(*(F.expr(e) for e in spec.values()))
 
 
 def _compose_stats(

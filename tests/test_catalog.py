@@ -17,6 +17,7 @@ from pyspark.sql.conf import RuntimeConfig
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from conftest import SF_SMALL
+from mini_project_204721_data_engineering_spark import catalog
 from mini_project_204721_data_engineering_spark.catalog import _version_token, load_table
 
 NANOS_KEY = "spark.sql.legacy.parquet.nanosAsLong"
@@ -129,6 +130,35 @@ def test_rewritten_table_returns_new_schema_and_rows(spark, tmp_path):
     second = load_table(spark, str(tmp_path), "orders")
     assert second.columns == ["o_orderkey", "o_totalprice", "o_note"]
     assert sorted(tuple(r) for r in second.collect()) == [(1, 1.0, "a"), (2, 2.0, "b"), (3, 3.0, "c")]
+
+
+def test_table_rewritten_during_a_load_is_read_with_the_files_it_lists(spark, tmp_path, monkeypatch):
+    """The table changes between the version token and the read's file
+    listing (here: inside the schema lookup, which runs between them).
+    The returned read must carry the schema and version digest of the
+    files it lists, not of the version the token named."""
+    path = str(tmp_path / "orders.parquet")
+    pq.write_table(pa.table({"o_orderkey": [1, 2], "o_totalprice": [1.0, 2.0]}), path)
+    load_table(spark, str(tmp_path), "orders")
+    real, swapped = catalog._pinned, []
+
+    def pinned_then_swap(*args):
+        out = real(*args)
+        if not swapped:
+            swapped.append(True)
+            pq.write_table(
+                pa.table({"o_orderkey": [1, 2, 3], "o_totalprice": [1.0, 2.0, 3.0], "o_note": ["a", "b", "c"]}),
+                path,
+            )
+        return out
+
+    monkeypatch.setattr(catalog, "_pinned", pinned_then_swap)
+    df = load_table(spark, str(tmp_path), "orders")
+    assert swapped
+    assert df.columns == ["o_orderkey", "o_totalprice", "o_note"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 1.0, "a"), (2, 2.0, "b"), (3, 3.0, "c")]
+    fresh = load_table(spark, str(tmp_path), "orders")
+    assert catalog._versions(df._jdf) == catalog._versions(fresh._jdf)
 
 
 def test_directory_token_tracks_part_files_only(tmp_path):

@@ -6,8 +6,8 @@ the correctness gate (``tools/verify_local.py``).  A module that none of
 them imports is code only tests reach; this guard keeps such modules
 from growing back.  ``plans`` is the one deliberate exception: it is the
 plan-shape assertion helper the tests use to check reachable queries.
-Two unreached modules are listed by name in ``NOT_YET_CUT`` until they
-are cut too: the ``jsonl`` and ``protobuf`` readers.
+One unreached module is listed by name in ``NOT_YET_CUT`` until it is
+cut too: the ``protobuf`` reader.
 
 Stdlib only, no Spark session: the walk reads ``import`` statements with
 :mod:`ast`, at any depth (function-level imports count) and with relative
@@ -28,10 +28,7 @@ ENTRY_FILES = [
     ROOT / "tools" / "verify_local.py",
 ]
 TEST_ONLY = {"plans", "plans.checks"}
-NOT_YET_CUT = {
-    "sources.jsonl",
-    "sources.protobuf",
-}
+NOT_YET_CUT = {"sources.protobuf"}
 
 
 def _package_modules() -> dict[str, Path]:

@@ -4,8 +4,11 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB
 at the given sf dir, then compares row count, column names, and an
 order-insensitive value representation (values stringified, doubles via
 repr, rows sorted) — a strictly stricter check than a hash match.  A query
-that returns a kept result (``catalog.served_sql``) runs twice, and both
-the first build (a miss) and the repeat (a hit) are checked.
+that returns a kept result runs twice, and both the first build (a miss)
+and the repeat (a hit) are checked: the served named queries
+(``catalog.served_sql``) and the ``ListQuery`` pages (``list_orders_page``,
+``list_customers_by_dim_sort``, ``list_lineitem_page``,
+``list_events_page``; ``catalog.served_plan``) print "miss hit".
 
 Usage: python tools/verify_local.py [sf_dir] [query ...]
 """
@@ -93,8 +96,8 @@ def main() -> int:
             sdf = fn(spark, SF_DIR)
             runs = {"": spark_result(sdf)}
             if sdf.is_cached:
-                # a kept result (catalog.served_sql): the repeat must be a
-                # hit, and both are checked
+                # a kept result (catalog.served_sql / served_plan): the
+                # repeat must be a hit, and both are checked
                 again = fn(spark, SF_DIR)
                 if again is not sdf:
                     raise AssertionError("the repeat built a new result instead of reusing it")
