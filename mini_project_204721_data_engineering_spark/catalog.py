@@ -13,7 +13,7 @@ Resolve once, read pinned
 A bare ``spark.read.parquet`` infers the schema on every call, and parquet
 inference is a Spark job (a footer read on an executor).  The catalog
 resolves each table once instead — its Spark schema plus the ``events``
-nanos fix-up flag — and every later :func:`load_table` is
+nanos fix-up flag — and every later :func:`load_table` is a pinned read,
 ``spark.read.schema(pinned).parquet(path)``: no job, no session conf.
 
 - **Version token.**  A resolution is keyed by the table's absolute path
@@ -28,8 +28,11 @@ nanos fix-up flag — and every later :func:`load_table` is
   a new or restarted session resolves again, and a session's entries go
   with it.  A conf changed on a live session applies to tables resolved
   after the change.
-- Only the schema is kept.  Each call builds a new DataFrame, so attribute
-  ids are fresh and self-joins behave as with a plain read.
+- The schema is kept, and so is the analysed relation of the first read
+  of a version.  Each later call builds a new DataFrame over a new
+  instance of that relation: attribute ids are fresh, so self-joins
+  behave as with a plain read, and no file listing or py4j reader chain
+  is repeated.
 - **Version in the plan.**  Every read carries its version digest (a hash
   of the path and token) as the ``graft.version`` reader option, so two
   versions of one path are different plans.  The read lists the files
@@ -265,8 +268,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     The first call per (session, table, version token) resolves the
     schema — one Spark inference job, or a footer read for nanos
-    ``events``; every later call reads with that schema pinned and starts
-    no Spark job (see the module docstring).
+    ``events``; every later call is a new instance of that version's
+    pinned read and starts no Spark job (see the module docstring).
 
     ``events.parquet`` ``ts`` has shipped in two physical forms across
     driver rounds; both are handled:
@@ -482,13 +485,13 @@ def _listed(
     while True:
         hit = _pinned(spark, key, token, name)
         digest = hashlib.blake2b(repr((key, token)).encode(), digest_size=8).hexdigest()
-        if hit.relation is not None:
-            df = _instance(spark, hit.relation)
-        else:
+        if hit.relation is None:
             # the digest is part of the relation, so Spark's cache and the
             # kept results tell versions of one path apart
             df = spark.read.schema(hit.schema).option(VERSION_OPTION, digest).parquet(key)
-        relation = df._jdf.queryExecution().analyzed() if hit.relation is None else None
+            relation = df._jdf.queryExecution().analyzed()
+        else:
+            df, relation = _instance(spark, hit.relation), None
         if hit.nanos:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         listed, token = token, _version_token(key)
