@@ -32,7 +32,6 @@ HEADLINE = [
     "top_return_customers",
     "daily_activity",
     "events_rollup_daily",
-    "corpus_prep",
     "events_asof_spend",
 ]
 

@@ -10,8 +10,6 @@ dashboard join), re-expressed Spark-first:
 - broadcast hash joins for dimensions, AQE for skew and coalescing
 - algebraic aggregates (partial+final) instead of groupby-apply loops
 - Structured Streaming for the incremental-ingest surface
-- LLM-data-pipeline extensions: dedup (exact/MinHash-LSH/SimHash/n-gram
-  Jaccard), embedding similarity search, text analysis, multimodal columns.
 
 See SURVEY.md for the operator-by-operator mapping with reference citations.
 """

@@ -1,12 +1,12 @@
 """Table catalog for the synthetic star schema.
 
 The driver provides deterministic parquet tables (TESTDATA.md):
-``region nation customer supplier part orders lineitem events documents
-embeddings``.  They stand in for the reference's star schema
+``region nation customer supplier part orders lineitem events documents``.
+They stand in for the reference's star schema
 (reference ``backend/app/models.py:26-87``): ``nation``/``region`` play the
 province/district dimensions, ``orders``/``lineitem`` play the fact tables,
-``events`` plays the incident log, ``documents``/``embeddings`` back the
-LLM-pipeline extensions.
+``events`` plays the incident log, and ``documents`` is the free-text
+input of the cleaning chain (``queries/cleaning.py``).
 
 Resolve once, read pinned
 -------------------------
@@ -168,7 +168,6 @@ TABLES = (
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 )
 
 #: dimensions that are broadcast-sized at every scale factor

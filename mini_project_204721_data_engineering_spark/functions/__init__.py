@@ -16,8 +16,6 @@ from mini_project_204721_data_engineering_spark.functions.binning import (
     avg_to_level,
     class_to_num,
     estimate_probability,
-    probability_color,
-    risk_label,
 )
 
 __all__ = [
@@ -28,6 +26,4 @@ __all__ = [
     "avg_to_level",
     "class_to_num",
     "estimate_probability",
-    "probability_color",
-    "risk_label",
 ]

@@ -32,9 +32,7 @@ __all__ = [
     "avg_to_level_sql",
     "estimate_probability",
     "estimate_probability_sql",
-    "probability_color",
     "probability_color_sql",
-    "risk_label",
     "risk_label_sql",
 ]
 
@@ -137,19 +135,9 @@ def probability_color_sql(prob: str) -> str:
     return f"CASE WHEN ({prob}) >= 75 THEN 'red' WHEN ({prob}) >= 50 THEN 'amber' ELSE 'green' END"
 
 
-def probability_color(prob: Column | str) -> Column:
-    """:func:`probability_color_sql` as a Column (operand: :func:`sql_operand`)."""
-    return F.expr(probability_color_sql(sql_operand(prob)))
-
-
 def risk_label_sql(risk_level: str) -> str:
     """Reference C17 legend labels (``frontend/app/page.tsx:222,241-245``)."""
     return (
         f"CASE WHEN ({risk_level}) = 1 THEN 'Low' WHEN ({risk_level}) = 2 THEN 'Medium' "
         f"WHEN ({risk_level}) = 3 THEN 'High' ELSE 'Unknown' END"
     )
-
-
-def risk_label(risk_level: Column | str) -> Column:
-    """:func:`risk_label_sql` as a Column (operand: :func:`sql_operand`)."""
-    return F.expr(risk_label_sql(sql_operand(risk_level)))

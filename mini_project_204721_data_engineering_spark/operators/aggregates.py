@@ -48,52 +48,3 @@ def min_coord_step(df: DataFrame, col: str) -> DataFrame:
         .where(F.col("_prev").isNotNull())
         .agg(F.min(F.abs(F.col(col) - F.col("_prev"))).alias("step"))
     )
-
-
-def rolling_time_agg(
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    ts_col: str,
-    window_seconds: float,
-    aggs: dict[str, Column],
-) -> DataFrame:
-    """Trailing time-RANGE window aggregates: for every row, aggregate
-    the partition's rows with ``ts ∈ [row.ts − window, row.ts]`` (both
-    ends inclusive — the ANSI ``RANGE BETWEEN INTERVAL … PRECEDING AND
-    CURRENT ROW`` frame, which DuckDB mirrors exactly).  The moving
-    baseline behind rate limiting, anomaly scoring ("spend in the last
-    hour vs now") and trailing feature engineering — NOT expressible
-    with tumbling/sliding ``F.window`` buckets, whose frames are
-    bucket-aligned rather than row-anchored.
-
-    ``aggs`` maps output column name → aggregate Column over the input
-    columns (e.g. ``{"spend_1h": F.sum("value")}``).
-
-    Scale shape: ONE keyed shuffle (the window partition); within a
-    partition Spark keeps a sliding frame over the sort order, so cost
-    is rows × frame updates, never rows × frame size for the
-    subtractable aggregates (sum/count/avg).  The range key is
-    ``unix_micros(ts)`` — EXACT integer microseconds, the timestamp's
-    native resolution, so the frame boundary agrees bit-for-bit with
-    interval semantics (``unix_timestamp`` truncates to whole seconds;
-    a double epoch key would wobble in the last ulp at 2024-era
-    magnitudes).  Partition keys must be present: an empty
-    ``partition_cols`` would funnel the whole table through one
-    reducer — refused, same contract as the other windowed operators."""
-    from pyspark.sql.window import Window
-
-    if not partition_cols:
-        raise ValueError(
-            "rolling_time_agg needs >=1 partition column; a global "
-            "trailing window is a single-reducer plan — pre-bucket first"
-        )
-    rk = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = (
-        Window.partitionBy(*partition_cols)
-        .orderBy(rk)
-        .rangeBetween(-int(round(window_seconds * 1_000_000)), Window.currentRow)
-    )
-    out = df
-    for name, agg in aggs.items():
-        out = out.withColumn(name, agg.over(w))
-    return out

@@ -1,62 +1,10 @@
-"""One-pass table profiling (the ``ANALYZE TABLE`` shape): per-column
-null counts, distinct cardinality, min/max — the statistics a lakehouse
-collects for optimizer costing, data-quality gates, and drift checks.
-
-Scale shape: ONE scan and ONE aggregate row regardless of column count
-— every statistic is an aggregate expression in the same ``agg``, then
-the 1×N row is unpivoted to long form with ``stack`` (driver-sized by
-construction).  ``exact_distinct=False`` (the 100 TB default) uses
-``approx_count_distinct`` (HLL, single-pass, mergeable);
-``exact_distinct=True`` is the oracle-checkable form — Spark plans one
-expand per distinct column, acceptable for profiling runs.
+"""Key-skew profiling: the distribution of group sizes under a key set,
+the one-row diagnostic :func:`operators.skew.recommend_salt` reads.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-__all__ = ["profile_table"]
-
-
-def profile_table(
-    df: DataFrame,
-    columns: Sequence[str] | None = None,
-    exact_distinct: bool = False,
-    rsd: float = 0.05,
-) -> DataFrame:
-    """(col_name, n_rows, n_nulls, n_distinct, min_val, max_val) per
-    column — min/max cast to string so heterogeneous column types share
-    one output schema (the profiling convention)."""
-    cols = list(columns) if columns is not None else list(df.columns)
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for i, c in enumerate(cols):
-        nd = (
-            F.count_distinct(F.col(c))
-            if exact_distinct
-            else F.approx_count_distinct(F.col(c), rsd)
-        )
-        aggs += [
-            (F.count(F.lit(1)) - F.count(F.col(c))).alias(f"__nulls_{i}"),
-            nd.alias(f"__nd_{i}"),
-            F.min(F.col(c)).cast("string").alias(f"__min_{i}"),
-            F.max(F.col(c)).cast("string").alias(f"__max_{i}"),
-        ]
-    row = df.agg(*aggs)
-    parts = ", ".join(
-        "'{}', __nulls_{}, __nd_{}, __min_{}, __max_{}".format(
-            c.replace("\\", "\\\\").replace("'", "\\'"), i, i, i, i
-        )
-        for i, c in enumerate(cols)
-    )
-    return row.select(
-        F.expr(
-            f"stack({len(cols)}, {parts}) AS (col_name, n_nulls, n_distinct, min_val, max_val)"
-        ),
-        F.col("__rows").alias("n_rows"),
-    ).select("col_name", "n_rows", "n_nulls", "n_distinct", "min_val", "max_val")
+__all__ = ["key_skew_profile"]
 
 
 def key_skew_profile(df, keys, include_keys: bool = False):

@@ -7,9 +7,8 @@ AQE's skew-join splitting handles most runtime skew; these are the
   (map-side spread of a hot key across ``n_salts`` reducers), then
   combine the partials.  Works for any algebraic aggregate; used when a
   single group (e.g. one viral user_id) exceeds a reducer.
-- :func:`salted_broadcast_left` — replicate-right salted join for a
-  skewed probe side joining a non-broadcastable right side: left gets a
-  random-ish deterministic salt, right is exploded ``n_salts`` ways.
+- :func:`recommend_salt` — the salt count for :func:`salted_agg`, read
+  from the key-skew profile.
 
 Salts are derived from stable columns (hash of a unique id), never
 ``rand()`` — results stay deterministic and retry-safe (a recomputed
@@ -23,7 +22,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["recommend_salt", "salted_agg", "salted_broadcast_left"]
+__all__ = ["recommend_salt", "salted_agg"]
 
 
 def recommend_salt(
@@ -34,9 +33,8 @@ def recommend_salt(
     profile: Mapping | None = None,
 ) -> dict:
     """Turn the key-skew diagnostic (``profile.key_skew_profile``) into
-    the ACTION it implies: the salt factor ``salted_agg`` /
-    ``salted_broadcast_left`` should use, or 1 when plain grouping is
-    fine.
+    the ACTION it implies: the salt factor ``salted_agg`` should use,
+    or 1 when plain grouping is fine.
 
     Cost model: a reducer's fair share of the shuffle is
     ``total_rows / n_partitions`` (default: the session's
@@ -206,27 +204,3 @@ def salted_agg(
     return phase1.groupBy(*keys).agg(
         *[fin.alias(name) for name, (_, fin) in partials.items()]
     )
-
-
-def salted_broadcast_left(
-    left: DataFrame,
-    right: DataFrame,
-    on: Sequence[str],
-    salt_from: str,
-    n_salts: int | Mapping = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Salted equi-join: left rows get a deterministic salt, right rows
-    are replicated across all salts, the join key becomes
-    (keys..., salt) — a hot left key now lands on ``n_salts`` reducers
-    instead of one.  Right-side cost: ×``n_salts`` rows through the
-    shuffle (use only when the right side is modest but above the
-    broadcast threshold).  ``n_salts`` also accepts a
-    :func:`recommend_salt` result."""
-    n_salts = _resolve_salts(n_salts)
-    lsalted = left.withColumn("_salt", F.pmod(F.hash(F.col(salt_from)), F.lit(n_salts)))
-    rsalted = right.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    out = lsalted.join(rsalted, [*on, "_salt"], how)
-    return out.drop("_salt")

@@ -28,8 +28,29 @@ __all__ = [
 
 
 def physical_plan(df: DataFrame) -> str:
-    """Executed physical plan as text (post-AQE initial plan)."""
-    return df._jdf.queryExecution().executedPlan().toString()
+    """Executed physical plan as text, each adaptive plan once: its
+    initial plan.
+
+    Once an adaptive plan has run, Spark prints it twice, a "Final" (or
+    "Current") plan above its "Initial" one; a persisted DataFrame's
+    cached plan prints inside both copies of the outer plan.  Counting
+    that text would count a kept page's nodes four times.  The
+    non-initial sections are dropped here, so the checks read the same
+    text before and after a DataFrame runs."""
+    text = df._jdf.queryExecution().executedPlan().toString()
+    lines: list[str] = []
+    skip_below = None  # depth of the section marker being dropped
+    for line in text.splitlines():
+        depth = len(line) - len(line.lstrip(" :"))
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = None
+        label = line.strip(" :+-")
+        if label in ("== Final Plan ==", "== Current Plan =="):
+            skip_below = depth
+        elif label != "== Initial Plan ==":
+            lines.append(line)
+    return "\n".join(lines)
 
 
 def has_pushed_filters(df: DataFrame, fragment: str) -> bool:

@@ -12,6 +12,7 @@ import threading
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.conf import RuntimeConfig
 from pyspark.sql.types import TimestampNTZType, TimestampType
@@ -196,3 +197,12 @@ def test_new_session_resolves_again(spark):
     assert isinstance(ev.schema["ts"].dataType, TimestampType)
     assert isinstance(load_table(spark, SF_SMALL, "events").schema["ts"].dataType, TimestampNTZType)
     assert ev.count() == load_table(spark, SF_SMALL, "events").count()
+
+
+def test_unknown_table_name_raises_keyerror(spark):
+    """Only the catalog's tables load.  ``embeddings`` is still a file in
+    the driver's data directory, but no query reads it, so it is not one
+    of ``TABLES``."""
+    assert "embeddings" not in catalog.TABLES
+    with pytest.raises(KeyError, match="unknown table 'embeddings'"):
+        load_table(spark, SF_SMALL, "embeddings")

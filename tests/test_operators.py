@@ -223,20 +223,6 @@ def test_write_geojson_roundtrip(tmp_path):
     assert len(f["geometry"]["coordinates"][0]) == 5
 
 
-def test_salted_broadcast_left_matches_plain_join(spark):
-    from mini_project_204721_data_engineering_spark.operators.skew import salted_broadcast_left
-
-    left = spark.createDataFrame(
-        [Row(k=i % 3, lid=i) for i in range(40)]  # key 0/1/2, deliberately hot
-    )
-    right = spark.createDataFrame([Row(k=0, tag="a"), Row(k=1, tag="b")])
-    salted = salted_broadcast_left(left, right, on=["k"], salt_from="lid", n_salts=4)
-    plain = left.join(right, "k", "inner")
-    got = sorted((r["lid"], r["tag"]) for r in salted.collect())
-    want = sorted((r["lid"], r["tag"]) for r in plain.collect())
-    assert got == want and len(got) > 0
-
-
 def test_recommend_salt_planted_hot_key_consumed_by_salted_agg(spark):
     """20% of all rows on ONE key: the recommendation must be exactly
     the reducer-overload split (ceil(max_group / (tolerance x fair
@@ -414,111 +400,6 @@ def test_events_sessions_handles_ntz_timestamps(spark):
     assert rows[(7, 1)].duration_sec == 300.0
 
 
-def test_hll_sketch_rollup_cascade_exact_merge(spark):
-    """The sketch cascade contract: daily sketches unioned to a monthly
-    estimate give EXACTLY the same estimate as sketching the whole span
-    directly (merge associativity), and land within ~2% of the true
-    distinct count at lg_k=12."""
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-    from mini_project_204721_data_engineering_spark.operators.rollup import (
-        estimate_distinct,
-        reaggregate_distinct,
-        rollup_distinct,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    daily = rollup_distinct(ev, "ts", "user_id", ["event_type"], "day")
-    monthly_from_daily = estimate_distinct(
-        reaggregate_distinct(daily, ["event_type"], "month")
-    )
-    monthly_direct = estimate_distinct(
-        rollup_distinct(ev, "ts", "user_id", ["event_type"], "month")
-    )
-    a = {
-        (r["bucket"], r["event_type"]): r["n_distinct"]
-        for r in monthly_from_daily.collect()
-    }
-    b = {
-        (r["bucket"], r["event_type"]): r["n_distinct"]
-        for r in monthly_direct.collect()
-    }
-    assert a == b  # union-of-sketches == sketch-of-union, not just close
-    exact = {
-        (r["bucket"], r["event_type"]): r["n"]
-        for r in ev.groupBy(
-            F.date_trunc("month", "ts").alias("bucket"), "event_type"
-        )
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    assert set(a) == set(exact)
-    for k, est in a.items():
-        assert abs(est - exact[k]) / exact[k] < 0.05, (k, est, exact[k])
-
-
-def test_histogram_rollup_percentiles_within_bin_width(spark):
-    """Histogram cascade contract: monthly-from-daily == monthly-direct
-    EXACTLY (bin counts are algebraic), and the served p50/p95 land
-    within one bin width of the true percentiles."""
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-    from mini_project_204721_data_engineering_spark.operators.rollup import (
-        estimate_percentile,
-        reaggregate_histogram,
-        rollup_histogram,
-    )
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    lo, hi, n_bins = 0.0, 1000.0, 200
-    daily = rollup_histogram(ev, "ts", "value", ["event_type"], "day", lo, hi, n_bins)
-    monthly = reaggregate_histogram(daily, ["event_type"], "month")
-    direct = rollup_histogram(ev, "ts", "value", ["event_type"], "month", lo, hi, n_bins)
-    a = {(r["bucket"], r["event_type"], r["bin"]): r["n"] for r in monthly.collect()}
-    b = {(r["bucket"], r["event_type"], r["bin"]): r["n"] for r in direct.collect()}
-    assert a == b  # cascade is exact, not approximate
-
-    import math
-
-    width = (hi - lo) / n_bins
-    vals = {}
-    for r in ev.select(
-        F.date_trunc("month", "ts").alias("bucket"), "event_type", "value"
-    ).collect():
-        vals.setdefault((r["bucket"], r["event_type"]), []).append(r["value"])
-    for p in (0.5, 0.95):
-        est = {
-            (r["bucket"], r["event_type"]): r[f"p{int(p * 100)}_est"]
-            for r in estimate_percentile(monthly, ["event_type"], p, lo, hi, n_bins).collect()
-        }
-        assert set(est) == set(vals)
-        for k, xs in vals.items():
-            # type-1 (inverted-CDF) empirical quantile: the ceil(p·n)-th value
-            q1 = sorted(xs)[max(0, math.ceil(p * len(xs)) - 1)]
-            # the served estimate is the upper edge of the bin holding q1
-            assert est[k] - width - 1e-9 < q1 <= est[k] + 1e-9, (p, k, est[k], q1)
-
-
-def test_estimate_percentile_overflow_bin_is_null(spark):
-    """When the target rank lands in the overflow bin (values ≥ hi) no
-    finite bin edge bounds the true percentile — the estimate must be
-    NULL, not a plausible-looking lo+(n_bins+1)·width (ADVICE r4)."""
-    from mini_project_204721_data_engineering_spark.operators.rollup import (
-        estimate_percentile,
-        rollup_histogram,
-    )
-
-    # 10 values, 9 of them way above hi=10 → p95 is in the overflow bin
-    rows = [("2024-01-01 00:00:00", "a", float(v)) for v in [5] + [999] * 9]
-    df = spark.createDataFrame(rows, "ts_s string, k string, value double").select(
-        F.col("ts_s").cast("timestamp").alias("ts"), "k", "value"
-    )
-    hist = rollup_histogram(df, "ts", "value", ["k"], "day", 0.0, 10.0, 4)
-    est = estimate_percentile(hist, ["k"], 0.95, 0.0, 10.0, 4).collect()
-    assert len(est) == 1 and est[0]["p95_est"] is None
-    # but a percentile inside [lo, hi) still serves a finite edge
-    low = estimate_percentile(hist, ["k"], 0.05, 0.0, 10.0, 4).collect()
-    assert low[0]["p5_est"] is not None and low[0]["p5_est"] <= 10.0
-
-
 def test_asof_join_tolerance_matches_pandas(spark):
     """tolerance nulls matches staler than the bound — exactly pandas
     merge_asof(tolerance=...) — on both the struct and flat paths."""
@@ -605,36 +486,6 @@ def test_keyset_pagination_walks_all_rows_and_stays_topk(spark):
         seen2 += [(r["val"], r["id"]) for r in rows]
         cursor = (rows[-1]["val"], rows[-1]["id"])
     assert len(seen2) == 30 and len(set(seen2)) == 30 and seen2 == sorted(seen2)
-
-
-def test_profile_table_single_scan_and_approx_path(spark):
-    """profile_table computes every statistic in ONE aggregate over ONE
-    scan (plan shows a single FileScan/relation), nulls are counted
-    correctly, and the approx-distinct default stays within the HLL rsd
-    of the exact path."""
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-    from mini_project_204721_data_engineering_spark.operators.profile import profile_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    with_nulls = docs.withColumn(
-        "lang", F.when(F.col("doc_id") % 10 == 0, None).otherwise(F.col("lang"))
-    )
-    exact = {r["col_name"]: r for r in profile_table(with_nulls, exact_distinct=True).collect()}
-    n = with_nulls.count()
-    assert exact["lang"]["n_rows"] == n
-    assert exact["lang"]["n_nulls"] == with_nulls.filter("lang IS NULL").count()
-    assert exact["doc_id"]["n_nulls"] == 0
-    assert exact["doc_id"]["n_distinct"] == n
-    assert exact["n_chars"]["min_val"] == str(
-        with_nulls.agg(F.min("n_chars")).collect()[0][0]
-    )
-    approx = {r["col_name"]: r for r in profile_table(with_nulls).collect()}
-    for c in ("doc_id", "lang", "source"):
-        e, a = exact[c]["n_distinct"], approx[c]["n_distinct"]
-        assert abs(a - e) <= max(2, 0.15 * e)
-    # single scan: the approx plan references the source relation once
-    plan = profile_table(with_nulls)._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Relation") == 1
 
 
 def test_table_diff_statuses_and_changed_columns(spark):
@@ -738,44 +589,6 @@ def test_apply_changes_roundtrip_reconstructs_new_snapshot(spark):
     assert jobs_before == jobs_after
     with _pytest.raises(Exception, match="duplicate key"):
         merged_bad.collect()
-
-
-def test_rolling_time_agg_trailing_frame_and_refusals(spark):
-    """rolling_time_agg: trailing [ts-window, ts] frame is inclusive on
-    BOTH ends at exact-microsecond resolution (hand-computed fixture,
-    including a row exactly window seconds earlier), partitions are
-    independent, and empty partition_cols is refused (single-reducer
-    plan)."""
-    import datetime as dt
-
-    from mini_project_204721_data_engineering_spark.operators.aggregates import rolling_time_agg
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [
-        (1, "u", t0, 1.0),
-        (2, "u", t0 + dt.timedelta(seconds=30), 2.0),
-        (3, "u", t0 + dt.timedelta(seconds=60), 4.0),   # exactly 60s after t0
-        (4, "u", t0 + dt.timedelta(seconds=61), 8.0),   # row 1 just fell out
-        (5, "v", t0 + dt.timedelta(seconds=45), 16.0),  # other partition
-    ]
-    df = spark.createDataFrame(rows, "id long, u string, ts timestamp, v double")
-    out = {
-        r["id"]: (r["s"], r["n"])
-        for r in rolling_time_agg(
-            df, ["u"], "ts", 60.0, {"s": F.sum("v"), "n": F.count(F.lit(1))}
-        ).collect()
-    }
-    assert out == {
-        1: (1.0, 1),
-        2: (3.0, 2),
-        3: (7.0, 3),   # 60s-old row INCLUDED (closed lower bound)
-        4: (14.0, 3),  # row 1 excluded at 61s
-        5: (16.0, 1),  # partition isolation
-    }
-    import pytest
-
-    with pytest.raises(ValueError, match="partition column"):
-        rolling_time_agg(df, [], "ts", 60.0, {"s": F.sum("v")})
 
 
 def test_recommend_salt_profile_keys_order_insensitive(spark):

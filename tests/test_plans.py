@@ -39,6 +39,19 @@ def test_list_orders_pushdown_and_topk(spark, qs):
     assert broadcast_join_count(df) == 2
 
 
+def test_plan_checks_read_a_run_kept_page_once(spark, qs):
+    """A list page is kept (``catalog.served_plan``); once it has run,
+    its executed plan prints the cached plan inside the outer one, and
+    each adaptive plan as a final and an initial copy.  The checks read
+    one copy of each, so they answer the same before and after a run,
+    whichever test ran the page first."""
+    df = qs["list_orders_page"](spark, SF)
+    before = broadcast_join_count(df)
+    df.collect()
+    assert broadcast_join_count(df) == before == 2
+    assert has_take_ordered(df)
+
+
 def test_list_orders_column_pruning(spark, qs):
     df = qs["list_orders_page"](spark, SF)
     cols = scan_columns(df, "orders.parquet")
@@ -66,13 +79,6 @@ def test_volume_join_broadcasts_small_dims(spark, qs):
     df = qs["volume_by_nation"](spark, SF)
     assert broadcast_join_count(df) >= 1
     assert has_take_ordered(df) or shuffle_count(df) <= 3
-
-
-def test_similarity_broadcasts_queries(spark, qs):
-    df = qs["similarity_topk"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # the query side must broadcast: corpus × queries as BroadcastNestedLoop
-    assert "Broadcast" in plan
 
 
 def test_asof_join_is_union_window_not_range_join(spark, qs):
@@ -124,34 +130,6 @@ def test_top_return_customers_scale_shape(spark, qs):
     assert has_pushed_filters(df, "l_returnflag")
     assert has_take_ordered(df)
     assert broadcast_join_count(df) >= 1
-
-
-def test_embedding_neardup_has_no_corpus_self_crossjoin(spark, qs):
-    df = qs["embedding_neardup"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # the LSH path must candidate via the band-key equi-join; an exact
-    # all-pairs corpus×corpus cross product cannot run at 100 TB
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_similarity_ivf_routes_via_broadcast_centroids(spark, qs):
-    df = qs["similarity_ivf"](spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # scoring joins the (tiny) routed-query side via broadcast
-    assert "Broadcast" in plan
-
-
-def test_ivf_cell_assignment_is_shuffle_free(spark):
-    """The IVF coarse assignment must be a pure projection — centroids
-    are inlined literals, so at 100 TB the corpus is only SCANNED, never
-    exchanged, to get its cell labels."""
-    from mini_project_204721_data_engineering_spark.catalog import load_table
-    from mini_project_204721_data_engineering_spark.llm.similarity import assign_cells, seeded_centroids
-
-    emb = load_table(spark, SF, "embeddings")
-    cells = assign_cells(emb, seeded_centroids(emb, 4))
-    assert shuffle_count(cells) == 0
 
 
 def test_top_return_customers_aqe_flips_to_smj_past_threshold(spark, qs):

@@ -235,36 +235,3 @@ def test_portable_round_spark_duckdb_halfway_corpus(spark):
         for v in vals
     ]
     assert got == want
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    vecs=st.lists(
-        st.lists(
-            st.integers(min_value=-50, max_value=50).map(lambda v: v / 10.0),
-            min_size=4,
-            max_size=4,
-        ),
-        min_size=2,
-        max_size=12,
-    ),
-    ncells=st.integers(min_value=1, max_value=4),
-)
-def test_assign_cells_bcast_equals_literal_property(spark, vecs, ncells):
-    """Broadcast-argmax assignment ≡ the literal-inlined projection on
-    arbitrary small vector sets — incl. zero vectors (the -1.0 guard),
-    duplicate vectors, and exact centroid ties (nc tiebreak)."""
-    from mini_project_204721_data_engineering_spark.llm.similarity import (
-        assign_cells,
-        assign_cells_bcast,
-        seeded_centroids,
-    )
-
-    ncells = min(ncells, len(vecs))
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<double>"
-    )
-    cents = seeded_centroids(df, ncells=ncells)
-    lit = {r["vec_id"]: r["cell"] for r in assign_cells(df, cents).collect()}
-    bc = {r["vec_id"]: r["cell"] for r in assign_cells_bcast(df, cents).collect()}
-    assert bc == lit

@@ -19,7 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE  # the fixed 17-query suite
+from bench import HEADLINE  # the fixed 16-query suite
 
 PASSES = int(sys.argv[1]) if len(sys.argv) > 1 else 5
 ONLY = sys.argv[2:]

@@ -11,9 +11,8 @@ Measured findings (SCALE.md "Measured at 100-400x" table):
    |groups|, not |rows| (map-side combine absorbs the growth);
 2. for ALGEBRAIC aggregates, partial aggregation already neutralizes
    hot-key skew — salting a count costs ~20-150% extra (second shuffle
-   phase) for nothing.  `salted_agg`'s lane is NON-combinable partials
-   and skewed-join replication (`salted_broadcast_left`), not counts;
-   the probe keeps both timings to document that honestly.
+   phase) for nothing.  `salted_agg`'s lane is NON-combinable partials,
+   not counts; the probe keeps both timings to document that honestly.
 
 Data is generated deterministically from `spark.range` + xxhash64 (no
 rand(): reruns are identical).  ~20% of rows share ONE hot user.
@@ -71,12 +70,10 @@ def timed(name, fn, out):
 def main() -> None:
     mode = "events"
     args = [a for a in sys.argv[1:]]
-    if args and args[0] in ("events", "docs", "ann", "srp", "cc", "spans", "semdedup", "spatial", "hotcell", "snap", "snap-manifest", "snap-big", "snap-contention", "snap-maint", "spill"):
+    if args and args[0] in ("events", "spatial", "snap", "snap-manifest", "snap-big", "snap-contention", "snap-maint", "spill"):
         mode = args.pop(0)
     n = int(args[0]) if args else {
-        "events": 10_000_000, "docs": 1_000_000, "ann": 1_000_000,
-        "srp": 1_000_000, "cc": 1_000_000, "spans": 200_000,
-        "semdedup": 100_000, "spatial": 1_000_000, "hotcell": 50_000,
+        "events": 10_000_000, "spatial": 1_000_000,
         "snap": 2_000_000, "snap-manifest": 100_000,
         "snap-big": 20_000_000, "snap-contention": 200_000,
         "snap-maint": 200_000, "spill": 30_000_000,
@@ -86,10 +83,7 @@ def main() -> None:
     spark = get_spark("scale-probe")
     out: list[dict] = []
     if mode != "events":
-        {"docs": probe_docs, "ann": probe_ann, "srp": probe_srp, "cc": probe_cc,
-         "spans": probe_spans, "semdedup": probe_semdedup,
-         "spatial": probe_spatial,
-         "hotcell": probe_hotcell,
+        {"spatial": probe_spatial,
          "snap": probe_snap,
          "snap-manifest": probe_snap_manifest,
          "snap-big": probe_snap_big,
@@ -197,273 +191,6 @@ def main() -> None:
     )
 
 
-def synth_docs(spark, n: int, n_tokens: int = 50, vocab: int = 1000, dup_frac_mod: int = 10):
-    """Deterministic word-soup docs; every ``dup_frac_mod``-th doc is an
-    exact duplicate of its predecessor (near-dup structure for LSH)."""
-    d = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % dup_frac_mod == 0, F.col("id") - 1)
-        .otherwise(F.col("id"))
-        .alias("bid"),
-    )
-    words = F.expr(
-        f"transform(sequence(0, {n_tokens - 1}), "
-        f"i -> concat('w', pmod(xxhash64(bid * {n_tokens} + i), {vocab})))"
-    )
-    return d.select("doc_id", F.concat_ws(" ", words).alias("text"))
-
-
-def synth_embeddings(spark, n: int, dim: int = 64):
-    """Deterministic unit-ish embeddings: dim pseudo-random doubles."""
-    vec = F.expr(
-        f"transform(sequence(0, {dim - 1}), "
-        f"i -> cast(pmod(xxhash64(id * {dim} + i), 2000) - 1000 as double) / 1000.0)"
-    )
-    return spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        vec.alias("embedding"),
-        # a 16-cell routing label (hash partition: timing-representative
-        # for the nprobe/ncells scan-cost ratio, not a recall claim)
-        F.pmod(F.xxhash64(F.col("id")), F.lit(16)).alias("label"),
-    )
-
-
-def probe_docs(spark, n: int, out: list) -> None:
-    """LLM-surface probes: MinHash-LSH dedup at corpus scale."""
-    docs = synth_docs(spark, n).localCheckpoint(eager=True)
-
-    def lsh(hash_fn):
-        def run():
-            from mini_project_204721_data_engineering_spark.llm.dedup import minhash_lsh_pairs
-
-            pairs = minhash_lsh_pairs(docs, k=8, bands=4, threshold=0.5, hash_fn=hash_fn)
-            return pairs.agg(F.count(F.lit(1))).collect()[0][0]
-
-        return run
-
-    timed("minhash_lsh_pairs_md5", lsh("md5"), out)
-    timed("minhash_lsh_pairs_xxhash64", lsh("xxhash64"), out)
-
-    def exact():
-        from mini_project_204721_data_engineering_spark.llm.dedup import exact_dedup
-
-        return exact_dedup(docs).agg(F.count(F.lit(1))).collect()[0][0]
-
-    timed(f"exact_dedup_docs", exact, out)
-
-
-def probe_ann(spark, n: int, out: list) -> None:
-    """ANN probes: brute-force cosine top-k vs IVF at corpus scale."""
-    emb = synth_embeddings(spark, n).localCheckpoint(eager=True)
-    qs = emb.filter(F.col("vec_id") % max(1, n // 100) == 0)  # ~100 queries
-
-    def brute():
-        from mini_project_204721_data_engineering_spark.llm.similarity import cosine_topk
-
-        return cosine_topk(emb, qs, k=10).agg(F.count(F.lit(1))).collect()[0][0]
-
-    timed("ann_bruteforce_topk", brute, out)
-
-    def ivf():
-        from mini_project_204721_data_engineering_spark.llm.similarity import ivf_topk
-
-        return ivf_topk(emb, qs, k=10, nprobe=2).agg(
-            F.count(F.lit(1))
-        ).collect()[0][0]
-
-    timed("ann_ivf_nprobe2_of16cells", ivf, out)
-
-    # honest RECALL measurement needs geometric cluster structure the
-    # flat synthetic lacks: plant 16 well-separated centers (one-hot-ish
-    # blocks scaled to dominate) + small deterministic jitter, so true
-    # neighbors concentrate in cells and nprobe routing is meaningful
-    dim = 64
-    centers = 16
-    for signal, tag in ((10.0, "separated"), (1.5, "overlapping")):
-        clustered = spark.range(n).select(
-            F.col("id").alias("vec_id"),
-            # IVF lists = the true clusters (what a converged k-means
-            # finds on these centers) — the probe measures nprobe
-            # ROUTING recall, not quantizer training
-            F.pmod(F.col("id"), F.lit(centers)).cast("int").alias("label"),
-            F.expr(
-                f"transform(sequence(0, {dim - 1}), i -> "
-                f"cast(IF(i div {dim // centers} = pmod(id, {centers}), {signal}, 0.0) "
-                f"+ (pmod(xxhash64(id * {dim} + i), 2000) - 1000) / 1000.0 as double))"
-            ).alias("embedding"),
-        ).localCheckpoint(eager=True)
-        cqs = clustered.filter(F.col("vec_id") % max(1, n // 50) == 0)
-
-        def recall(c=clustered, q=cqs, t=tag):
-            from mini_project_204721_data_engineering_spark.llm.similarity import (
-                cosine_topk,
-                ivf_topk,
-            )
-
-            exact = {
-                (r["query_id"], r["vec_id"])
-                for r in cosine_topk(c, q, k=10).collect()
-            }
-            approx = {
-                (r["query_id"], r["vec_id"])
-                for r in ivf_topk(c, q, k=10, nprobe=2).collect()
-            }
-            hit = len(exact & approx)
-            rec = round(hit / max(1, len(exact)), 4)
-            print(json.dumps({"probe": f"ann_ivf_recall_at10_nprobe2_{t}",
-                              "recall": rec, "n_true": len(exact)}), flush=True)
-            return hit
-
-        timed(f"ann_ivf_recall_{tag}", recall, out)
-
-
-def synth_embeddings_with_dups(spark, n: int, dim: int = 64, dup_mod: int = 10):
-    """Embeddings where every ``dup_mod``-th vector exactly copies its
-    predecessor — planted near-dup structure for the SRP-LSH probe."""
-    d = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.when(F.col("id") % dup_mod == 0, F.col("id") - 1)
-        .otherwise(F.col("id"))
-        .alias("bid"),
-    )
-    vec = F.expr(
-        f"transform(sequence(0, {dim - 1}), "
-        f"i -> cast(pmod(xxhash64(bid * {dim} + i), 2000) - 1000 as double) / 1000.0)"
-    )
-    return d.select("vec_id", vec.alias("embedding"))
-
-
-def probe_srp(spark, n: int, out: list) -> None:
-    """SRP-LSH embedding near-dup at corpus scale (VERDICT r5 #5).
-
-    The load-bearing variable is BITS PER BAND vs corpus size: random
-    unrelated vectors agree on a sign bit with p≈0.5, so a band of b
-    bits collides at ≈2^-b and random candidates ≈ bands·n²/2^b.
-    Keeping that ≈O(n) needs b ≳ log2(bands·n/2) — at n=1e6 that is
-    ~21+ bits/band.  The two probes measure both regimes: 16-bit bands
-    (under-provisioned at 1e6: candidates grow ~n²) vs 24-bit bands
-    (candidates ∝ planted dups).  Run at two n to see the shape."""
-    emb = synth_embeddings_with_dups(spark, n).localCheckpoint(eager=True)
-
-    def srp(n_bits, bands, label):
-        def run():
-            from mini_project_204721_data_engineering_spark.llm.dedup import srp_banded_pairs
-
-            pairs = srp_banded_pairs(
-                emb, threshold=0.99, n_bits=n_bits, bands=bands
-            )
-            return pairs.agg(F.count(F.lit(1))).collect()[0][0]
-
-        return run
-
-    timed("srp_16bit_bands_underprovisioned", srp(32, 2, "16b"), out)
-    timed("srp_24bit_bands_provisioned", srp(48, 2, "24b"), out)
-
-
-def probe_spans(spark, n: int, out: list) -> None:
-    """Exact-substring duplicate_spans at corpus scale — the r6 claim
-    under test: xxhash64-ing positional grams before the count shuffle
-    and the hot-gram join moves 8-B keys instead of ~60-B gram strings
-    (identical output; the oracle checks that at sf).  n docs x 50
-    tokens -> ~43 n positional 8-grams through the shuffle."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import duplicate_spans
-
-    docs = synth_docs(spark, n).localCheckpoint(eager=True)
-
-    def spans(hash_grams):
-        def run():
-            return (
-                duplicate_spans(docs, k=8, hash_grams=hash_grams)
-                .agg(F.count(F.lit(1)), F.sum("n_tokens"))
-                .collect()[0][0]
-            )
-
-        return run
-
-    timed("duplicate_spans_hashed", spans(True), out)
-    timed("duplicate_spans_strings", spans(False), out)
-
-
-def probe_semdedup(spark, n: int, out: list) -> None:
-    """semantic_dedup (SemDeDup) at corpus scale.  The pairwise stage
-    costs ~n x cell_size / 2 cosine evaluations, so the load-bearing
-    knob is CELL SIZE, not corpus size: a fixed quantizer (ncells
-    constant) goes quadratic as n grows, while provisioning
-    ncells ∝ n (constant cell size) keeps the operator linear — the
-    same provisioning discipline as the SRP bits/band rule.  Two
-    probes: fixed ncells=64, and ncells scaled to hold cell size at
-    ~390 vectors."""
-    emb = synth_embeddings_with_dups(spark, n).localCheckpoint(eager=True)
-
-    def run(ncells):
-        def go():
-            from mini_project_204721_data_engineering_spark.llm.dedup import semantic_dedup
-
-            return semantic_dedup(emb, threshold=0.99, ncells=ncells).count()
-
-        return go
-
-    timed("semdedup_fixed_64cells", run(64), out)
-    timed("semdedup_cells_prop_n", run(max(8, n // 390)), out)
-
-    def run_two_level():
-        from mini_project_204721_data_engineering_spark.llm.dedup import semantic_dedup
-        from mini_project_204721_data_engineering_spark.llm.similarity import (
-            assign_cells_two_level,
-            seeded_two_level,
-        )
-
-        k = max(2, int(round((n / 390) ** 0.5)))
-        supers, subs = seeded_two_level(emb, k1=k, k2=k)
-        cells = assign_cells_two_level(emb, supers, subs)
-        return semantic_dedup(emb, threshold=0.99, cells_df=cells).count()
-
-    # same effective cell count as cells_prop_n, but assignment costs
-    # n·2√k instead of n·k — the SCALE.md linear path beyond 1e7 vectors
-    timed("semdedup_two_level", run_two_level, out)
-
-
-def probe_hotcell(spark, n: int, out: list) -> None:
-    """Hot-cell guard for semantic_dedup (r7): a corpus whose lower
-    half collapses onto ONE direction (per-id scalings — identical
-    cosine to every centroid, so one cell takes 50% of the vectors)
-    is the quadratic failure mode the cap defuses.  Claim under test:
-    uncapped cost grows ~n² in the hot-cell population while
-    max_cell_size holds the per-reducer pairwise work constant, so the
-    capped runtime stays ~linear in n."""
-    dim = 64
-    hot = F.expr(
-        f"transform(sequence(0, {dim - 1}), "
-        f"i -> cast(1 + pmod(i * 37, 29) as double) / 29.0 "
-        f"* (1.0 + cast(pmod(id, 97) as double) / 97000.0))"
-    )
-    spread = F.expr(
-        f"transform(sequence(0, {dim - 1}), "
-        f"i -> cast(pmod(xxhash64(id * {dim} + i), 2000) - 1000 as double) / 1000.0)"
-    )
-    emb = (
-        spark.range(n)
-        .select(
-            F.col("id").alias("vec_id"),
-            F.when(F.col("id") % 2 == 0, hot).otherwise(spread).alias("embedding"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def run(cap):
-        def go():
-            from mini_project_204721_data_engineering_spark.llm.dedup import semantic_dedup
-
-            return semantic_dedup(
-                emb, threshold=0.99, ncells=64, max_cell_size=cap
-            ).count()
-
-        return go
-
-    timed("hotcell_uncapped", run(None), out)
-    timed("hotcell_cap500", run(500), out)
-
-
 def probe_spatial(spark, n: int, out: list) -> None:
     """Point-in-polygon spatial join (J1's general mapInPandas path) at
     fact scale: n points against a 900-polygon ADM2-sized boundary set
@@ -502,31 +229,6 @@ def probe_spatial(spark, n: int, out: list) -> None:
         return tagged.agg(F.count(F.lit(1))).collect()[0][0]
 
     timed("spatial_join_900_polys", run, out)
-
-
-def probe_cc(spark, n: int, out: list) -> None:
-    """dup_clusters (connected components) over n planted near-dup
-    PAIRS: clusters of 5 docs chained (diameter 4 — the realistic
-    near-dup shape), so rounds stay constant while edges scale.  The
-    claim under test: cost ∝ edges × diameter, not corpus²."""
-    from mini_project_204721_data_engineering_spark.llm.dedup import dup_clusters
-
-    # chains 0-1-2-3-4, 5-6-..., each cluster spans 5 ids → n pairs total
-    pairs = (
-        spark.range(n)
-        .filter(F.pmod("id", F.lit(5)) != 4)  # last link of each 5-chain omitted
-        .select(F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
-        .localCheckpoint(eager=True)
-    )
-
-    def cc():
-        labels = dup_clusters(pairs)
-        # consume: every doc labeled with its chain head (id - id%5)
-        return labels.filter(
-            F.col("cluster_id") == F.col("doc_id") - F.pmod("doc_id", F.lit(5))
-        ).count()
-
-    timed("dup_clusters_chain5", cc, out)
 
 
 def probe_snap(spark, n: int, out: list) -> None:

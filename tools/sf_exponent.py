@@ -27,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE  # the fixed 17-query suite
+from bench import HEADLINE  # the fixed 16-query suite
 
 
 def main() -> None:

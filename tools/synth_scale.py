@@ -41,7 +41,6 @@ _SHIFTS = {
         "user_id": ("events", "user_id"),
     },
     "documents": {"doc_id": ("documents", "doc_id")},
-    "embeddings": {"vec_id": ("embeddings", "vec_id")},
 }
 _COPY = ["region", "nation"]
 

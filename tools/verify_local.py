@@ -30,7 +30,7 @@ ONLY = set(sys.argv[2:])
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
+        "region nation customer supplier part orders lineitem events documents"
     ).split():
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
