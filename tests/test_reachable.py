@@ -43,7 +43,7 @@ NOT_YET_CUT = {"sources.protobuf"}
 
 _COLUMN_FORM = "Column form of a SQL-text formula; tests evaluate it"
 _TEST_FIXTURE = "builds or checks test fixtures"
-_EAGER_READER = "whole-file reader; the pipelines use the slab/streamed path; tests call it"
+_EAGER_READER = "whole-file parser; uploads decode through netcdf_files_to_long; tests call it"
 _SNAP_REWRITE = "snapshot rewrite family, ROADMAP item 4"
 _SNAP_SCHEMA = "snapshot schema-edit family, ROADMAP item 4"
 _SNAP_HISTORY = "snapshot clone/restore/expire family, ROADMAP item 4"
@@ -51,6 +51,10 @@ _SNAP_FEED = "snapshot change-feed family, ROADMAP item 4"
 _SNAP_META = "snapshot metadata queries, ROADMAP item 4"
 _TXN = "transaction-catalog maintenance and feeds, ROADMAP item 4"
 _STREAM = "events streaming surface; tests only"
+_BLOOM = "bloom build/filter/semi-join; test_bloom checks the SBBF sizing the snapshot bloom sidecar uses"
+_DIFF = "table diff family, ROADMAP item 4; tests only"
+_XLS_WRITER = "legacy .xls writer for test fixtures"
+_TXN_APPEND = "idempotent txn append, ROADMAP item 4"
 
 #: top-level definitions of reached modules that no entry point reaches,
 #: each with the reason it stays; cut one and delete its line
@@ -61,15 +65,15 @@ UNREACHED_DEFINITIONS = {
     "functions.parity.portable_round": _COLUMN_FORM,
     "functions.text.normalize_th": _COLUMN_FORM,
     "functions.thaidates.be_to_ce": _COLUMN_FORM,
-    "operators.bloom.BloomFilter": "bloom build/filter/semi-join; test_bloom checks the SBBF sizing the snapshot bloom sidecar uses",
-    "operators.bloom.bloom_filter": "bloom build/filter/semi-join; test_bloom checks the SBBF sizing the snapshot bloom sidecar uses",
-    "operators.bloom.bloom_semi_join": "bloom build/filter/semi-join; test_bloom checks the SBBF sizing the snapshot bloom sidecar uses",
-    "operators.bloom.build_bloom": "bloom build/filter/semi-join; test_bloom checks the SBBF sizing the snapshot bloom sidecar uses",
+    "operators.bloom.BloomFilter": _BLOOM,
+    "operators.bloom.bloom_filter": _BLOOM,
+    "operators.bloom.bloom_semi_join": _BLOOM,
+    "operators.bloom.build_bloom": _BLOOM,
     "operators.dedup.dedup_keep_first": "window form; tests check the packed form the queries use against it",
-    "operators.diff.apply_changes": "table diff family, ROADMAP item 4; tests only",
-    "operators.diff.changed_column_counts": "table diff family, ROADMAP item 4; tests only",
-    "operators.diff.diff_summary": "table diff family, ROADMAP item 4; tests only",
-    "operators.diff.table_diff": "table diff family, ROADMAP item 4; tests only",
+    "operators.diff.apply_changes": _DIFF,
+    "operators.diff.changed_column_counts": _DIFF,
+    "operators.diff.diff_summary": _DIFF,
+    "operators.diff.table_diff": _DIFF,
     "sources.crs.forward_tm": _TEST_FIXTURE,
     "sources.geometry.parse_wkt_polygon": _TEST_FIXTURE,
     "sources.geometry.read_geojson": "GeoJSON boundary reader; the pipelines read the shapefile; tests only",
@@ -79,11 +83,11 @@ UNREACHED_DEFINITIONS = {
     "sources.hdf5.read_netcdf4": _EAGER_READER,
     "sources.manifest_io.certify_manifest_io": "adapter gate for the manifest IO seam; tests run it",
     "sources.manifest_io.register_manifest_io": "adapter registration API; tests register mock adapters",
-    "sources.netcdf.netcdf_to_long": _EAGER_READER,
+    "sources.netcdf.netcdf_to_long": "single-file form of netcdf_files_to_long; tests call it",
     "sources.netcdf3.read_netcdf3": _EAGER_READER,
     "sources.shapefile.check_prj_wgs84": _TEST_FIXTURE,
     "sources.shapefile.wkt_to_shp_parts": _TEST_FIXTURE,
-    "sources.snapshots._AlreadyApplied": "idempotent txn append, ROADMAP item 4",
+    "sources.snapshots._AlreadyApplied": _TXN_APPEND,
     "sources.snapshots._check_stored_predicate": _SNAP_REWRITE,
     "sources.snapshots._evo_state": _SNAP_SCHEMA,
     "sources.snapshots._expr_mentions": _SNAP_SCHEMA,
@@ -117,7 +121,7 @@ UNREACHED_DEFINITIONS = {
     "sources.snapshots.snapshot_restore": _SNAP_HISTORY,
     "sources.snapshots.snapshot_set_stats_spec": _SNAP_SCHEMA,
     "sources.snapshots.snapshot_stream_sink": _SNAP_FEED,
-    "sources.snapshots.snapshot_txn_append": "idempotent txn append, ROADMAP item 4",
+    "sources.snapshots.snapshot_txn_append": _TXN_APPEND,
     "sources.snapshots.snapshot_widen_column": _SNAP_SCHEMA,
     "sources.txn_catalog.catalog_changes": _TXN,
     "sources.txn_catalog.catalog_expire": _TXN,
@@ -125,10 +129,10 @@ UNREACHED_DEFINITIONS = {
     "sources.txn_catalog.catalog_layout_report": _TXN,
     "sources.txn_catalog.catalog_maintain": _TXN,
     "sources.txn_catalog.catalog_stream_sink": _TXN,
-    "sources.xls._rec": "legacy .xls writer for test fixtures",
-    "sources.xls._ustr": "legacy .xls writer for test fixtures",
-    "sources.xls._write_cfb": "legacy .xls writer for test fixtures",
-    "sources.xls.write_xls": "legacy .xls writer for test fixtures",
+    "sources.xls._rec": _XLS_WRITER,
+    "sources.xls._ustr": _XLS_WRITER,
+    "sources.xls._write_cfb": _XLS_WRITER,
+    "sources.xls.write_xls": _XLS_WRITER,
     "streaming.events.read_events_stream": _STREAM,
     "streaming.events.run_available_now": _STREAM,
     "streaming.events.session_counts": _STREAM,
