@@ -239,7 +239,7 @@ def _split(tree: ast.Module) -> tuple[dict[str, ast.AST], list[ast.AST]]:
 
 def _unreached_definitions(entries: list[ast.Module], modules: dict[str, ast.Module]) -> set[str]:
     """``module.name`` of every top-level definition in ``modules`` that
-    the entry files reach (see the module docstring for the rule)."""
+    the entry files do not reach (the rule is in the module docstring)."""
     refs = _referenced(entries)
     defs: dict[str, ast.AST] = {}
     for mod, tree in modules.items():
