@@ -6,14 +6,10 @@ rainfall grid and 928 admin polygons (``gpd.sjoin(..., predicate=
 side is broadcast-sized, so the Spark-native design is:
 
 1. parse polygons (WKT) driver-side into plain coordinate rings,
-2. broadcast them,
-3. assign districts per point either by
-   - :func:`assign_points_udf` — Arrow-batched ``mapInPandas`` doing
-     vectorized ray-casting per polygon (the general path), or
-   - :func:`build_cell_lookup` + broadcast equi-join — precompute
-     ``(lat, lon) → district`` once for the static grid (the fast path;
-     turns the spatial join into a plain broadcast hash join, SURVEY
-     §4.3.1).
+2. precompute ``(lat, lon) → district`` once for the static grid by
+   vectorized ray casting (:func:`build_cell_lookup`, SURVEY §4.3.1),
+3. ship it to the decode tasks as a dense cell index
+   (``pipelines.rain``): the spatial join becomes an array lookup.
 
 Boundary semantics: ``within`` excludes points exactly on a polygon
 boundary; ray casting is half-open and classifies such points
@@ -23,12 +19,11 @@ floating-point geometry, so we document rather than chase it.
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 __all__ = [
     "parse_wkt_polygon",
@@ -37,7 +32,6 @@ __all__ = [
     "point_in_ring",
     "point_in_rings",
     "assign_district",
-    "assign_points_udf",
     "build_cell_lookup",
     "write_geojson",
     "read_geojson",
@@ -170,48 +164,18 @@ def assign_district(
     return prov, dist
 
 
-def assign_points_udf(
-    points: DataFrame,
-    polygons_df: pd.DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """Spatial join, general path: broadcast the parsed polygons and tag
-    every point with (province, district) via Arrow-batched ``mapInPandas``.
-    Unmatched points are dropped (inner-join semantics of the reference's
-    ``sjoin(..., how="inner")``)."""
-    spark = points.sparkSession
-    polys = [
-        (r["province"], r["district"], parse_wkt_rings(r["wkt"]))
-        for _, r in polygons_df.iterrows()
-    ]
-    bpolys = spark.sparkContext.broadcast(polys)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in points.schema.fields
-    ) + ", province string, district string"
-
-    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pl = bpolys.value
-        for pdf in batches:
-            prov, dist = assign_district(
-                pdf[lon_col].to_numpy(np.float64), pdf[lat_col].to_numpy(np.float64), pl
-            )
-            pdf = pdf.assign(province=prov, district=dist)
-            yield pdf[pdf["district"].notna()]
-
-    return points.mapInPandas(worker, out_schema)
-
-
 def build_cell_lookup(
     spark: SparkSession,
     lats: Sequence[float],
     lons: Sequence[float],
     polygons_df: pd.DataFrame,
-) -> DataFrame:
-    """Fast path for static grids: precompute the (lat, lon) → district
-    table once, driver-side (grid-cells × polygons is small: the distinct
-    coordinate sets are tiny regardless of how many days of data flow
-    through).  The result broadcasts, turning J1 into a plain equi-join."""
+) -> pd.DataFrame:
+    """Precompute the (lat, lon) → district table of a static grid once,
+    driver-side (grid-cells × polygons is small: the distinct coordinate
+    sets are tiny regardless of how many days of data flow through).
+    ``pipelines.rain`` turns it into the dense cell index its decode
+    tasks carry, so J1 is an array lookup; ``spark`` is not used.  Cells
+    in no polygon are left out."""
     la = np.asarray(sorted({float(v) for v in lats}))
     lo = np.asarray(sorted({float(v) for v in lons}))
     gx, gy = np.meshgrid(lo, la)
@@ -221,8 +185,8 @@ def build_cell_lookup(
         for _, r in polygons_df.iterrows()
     ]
     prov, dist = assign_district(flat_x, flat_y, polys)
-    keep = np.array([d is not None for d in dist])
-    pdf = pd.DataFrame(
+    keep = np.array([d is not None for d in dist], dtype=bool)
+    return pd.DataFrame(
         {
             "lat": flat_y[keep],
             "lon": flat_x[keep],
@@ -230,7 +194,6 @@ def build_cell_lookup(
             "district": dist[keep],
         }
     )
-    return spark.createDataFrame(pdf)
 
 
 def write_geojson(polygons_df: pd.DataFrame, path: str) -> int:

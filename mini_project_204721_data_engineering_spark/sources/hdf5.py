@@ -73,6 +73,8 @@ from typing import Any
 import numpy as np
 import pandas as pd
 
+from mini_project_204721_data_engineering_spark.sources import netcdf3
+
 __all__ = [
     "read_hdf5",
     "read_netcdf4",
@@ -80,8 +82,10 @@ __all__ = [
     "netcdf4_grid_to_long_batches",
     "netcdf_grid_to_long",
     "netcdf_grid_to_long_batches",
-    "netcdf4_grid_axes",
-    "netcdf_grid_axes",
+    "netcdf4_grid_layout",
+    "netcdf4_grid_slabs",
+    "netcdf_grid_layout",
+    "netcdf_grid_slabs",
     "write_hdf5",
 ]
 
@@ -1659,21 +1663,79 @@ def _coord_data(h: _H5, meta: dict) -> np.ndarray:
     return arr.astype(arr.dtype.newbyteorder("=")) if arr.dtype.byteorder == ">" else arr
 
 
-def netcdf4_grid_axes(
+def _time_chunk(h: _H5, vmeta: dict) -> int:
+    """Time extent of ``vmeta``'s chunks (1 when not chunked): slabs
+    that start on a multiple of it inflate each chunk once."""
+    layout = vmeta["layout"]
+    if layout[1] == 2 and layout[0] in (3, 4):
+        cd = _chunk_dims(h, layout, len(vmeta["shape"]))
+        return cd[0] if cd else 1
+    return 1
+
+
+def netcdf4_grid_layout(
     content,
     var: str = "precip",
     time_dim: str = "time",
     lat_dim: str = "latitude",
     lon_dim: str = "longitude",
-) -> tuple[np.ndarray, np.ndarray]:
-    """NetCDF-4 twin of ``netcdf3.netcdf3_grid_axes``: the ``(lat, lon)``
-    coordinate arrays as float64 copies, read through the metadata walk
-    and the two 1-D coordinate datasets — ``var``'s chunks are never
-    inflated, so ``content`` may be an ``mmap``."""
-    h, metas, _ = _nc4_grid(content, var, time_dim, lat_dim, lon_dim)
-    return tuple(
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
+    """NetCDF-4 twin of ``netcdf3.netcdf3_grid_layout``: ``(lat, lon,
+    time, chunk time extent)``, read through the metadata walk and the
+    1-D coordinate datasets — ``var``'s chunks are never inflated, so
+    ``content`` may be an ``mmap``."""
+    h, metas, vmeta = _nc4_grid(content, var, time_dim, lat_dim, lon_dim)
+    lats, lons = (
         np.array(_coord_data(h, metas[n]), dtype=np.float64) for n in (lat_dim, lon_dim)
     )
+    t = metas[time_dim]
+    try:
+        times = netcdf3._decode_cf_time({"attrs": dict(t["attrs"]), "data": _coord_data(h, t)})
+        return lats, lons, np.array(times), _time_chunk(h, vmeta)
+    except _PARSE_ERRORS as e:
+        raise ValueError(f"corrupt or truncated HDF5 file: {e!r}") from e
+
+
+def netcdf4_grid_slabs(
+    content,
+    t0: int = 0,
+    t1: int | None = None,
+    var: str = "precip",
+    time_dim: str = "time",
+    lat_dim: str = "latitude",
+    lon_dim: str = "longitude",
+    records_per_batch: int = 32,
+):
+    """NetCDF-4 twin of ``netcdf3.netcdf3_grid_slabs``: yields
+    ``(times, lats, lons, values)`` per slab of time steps ``[t0, t1)``,
+    inflating only the chunks that intersect each slab — a year-long
+    chunked CHIRPS file never materializes its decoded expansion at
+    once.  Slabs align to the chunk time-extent, so no chunk of a range
+    that starts on a chunk boundary is inflated twice."""
+    h, metas, vmeta = _nc4_grid(content, var, time_dim, lat_dim, lon_dim)
+
+    def coord(name):
+        return {"attrs": dict(metas[name]["attrs"]), "data": _coord_data(h, metas[name])}
+
+    try:
+        times = netcdf3._decode_cf_time(coord(time_dim))
+        lats = np.asarray(coord(lat_dim)["data"], dtype=np.float64)
+        lons = np.asarray(coord(lon_dim)["data"], dtype=np.float64)
+        tchunk = _time_chunk(h, vmeta)
+    except _PARSE_ERRORS as e:
+        raise ValueError(f"corrupt or truncated HDF5 file: {e!r}") from e
+    step = max(tchunk, (records_per_batch // tchunk) * tchunk)
+    clean_attrs = {k: v for k, v in vmeta["attrs"].items() if k not in _NC4_HIDDEN_ATTRS}
+    end = len(times) if t1 is None else min(t1, len(times))
+    for s0 in range(t0, end, step):
+        s1 = min(end, s0 + step)
+        try:
+            slab = _read_slab(h, vmeta, s0, s1)
+        except _PARSE_ERRORS as e:
+            raise ValueError(f"corrupt or truncated HDF5 file: {e!r}") from e
+        if slab.dtype.byteorder == ">":
+            slab = slab.astype(slab.dtype.newbyteorder("="))
+        yield times[s0:s1], lats, lons, netcdf3._decode_cf_values({"data": slab, "attrs": clean_attrs})
 
 
 def netcdf4_grid_to_long_batches(
@@ -1685,54 +1747,11 @@ def netcdf4_grid_to_long_batches(
     records_per_batch: int = 32,
 ):
     """Slab-streamed NetCDF-4 decode: yields long-format frames of ~
-    ``records_per_batch`` time steps, inflating only the chunks that
-    intersect each slab — a year-long chunked CHIRPS file never
-    materializes its decoded expansion at once.  Slabs align to the
-    chunk time-extent so no chunk is inflated twice."""
-    from mini_project_204721_data_engineering_spark.sources.netcdf3 import (
-        _decode_cf_time,
-        _decode_cf_values,
-    )
-
-    h, metas, vmeta = _nc4_grid(content, var, time_dim, lat_dim, lon_dim)
-
-    def coord(name):
-        return {"attrs": dict(metas[name]["attrs"]), "data": _coord_data(h, metas[name])}
-
-    try:
-        times = _decode_cf_time(coord(time_dim))
-        lats = np.asarray(coord(lat_dim)["data"], dtype=np.float64)
-        lons = np.asarray(coord(lon_dim)["data"], dtype=np.float64)
-    except _PARSE_ERRORS as e:
-        raise ValueError(f"corrupt or truncated HDF5 file: {e!r}") from e
-    nt, nla, nlo = len(times), len(lats), len(lons)
-    lat_tile = np.repeat(lats, nlo)
-    # align slabs to the chunk time-extent: each chunk inflates once
-    step = records_per_batch
-    layout = vmeta["layout"]
-    if layout[1] == 2 and layout[0] in (3, 4):
-        cd = _chunk_dims(h, layout, len(vmeta["shape"]))
-        tchunk = cd[0] if cd else 1
-        step = max(tchunk, (records_per_batch // tchunk) * tchunk or tchunk)
-    clean_attrs = {k: v for k, v in vmeta["attrs"].items() if k not in _NC4_HIDDEN_ATTRS}
-    for t0 in range(0, nt, step):
-        t1 = min(nt, t0 + step)
-        try:
-            slab = _read_slab(h, vmeta, t0, t1)
-        except _PARSE_ERRORS as e:
-            raise ValueError(f"corrupt or truncated HDF5 file: {e!r}") from e
-        if slab.dtype.byteorder == ">":
-            slab = slab.astype(slab.dtype.newbyteorder("="))
-        vals = _decode_cf_values({"data": slab, "attrs": clean_attrs})
-        k = t1 - t0
-        yield pd.DataFrame(
-            {
-                "time": np.repeat(times[t0:t1], nla * nlo),
-                "lat": np.tile(lat_tile, k),
-                "lon": np.tile(lons, k * nla),
-                "precip": vals.reshape(-1),
-            }
-        )
+    ``records_per_batch`` time steps (:func:`netcdf4_grid_slabs`)."""
+    for slab in netcdf4_grid_slabs(
+        content, 0, None, var, time_dim, lat_dim, lon_dim, records_per_batch
+    ):
+        yield netcdf3.long_frame(*slab)
 
 
 def _has_hdf5_sig(content: bytes) -> bool:
@@ -1748,19 +1767,21 @@ def _has_hdf5_sig(content: bytes) -> bool:
     return False
 
 
+def _by_container(content, classic, nc4):
+    """``classic`` for classic CDF bytes, ``nc4`` for HDF5 bytes: the
+    magic sniff that routes every container-agnostic reader."""
+    if content[:3] == b"CDF":
+        return classic
+    if _has_hdf5_sig(content):
+        return nc4
+    raise ValueError("not a NetCDF file (neither CDF nor HDF5 magic)")
+
+
 def netcdf_grid_to_long(content: bytes, **kw) -> pd.DataFrame:
     """Container-agnostic decoder: sniffs the magic and routes classic
     CDF bytes to the NetCDF-3 parser and HDF5 bytes to the NetCDF-4
     reader — eager form (one frame per file)."""
-    if content[:3] == b"CDF":
-        from mini_project_204721_data_engineering_spark.sources.netcdf3 import (
-            netcdf3_grid_to_long,
-        )
-
-        return netcdf3_grid_to_long(content, **kw)
-    if _has_hdf5_sig(content):
-        return netcdf4_grid_to_long(content, **kw)
-    raise ValueError("not a NetCDF file (neither CDF nor HDF5 magic)")
+    return _by_container(content, netcdf3.netcdf3_grid_to_long, netcdf4_grid_to_long)(content, **kw)
 
 
 def netcdf_grid_to_long_batches(content: bytes, **kw):
@@ -1769,32 +1790,24 @@ def netcdf_grid_to_long_batches(content: bytes, **kw):
     frame per time slab, so the per-task peak is the raw file bytes plus
     one decoded slab (~8× a slab of the raw f4 grid), never the whole
     decoded year."""
-    if content[:3] == b"CDF":
-        from mini_project_204721_data_engineering_spark.sources.netcdf3 import (
-            netcdf3_grid_to_long_batches,
-        )
-
-        yield from netcdf3_grid_to_long_batches(content, **kw)
-        return
-    if _has_hdf5_sig(content):
-        yield from netcdf4_grid_to_long_batches(content, **kw)
-        return
-    raise ValueError("not a NetCDF file (neither CDF nor HDF5 magic)")
+    yield from _by_container(
+        content, netcdf3.netcdf3_grid_to_long_batches, netcdf4_grid_to_long_batches
+    )(content, **kw)
 
 
-def netcdf_grid_axes(content, **kw) -> tuple[np.ndarray, np.ndarray]:
-    """Container-agnostic ``(lat, lon)`` axes of one grid file — the
-    coordinate values :func:`netcdf_grid_to_long_batches` emits, read
-    without decoding the grid variable (``content`` may be an ``mmap``)."""
-    if content[:3] == b"CDF":
-        from mini_project_204721_data_engineering_spark.sources.netcdf3 import (
-            netcdf3_grid_axes,
-        )
+def netcdf_grid_layout(content, **kw) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
+    """Container-agnostic ``(lat, lon, time, slab alignment)`` of
+    one grid file — the coordinate values :func:`netcdf_grid_slabs`
+    reports, read without decoding the grid variable (``content`` may be
+    an ``mmap``)."""
+    return _by_container(content, netcdf3.netcdf3_grid_layout, netcdf4_grid_layout)(content, **kw)
 
-        return netcdf3_grid_axes(content, **kw)
-    if _has_hdf5_sig(content):
-        return netcdf4_grid_axes(content, **kw)
-    raise ValueError("not a NetCDF file (neither CDF nor HDF5 magic)")
+
+def netcdf_grid_slabs(content, t0: int = 0, t1: int | None = None, **kw):
+    """Container-agnostic slab decode of time steps ``[t0, t1)``:
+    ``(times, lats, lons, values)`` per slab (``content`` may be an
+    ``mmap``)."""
+    return _by_container(content, netcdf3.netcdf3_grid_slabs, netcdf4_grid_slabs)(content, t0, t1, **kw)
 
 
 # --------------------------------------------------------------------------

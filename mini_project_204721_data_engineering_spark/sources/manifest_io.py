@@ -44,10 +44,12 @@ them on every store; only the MANIFEST CLAIM needs conditional-put.
 
 Resolution order (:func:`manifest_io_for`): an explicitly registered
 scheme always wins; otherwise local/``file:`` paths use the pure-Python
-:class:`LocalManifestIO` when no SparkSession is available (the
-streaming source's driver-side planner) and :class:`HadoopManifestIO`
-when one is; any other scheme falls back to :class:`HadoopManifestIO`
-(hdfs and friends) or raises a clear error in sessionless contexts.
+:class:`LocalManifestIO`, with or without a SparkSession — listing and
+reading a manifest are a directory listing and a file read, where the
+Hadoop route costs py4j round trips (a ``globStatus`` and a stream copy
+per read, tens of milliseconds on a busy driver); any other scheme
+falls back to :class:`HadoopManifestIO` (hdfs and friends) or raises a
+clear error in sessionless contexts.
 
 Bringing your own adapter (S3/GCS/Azure conditional PUT): implement
 the four primitives, then run :func:`certify_manifest_io` against a
@@ -211,8 +213,11 @@ class LocalManifestIO(ManifestIO):
 
 class HadoopManifestIO(ManifestIO):
     """Hadoop FileSystem implementation — hdfs:// and every connector
-    whose ``create(overwrite=false)`` is genuinely atomic.  Local paths
-    drop to :class:`LocalManifestIO` for the conditional put because
+    whose ``create(overwrite=false)`` is genuinely atomic, for every
+    scheme with no registered adapter.  :func:`manifest_io_for` never
+    picks it for local paths; called on one directly (the certification
+    tests do), it drops to :class:`LocalManifestIO` for the conditional
+    put because
     RawLocalFileSystem's create(overwrite=false) is check-then-create
     (two racing local writers can both pass the check — observed under
     an 8-thread append race before this fallback existed)."""
@@ -441,6 +446,7 @@ def certify_manifest_io(
 
 
 _REGISTRY: dict = {"mock": MockObjectStoreIO()}
+_LOCAL = LocalManifestIO()
 
 
 def register_manifest_io(scheme: str, io: ManifestIO) -> None:
@@ -460,7 +466,7 @@ def manifest_io_for(path: str, spark=None) -> ManifestIO:
     if io is not None:
         return io
     if scheme in ("", "file"):
-        return LocalManifestIO() if spark is None else HadoopManifestIO(spark)
+        return _LOCAL
     if spark is not None:
         return HadoopManifestIO(spark)
     raise ValueError(

@@ -33,7 +33,8 @@ __all__ = [
     "read_netcdf3",
     "netcdf3_grid_to_long",
     "netcdf3_grid_to_long_batches",
-    "netcdf3_grid_axes",
+    "netcdf3_grid_slabs",
+    "netcdf3_grid_layout",
     "write_netcdf3",
 ]
 
@@ -316,26 +317,30 @@ def _grid_header(content, var: str, time_dim: str, lat_dim: str, lon_dim: str):
     return hdr, by_name, v
 
 
-def netcdf3_grid_axes(
+def netcdf3_grid_layout(
     content,
     var: str = "precip",
     time_dim: str = "time",
     lat_dim: str = "latitude",
     lon_dim: str = "longitude",
-) -> tuple[np.ndarray, np.ndarray]:
-    """The ``(lat, lon)`` coordinate arrays of one classic grid file as
-    float64 — exactly the values :func:`netcdf3_grid_to_long_batches`
-    puts in its ``lat``/``lon`` columns.  Reads the header and the two
-    1-D coordinate variables only, never ``var``'s data, so ``content``
-    may be an ``mmap`` of a file of any size."""
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
+    """``(lat, lon, time, slab alignment)`` of one classic grid file:
+    the coordinate arrays — exactly the values
+    :func:`netcdf3_grid_slabs` reports, lat and lon as float64 — and 1
+    (any record range reads on its own).  Reads the header and the 1-D
+    coordinate variables only, never ``var``'s data, so ``content`` may
+    be an ``mmap`` of a file of any size."""
     hdr, by_name, _ = _grid_header(content, var, time_dim, lat_dim, lon_dim)
     try:
-        return tuple(
+        lats, lons = (
             np.array(_materialize_var(content, hdr, by_name[n]), dtype=np.float64)
             for n in (lat_dim, lon_dim)
         )
+        t = by_name[time_dim]
+        times = _decode_cf_time({"attrs": t["attrs"], "data": _materialize_var(content, hdr, t)})
     except _CORRUPT as e:
         raise ValueError(f"corrupt or truncated NetCDF classic file: {e!r}") from e
+    return lats, lons, np.array(times), 1
 
 
 def netcdf3_grid_to_long(
@@ -355,21 +360,24 @@ def netcdf3_grid_to_long(
     )
 
 
-def netcdf3_grid_to_long_batches(
-    content: bytes,
+def netcdf3_grid_slabs(
+    content,
+    t0: int = 0,
+    t1: int | None = None,
     var: str = "precip",
     time_dim: str = "time",
     lat_dim: str = "latitude",
     lon_dim: str = "longitude",
     records_per_batch: int = 32,
 ):
-    """Slab-streamed decode: yields long-format frames of
-    ``records_per_batch`` time steps each, so a full-year file's DECODED
-    expansion (~8× the raw f4 grid as four float64 long columns) never
-    materializes at once — peak task memory is the raw bytes plus ONE
-    slab.  Record variables slice by record stride; a fixed time-first
-    variable slices by leading-axis offset math.  This is the default
-    executor decode path under ``netcdf_files_to_long``."""
+    """Slab-streamed decode of time steps ``[t0, t1)``: yields
+    ``(times, lats, lons, values)`` per slab of at most
+    ``records_per_batch`` steps, ``values`` a CF-decoded float64
+    ``time × lat × lon`` array (fill → NaN).  A full-year file's decoded
+    expansion never materializes at once — peak memory is the raw bytes
+    plus ONE slab, and ``content`` may be an ``mmap``.  Record variables
+    slice by record stride; a fixed time-first variable slices by
+    leading-axis offset math."""
     hdr, by_name, v = _grid_header(content, var, time_dim, lat_dim, lon_dim)
     try:
         coords = {
@@ -382,24 +390,47 @@ def netcdf3_grid_to_long_batches(
     times = _decode_cf_time(coords[time_dim])
     lats = np.asarray(coords[lat_dim]["data"], dtype=np.float64)
     lons = np.asarray(coords[lon_dim]["data"], dtype=np.float64)
-    nt, nla, nlo = len(times), len(lats), len(lons)
-    lat_tile = np.repeat(lats, nlo)
-    for r0 in range(0, nt, records_per_batch):
-        r1 = min(nt, r0 + records_per_batch)
+    end = len(times) if t1 is None else min(t1, len(times))
+    for r0 in range(t0, end, records_per_batch):
+        r1 = min(end, r0 + records_per_batch)
         try:
             slab = _materialize_var(content, hdr, v, r0, r1)
         except _CORRUPT as e:
             raise ValueError(f"corrupt or truncated NetCDF classic file: {e!r}") from e
-        vals = _decode_cf_values({"data": slab, "attrs": v["attrs"]})
-        k = r1 - r0
-        yield pd.DataFrame(
-            {
-                "time": np.repeat(times[r0:r1], nla * nlo),
-                "lat": np.tile(lat_tile, k),
-                "lon": np.tile(lons, k * nla),
-                "precip": vals.reshape(-1),
-            }
-        )
+        yield times[r0:r1], lats, lons, _decode_cf_values({"data": slab, "attrs": v["attrs"]})
+
+
+def long_frame(times, lats: np.ndarray, lons: np.ndarray, values: np.ndarray) -> pd.DataFrame:
+    """One decoded slab as long-format ``(time, lat, lon, precip)``
+    rows, time-major then lat then lon."""
+    k, nla, nlo = len(times), len(lats), len(lons)
+    return pd.DataFrame(
+        {
+            "time": np.repeat(times, nla * nlo),
+            "lat": np.tile(np.repeat(lats, nlo), k),
+            "lon": np.tile(lons, k * nla),
+            "precip": values.reshape(-1),
+        }
+    )
+
+
+def netcdf3_grid_to_long_batches(
+    content: bytes,
+    var: str = "precip",
+    time_dim: str = "time",
+    lat_dim: str = "latitude",
+    lon_dim: str = "longitude",
+    records_per_batch: int = 32,
+):
+    """Slab-streamed decode: yields long-format frames of
+    ``records_per_batch`` time steps each (:func:`netcdf3_grid_slabs`),
+    so a full-year file's DECODED expansion (~8× the raw f4 grid as four
+    float64 long columns) never materializes at once.  This is the
+    executor decode of a ``netcdf_files_to_long`` grid on its row path."""
+    for slab in netcdf3_grid_slabs(
+        content, 0, None, var, time_dim, lat_dim, lon_dim, records_per_batch
+    ):
+        yield long_frame(*slab)
 
 
 def write_netcdf3(

@@ -35,8 +35,10 @@ and out of scope here.
 from __future__ import annotations
 
 import json
+import threading
 import time
 import uuid
+import weakref
 from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -131,6 +133,47 @@ def _list_versions(spark: SparkSession, table_dir: str) -> list[int]:
 
 def _read_manifest(spark: SparkSession, table_dir: str, version: int) -> dict:
     return manifest_io_for(table_dir, spark).read_manifest(table_dir, version)
+
+
+#: session -> {DDL text -> StructType, (DDL text, expression) -> DataType}
+_TYPES: weakref.WeakKeyDictionary[SparkSession, dict] = weakref.WeakKeyDictionary()
+_TYPES_KEPT = 512
+_TYPES_LOCK = threading.Lock()
+
+
+def _memo_type(spark: SparkSession, key, build):
+    """``build()``'s value, kept per session under ``key``; the store
+    empties when full (a session sees a handful of schemas)."""
+    with _TYPES_LOCK:
+        memo = _TYPES.setdefault(spark, {})
+        hit = memo.get(key)
+    if hit is None:
+        hit = build()
+        with _TYPES_LOCK:
+            if len(memo) >= _TYPES_KEPT:
+                memo.clear()
+            memo[key] = hit
+    return hit
+
+
+def _schema_of(spark: SparkSession, ddl: str) -> StructType:
+    """A manifest's schema DDL parsed once per session (the parse is a
+    JVM round trip).  Callers must not mutate the returned schema."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    return _memo_type(spark, ddl, lambda: _parse_datatype_string(ddl))
+
+
+def _expr_type(spark: SparkSession, ddl: str, expr: str):
+    """The type of SQL expression ``expr`` over a table of schema
+    ``ddl``, analysed once per session; raises what the analysis raises."""
+    from pyspark.sql import functions as F
+
+    return _memo_type(
+        spark,
+        (ddl, expr),
+        lambda: spark.createDataFrame([], _schema_of(spark, ddl)).select(F.expr(expr)).schema[0].dataType,
+    )
 
 
 def _try_write_manifest(
@@ -966,10 +1009,9 @@ def _filtered_read(
     All internal data reads (rewrites included) MUST come through here:
     bypassing it would resurrect lazily-deleted rows."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import _parse_datatype_string
 
     if schema is None:
-        schema = _parse_datatype_string(manifest["schema"])
+        schema = _schema_of(spark, manifest["schema"])
     files = list(files)
     if not files:
         df = spark.createDataFrame([], schema)
@@ -3014,19 +3056,12 @@ def snapshot_min_max(
         StringType,
         TimestampNTZType,
         TimestampType,
-        _parse_datatype_string,
     )
 
     manifest = _resolve_manifest(spark, table_dir, version, as_of)
     expr = (manifest.get("stats_cols") or {}).get(column, column)
-    schema = _parse_datatype_string(manifest["schema"])
     try:
-        dtype = (
-            spark.createDataFrame([], schema)
-            .select(F.expr(expr))
-            .schema[0]
-            .dataType
-        )
+        dtype = _expr_type(spark, manifest["schema"], expr)
     except Exception as e:
         raise ValueError(
             f"snapshot_min_max: {column!r} is neither a stats alias nor an "
@@ -3261,19 +3296,16 @@ def snapshot_agg(
         StringType,
         TimestampNTZType,
         TimestampType,
-        _parse_datatype_string,
     )
 
     parsed = _parse_aggs(aggs)
     manifest = _resolve_manifest(spark, table_dir, version, as_of)
     stats_cols = manifest.get("stats_cols") or {}
-    schema = _parse_datatype_string(manifest["schema"])
-    empty = spark.createDataFrame([], schema)
 
     def resolve(col: str):
         expr = stats_cols.get(col, col)
         try:
-            return expr, empty.select(F.expr(expr)).schema[0].dataType
+            return expr, _expr_type(spark, manifest["schema"], expr)
         except Exception as e:
             raise ValueError(
                 f"snapshot_agg: {col!r} is neither a stats alias nor an "

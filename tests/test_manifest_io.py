@@ -144,14 +144,34 @@ def test_resolution_and_registry(tmp_path, spark):
         from mini_project_204721_data_engineering_spark.sources import manifest_io
 
         manifest_io._REGISTRY.pop("s3x", None)
-    # with a session, file: resolves to the Hadoop impl (hdfs parity)
+    # with a session too, local paths resolve to the pure-Python impl:
+    # listing and reading a manifest make no py4j call
+    assert isinstance(manifest_io_for(str(tmp_path), spark), LocalManifestIO)
+    assert isinstance(manifest_io_for("file:" + str(tmp_path), spark), LocalManifestIO)
+
+
+def test_local_tables_never_use_the_hadoop_io(spark, tmp_path, monkeypatch):
+    """Commits, filtered reads and rollups of a local table list and read
+    their manifests in Python: no HadoopManifestIO method runs."""
     from mini_project_204721_data_engineering_spark.sources.manifest_io import (
         HadoopManifestIO,
     )
-
-    assert isinstance(
-        manifest_io_for(str(tmp_path), spark), HadoopManifestIO
+    from mini_project_204721_data_engineering_spark.sources.snapshots import (
+        read_snapshot_where,
+        snapshot_agg,
     )
+
+    def refuse(*a, **kw):
+        raise AssertionError("HadoopManifestIO used for a local table")
+
+    for name in ("list_versions", "read_bytes", "write_bytes", "put_if_absent", "spark_path"):
+        monkeypatch.setattr(HadoopManifestIO, name, refuse)
+    for t in (str(tmp_path / "t"), "file:" + str(tmp_path / "f")):
+        snapshot_append(_df(spark, 0, 20).coalesce(1), t, stats_cols=["id"])
+        snapshot_append(_df(spark, 20, 30).coalesce(1), t)
+        rows = read_snapshot_where(spark, t, "id >= 15").collect()
+        assert sorted(r["id"] for r in rows) == list(range(15, 30))
+        assert snapshot_agg(spark, t, {"n": "count(*)"}) == {"n": 30}
 
 
 # -- the full stack over a non-file: scheme --------------------------------

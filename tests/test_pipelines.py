@@ -68,8 +68,7 @@ def test_geometry_primitives():
     assert inside.tolist() == [True, False]
 
 
-@pytest.mark.parametrize("use_lookup", [True, False])
-def test_rain_pipeline_golden(spark, dims, use_lookup):
+def test_rain_pipeline_golden(spark, dims):
     province, district = dims
     # 2 days × 4 grid cells: two cells in district A, one in B, one outside
     rows = []
@@ -83,7 +82,7 @@ def test_rain_pipeline_golden(spark, dims, use_lookup):
     rows.append(Row(time="2023-06-01", lat=18.4, lon=99.4, precip=None))  # F2 drop
     grid = spark.createDataFrame(rows).withColumn("time", F.col("time").cast("timestamp"))
 
-    out = ingest_rain_grid(grid, POLYGONS, province, district, upload_id=7, use_lookup=use_lookup)
+    out = ingest_rain_grid(grid, POLYGONS, province, district, upload_id=7)
     got = {(str(r["date"]), r["district_id"]): r for r in out.collect()}
     district_ids = {r["district_name"]: r["district_id"] for r in district.collect()}
 
@@ -125,7 +124,7 @@ def test_rain_pipeline_single_driver_action(spark, dims, monkeypatch):
             return _orig(self, *a, **kw)
 
         monkeypatch.setattr(DataFrame, name, counted)
-    out = ingest_rain_grid(grid, POLYGONS, province, district, use_lookup=True)
+    out = ingest_rain_grid(grid, POLYGONS, province, district)
     assert actions == ["collect"], f"plan construction ran {actions}"
     assert out.count() == 1  # the plan itself still executes fine
 

@@ -1,7 +1,9 @@
-"""Declared grid axes: ``netcdf_files_to_long`` reads each file's
-coordinate variables on the driver, and ``ingest_rain_grid`` builds its
-cell lookup and grid steps from them without a Spark job; the lookup is
-memoized per session and keyed by (axes, polygons)."""
+"""Declared grid axes and files: ``netcdf_files_to_long`` reads each
+file's coordinate variables on the driver, and ``ingest_rain_grid``
+builds its cell index and grid steps from them without a Spark job; the
+index is memoized per session and keyed by (axes, polygons).  The exact
+frame it returned also declares its landing files, which the rain plan
+scans itself in time-slab tasks."""
 
 from __future__ import annotations
 
@@ -20,8 +22,13 @@ from mini_project_204721_data_engineering_spark.sources.hdf5 import (
     netcdf_grid_to_long_batches,
     write_hdf5,
 )
-from mini_project_204721_data_engineering_spark.sources.netcdf import declared_axis, netcdf_files_to_long
+from mini_project_204721_data_engineering_spark.sources.netcdf import (
+    declared_axis,
+    declared_files,
+    netcdf_files_to_long,
+)
 from mini_project_204721_data_engineering_spark.sources.netcdf3 import write_netcdf3
+from mini_project_204721_data_engineering_spark.sources.snapshots import read_snapshot_where, snapshot_append
 
 # district A: lon [99, 100], lat [18, 19]; district B: lon [100, 101], lat [18, 19]
 POLYGONS = pd.DataFrame(
@@ -58,12 +65,16 @@ def _precip(dry_row: int | None = None) -> np.ndarray:
     return p
 
 
-def _cdf1(path, precip, lats=LATS, lons=LONS) -> None:
+def _days(precip, first_day):
+    return np.arange(first_day, first_day + precip.shape[0], dtype=np.float64)
+
+
+def _cdf1(path, precip, lats=LATS, lons=LONS, first_day=0) -> None:
     write_netcdf3(
         str(path),
         dims={"time": precip.shape[0], "latitude": len(lats), "longitude": len(lons)},
         variables={
-            "time": (["time"], np.arange(precip.shape[0], dtype=np.float64), {"units": "days since 2023-06-01"}),
+            "time": (["time"], _days(precip, first_day), {"units": "days since 2023-06-01"}),
             "latitude": (["latitude"], lats, {}),
             "longitude": (["longitude"], lons, {}),
             "precip": (["time", "latitude", "longitude"], precip, {"_FillValue": np.float32(-9999.0)}),
@@ -71,11 +82,11 @@ def _cdf1(path, precip, lats=LATS, lons=LONS) -> None:
     )
 
 
-def _nc4(path, precip, lats=LATS, lons=LONS) -> None:
+def _nc4(path, precip, lats=LATS, lons=LONS, first_day=0) -> None:
     write_hdf5(
         str(path),
         datasets={
-            "time": (np.arange(precip.shape[0], dtype=np.float64), {"units": "days since 2023-06-01"}),
+            "time": (_days(precip, first_day), {"units": "days since 2023-06-01"}),
             "latitude": (lats, {}),
             "longitude": (lons, {}),
             "precip": (precip, {"_FillValue": np.float32(-9999.0)}),
@@ -220,3 +231,95 @@ def test_cell_lookup_memo_is_keyed_by_axes_polygons_and_session(spark, dims, tmp
     other = netcdf_files_to_long(spark.newSession(), str(tmp_path))
     ingest_rain_grid(other, POLYGONS, province, district)
     assert len(calls) == 3
+
+
+RAIN_STATS = ["date", "district_id", "rainfall_mm", "rain_mm_wmean"]
+
+
+@pytest.fixture(scope="module")
+def cached_dims(dims):
+    """Dims as the ingest writer holds them: built, cached, materialized."""
+    province, district, ids = dims
+    province, district = province.cache(), district.cache()
+    province.toPandas(), district.toPandas()
+    yield province, district, ids
+    province.unpersist(), district.unpersist()
+
+
+def _plans_from_files(out) -> bool:
+    """Whether ``out`` scans the declared files itself (the file plan)."""
+    return "Range (" in out._jdf.queryExecution().logical().toString()
+
+
+@pytest.mark.parametrize("second_day, jobs", [(2, 5), (0, 6)])
+def test_grid_upload_job_count(spark, cached_dims, tmp_path, second_day, jobs):
+    """One CDF-1 and one NetCDF-4 file through netcdf_files_to_long →
+    ingest_rain_grid → snapshot_append: the two dims broadcasts, the
+    decode tasks with the joins and the write, the commit's stats — 5
+    Spark jobs when the files hold different days.  When they hold the
+    same days, a merge of the two tasks' partials adds one.  Either
+    way the rows match the row plan's."""
+    province, district, _ = cached_dims
+    table = str(tmp_path / "rain")
+
+    def upload(i):
+        d = tmp_path / f"up{i}"
+        d.mkdir()
+        _cdf1(d / "a.nc", _precip())
+        _nc4(d / "b.nc", _precip(dry_row=i % 3), first_day=second_day)
+        out = ingest_rain_grid(netcdf_files_to_long(spark, str(d)), POLYGONS, province, district, upload_id=i)
+        assert _plans_from_files(out)
+        snapshot_append(out, table, stats_cols=RAIN_STATS)
+        return d
+
+    upload(1)  # the table's first commit
+    d, n = _jobs_started(spark, f"grid-upload-{second_day}", lambda: upload(2))
+    assert n <= jobs
+    rows = netcdf_files_to_long(spark, str(d), decoder=netcdf_grid_to_long_batches)
+    want = _by_key(ingest_rain_grid(rows, POLYGONS, province, district))
+    got = _by_key(read_snapshot_where(spark, table, "upload_id = 2"))
+    assert len(got) == 2 * (2 + second_day) and got == want
+
+
+def test_long_files_split_into_time_slabs(spark, dims, tmp_path, monkeypatch):
+    """A file longer than a slab decodes in several tasks, each from a
+    chunk boundary; the merged rows are those of one task per file."""
+    province, district, _ = dims
+    precip = np.arange(1, 1 + 6 * len(LATS) * len(LONS), dtype=np.float32).reshape(6, len(LATS), len(LONS))
+    _cdf1(tmp_path / "a.nc", precip)
+    _nc4(tmp_path / "b.nc", precip[::-1].copy())
+    grid = netcdf_files_to_long(spark, str(tmp_path))
+    whole = _by_key(ingest_rain_grid(grid, POLYGONS, province, district))
+    files = declared_files(grid)["files"]
+    assert [len(rain._slabs([f], 4)) for f in files] == [1, 1]
+    monkeypatch.setattr(rain, "SLAB_POINTS", 1)
+    assert [len(rain._slabs([f], 4)) for f in files] == [3, 3]
+    assert _by_key(ingest_rain_grid(grid, POLYGONS, province, district)) == whole
+    assert len(whole) == 2 * 6
+
+
+def test_only_the_exact_frame_takes_the_file_plan(spark, dims, tmp_path):
+    """A filter, select or union keeps the declared metadata but is not
+    the frame netcdf_files_to_long returned: it takes the row plan, with
+    the same rows as the file plan where both apply."""
+    province, district, _ = dims
+    _cdf1(tmp_path / "g.nc", _precip())
+    grid = netcdf_files_to_long(spark, str(tmp_path))
+    landing = declared_files(grid)
+    assert landing["distinct_times"] and [f["steps"] for f in landing["files"]] == [2]
+    exact = ingest_rain_grid(grid, POLYGONS, province, district)
+    assert _plans_from_files(exact)
+    for other in (grid.filter("precip IS NULL OR precip > -1"), grid.select("*"), grid.union(grid.limit(0))):
+        assert declared_files(other) is None and declared_axis(other, "lat") is not None
+        out = ingest_rain_grid(other, POLYGONS, province, district)
+        assert not _plans_from_files(out)
+        assert _by_key(out) == _by_key(exact)
+
+
+def test_a_landing_file_changed_after_declaration_fails_loudly(spark, dims, tmp_path):
+    province, district, _ = dims
+    _cdf1(tmp_path / "g.nc", _precip())
+    grid = netcdf_files_to_long(spark, str(tmp_path))
+    _cdf1(tmp_path / "g.nc", np.concatenate([_precip(), _precip()]))
+    with pytest.raises(Exception, match="changed since netcdf_files_to_long declared it"):
+        ingest_rain_grid(grid, POLYGONS, province, district).collect()

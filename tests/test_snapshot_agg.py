@@ -438,3 +438,43 @@ def test_rejections(spark, tmp_path):
     snapshot_append(arr, t2)
     with pytest.raises(ValueError, match="non-atomic"):
         snapshot_agg(spark, t2, {"n": "count(*)"}, group_by="g")
+
+
+def _round_trips(spark, fn) -> int:
+    """py4j commands sent while ``fn`` runs (this thread only runs it)."""
+    client = type(spark.sparkContext._gateway._gateway_client)
+    real, sent = client.send_command, [0]
+
+    def counted(self, *args, **kwargs):
+        sent[0] += 1
+        return real(self, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        fn()
+    finally:
+        client.send_command = real
+    return sent[0]
+
+
+def test_repeated_rollup_resolves_the_schema_once(spark, tmp_path, monkeypatch):
+    """The manifest DDL and the aggregate columns' types are analysed once
+    per session: a repeated rollup over the same schema skips the JVM
+    parse and the per-column ``select`` analyses, and answers the same."""
+    import weakref
+
+    from mini_project_204721_data_engineering_spark.sources import snapshots
+
+    t = str(tmp_path / "t")
+    snapshot_append(_df(spark, 0, 30).coalesce(1), t, stats_cols=["id", "v", "day"])
+    monkeypatch.setattr(snapshots, "_TYPES", weakref.WeakKeyDictionary())
+    got = {}
+
+    def rollup(k):
+        got[k] = snapshot_agg(spark, t, AGGS, group_by="day")
+
+    cold = _round_trips(spark, lambda: rollup("cold"))
+    warm = _round_trips(spark, lambda: rollup("warm"))
+    assert got["warm"] == got["cold"]
+    assert warm < cold, (cold, warm)
+    assert _round_trips(spark, lambda: rollup("warm")) < cold

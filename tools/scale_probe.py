@@ -70,10 +70,10 @@ def timed(name, fn, out):
 def main() -> None:
     mode = "events"
     args = [a for a in sys.argv[1:]]
-    if args and args[0] in ("events", "spatial", "snap", "snap-manifest", "snap-big", "snap-contention", "snap-maint", "spill"):
+    if args and args[0] in ("events", "snap", "snap-manifest", "snap-big", "snap-contention", "snap-maint", "spill"):
         mode = args.pop(0)
     n = int(args[0]) if args else {
-        "events": 10_000_000, "spatial": 1_000_000,
+        "events": 10_000_000,
         "snap": 2_000_000, "snap-manifest": 100_000,
         "snap-big": 20_000_000, "snap-contention": 200_000,
         "snap-maint": 200_000, "spill": 30_000_000,
@@ -83,8 +83,7 @@ def main() -> None:
     spark = get_spark("scale-probe")
     out: list[dict] = []
     if mode != "events":
-        {"spatial": probe_spatial,
-         "snap": probe_snap,
+        {"snap": probe_snap,
          "snap-manifest": probe_snap_manifest,
          "snap-big": probe_snap_big,
          "snap-contention": probe_snap_contention,
@@ -189,46 +188,6 @@ def main() -> None:
              "probes": {r["probe"]: r["sec"] for r in out}}
         )
     )
-
-
-def probe_spatial(spark, n: int, out: list) -> None:
-    """Point-in-polygon spatial join (J1's general mapInPandas path) at
-    fact scale: n points against a 900-polygon ADM2-sized boundary set
-    (the reference's Thailand ADM2 file has 928).  Claim under test:
-    cost is linear in points — the polygon set is broadcast once, the
-    bbox prefilter makes the per-polygon work ∝ candidate points, and
-    no shuffle exists anywhere (pure map stage)."""
-    import pandas as pd
-
-    from mini_project_204721_data_engineering_spark.sources.geometry import (
-        assign_points_udf,
-    )
-
-    # 30x30 grid of unit-cell "districts" over [0,30)x[0,30)
-    polys = []
-    for i in range(30):
-        for j in range(30):
-            wkt = (
-                f"POLYGON(({i} {j}, {i + 1} {j}, {i + 1} {j + 1}, "
-                f"{i} {j + 1}, {i} {j}))"
-            )
-            polys.append({"province": f"p{i}", "district": f"d{i}_{j}", "wkt": wkt})
-    polygons_df = pd.DataFrame(polys)
-    pts = (
-        spark.range(n)
-        .select(
-            F.col("id").alias("pt_id"),
-            (F.pmod(F.xxhash64("id"), F.lit(30_000)) / 1000.0).alias("lon"),
-            (F.pmod(F.xxhash64(F.col("id") + 1), F.lit(30_000)) / 1000.0).alias("lat"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    def run():
-        tagged = assign_points_udf(pts, polygons_df)
-        return tagged.agg(F.count(F.lit(1))).collect()[0][0]
-
-    timed("spatial_join_900_polys", run, out)
 
 
 def probe_snap(spark, n: int, out: list) -> None:
